@@ -29,6 +29,17 @@ object SparkEntry {
     ST.registerAll(spark); spark
   }
 
+  /** A new session over the caller's context with [[graft.plans.CellJoinRule]]
+    * installed at a fixed level: the rewrite and its conf stay out of
+    * the caller's session, whatever order queries run in.
+    */
+  private def cellJoinSession(spark: SparkSession, level: Int): SparkSession = {
+    val s = spark.newSession()
+    s.experimental.extraOptimizations = Seq(new graft.plans.CellJoinRule(s))
+    s.conf.set("spark.graft.celljoin.level", level.toString)
+    s
+  }
+
   /** Customer points: exact binary-fraction lon/lat from c_custkey. */
   private def customerPts(spark: SparkSession, dir: String): DataFrame = {
     withST(spark)
@@ -524,19 +535,12 @@ object SparkEntry {
         st_relate(st_geomFromWKT(lit(gcWkt)), st_point(col("px"), col("py"))).as("im"))
     }),
 
-    "q63_rule_cell_join" -> ((s, d) => {
+    "q63_rule_cell_join" -> ((s0, d) => {
       // the CellJoinRule logical rewrite end to end: a bare
       // st_intersects inner join (which Spark would otherwise plan as
       // BroadcastNestedLoopJoin) driven through the optimizer rule at
       // level 6; results must equal the oracle's interval algebra
-      import graft.plans.CellJoinRule
-      if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[CellJoinRule]))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ new CellJoinRule(s)
-      // conf stays set until execution (the rule reads it at optimize
-      // time); q63 sorts last among the queries, so it never bleeds
-      // into another query in the same session
-      s.conf.set("spark.graft.celljoin.level", "6")
+      val s = cellJoinSession(s0, level = 6)
       val n = nationBoxes(s, d).select(col("n_nationkey"), col("box"))
       val sb = supplierBoxes(s, d).select(col("s_suppkey"), col("sbox"))
       sb.join(n, st_intersects(col("sbox"), col("box")))
@@ -1619,14 +1623,10 @@ object SparkEntry {
         expr("st_summary(st_force3dz(st_makepoint(1.0, 2.0)))").as("pt_sum"))
     }),
 
-    "q75_rule_contains_join" -> ((s, d) => {
+    "q75_rule_contains_join" -> ((s0, d) => {
       // CellJoinRule extended to the directional predicates: a bare
       // st_contains inner join rewritten to the cell join at level 6
-      import graft.plans.CellJoinRule
-      if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[CellJoinRule]))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ new CellJoinRule(s)
-      s.conf.set("spark.graft.celljoin.level", "6")
+      val s = cellJoinSession(s0, level = 6)
       val n = nationBoxes(s, d).select(col("n_nationkey"), col("box"))
       val sb = supplierBoxes(s, d).select(col("s_suppkey"), col("sbox"))
       n.join(sb, st_contains(col("box"), col("sbox")))

@@ -945,12 +945,6 @@ case class StCellCover(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-// (The former StRefCell envelope-reference-point dedup expression was
-// removed in round 4: the min corner of an envelope intersection is
-// not guaranteed to lie in a GEOMETRY-refined cell cover, so deduping
-// on it dropped pairs for concave/lineal inputs. Cell joins now dedup
-// on the min shared cover cell — see SpatialJoins/CellJoinRule.)
-
 /** st_cellRing(cell, k) -> Array[Long] neighbors for kNN expansion. */
 case class StCellRing(left: Expression, right: Expression)
     extends BinaryKernelCodegen {

@@ -6,8 +6,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-import scala.collection.concurrent.TrieMap
-
 import graft.core._
 
 /** Native probe expressions for the broadcast spatial joins — the
@@ -21,12 +19,12 @@ import graft.core._
   * expressions); the kernel itself is one virtual eval per row, same
   * shape as StPipCountAgg's update().
   *
-  * Both resolve the executor-local prepared side (decode WKB + R-tree
-  * build once per JVM per broadcast) through the same bounded-cache
-  * trick StPipCountAgg uses.
+  * Every probe, and StPipCountAgg, resolves its executor-local prepared
+  * side (decode + R-tree build once per JVM per broadcast) through one
+  * bounded LRU cache class below.
   */
 object JoinProbeExprs {
-  /** Executor-local bounded caches, keyed by broadcast id. Access-order
+  /** Executor-local bounded cache, keyed by broadcast id. Access-order
     * LRU so long-running executors don't pin every broadcast's decoded
     * geometry forever (reference pattern: geom/alg_prepared.go:12-27).
     */
@@ -41,11 +39,16 @@ object JoinProbeExprs {
     }
   }
 
-  private val idxCache = new Lru[(Array[Geom], RTree)](16)
-  def preparedIdx(bc: Broadcast[Array[Array[Byte]]]): (Array[Geom], RTree) =
-    idxCache.getOrElseUpdate(bc.id, {
-      val geoms = bc.value.map(b => if (b.isEmpty) Geom.emptyGC else Wkb.read(b))
-      (geoms, RTree.bulkLoad(geoms.map(_.envelope)))
+  /** The geometry side every areal probe shares: (keys, WKBs) decoded
+    * to (keys, geometries, R-tree over their envelopes).
+    */
+  private val keyCache = new Lru[(Array[Long], Array[Geom], RTree)](16)
+  def preparedKeyed(
+      bc: Broadcast[(Array[Long], Array[Array[Byte]])]): (Array[Long], Array[Geom], RTree) =
+    keyCache.getOrElseUpdate(bc.id, {
+      val (keys, wkbs) = bc.value
+      val geoms = wkbs.map(b => if (b.isEmpty) Geom.emptyGC else Wkb.read(b))
+      (keys, geoms, RTree.bulkLoad(geoms.map(_.envelope)))
     })
 
   private val ptCache = new Lru[(Array[Long], Array[Double], Array[Double], RTree)](16)
@@ -55,15 +58,6 @@ object JoinProbeExprs {
       val (keys, xs, ys) = bc.value
       val envs = Array.tabulate(keys.length)(i => Env(xs(i), ys(i), xs(i), ys(i)))
       (keys, xs, ys, RTree.bulkLoad(envs))
-    })
-
-  private val keyCache = new Lru[(Array[Long], Array[Geom], RTree)](16)
-  def preparedKeyed(
-      bc: Broadcast[(Array[Long], Array[Array[Byte]])]): (Array[Long], Array[Geom], RTree) =
-    keyCache.getOrElseUpdate(bc.id, {
-      val (keys, wkbs) = bc.value
-      val geoms = wkbs.map(b => if (b.isEmpty) Geom.emptyGC else Wkb.read(b))
-      (keys, geoms, RTree.bulkLoad(geoms.map(_.envelope)))
     })
 
   private[functions] def evalPred(pred: String, poly: Geom, probe: Geom): Boolean =
@@ -78,33 +72,33 @@ object JoinProbeExprs {
     }
 }
 
-/** probe WKB -> array of broadcast-side indices whose geometry
-  * satisfies pred(smallGeom, probe). Reusable visitor: no capturing
-  * lambda per row; the only per-row allocations are the decoded probe
-  * and the (usually tiny) match array.
+/** probe WKB -> array of broadcast-side keys whose geometry
+  * satisfies pred(smallGeom, probe); broadcastSpatialJoin keys its
+  * side by row index. The only per-row allocations are the decoded
+  * probe and the (usually tiny) match array.
   */
 case class StBroadcastMatchIdxs(
     child: Expression,
-    bc: Broadcast[Array[Array[Byte]]],
+    bc: Broadcast[(Array[Long], Array[Array[Byte]])],
     pred: String)
     extends UnaryExpression with RowKernelCodegen {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "st_broadcast_match_idxs"
 
-  @transient private lazy val preparedSide = JoinProbeExprs.preparedIdx(bc)
+  @transient private lazy val preparedSide = JoinProbeExprs.preparedKeyed(bc)
   @transient private lazy val out = scala.collection.mutable.ArrayBuffer.empty[Long]
 
   override def genEval(vs: Array[Any]): Any = {
     val v = vs(0)
     if (v == null) return new GenericArrayData(Array.emptyLongArray)
     val probe = Wkb.read(v.asInstanceOf[Array[Byte]])
-    val (geoms, tree) = preparedSide
+    val (keys, geoms, tree) = preparedSide
     val e = probe.envelope
     out.clear()
     if (!e.isEmpty) tree.rangeSearch(e) { i =>
       if (!geoms(i).isEmpty && JoinProbeExprs.evalPred(pred, geoms(i), probe))
-        out += i.toLong
+        out += keys(i)
       true
     }
     new GenericArrayData(out.toArray)

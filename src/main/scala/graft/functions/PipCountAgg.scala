@@ -7,22 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-import scala.collection.concurrent.TrieMap
-
 import graft.core._
 
 object StPipCountAgg {
-  /** Executor-local prepared-geometry cache (decode + R-tree once per
-    * JVM per broadcast, not once per task).
-    */
-  private val cache = TrieMap.empty[Long, (Array[Geom], RTree)]
-
-  def prepared(bc: Broadcast[Array[Array[Byte]]]): (Array[Geom], RTree) =
-    cache.getOrElseUpdate(bc.id, {
-      val geoms = bc.value.map(b => if (b.isEmpty) Geom.emptyGC else Wkb.read(b))
-      (geoms, RTree.bulkLoad(geoms.map(_.envelope)))
-    })
-
   /** Reusable R-tree visitor: avoids allocating a capturing lambda per
     * input row in the aggregate's update() hot path.
     */
@@ -56,7 +43,7 @@ object StPipCountAgg {
 case class StPipCountAgg(
     lonExpr: Expression,
     latExpr: Expression,
-    bc: Broadcast[Array[Array[Byte]]],
+    bc: Broadcast[(Array[Long], Array[Array[Byte]])],
     nSlots: Int,
     interiorOnly: Boolean,
     mutableAggBufferOffset: Int = 0,
@@ -73,8 +60,8 @@ case class StPipCountAgg(
   @transient private lazy val visitor = new StPipCountAgg.PipVisitor
 
   // Resolve the executor-local prepared side ONCE per task (lazy val),
-  // not via a TrieMap hash lookup on every input row in update().
-  @transient private lazy val preparedSide = StPipCountAgg.prepared(bc)
+  // not via a cache lookup on every input row in update().
+  @transient private lazy val preparedSide = JoinProbeExprs.preparedKeyed(bc)
 
   // Primitive fast path when inputs are direct column reads (the common
   // plan shape): skips Expression.eval's boxed Double per row.
@@ -92,7 +79,7 @@ case class StPipCountAgg(
       val t = latExpr.eval(input); if (t == null) return buffer
       lon = l.asInstanceOf[Double]; lat = t.asInstanceOf[Double]
     }
-    val (geoms, tree) = preparedSide
+    val (_, geoms, tree) = preparedSide
     val v = visitor
     v.geoms = geoms; v.buffer = buffer; v.lon = lon; v.lat = lat
     v.interiorOnly = interiorOnly

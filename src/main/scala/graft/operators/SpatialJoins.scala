@@ -1,34 +1,61 @@
 package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.functions.ST._
+import graft.plans.CellJoinPlan
 import graft.tiling.Cell
 
 /** Distributed spatial joins.
   *
   * Physical patterns from SURVEY.md §2.12/§4:
-  *  - broadcast join: small polygon side is collected, decoded ONCE,
-  *    R-tree indexed ONCE per executor (the PreparedGeometry pattern,
-  *    reference: geom/alg_prepared.go:12-27), probed by the streamed
-  *    point side; match ids then equi-joined back (broadcast hash
-  *    join, no shuffle of the big side).
-  *  - partitioned cell join: both sides keyed by Z-order cell
-  *    (explode cover), shuffle co-partitions by cell, exact refine,
-  *    dedup — the distributed analogue of the reference's GC-aware
-  *    R-tree intersection plan (geom/alg_overlay.go:84-120).
+  *  - broadcast join: small polygon side is collected ONCE into a
+  *    (keys, WKB) payload, decoded and R-tree indexed ONCE per executor
+  *    (the PreparedGeometry pattern, reference:
+  *    geom/alg_prepared.go:12-27; graft.functions.JoinProbeExprs),
+  *    probed by the streamed point side; no shuffle of the big side.
+  *  - partitioned cell join: [[graft.plans.CellJoinPlan]] — both sides
+  *    keyed by Z-order cell (explode cover), shuffle co-partitions by
+  *    cell, dedup, exact refine — the distributed analogue of the
+  *    reference's GC-aware R-tree intersection plan
+  *    (geom/alg_overlay.go:84-120).
   *  - kNN: cell-ring candidate expansion + exact distance top-k
   *    (reference: rtree/nearest.go PrioritySearch at task scale).
   */
 object SpatialJoins {
 
-  // Executor-local prepared caches + predicate dispatch live with the
-  // native probe expressions in graft.functions.JoinProbeExprs (the
-  // PreparedGeometry pattern, reference: geom/alg_prepared.go:12-27).
+  /** Broadcasts the prepared side's payload: a key and the WKB (empty
+    * for a null geometry) of each collected row.
+    */
+  private def broadcastKeyed(spark: SparkSession, keys: Array[Long], rows: Array[Row],
+                             geomAt: Int): Broadcast[(Array[Long], Array[Array[Byte]])] = {
+    require(rows.nonEmpty, "broadcast side is empty")
+    val wkbs = rows.map(r => if (r.isNullAt(geomAt)) Array.emptyByteArray else r.getAs[Array[Byte]](geomAt))
+    spark.sparkContext.broadcast((keys, wkbs))
+  }
+
+  private def collectKeyed(small: DataFrame, smallGeom: String, smallKey: String)
+      : (Array[Long], Broadcast[(Array[Long], Array[Array[Byte]])]) = {
+    val rows = small.select(col(smallKey).cast("long"), col(smallGeom)).collect()
+    val keys = rows.map(_.getLong(0))
+    (keys, broadcastKeyed(small.sparkSession, keys, rows, 1))
+  }
+
+  /** OGC point-vs-areal: contains/within ⇔ point strictly interior;
+    * covers/coveredby/intersects ⇔ interior or boundary.
+    */
+  private def interiorOnly(pred: String): Boolean = pred match {
+    case "contains" | "within"                 => true
+    case "covers" | "coveredby" | "intersects" => false
+    case other =>
+      throw new IllegalArgumentException(s"unsupported point-join predicate '$other'")
+  }
 
   /** Broadcast spatial join: returns `big` joined with `small` rows
     * whose geometry satisfies pred(smallGeom, bigGeom).
@@ -36,7 +63,7 @@ object SpatialJoins {
     * `small` must fit in a broadcast (dimension-table scale). The big
     * side is never shuffled: candidates come from the executor-local
     * R-tree, and the final attach of small-side columns is a broadcast
-    * hash equi-join on the matched index.
+    * hash equi-join on the matched row index.
     */
   def broadcastSpatialJoin(
       big: DataFrame, bigGeom: Column,
@@ -44,31 +71,23 @@ object SpatialJoins {
       pred: String = "contains",
       joinType: String = "inner"): DataFrame = {
     val spark = big.sparkSession
-    // ONE collect of the dimension side; ids are assigned driver-side so
-    // the broadcast array and the join-back rows can never disagree (no
-    // cache needed — caches leaked across calls and degraded long runs)
+    // ONE collect of the dimension side; the payload keys are the row
+    // indices of that one collected array, so the broadcast and the
+    // join-back rows can never disagree
     val smallRows = small.collect()
-    require(smallRows.nonEmpty, "broadcast side is empty")
-    val geomAt = small.schema.fieldIndex(smallGeom)
-    val wkbs = smallRows.map { r =>
-      val b = r.getAs[Array[Byte]](geomAt)
-      if (b == null) Array.emptyByteArray else b
-    }
-    val bc = spark.sparkContext.broadcast(wkbs)
+    val bc = broadcastKeyed(spark, Array.tabulate(smallRows.length)(_.toLong), smallRows,
+      small.schema.fieldIndex(smallGeom))
     import scala.jdk.CollectionConverters._
-    val idxRows: java.util.List[org.apache.spark.sql.Row] =
-      smallRows.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i.toLong)
-      }.toSeq.asJava
+    val idxRows: java.util.List[Row] =
+      smallRows.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }.toSeq.asJava
     val smallIdx = spark.createDataFrame(idxRows,
       small.schema.add("__idx", org.apache.spark.sql.types.LongType))
 
     // native probe expression, NOT a ScalaUDF: evaluates on InternalRow
     // directly, so the scan -> project -> generate pipeline stays inside
     // WholeStageCodegen with no Row conversion on the 10^12-row side
-    val matchCol = org.apache.spark.sql.GraftBridge.column(
-      graft.functions.StBroadcastMatchIdxs(
-        org.apache.spark.sql.GraftBridge.expression(bigGeom), bc, pred))
+    val matchCol = GraftBridge.column(
+      graft.functions.StBroadcastMatchIdxs(GraftBridge.expression(bigGeom), bc, pred))
 
     val withMatches = big.withColumn("__idxs", matchCol)
     val exploded =
@@ -91,37 +110,17 @@ object SpatialJoins {
     * point-in-areal location (reference: geom/alg_prepared.go pattern
     * over alg_point_in_ring.go). This is the 100-TB hot path: the only
     * per-row allocation is the small matched-keys array.
-    *
-    * Semantics per OGC point-vs-areal: contains/within ⇔ point strictly
-    * interior; covers/intersects ⇔ interior or boundary.
     */
   def broadcastPointKeyJoin(
       big: DataFrame, lonCol: Column, latCol: Column,
       small: DataFrame, smallGeom: String, smallKey: String,
       pred: String = "contains",
       outKey: String = "match_key"): DataFrame = {
-    val spark = big.sparkSession
-    val rows = small.select(col(smallKey).cast("long"), col(smallGeom)).collect()
-    require(rows.nonEmpty, "broadcast side is empty")
-    val keys = rows.map(_.getLong(0))
-    val wkbs = rows.map { r =>
-      val b = r.getAs[Array[Byte]](1)
-      if (b == null) Array.emptyByteArray else b
-    }
-    val bc = spark.sparkContext.broadcast((keys, wkbs))
-    val interiorOnly = pred match {
-      case "contains" | "within"                 => true
-      case "covers" | "coveredby" | "intersects" => false
-      case other =>
-        throw new IllegalArgumentException(s"unsupported point-join predicate '$other'")
-    }
+    val (_, bc) = collectKeyed(small, smallGeom, smallKey)
     // native probe expression (no ScalaUDF): raw lon/lat doubles ->
     // matched keys, same zero-conversion shape as StPipCountAgg.update
-    val probeCol = org.apache.spark.sql.GraftBridge.column(
-      graft.functions.StPointKeyMatches(
-        org.apache.spark.sql.GraftBridge.expression(lonCol),
-        org.apache.spark.sql.GraftBridge.expression(latCol),
-        bc, interiorOnly))
+    val probeCol = GraftBridge.column(graft.functions.StPointKeyMatches(
+      GraftBridge.expression(lonCol), GraftBridge.expression(latCol), bc, interiorOnly(pred)))
     big.withColumn(outKey, explode(probeCol))
   }
 
@@ -146,11 +145,8 @@ object SpatialJoins {
     val xs = rows.map(_.getDouble(1))
     val ys = rows.map(_.getDouble(2))
     val bc = spark.sparkContext.broadcast((keys, xs, ys))
-    val probeCol = org.apache.spark.sql.GraftBridge.column(
-      graft.functions.StDWithinMatches(
-        org.apache.spark.sql.GraftBridge.expression(lonCol),
-        org.apache.spark.sql.GraftBridge.expression(latCol),
-        bc, radius))
+    val probeCol = GraftBridge.column(graft.functions.StDWithinMatches(
+      GraftBridge.expression(lonCol), GraftBridge.expression(latCol), bc, radius))
     big.withColumn(outKey, explode(probeCol))
   }
 
@@ -168,52 +164,25 @@ object SpatialJoins {
       pred: String = "contains",
       outKey: String = "region_id", outCount: String = "n"): DataFrame = {
     val spark = big.sparkSession
-    val rows = small.select(col(smallKey).cast("long"), col(smallGeom)).collect()
-    require(rows.nonEmpty, "broadcast side is empty")
-    val keys = rows.map(_.getLong(0))
-    val wkbs = rows.map { r =>
-      val b = r.getAs[Array[Byte]](1)
-      if (b == null) Array.emptyByteArray else b
-    }
-    val bc = spark.sparkContext.broadcast(wkbs)
-    val interiorOnly = pred match {
-      case "contains" | "within"                 => true
-      case "covers" | "coveredby" | "intersects" => false
-      case other =>
-        throw new IllegalArgumentException(s"unsupported point-join predicate '$other'")
-    }
+    val (keys, bc) = collectKeyed(small, smallGeom, smallKey)
     val agg = graft.functions.StPipCountAgg(
-      org.apache.spark.sql.GraftBridge.expression(lonCol),
-      org.apache.spark.sql.GraftBridge.expression(latCol),
-      bc, keys.length, interiorOnly)
+      GraftBridge.expression(lonCol), GraftBridge.expression(latCol),
+      bc, keys.length, interiorOnly(pred))
     val counts = big
-      .agg(org.apache.spark.sql.GraftBridge.column(agg.toAggregateExpression()).as("counts"))
+      .agg(GraftBridge.column(agg.toAggregateExpression()).as("counts"))
       .collect()(0).getSeq[Long](0)
     import spark.implicits._
     keys.zip(counts).filter(_._2 > 0L).toSeq.toDF(outKey, outCount)
   }
 
-  /** Partitioned cell equi-join for big-vs-big spatial joins.
+  /** Partitioned cell equi-join for big-vs-big spatial joins: the
+    * [[graft.plans.CellJoinPlan]] over both geometries at `level`,
+    * refined with pred(leftGeom, rightGeom) for pred in "intersects",
+    * "contains", "within". `saltBuckets` > 1 salts hot cells by the
+    * left row's hash; the rows are identical either way.
     *
-    * Both sides are exploded to their cell covers at `level`, shuffled
-    * on the cell key (hash partitioning → co-location), refined with
-    * the exact predicate, and deduped by the MIN-SHARED-COVER-CELL
-    * rule: each side carries its full cover array through the shuffle
-    * and a pair matching in several shared cells is kept only in
-    * array_min(array_intersect(lcov, rcov)) — exactly one survivor per
-    * pair, NO extra Distinct shuffle, exact multiset semantics.
-    *
-    * (Round 3 deduped on the cell of the envelope-intersection min
-    * corner instead; that corner's cell is in the ENVELOPE covers but
-    * not always in the geometry-refined covers the join explodes — for
-    * concave/lineal inputs the surviving cell could be absent from the
-    * join, silently dropping true pairs. The min shared cover cell is
-    * by construction a cell the pair actually met in.)
-    *
-    * Hot-cell skew: pass saltBuckets > 1 to salt the LEFT side's cell
-    * key and replicate the RIGHT side per salt bucket — output rows are
-    * identical to the unsalted plan (dedup key unchanged); AQE skew
-    * join handles residual imbalance.
+    * `leftKeys` and `rightKeys` are unused; they remain for callers
+    * that pass them positionally.
     */
   def cellJoin(
       left: DataFrame, leftGeom: String,
@@ -223,73 +192,57 @@ object SpatialJoins {
       leftKeys: Seq[String],
       rightKeys: Seq[String],
       saltBuckets: Int = 1): DataFrame = {
-    val l = left.withColumn("__lcov", st_cellCover(col(leftGeom), lit(level)))
-      .withColumn("__cell", explode(col("__lcov")))
-    val r = right.withColumn("__rcov", st_cellCover(col(rightGeom), lit(level)))
-      .withColumn("__cell", explode(col("__rcov")))
-    val (lk, rk) =
-      if (saltBuckets <= 1) (l.withColumn("__salt", lit(0)), r.withColumn("__salt", lit(0)))
-      else (
-        l.withColumn("__salt", pmod(xxhash64(col(leftKeys.head)), lit(saltBuckets)).cast("int")),
-        r.withColumn("__salt", explode(sequence(lit(0), lit(saltBuckets - 1)))))
-    val predCol = pred match {
-      case "intersects" => st_intersects(col(leftGeom), col(rightGeom))
-      case "contains"   => st_contains(col(leftGeom), col(rightGeom))
-      case "within"     => st_within(col(leftGeom), col(rightGeom))
+    val refine: (Column, Column) => Column = pred match {
+      case "intersects" => st_intersects
+      case "contains"   => st_contains
+      case "within"     => st_within
       case other => throw new IllegalArgumentException(s"unsupported join predicate '$other'")
     }
-    // cell-equality dedup FIRST so the expensive exact predicate runs
-    // once per pair (in its min shared cell) instead of once per shared
-    // cell; the arrays are cheap longs, no WKB decode in the dedup
-    lk.join(rk, Seq("__cell", "__salt"))
-      .filter(col("__cell") === array_min(array_intersect(col("__lcov"), col("__rcov")))
-        && predCol)
-      .drop("__cell", "__salt", "__lcov", "__rcov")
+    planCellJoin(left, leftGeom, right, rightGeom, level, saltBuckets)(identity, refine)
   }
 
   /** Partitioned within-distance join for BIG-BIG inputs (the shuffle
     * analogue of [[broadcastDWithinJoin]], for when neither side fits
-    * in a broadcast): cover the left envelope PADDED by `radius` and
-    * the right geometry at `level`, hash-co-partition both sides on
-    * the shared cell (one shuffle each, salt option for hot cells),
-    * refine with exact st_distance, and eliminate cover duplicates
-    * with the MIN-SHARED-COVER-CELL rule — both cover arrays ride
-    * along and a pair survives only in
-    * array_min(array_intersect(lcov, rcov)), so there is NO Distinct
-    * shuffle and multiset semantics are exact. (The round-3
-    * reference-point rule used the min corner of
-    * padded-left-env ∩ right-ENVELOPE, whose cell need not intersect a
-    * concave/lineal right GEOMETRY — such pairs were dropped from
-    * every shared cell.)
-    *
-    * Padding the LEFT cover by the radius guarantees completeness:
-    * any right geometry within `radius` of the left geometry
-    * intersects the padded left envelope, so the two covers share at
-    * least one cell.
+    * in a broadcast): the [[graft.plans.CellJoinPlan]] with the left
+    * envelope PADDED by `radius` as the left cover and
+    * st_distance <= radius as the refine. The padding guarantees
+    * completeness: any right geometry within `radius` of the left
+    * geometry intersects the padded left envelope, so the two covers
+    * share at least one cell.
     */
   def cellDWithinJoin(
       left: DataFrame, leftGeom: String,
       right: DataFrame, rightGeom: String,
       radius: Double, level: Int,
-      saltBuckets: Int = 1,
-      saltKey: String = ""): DataFrame = {
+      saltBuckets: Int = 1): DataFrame = {
     require(radius >= 0, "radius must be non-negative")
-    val lpad = left.withColumn("__lenv", st_makeEnvelope(
-      st_xmin(col(leftGeom)) - radius, st_ymin(col(leftGeom)) - radius,
-      st_xmax(col(leftGeom)) + radius, st_ymax(col(leftGeom)) + radius))
-    val l0 = lpad.withColumn("__lcov", st_cellCover(col("__lenv"), lit(level)))
-      .withColumn("__cell", explode(col("__lcov")))
-    val r0 = right.withColumn("__rcov", st_cellCover(col(rightGeom), lit(level)))
-      .withColumn("__cell", explode(col("__rcov")))
-    val (lk, rk) =
-      if (saltBuckets <= 1) (l0.withColumn("__salt", lit(0)), r0.withColumn("__salt", lit(0)))
-      else (
-        l0.withColumn("__salt", pmod(xxhash64(col(saltKey)), lit(saltBuckets)).cast("int")),
-        r0.withColumn("__salt", explode(sequence(lit(0), lit(saltBuckets - 1)))))
-    lk.join(rk, Seq("__cell", "__salt"))
-      .filter(col("__cell") === array_min(array_intersect(col("__lcov"), col("__rcov")))
-        && st_distance(col(leftGeom), col(rightGeom)) <= radius)
-      .drop("__cell", "__salt", "__lenv", "__lcov", "__rcov")
+    planCellJoin(left, leftGeom, right, rightGeom, level, saltBuckets)(
+      g => st_makeEnvelope(st_xmin(g) - radius, st_ymin(g) - radius,
+        st_xmax(g) + radius, st_ymax(g) + radius),
+      (l, r) => st_distance(l, r) <= radius)
+  }
+
+  /** The [[graft.plans.CellJoinPlan]] of two DataFrames: `leftCover`
+    * maps the left geometry to the geometry its cells are taken from,
+    * `refine` is the exact predicate over both geometries.
+    */
+  private def planCellJoin(
+      left: DataFrame, leftGeom: String, right: DataFrame, rightGeom: String,
+      level: Int, saltBuckets: Int)(
+      leftCover: Column => Column, refine: (Column, Column) => Column): DataFrame = {
+    val spark = left.sparkSession
+    // analyzed as Spark's own join is, so a self-join's right side gets
+    // fresh attribute ids
+    val pair @ Join(lp, rp, _, _, _) = left.crossJoin(right).queryExecution.analyzed
+    def on(plan: LogicalPlan)(c: Column): Expression =
+      GraftBridge.dataFrame(spark, plan).select(c).queryExecution.analyzed match {
+        case Project(Seq(Alias(e, _)), _) => e
+        case Project(Seq(e), _)           => e
+      }
+    val lg = GraftBridge.column(on(lp)(col(leftGeom)))
+    val rg = GraftBridge.column(on(rp)(col(rightGeom)))
+    GraftBridge.dataFrame(spark, CellJoinPlan(lp, rp, on(pair)(leftCover(lg)),
+      GraftBridge.expression(rg), on(pair)(refine(lg, rg)), level, saltBuckets))
   }
 
   /** Distance-kNN join: for each query point, the k nearest target
@@ -446,9 +399,8 @@ object SpatialJoins {
     // built a WKB polygon per cell and decoded it four times through
     // the envelope accessors
     df.withColumn("cell", explode(st_cellCover(col(geomCol), lit(level))))
-      .withColumn("__cb", org.apache.spark.sql.GraftBridge.column(
-        graft.functions.StCellBounds(
-          org.apache.spark.sql.GraftBridge.expression(col("cell")))))
+      .withColumn("__cb", GraftBridge.column(
+        graft.functions.StCellBounds(GraftBridge.expression(col("cell")))))
       .withColumn("tile_part",
         st_clipByBox(col(geomCol),
           element_at(col("__cb"), 1), element_at(col("__cb"), 2),

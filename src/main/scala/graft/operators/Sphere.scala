@@ -47,25 +47,35 @@ object Sphere {
 
   /** Within-`radiusM`-meters join of a small site table against a big
     * point table: the site side polyfills a CONSERVATIVE padded
-    * lon/lat box to geohash cells (explode of the SMALL side — the
-    * pad over-covers: latPad = r/100 000 ≥ the true r/111 195 m/deg,
-    * lonPad scaled by 1/cos capped at 80° so high latitudes only
-    * widen the cover), the point side computes one cell expression,
-    * equi-join on the cell, exact haversine refine. The refine is
-    * exact, so the prefilter only needs to be a superset — which the
-    * brute-force oracle (q174) proves end to end: a dropped pair
-    * would be a missing row.
+    * lon/lat box to geohash cells (explode of the SMALL side), the
+    * point side computes one cell expression, equi-join on the cell,
+    * exact haversine refine. The refine is exact, so the prefilter
+    * only needs to be a superset — which the brute-force oracle (q174)
+    * proves end to end: a dropped pair would be a missing row.
+    *
+    * The box: latPad = r/100 000 ≥ the true r/111 195 degrees of arc;
+    * lonPad = asin(sin latPad / cos lat), the widest longitude reach of
+    * a spherical cap of that radius. A cap that reaches a pole spans
+    * every longitude, and a box that crosses the antimeridian is split
+    * into its two sides.
     */
   def dwithinSphereJoin(sites: DataFrame, sLon: String, sLat: String,
                         points: DataFrame, pLon: String, pLat: String,
                         radiusM: Double, precision: Int): DataFrame = {
     val latPad = radiusM / 100000.0
-    val lonPad = lit(latPad) /
-      cos(least(abs(col(sLat)) + lit(latPad), lit(80.0)) * lit(DegToRad))
-    val covered = sites.select(sites.columns.map(col) :+
-      explode(SpaceCurve.geohashCoverBox(
-        col(sLon) - lonPad, col(sLat) - lit(latPad),
-        col(sLon) + lonPad, col(sLat) + lit(latPad), precision)).as("__gh"): _*)
+    val lat = col(sLat)
+    val reachesPole = abs(lat) + latPad >= 90.0
+    val lonPad = degrees(asin(least(lit(1.0),
+      lit(math.sin(latPad * DegToRad)) / cos(lat * lit(DegToRad)))))
+    val x0 = col(sLon) - lonPad
+    val x1 = col(sLon) + lonPad
+    def box(from: Column, to: Column): Column = SpaceCurve.geohashCoverBox(
+      from, lat - lit(latPad), to, lat + lit(latPad), precision)
+    val cover = when(reachesPole, box(lit(-180.0), lit(180.0)))
+      .when(x0 < -180.0, array_distinct(concat(box(x0 + 360.0, lit(180.0)), box(lit(-180.0), x1))))
+      .when(x1 > 180.0, array_distinct(concat(box(x0, lit(180.0)), box(lit(-180.0), x1 - 360.0))))
+      .otherwise(box(x0, x1))
+    val covered = sites.select(sites.columns.map(col) :+ explode(cover).as("__gh"): _*)
     val keyed = points.withColumn("__gh",
       SpaceCurve.geohash(col(pLon), col(pLat), precision))
     keyed.join(broadcast(covered), "__gh")

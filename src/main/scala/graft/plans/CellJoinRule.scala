@@ -9,30 +9,72 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
 
 import graft.functions.{GeomBinaryOp, StCellCover}
 
+/** The one cell-partitioned spatial join plan. [[CellJoinRule]],
+  * `SpatialJoins.cellJoin` and `SpatialJoins.cellDWithinJoin` all build
+  * it here:
+  *
+  *   st_cellcover(cover, level) once per input row on each side (the
+  *     full cover array rides along), exploded to one row per cell,
+  *   equi-join on the cell id (hash-partitioned shuffle),
+  *   keep each pair only in its MIN SHARED COVER CELL (the least
+  *     cell of both cover arrays) — duplicate elimination without a
+  *     Distinct, so multiset semantics are exact; the min shared cover
+  *     cell is by construction a cell both covers contain, so
+  *     concave/lineal inputs cannot lose pairs,
+  *   refine with the exact predicate (once per pair, in that cell).
+  *
+  * A pair must share a cover cell to be found: the refine may only
+  * hold for pairs whose covers intersect (the dwithin join pads its
+  * left cover by the radius for this).
+  *
+  * Hot-cell skew: with `saltBuckets` = s > 1 the left side's shuffle
+  * key gains pmod(xxhash64(left row), s) and the right side is
+  * replicated s ways, so a dense cell spreads over s partitions. A pair
+  * meets in exactly one bucket (its left row's) and the dedup is
+  * salt-independent, so the rows are identical to the unsalted plan.
+  * AQE skew join still applies on top for residual imbalance.
+  */
+object CellJoinPlan {
+  def apply(left: LogicalPlan, right: LogicalPlan,
+            leftCover: Expression, rightCover: Expression, refine: Expression,
+            level: Int, saltBuckets: Int, hint: JoinHint = JoinHint.NONE): LogicalPlan = {
+    def explode(arr: Expression, out: Attribute, child: LogicalPlan): LogicalPlan =
+      Generate(Explode(arr), unrequiredChildIndex = Nil, outer = false, qualifier = None,
+        generatorOutput = Seq(out), child = child)
+    // each cover is computed ONCE per input row, below the Generate, so
+    // the dedup reads the full arrays without re-covering per pair
+    def side(child: LogicalPlan, cover: Expression, salt: Seq[NamedExpression], tag: String) = {
+      val cov = Alias(StCellCover(cover, Literal(level)), s"__cover_$tag")()
+      val cell = AttributeReference(s"__cell_$tag", LongType, nullable = false)()
+      (explode(cov.toAttribute, cell, Project(child.output ++ (cov +: salt), child)), cov.toAttribute, cell)
+    }
+    val saltL =
+      if (saltBuckets <= 1) None
+      else Some(Alias(Pmod(new XxHash64(left.output), Literal(saltBuckets.toLong)), "__graft_salt_l")())
+    val (joinL, covL, cellL) = side(left, leftCover, saltL.toSeq, "l")
+    val (genR, covR, cellR) = side(right, rightCover, Nil, "r")
+    val (joinR, keys) = saltL match {
+      case None => (genR, EqualTo(cellL, cellR))
+      case Some(sl) =>
+        val saltR = AttributeReference("__graft_salt_r", LongType, nullable = false)()
+        val buckets = Literal.create((0L until saltBuckets.toLong).toArray,
+          ArrayType(LongType, containsNull = false))
+        (explode(buckets, saltR, genR), And(EqualTo(cellL, cellR), EqualTo(sl.toAttribute, saltR)))
+    }
+    // dedup before the refine: the exact geometry test then runs once
+    // per pair, not once per shared cell
+    val cond = And(And(keys, EqualTo(cellL, ArrayMin(ArrayIntersect(covL, covR)))), refine)
+    Project(left.output ++ right.output, Join(joinL, joinR, Inner, Some(cond), hint))
+  }
+}
+
 /** Logical rewrite: an inner join whose condition is a bare
   * `st_intersects(a.geom, b.geom)` / `st_contains` / `st_within` has
   * no equi-key, so Spark plans a BroadcastNestedLoopJoin / cartesian
-  * product — quadratic at scale. This rule rewrites it into the
-  * cell-partitioned join the SpatialJoins operator builds by hand:
-  *
-  *   explode(st_cellcover(geom, level)) on each side (the full cover
-  *     array rides along),
-  *   equi-join on the cell id (hash-partitioned shuffle),
-  *   keep each pair only in its MIN SHARED COVER CELL
-  *     (array_min(array_intersect(lcov, rcov))) — duplicate
-  *     elimination without a Distinct, so multiset semantics are
-  *     preserved exactly; unlike an envelope-derived reference point,
-  *     the min shared cover cell is by construction a cell BOTH
-  *     geometry-refined covers contain, so concave/lineal inputs
-  *     cannot lose pairs,
-  *   refine with the original exact predicate (evaluated once per
-  *     pair, in the surviving cell only).
-  *
-  * The refine predicate is the ORIGINAL expression, so the directional
-  * predicates keep their orientation; the cover/equi-join/refcell
-  * machinery is orientation-agnostic (the cover of each side and the
-  * envelope-intersection reference point do not depend on which side
-  * contains which).
+  * product — quadratic at scale. This rule replaces it with
+  * [[CellJoinPlan]], covering each side's geometry and refining with
+  * the original expression, so the directional predicates keep their
+  * orientation (the covers do not depend on which side contains which).
   *
   * `spark.graft.celljoin.level` selects the cell level:
   *   - an integer (e.g. 8): always rewrite at that level;
@@ -47,19 +89,10 @@ import graft.functions.{GeomBinaryOp, StCellCover}
   * the data's geometry sizes — the same contract st_cellcover itself
   * enforces (it throws rather than silently coarsening).
   *
-  * `spark.graft.celljoin.saltBuckets` (default 1 = off): hot-cell skew
-  * handling, same scheme the hand-built SpatialJoins.cellJoin uses — a
-  * dense urban cell holding 10^8 rows would otherwise land on ONE
-  * shuffle partition and straggle the stage. With buckets = s, the
-  * left side's shuffle key gains pmod(xxhash64(left row), s) and the
-  * right side is replicated s ways, so a hot cell spreads over s
-  * partitions. Output rows are IDENTICAL to the unsalted plan: a
-  * (left, right) pair meets in exactly one salt bucket (the left
-  * row's), and the min-shared-cover-cell dedup is salt-independent.
-  * AQE skew-join still applies on top for residual imbalance.
+  * `spark.graft.celljoin.saltBuckets` (default 1 = off) is the plan's
+  * hot-cell salt bucket count.
   */
 class CellJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
   private val PREDS = Set("st_intersects", "st_contains", "st_within")
 
   private def estRows(p: LogicalPlan): Long = {
@@ -99,65 +132,15 @@ class CellJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
             lg.references.subsetOf(left.outputSet) &&
             rg.references.subsetOf(right.outputSet) &&
             lg.references.nonEmpty && rg.references.nonEmpty =>
-        rewrite(left, right, lg, rg, cond, levelFor(left, right), saltBuckets, hint)
+        CellJoinPlan(left, right, lg, rg, cond, levelFor(left, right), saltBuckets, hint)
       case Join(left, right, Inner,
           Some(cond @ GeomBinaryOp(op, lg, rg)), hint)
           if PREDS(op) && bigEnough(left, right) &&
             lg.references.subsetOf(right.outputSet) &&
             rg.references.subsetOf(left.outputSet) &&
             lg.references.nonEmpty && rg.references.nonEmpty =>
-        rewrite(left, right, rg, lg, cond, levelFor(left, right), saltBuckets, hint)
+        CellJoinPlan(left, right, rg, lg, cond, levelFor(left, right), saltBuckets, hint)
     }
-  }
-
-  private def rewrite(left: LogicalPlan, right: LogicalPlan,
-                      lg: Expression, rg: Expression, exact: Expression,
-                      level: Int, saltBuckets: Int, hint: JoinHint): LogicalPlan = {
-    val cellL = AttributeReference("__graft_cell_l", LongType, nullable = false)()
-    val cellR = AttributeReference("__graft_cell_r", LongType, nullable = false)()
-    // compute each cover ONCE per input row, below the Generate, so the
-    // dedup can reference the full arrays without re-covering per pair
-    val covLA = Alias(StCellCover(lg, Literal(level)), "__graft_cov_l")()
-    val covRA = Alias(StCellCover(rg, Literal(level)), "__graft_cov_r")()
-    val projL = Project(left.output :+ covLA, left)
-    val projR = Project(right.output :+ covRA, right)
-    val genL = Generate(Explode(covLA.toAttribute),
-      unrequiredChildIndex = Nil, outer = false, qualifier = None,
-      generatorOutput = Seq(cellL), child = projL)
-    val genR = Generate(Explode(covRA.toAttribute),
-      unrequiredChildIndex = Nil, outer = false, qualifier = None,
-      generatorOutput = Seq(cellR), child = projR)
-
-    // hot-cell salting: extend the equi-key with a left-row-hash salt
-    // and replicate the right side per bucket, so one dense cell
-    // spreads over saltBuckets shuffle partitions
-    val (joinL, joinR, saltEq) =
-      if (saltBuckets <= 1) (genL, genR, None)
-      else {
-        val saltLA = Alias(
-          Pmod(new XxHash64(left.output), Literal(saltBuckets.toLong)),
-          "__graft_salt_l")()
-        val saltedL = Project(genL.output :+ saltLA, genL)
-        val saltR = AttributeReference("__graft_salt_r", LongType, nullable = false)()
-        val saltedR = Generate(
-          Explode(Literal.create((0L until saltBuckets.toLong).toArray,
-            ArrayType(LongType, containsNull = false))),
-          unrequiredChildIndex = Nil, outer = false, qualifier = None,
-          generatorOutput = Seq(saltR), child = genR)
-        (saltedL: LogicalPlan, saltedR: LogicalPlan,
-          Some(EqualTo(saltLA.toAttribute, saltR)))
-      }
-
-    // dedup before the exact predicate: the exact geometry test then
-    // runs once per pair (in its min shared cover cell), not once per
-    // shared cell
-    val eqKeys = saltEq.foldLeft(EqualTo(cellL, cellR): Expression)(And(_, _))
-    val cond = And(
-      And(eqKeys,
-        EqualTo(cellL, ArrayMin(ArrayIntersect(covLA.toAttribute, covRA.toAttribute)))),
-      exact)
-    Project((left.output ++ right.output).map(a => a: NamedExpression),
-      Join(joinL, joinR, Inner, Some(cond), hint))
   }
 }
 

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into Spark's private[sql] Column <-> Expression conversion
@@ -10,6 +11,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over a logical plan built outside the Dataset API. */
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** The bare value of a possibly direction-qualified column: `.desc`
     * / `.asc` wrap the node in an internal (non-evaluable) SortOrder;

@@ -97,7 +97,7 @@ class CellDWithinSpec extends AnyFunSuite {
   test("salting preserves the exact result") {
     val expected = bruteParis(3.0)
     val got = SpatialJoins.cellDWithinJoin(left, "lpt", right, "rpt",
-      radius = 3.0, level = 6, saltBuckets = 4, saltKey = "lid")
+      radius = 3.0, level = 6, saltBuckets = 4)
       .select($"lid", $"rid").as[(Long, Long)].collect()
     assert(got.length === got.toSet.size)
     assert(got.toSet === expected)

@@ -70,8 +70,8 @@ class PlanSpec extends AnyFunSuite {
     val agg = graft.functions.StPipCountAgg(
       org.apache.spark.sql.GraftBridge.expression(col("cx")),
       org.apache.spark.sql.GraftBridge.expression(col("cy")),
-      pts.sparkSession.sparkContext.broadcast(
-        boxes.select("box").collect().map(_.getAs[Array[Byte]](0))),
+      pts.sparkSession.sparkContext.broadcast((Array.tabulate(25)(_.toLong),
+        boxes.select("box").collect().map(_.getAs[Array[Byte]](0)))),
       25, interiorOnly = true)
     val out = pts.agg(org.apache.spark.sql.GraftBridge
       .column(agg.toAggregateExpression()).as("counts"))

@@ -58,4 +58,46 @@ class SphereSpec extends AnyFunSuite {
       .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(got === want && want.nonEmpty)
   }
+
+  /** Join pairs against the brute-force haversine pairs, on synthetic
+    * sites and a lon/lat grid of points.
+    */
+  private def assertJoinIsBruteForce(sites: Seq[(Long, Double, Double)],
+                                     points: Seq[(Long, Double, Double)],
+                                     radiusM: Double, precision: Int): Unit = {
+    val s = sites.toDF("site", "slon", "slat")
+    val p = points.toDF("pid", "px", "py")
+    val got = Sphere.dwithinSphereJoin(s, "slon", "slat", p, "px", "py", radiusM, precision)
+      .select(col("site"), col("pid")).as[(Long, Long)].collect()
+    val want = (for ((site, slon, slat) <- sites; (pid, px, py) <- points
+                     if localHav(slon, slat, px, py) <= radiusM) yield (site, pid)).toSet
+    assert(want.nonEmpty, "the fixture must have true pairs")
+    assert(got.length === got.toSet.size, "duplicate pairs")
+    val missing = want -- got.toSet
+    if (missing.nonEmpty)
+      fail(s"${missing.size} of ${want.size} true pairs dropped, e.g. ${missing.take(3)}")
+    assert(got.toSet === want)
+  }
+
+  test("dwithinSphereJoin keeps pairs across the pole") {
+    // sites near 85N; true neighbours sit on the far side of the pole
+    // (longitude 180 degrees away) and, for the 84N site, up to ~49
+    // degrees of longitude away at 86.5N
+    val sites = Seq((1L, 10.0, 85.0), (2L, -60.0, 84.0))
+    val points = for (i <- 0 until 72; j <- 0 until 12)
+      yield ((i * 100 + j).toLong, -180.0 + 5.0 * i + 2.5, 78.0 + j)
+    assertJoinIsBruteForce(sites, points, radiusM = 1000000.0, precision = 2)
+    assertJoinIsBruteForce(sites, points, radiusM = 500000.0, precision = 3)
+  }
+
+  test("dwithinSphereJoin keeps pairs across the antimeridian") {
+    // site at lon 179.5, points at lon -179.5 (about 110 km away) and
+    // around it; plus the mirror case west of the antimeridian
+    val sites = Seq((1L, 179.5, 10.0), (2L, -179.8, -20.0))
+    val points = for (i <- 0 until 40; j <- 0 until 9)
+      yield ((i * 100 + j).toLong,
+        if (i < 20) 178.0 + 0.1 * i else -180.0 + 0.1 * (i - 20),
+        if (j < 5) 9.0 + 0.5 * j else -21.0 + 0.5 * (j - 5))
+    assertJoinIsBruteForce(sites, points, radiusM = 300000.0, precision = 3)
+  }
 }

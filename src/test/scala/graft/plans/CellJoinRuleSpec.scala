@@ -216,6 +216,25 @@ class CellJoinRuleSpec extends AnyFunSuite {
     }
   }
 
+  test("q63 and q75 rewrite in their own session, leaving the caller's unchanged") {
+    // the two tables these queries read, keys only
+    val dir = java.nio.file.Files.createTempDirectory("celljoin-q63").toString
+    spark.range(25).select(col("id").as("n_nationkey")).write.parquet(s"$dir/nation.parquet")
+    spark.range(1, 101).select(col("id").as("s_suppkey")).write.parquet(s"$dir/supplier.parquet")
+    val rulesBefore = spark.experimental.extraOptimizations
+    val levelBefore = spark.conf.getOption("spark.graft.celljoin.level")
+    for (q <- Seq("q63_rule_cell_join", "q75_rule_contains_join")) {
+      val df = graft.SparkEntry.queries(q)(spark, dir)
+      assert(df.collect().nonEmpty, s"$q returned no rows")
+      val plan = df.queryExecution.executedPlan.toString()
+      assert(plan.contains("st_cellcover") && !plan.contains("BroadcastNestedLoopJoin"),
+        s"$q was not rewritten to the cell join:\n$plan")
+      assert(spark.experimental.extraOptimizations == rulesBefore, s"$q changed extraOptimizations")
+      assert(spark.conf.getOption("spark.graft.celljoin.level") == levelBefore,
+        s"$q changed spark.graft.celljoin.level")
+    }
+  }
+
   test("rule leaves non-spatial and non-inner joins untouched") {
     val rule = new CellJoinRule(spark)
     val before = spark.experimental.extraOptimizations
