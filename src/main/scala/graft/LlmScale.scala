@@ -90,15 +90,7 @@ object LlmScale extends Serializable {
     val cores = if (args.length > 0) args(0).toInt else 32
     val sizes = (if (args.length > 1) args(1) else "20000,80000,320000")
       .split(',').map(_.trim.toLong).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("llm-scale")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ST.registerAll(spark)
+    val spark = Bench.session(cores)
 
     // min-of-2: the first sample of an op at a new size absorbs JIT
     // compilation and codegen of that op's plan shape; the min is the

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.ST
 import graft.functions.ST._
 import graft.operators.{Pages, SpatialJoins}
 
@@ -19,16 +17,7 @@ object ScalingProbe {
     val nPages = args(1).toLong
     val layout = if (args.length > 2) args(2) else "clustered"
     val clustered = layout == "clustered"
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"probe-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "33554432")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    ST.registerAll(spark)
+    val spark = Bench.session(cores)
 
     val path = Pages.ensureBenchParquet(spark, nPages,
       s"/tmp/graft_bench/pages_${layout}_$nPages", clustered)

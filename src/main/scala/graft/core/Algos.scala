@@ -269,9 +269,6 @@ object Algos {
     xs.toArray
   }
 
-  /** Clip any geometry to a box: polygons via Sutherland–Hodgman, lines
-    * via per-segment Liang–Barsky, points by containment test.
-    */
   /** PostGIS-style ST_Subdivide: recursively halve the envelope along
     * its longer axis (Sutherland-Hodgman clip per half) until every
     * piece carries at most maxVerts vertices. The standard preparation
@@ -303,6 +300,13 @@ object Algos {
     out.toSeq
   }
 
+  /** Clip any geometry to a box: polygons via Sutherland–Hodgman, lines
+    * via per-segment Liang–Barsky, points by containment test. Fast, but
+    * like PostGIS ST_ClipByBox2D it may return invalid polygons: a
+    * concave or holed input can come back with zero-width bridges along
+    * the box edge or a hole touching its shell. `st_intersection`
+    * ([[Overlay.intersection]]) never does.
+    */
   def clipToBox(g: Geom, box: Env): Geom = g match {
     case p @ GPoint(c, ct) =>
       if (!p.isEmpty && box.containsPt(c(0), c(1))) p else GPoint(Array.emptyDoubleArray, ct)

@@ -1,17 +1,15 @@
 package graft.core
 
-import scala.collection.mutable.ArrayBuffer
-
-/** Geometric set operations, phase 1.
+/** Geometric intersection, the kernel behind `st_intersection`.
   *
-  * Scope: intersection where at least one operand is convex areal (or
-  * either is puntal/lineal vs areal), via half-plane clipping — the
-  * Sutherland–Hodgman path the north rule names. Envelope-disjoint
-  * short-circuits return dim-typed empties exactly like the reference
-  * (geom/alg_overlay.go:29-44,74-77: dim 0 = POINT EMPTY, 1 =
-  * LINESTRING EMPTY, 2 = POLYGON EMPTY; intersection dim =
-  * min(dimA, dimB)). The general concave-vs-concave overlay (OverlayNG
-  * noding ladder) is scheduled for a later phase.
+  * Intersection has one implementation: the arrangement overlay in
+  * [[SetOps.intersection]], as the reference runs OverlayNG for every
+  * pair (geom/alg_overlay.go:74-120). Empty and envelope-disjoint inputs
+  * return dim-typed empties like the reference (alg_overlay.go:29-44:
+  * dim 0 = POINT EMPTY, 1 = LINESTRING EMPTY, 2 = POLYGON EMPTY;
+  * intersection dim = min(dimA, dimB)); valid inputs give a valid
+  * result. The fast box clip, which may return invalid polygons, is
+  * [[Algos.clipToBox]], behind `st_clipByBox` and `st_subdivide` only.
   */
 object Overlay {
 
@@ -22,228 +20,7 @@ object Overlay {
     case _ => Geom.emptyGC
   }
 
-  def intersection(a: Geom, b: Geom): Geom = {
-    val outDim = math.min(a.dimension, b.dimension)
-    if (a.isEmpty || b.isEmpty || !a.envelope.intersects(b.envelope))
-      return emptyOfDim(outDim)
-
-    // puntal cases: filter points by containment in the other geometry
-    if (a.dimension == 0) return pointIntersection(a, b)
-    if (b.dimension == 0) return pointIntersection(b, a)
-
-    // axis-box fast path (the overlay envelope clip)
-    asAxisBox(b) match {
-      case Some(box) => return Algos.clipToBox(a, box)
-      case None =>
-    }
-    asAxisBox(a) match {
-      case Some(box) => return Algos.clipToBox(b, box)
-      case None =>
-    }
-
-    // convex clip: clip A against B's half-planes (or B against A's)
-    asConvexRing(b) match {
-      case Some(ring) => return clipToConvex(a, ring)
-      case None =>
-    }
-    asConvexRing(a) match {
-      case Some(ring) => return clipToConvex(b, ring)
-      case None =>
-    }
-
-    // general case: arrangement overlay (SetOps)
-    SetOps.intersection(a, b)
-  }
-
-  private def pointIntersection(pts: Geom, other: Geom): Geom = {
-    val hits = ArrayBuffer.empty[(Double, Double)]
-    Geom.dump(pts).foreach {
-      case p: GPoint if !p.isEmpty =>
-        if (Intersects.intersects(p, other)) hits += ((p.x, p.y))
-      case _ =>
-    }
-    if (hits.isEmpty) GPoint.empty
-    else if (hits.length == 1) GPoint.xy(hits(0)._1, hits(0)._2)
-    else GMPoint(hits.map(p => GPoint.xy(p._1, p._2)).toArray, CT.XY)
-  }
-
-  /** If g is a single-ring polygon that is an axis-aligned rectangle,
-    * return its envelope.
-    */
-  def asAxisBox(g: Geom): Option[Env] = g match {
-    case GPoly(rings, _) if rings.length == 1 =>
-      val r = rings(0)
-      val e = r.envelope
-      // every vertex on a corner, and exactly the 4 corners present
-      val n = r.n
-      if (n < 5) return None
-      var ok = true
-      var i = 0
-      while (i < n && ok) {
-        val x = r.x(i); val y = r.y(i)
-        if ((x != e.xmin && x != e.xmax) || (y != e.ymin && y != e.ymax)) ok = false
-        i += 1
-      }
-      if (ok && math.abs(Alg.signedRingArea(r)) == e.area && e.area > 0) Some(e) else None
-    case _ => None
-  }
-
-  /** If g is a single convex ring polygon (no holes), return the ring
-    * vertices in CCW open form.
-    */
-  def asConvexRing(g: Geom): Option[Array[Double]] = g match {
-    case GPoly(rings, _) if rings.length == 1 =>
-      val r0 = rings(0)
-      val r = if (Alg.signedRingArea(r0) < 0) r0.reversed else r0
-      val n = r.n - 1 // drop closing point
-      if (n < 3) return None
-      var i = 0
-      while (i < n) {
-        val o = Alg.orient(r.x(i), r.y(i), r.x((i + 1) % n), r.y((i + 1) % n),
-          r.x((i + 2) % n), r.y((i + 2) % n))
-        if (o < 0) return None // reflex corner: not convex
-        i += 1
-      }
-      val out = new Array[Double](n * 2)
-      i = 0
-      while (i < n) { out(2 * i) = r.x(i); out(2 * i + 1) = r.y(i); i += 1 }
-      Some(out)
-    case _ => None
-  }
-
-  /** Clip any geometry against a convex CCW ring by successive
-    * half-plane clips (Sutherland–Hodgman for rings, Cyrus–Beck-style
-    * parametric clipping for segments).
-    */
-  def clipToConvex(g: Geom, ring: Array[Double]): Geom = {
-    val nv = ring.length / 2
-    def edges: Iterator[(Double, Double, Double, Double)] =
-      (0 until nv).iterator.map { i =>
-        val j = (i + 1) % nv
-        (ring(2 * i), ring(2 * i + 1), ring(2 * j), ring(2 * j + 1))
-      }
-
-    g match {
-      case GPoly(rings, _) =>
-        var cur: Array[Array[Double]] =
-          rings.map { r =>
-            val n0 = if (r.n > 1) r.n - 1 else r.n
-            val xs = new Array[Double](n0 * 2)
-            var i = 0
-            while (i < n0) { xs(2 * i) = r.x(i); xs(2 * i + 1) = r.y(i); i += 1 }
-            xs
-          }
-        for ((ex1, ey1, ex2, ey2) <- edges) {
-          cur = cur.map(clipOpenRingHalfPlane(_, ex1, ey1, ex2, ey2))
-        }
-        val shells = cur.filter(_.length >= 6)
-        if (shells.isEmpty || cur(0).length < 6) GPoly(Array.empty, CT.XY)
-        else GPoly(shells.map(closeRing).map(Seqn.xy), CT.XY)
-      case GMPoly(ps, ct) =>
-        val out = ps.flatMap { rs =>
-          clipToConvex(GPoly(rs, ct), ring) match {
-            case GPoly(rr, _) if rr.nonEmpty => Some(rr)
-            case _ => None
-          }
-        }
-        if (out.isEmpty) GPoly(Array.empty, CT.XY) else GMPoly(out, CT.XY)
-      case GLine(s) =>
-        val parts = clipSeqToConvex(s, ring)
-        if (parts.isEmpty) GLine(Seqn.empty2D)
-        else if (parts.length == 1) GLine(Seqn.xy(parts(0)))
-        else GMLine(parts.map(Seqn.xy), CT.XY)
-      case GMLine(ls, _) =>
-        val parts = ls.flatMap(clipSeqToConvex(_, ring))
-        if (parts.isEmpty) GLine(Seqn.empty2D) else GMLine(parts.map(Seqn.xy), CT.XY)
-      case GColl(gs, _) => GColl(gs.map(clipToConvex(_, ring)), CT.XY)
-      case other => other
-    }
-  }
-
-  private def closeRing(xs: Array[Double]): Array[Double] = {
-    val out = java.util.Arrays.copyOf(xs, xs.length + 2)
-    out(xs.length) = xs(0); out(xs.length + 1) = xs(1)
-    out
-  }
-
-  private def clipOpenRingHalfPlane(xs: Array[Double], ex1: Double, ey1: Double,
-                                    ex2: Double, ey2: Double): Array[Double] = {
-    val m = xs.length / 2
-    if (m == 0) return xs
-    val out = new ArrayBuffer[Double](xs.length + 8)
-    def inside(x: Double, y: Double): Boolean =
-      Alg.orient(ex1, ey1, ex2, ey2, x, y) >= 0
-    def isect(px: Double, py: Double, cx: Double, cy: Double): (Double, Double) = {
-      val rx = cx - px; val ry = cy - py
-      val sx = ex2 - ex1; val sy = ey2 - ey1
-      val denom = rx * sy - ry * sx
-      val t = ((ex1 - px) * sy - (ey1 - py) * sx) / denom
-      (px + t * rx, py + t * ry)
-    }
-    var i = 0
-    while (i < m) {
-      val cx = xs(2 * i); val cy = xs(2 * i + 1)
-      val pi = (i + m - 1) % m
-      val px = xs(2 * pi); val py = xs(2 * pi + 1)
-      val cIn = inside(cx, cy); val pIn = inside(px, py)
-      if (cIn) {
-        if (!pIn) { val (ix, iy) = isect(px, py, cx, cy); out += ix += iy }
-        out += cx += cy
-      } else if (pIn) {
-        val (ix, iy) = isect(px, py, cx, cy); out += ix += iy
-      }
-      i += 1
-    }
-    out.toArray
-  }
-
-  private def clipSeqToConvex(s: Seqn, ring: Array[Double]): Array[Array[Double]] = {
-    val nv = ring.length / 2
-    val out = ArrayBuffer.empty[Array[Double]]
-    var cur = new ArrayBuffer[Double]()
-    def flush(): Unit = {
-      if (cur.length >= 4) out += cur.toArray
-      cur = new ArrayBuffer[Double]()
-    }
-    var i = 0
-    while (i < s.n - 1) {
-      // parametric clip of one segment against all half planes
-      var t0 = 0.0; var t1 = 1.0
-      val x1 = s.x(i); val y1 = s.y(i)
-      val dx = s.x(i + 1) - x1; val dy = s.y(i + 1) - y1
-      var ok = true
-      var e = 0
-      while (e < nv && ok) {
-        val j = (e + 1) % nv
-        val ex = ring(2 * j) - ring(2 * e); val ey = ring(2 * j + 1) - ring(2 * e + 1)
-        // inside = left of edge; n = inward normal (-ey? for CCW left is inside)
-        val nx = -ey; val ny = ex
-        val denom = nx * dx + ny * dy
-        val num = nx * (ring(2 * e) - x1) + ny * (ring(2 * e + 1) - y1)
-        if (denom == 0) { if (num > 0) ok = false }
-        else {
-          val t = num / denom
-          if (denom < 0) { if (t < t1) t1 = t } else { if (t > t0) t0 = t }
-          if (t0 > t1) ok = false
-        }
-        e += 1
-      }
-      if (ok && t0 <= t1) {
-        val ax = x1 + t0 * dx; val ay = y1 + t0 * dy
-        val bx = x1 + t1 * dx; val by = y1 + t1 * dy
-        if (ax != bx || ay != by) {
-          if (cur.isEmpty) { cur += ax += ay }
-          else if (cur(cur.length - 2) != ax || cur(cur.length - 1) != ay) {
-            flush(); cur += ax += ay
-          }
-          cur += bx += by
-        }
-      } else flush()
-      i += 1
-    }
-    flush()
-    out.toArray
-  }
+  def intersection(a: Geom, b: Geom): Geom = SetOps.intersection(a, b)
 }
 
 /** Structural equality with per-ordinate tolerance and the reference's

@@ -734,7 +734,9 @@ case class StOverlayPrec(op: String, left: Expression, right: Expression,
 }
 
 /** st_clipByBox(geom, xmin, ymin, xmax, ymax) — Sutherland–Hodgman /
-  * Liang–Barsky clip, the tile-assignment kernel.
+  * Liang–Barsky clip, the tile-assignment kernel. Fast, but like PostGIS
+  * ST_ClipByBox2D it may return invalid polygons for concave or holed
+  * input; `st_intersection` with a box polygon gives the valid result.
   */
 case class StClipByBox(children: Seq[Expression]) extends Expression with RowKernelCodegen {
   require(children.length == 5, "st_clipByBox(geom,xmin,ymin,xmax,ymax)")

@@ -24,25 +24,13 @@ object Corpus {
     filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 0)
 
   /** Consecutive chunkWords-word chunks — one kernel pass
-    * ([[graft.functions.WordChunks]]); value-identical to
-    * [[wordChunksColumnSpelling]], spec-gated.
+    * ([[graft.functions.WordChunks]]); value-identical to the Column
+    * spelling WordShinglesSpec keeps as its reference.
     */
   private def wordChunks(text: Column, chunkWords: Int): Column =
     org.apache.spark.sql.GraftBridge.column(
       graft.functions.WordChunks(
         org.apache.spark.sql.GraftBridge.expression(text), chunkWords))
-
-  /** The r5 Column spelling of [[wordChunks]] — retained as the
-    * executable specification the kernel is property-tested against.
-    */
-  private[graft] def wordChunksColumnSpelling(text: Column, chunkWords: Int): Column = {
-    val tk = split(lower(trim(text)), "\\s+")
-    val m = when(length(trim(text)) === 0, lit(0)).otherwise(size(tk))
-    when(m === 0, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), ceil(m.cast("double") / chunkWords).cast("int") - 1),
-        i => concat_ws(" ", slice(tk, i * chunkWords + 1, lit(chunkWords)))))
-  }
 
   /** Benchmark-contamination scan: which corpus docs share at least
     * one word n-gram with a held-out benchmark set. This is the

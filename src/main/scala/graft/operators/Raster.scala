@@ -48,8 +48,8 @@ object Raster {
 
   /** Vector → raster: per-cell coverage fraction (the `ST_AsRaster`
     * analogue for AREAL input; reference carto/ projections give the
-    * grid, the clip kernel is Sutherland–Hodgman, core/Overlay
-    * clipByBox).
+    * grid, the clip kernel is Sutherland–Hodgman, core/Algos
+    * clipToBox).
     *
     * Output: input columns + (ix, iy, coverage) with 0 < coverage ≤ 1,
     * where coverage = area(geom ∩ cell) / area(cell). Fully covered

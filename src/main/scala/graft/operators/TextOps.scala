@@ -81,19 +81,6 @@ object TextOps {
       graft.functions.TextFingerprint(
         org.apache.spark.sql.GraftBridge.expression(text)))
 
-  /** The r5 Column spelling of [[fingerprint]] — retained as the
-    * executable specification the kernel is property-tested against.
-    */
-  private[graft] def fingerprintColumnSpelling(text: Column): Column = {
-    val toks = split(trim(text), "\\s+")
-    aggregate(
-      toks,
-      lit(0L),
-      (acc, t) =>
-        (acc * 31L + conv(substring(md5(t), 1, 5), 16, 10).cast("long")) % lit(2147483648L)
-    )
-  }
-
   /** n-char shingle set (lowercased, whitespace-normalized). */
   def charShingles(text: Column, n: Int): Column = {
     val norm = regexp_replace(lower(trim(text)), "\\s+", " ")
@@ -105,27 +92,15 @@ object TextOps {
   }
 
   /** Word n-gram shingles — one kernel pass per row
-    * ([[graft.functions.WordShingles]]); value-identical to
-    * [[wordShinglesColumnSpelling]], the interpreted HOF chain it
-    * replaced (the lambda re-evaluated the tokenize subtree per
-    * window: O(len^2) regex work per doc), spec-gated equivalent.
+    * ([[graft.functions.WordShingles]]); value-identical to the
+    * interpreted HOF chain it replaced (the lambda re-evaluated the
+    * tokenize subtree per window: O(len^2) regex work per doc), which
+    * WordShinglesSpec keeps as the reference spelling.
     */
   def wordShingles(text: Column, n: Int): Column =
     org.apache.spark.sql.GraftBridge.column(
       graft.functions.WordShingles(
         org.apache.spark.sql.GraftBridge.expression(text), n))
-
-  /** The r5 Column spelling of [[wordShingles]] — retained as the
-    * executable specification the kernel is property-tested against.
-    */
-  private[graft] def wordShinglesColumnSpelling(text: Column, n: Int): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    val m = size(toks)
-    when(m < n, array(concat_ws(" ", toks)))
-      .otherwise(array_distinct(transform(
-        sequence(lit(0), m - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-  }
 
   // ------------------------------------------------- html extraction
 

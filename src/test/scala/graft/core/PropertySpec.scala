@@ -1,6 +1,7 @@
 package graft.core
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -107,6 +108,38 @@ class PropertySpec extends AnyFunSuite {
         uni >= math.max(aA, aB) - eps &&
         uni <= aA + aB + eps &&
         math.abs(uni - (aA + aB - inter)) <= eps
+    }, n = 200)
+  }
+
+  // concave: a box with a notch cut down from its top edge (a U)
+  private val genNotchPoly: Gen[Geom] =
+    for (x <- ord; y <- ord; w <- posOrd.map(_ + 6); h <- posOrd.map(_ + 4);
+         a <- Gen.choose(1, 6).map(_ / 4.0); b <- Gen.choose(1, 6).map(_ / 4.0))
+      yield Wkt.parse(s"POLYGON((" +
+        s"$x $y, ${x + w} $y, ${x + w} ${y + h}, ${x + w - 1 - a} ${y + h}," +
+        s" ${x + w - 1 - a} ${y + b}, ${x + 1 + a} ${y + b}, ${x + 1 + a} ${y + h}," +
+        s" $x ${y + h}, $x $y))")
+
+  // convex: an axis box with its corners cut off (an octagon)
+  private val genOctagon: Gen[Geom] =
+    for (x <- ord; y <- ord; w <- posOrd.map(_ + 2); h <- posOrd.map(_ + 2);
+         c <- Gen.choose(1, 4).map(_ / 4.0))
+      yield Wkt.parse(s"POLYGON((" +
+        s"${x + c} $y, ${x + w - c} $y, ${x + w} ${y + c}, ${x + w} ${y + h - c}," +
+        s" ${x + w - c} ${y + h}, ${x + c} ${y + h}, $x ${y + h - c}, $x ${y + c}," +
+        s" ${x + c} $y))")
+
+  test("st_intersection of concave or holed polygons with boxes and convex polygons is valid") {
+    check("intersection", Prop.forAll(Gen.oneOf(genNotchPoly, genHolePoly),
+      Gen.oneOf(genBoxPoly, genOctagon)) { (a, b) =>
+      val ab = Overlay.intersection(a, b)
+      val ba = Overlay.intersection(b, a)
+      val area = Measure.area(ab)
+      val eps = 1e-9 * math.max(1.0, Measure.area(a) + Measure.area(b))
+      (Validate.isValid(ab) && Validate.isValid(ba) &&
+        math.abs(area - Measure.area(ba)) <= eps &&
+        area <= math.min(Measure.area(a), Measure.area(b)) + eps) :|
+        s"${Wkt.write(a)} ∩ ${Wkt.write(b)} = ${Wkt.write(ab)}"
     }, n = 200)
   }
 

@@ -92,6 +92,40 @@ class SetOpsSpec extends AnyFunSuite {
     assert(Measure.area(u) == 175.0)
   }
 
+  // Overlay.intersection is the st_intersection kernel: concave and
+  // holed inputs cut by a box must come back as valid geometries, and
+  // repeated input points as one point
+  test("Overlay.intersection: concave and holed polygons cut by a box stay valid") {
+    def valid(r: Geom): Unit = assert(Validate.isValid(r), s"${Validate.reason(r)}: ${Wkt.write(r)}")
+    val uShape = g("POLYGON((0 0,10 0,10 10,7 10,7 3,3 3,3 10,0 10,0 0))")
+    val top = g("POLYGON((-1 5,11 5,11 12,-1 12,-1 5))")
+    val u = Overlay.intersection(uShape, top)
+    valid(u)
+    assert(u.isInstanceOf[GMPoly] && Geom.dump(u).size == 2, Wkt.write(u))
+    assert(topoEq(u, g("MULTIPOLYGON(((0 5,3 5,3 10,0 10,0 5)),((7 5,10 5,10 10,7 10,7 5)))")))
+
+    val comb = g("POLYGON((0 0,13 0,13 10,12 10,12 2,9 2,9 10,8 10,8 2,5 2,5 10,4 10,4 2," +
+      "1 2,1 10,0 10,0 0))")
+    val c = Overlay.intersection(comb, g("POLYGON((-1 5,14 5,14 12,-1 12,-1 5))"))
+    valid(c)
+    assert(c.isInstanceOf[GMPoly] && Geom.dump(c).size == 4, Wkt.write(c))
+    assert(Measure.area(c) == 20.0)
+
+    val holed = g("POLYGON((0 0,10 0,10 10,0 10,0 0),(3 3,7 3,7 7,3 7,3 3))")
+    val h = Overlay.intersection(holed, top)
+    valid(h)
+    assert(h.isInstanceOf[GPoly], Wkt.write(h))
+    assert(topoEq(h, g("POLYGON((0 5,3 5,3 7,7 7,7 5,10 5,10 10,0 10,0 5))")))
+
+    val inHole = Overlay.intersection(holed, g("POLYGON((4 4,6 4,6 6,4 6,4 4))"))
+    assert(inHole.isEmpty && inHole.isInstanceOf[GPoly], Wkt.write(inHole))
+  }
+
+  test("Overlay.intersection: repeated points intersect to one point") {
+    val r = Overlay.intersection(g("MULTIPOINT((1 1),(1 1))"), g("POLYGON((0 0,2 0,2 2,0 2,0 0))"))
+    assert(Wkt.write(r) == "POINT(1 1)")
+  }
+
   test("empty handling matches reference typing") {
     val p = g("POLYGON((0 0,1 0,1 1,0 1,0 0))")
     val e = g("POLYGON EMPTY")

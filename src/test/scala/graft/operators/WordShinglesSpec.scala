@@ -39,7 +39,7 @@ class WordShinglesSpec extends AnyFunSuite {
     for (n <- 1 to 9) {
       val both = df.select(
         TextOps.wordShingles(col("text"), n).as("k"),
-        TextOps.wordShinglesColumnSpelling(col("text"), n).as("c"))
+        ColumnSpellings.wordShingles(col("text"), n).as("c"))
         .collect()
       both.zip(hostile).foreach { case (r, src) =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
@@ -55,7 +55,7 @@ class WordShinglesSpec extends AnyFunSuite {
         org.apache.spark.sql.GraftBridge.column(
           graft.functions.WordChunks(
             org.apache.spark.sql.GraftBridge.expression(col("text")), w)).as("k"),
-        Corpus.wordChunksColumnSpelling(col("text"), w).as("c"))
+        ColumnSpellings.wordChunks(col("text"), w).as("c"))
         .collect()
       both.zip(hostile).foreach { case (r, src) =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
@@ -86,7 +86,7 @@ class WordShinglesSpec extends AnyFunSuite {
   test("kernel fingerprint == aggregate-fold spelling") {
     val df = hostile.toDF("text")
     df.select(TextOps.fingerprint(col("text")).as("k"),
-        TextOps.fingerprintColumnSpelling(col("text")).as("c"))
+        ColumnSpellings.fingerprint(col("text")).as("c"))
       .collect().zip(hostile).foreach { case (r, src) =>
         assert(r.getLong(0) == r.getLong(1), s"text=${src.take(40)}")
       }
@@ -98,7 +98,7 @@ class WordShinglesSpec extends AnyFunSuite {
       .groupBy(col("sh")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val b = df.select(col("id"),
-        explode(TextOps.wordShinglesColumnSpelling(col("text"), 3)).as("sh"))
+        explode(ColumnSpellings.wordShingles(col("text"), 3)).as("sh"))
       .groupBy(col("sh")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(a == b)
