@@ -4,7 +4,10 @@ import graft.core._
   * regular polygons / zigzag lines at n = 2^10..2^14 vertices to catch
   * superlinear growth (this harness exposed the O(n^2) arrangement
   * indexing, the snap-round hot-pixel scans, and the piece-union
-  * buffer blowup). Usage: runMain graft.KernelScale
+  * buffer blowup), after a small-n rung at web-geometry sizes: buffer,
+  * relate, isValid and intersection of concave star polygons at
+  * n = 2^2..2^8, in microseconds per call.
+  * Usage: runMain graft.KernelScale [small]  ("small": the rung only)
   */
 object KernelScale {
   def poly(cx: Double, n: Int): Geom = {
@@ -13,6 +16,21 @@ object KernelScale {
     while (i < n) {
       val a = math.Pi / 2 + i.toDouble / n * 2 * math.Pi
       coords(2 * i) = cx + math.cos(a); coords(2 * i + 1) = math.sin(a)
+      i += 1
+    }
+    coords(2 * n) = coords(0); coords(2 * n + 1) = coords(1)
+    GPoly(Array(new Seqn(coords, CT.XY)), CT.XY)
+  }
+  /** Star polygon around (cx, 0): n vertices alternating between
+    * radius 1 and 0.6 (concave from n = 6 on).
+    */
+  def star(cx: Double, n: Int): Geom = {
+    val coords = new Array[Double](2 * (n + 1))
+    var i = 0
+    while (i < n) {
+      val a = math.Pi / 2 + i.toDouble / n * 2 * math.Pi
+      val r = if (i % 2 == 0) 1.0 else 0.6
+      coords(2 * i) = cx + r * math.cos(a); coords(2 * i + 1) = r * math.sin(a)
       i += 1
     }
     coords(2 * n) = coords(0); coords(2 * n + 1) = coords(1)
@@ -33,6 +51,31 @@ object KernelScale {
     println(f"$label%-28s $s%.5f s/op")
     s
   }
+  /** Microseconds per call, over as many calls as fit in ~0.25 s. */
+  def timeUs(label: String, print: Boolean)(f: => Any): Double = {
+    var k = 0; while (k < 20) { f; k += 1 } // warm
+    var reps = 0
+    val t0 = System.nanoTime()
+    var t = t0
+    while (t - t0 < 250000000L) { f; reps += 1; t = System.nanoTime() }
+    val us = (t - t0) / 1e3 / reps
+    if (print) println(f"$label%-28s $us%10.1f us/op")
+    us
+  }
+  /** Two passes over the sizes; only the second is printed, so the
+    * JIT's recompiles on moving between sizes fall in the first.
+    */
+  def smallRung(): Unit =
+    for (pass <- 1 to 2; pow <- 2 to 8) {
+      val n = 1 << pow
+      val p = star(0, n); val p2 = star(0.5, n)
+      val out = pass == 2
+      if (out) println(s"--- small n=2^$pow (star)")
+      timeUs(s"buffer n=$n", out)(BufferOp.buffer(p, 0.1))
+      timeUs(s"relate n=$n", out)(Relate.relate(p, p2))
+      timeUs(s"isValid n=$n", out)(Validate.isValid(p))
+      timeUs(s"intersection n=$n", out)(Overlay.intersection(p, p2))
+    }
   def main(args: Array[String]): Unit = {
     // global JIT warm-up at a small size so the first timed op of the
     // sweep doesn't carry interpreter/C1 cost for the whole stack
@@ -41,7 +84,10 @@ object KernelScale {
       BufferOp.buffer(wp, 0.1); BufferOp.buffer(wl, 0.05)
       Relate.relate(wp, poly(0.5, 256)); Validate.isValid(wp)
       Simplicity.isSimple(wl); Intersects.distance(wp, poly(3.0, 256))
+      Overlay.intersection(star(0, 256), star(0.5, 256))
     }
+    smallRung()
+    if (args.headOption.contains("small")) return
     for (pow <- Seq(10, 12, 14)) {
       val n = 1 << pow
       val p = poly(0, n); val p2 = poly(0.5, n); val l = zig(n)

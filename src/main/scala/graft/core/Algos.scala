@@ -536,17 +536,7 @@ object Simplicity {
           math.max(s.x(i), s.x(i + 1)), math.max(s.y(i), s.y(i + 1)))
         i += 1
       }
-      val tree = RTree.bulkLoad(envs)
-      var ok = true
-      i = 0
-      while (ok && i < n) {
-        tree.rangeSearch(envs(i)) { j =>
-          if (j > i && !checkPair(i, j)) ok = false
-          ok
-        }
-        i += 1
-      }
-      ok
+      RTree.bulkLoad(envs).selfJoin(checkPair)
     }
   }
 

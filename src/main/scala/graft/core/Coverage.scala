@@ -103,24 +103,19 @@ object Coverage {
 
     // (2) pairwise interior intersection via envelope candidates
     val envs = polys.map(_.envelope).toArray
-    val rt = RTree.bulkLoad(envs)
-    for (i <- polys.indices) {
-      rt.rangeSearch(envs(i)) { j =>
-        if (j > i) {
-          val m = Relate.relate(polys(i), polys(j))
-          if (m.charAt(0) != 'F') {
-            // interiors overlap: surface the overlap's boundary
-            val ov = SetOps.intersection(polys(i), polys(j))
-            bad ++= ringsOf(ov)
-            ov match {
-              case GLine(s) => bad += s
-              case GMLine(ls, _) => bad ++= ls
-              case _ => ()
-            }
-          }
+    RTree.bulkLoad(envs).selfJoin { (i, j) =>
+      val m = Relate.relate(polys(i), polys(j))
+      if (m.charAt(0) != 'F') {
+        // interiors overlap: surface the overlap's boundary
+        val ov = SetOps.intersection(polys(i), polys(j))
+        bad ++= ringsOf(ov)
+        ov match {
+          case GLine(s) => bad += s
+          case GMLine(ls, _) => bad ++= ls
+          case _ => ()
         }
-        true
       }
+      true
     }
 
     // (3) surviving-edge collinear-overlap check (mismatched noding).
@@ -147,16 +142,12 @@ object Coverage {
     val segEnvs = survivors.map { case (x1, y1, x2, y2) =>
       Env(math.min(x1, x2), math.min(y1, y2), math.max(x1, x2), math.max(y1, y2))
     }.toArray
-    val segTree = RTree.bulkLoad(segEnvs)
     val flagged = new Array[Boolean](survivors.length)
-    for (i <- survivors.indices) {
-      segTree.rangeSearch(segEnvs(i)) { j =>
-        if (j > i && !(flagged(i) && flagged(j))) {
-          val a = survivors(i); val b = survivors(j)
-          if (collinearOverlap(a, b)) { flagged(i) = true; flagged(j) = true }
-        }
-        true
+    RTree.bulkLoad(segEnvs).selfJoin { (i, j) =>
+      if (!(flagged(i) && flagged(j)) && collinearOverlap(survivors(i), survivors(j))) {
+        flagged(i) = true; flagged(j) = true
       }
+      true
     }
     for (i <- survivors.indices; if flagged(i)) {
       val (x1, y1, x2, y2) = survivors(i)

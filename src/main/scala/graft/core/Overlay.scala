@@ -178,25 +178,43 @@ object PointOnSurface {
   private def arealPOS(g: Geom): Option[(Double, Double)] = {
     val env = g.envelope
     if (env.isEmpty) return None
-    // adjusted bisector Y: nudge off vertex rows to avoid degeneracy
+    // adjusted bisector Y: nudge off vertex rows to avoid degeneracy —
+    // when a vertex lies on y, move y halfway down to the highest vertex
+    // row below it (env.ymin if none); rows compared by
+    // java.lang.Double.compare
     var y = (env.ymin + env.ymax) / 2
-    val ys = scala.collection.mutable.SortedSet.empty[Double]
-    Geom.transformSeq(g, s => { var i = 0; while (i < s.n) { ys += s.y(i); i += 1 }; s })
-    if (ys.contains(y)) {
-      val lower = ys.rangeUntil(y).lastOption.getOrElse(env.ymin)
-      val higher = ys.rangeFrom(y).headOption.getOrElse(env.ymax)
-      val cand = (lower + higher) / 2
+    var onRow = false
+    var hasLower = false
+    var lower = env.ymin
+    Geom.transformSeq(g, s => {
+      var i = 0
+      while (i < s.n) {
+        val v = s.y(i)
+        val c = java.lang.Double.compare(v, y)
+        if (c == 0) onRow = true
+        else if (c < 0 && (!hasLower || java.lang.Double.compare(v, lower) > 0)) {
+          lower = v; hasLower = true
+        }
+        i += 1
+      }
+      s
+    })
+    if (onRow) {
+      val cand = (lower + y) / 2
       if (cand != y) y = cand
     }
     // intersect horizontal line with all areal rings; collect xs
-    val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var xs = new Array[Double](16)
+    var nx = 0
     def ringXs(r: Seqn): Unit = {
       var i = 0
       while (i < r.n - 1) {
         val y1 = r.y(i); val y2 = r.y(i + 1)
         if ((y1 > y) != (y2 > y)) {
           val t = (y - y1) / (y2 - y1)
-          xs += r.x(i) + t * (r.x(i + 1) - r.x(i))
+          if (nx == xs.length) xs = java.util.Arrays.copyOf(xs, nx * 2)
+          xs(nx) = r.x(i) + t * (r.x(i + 1) - r.x(i))
+          nx += 1
         }
         i += 1
       }
@@ -208,7 +226,8 @@ object PointOnSurface {
       case _ =>
     }
     walk(g)
-    val sorted = xs.sorted
+    val sorted = java.util.Arrays.copyOf(xs, nx)
+    java.util.Arrays.sort(sorted) // java.lang.Double.compare order
     var best: Option[(Double, Double)] = None
     var bestW = -1.0
     var i = 0

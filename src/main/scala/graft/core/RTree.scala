@@ -1,7 +1,5 @@
 package graft.core
 
-import scala.collection.mutable
-
 /** In-memory bulk-loaded R-tree over (Env, recordID) pairs — records
   * live outside the tree, same design as the reference
   * (reference: rtree/rtree.go:29-36, rtree/bulk.go:12). This is an STR
@@ -93,6 +91,74 @@ final class RTree private (
       while (i < childCount(n)) {
         if (!searchPt(fc + i, x, y, cb)) return false
         i += 1
+      }
+      true
+    }
+  }
+
+  /** Every pair of records i < j whose boxes overlap, each pair once,
+    * in the order of
+    * `for (i <- 0 until count) rangeSearch(box(i)) { j => if (j > i) cb(i, j) }`:
+    * ascending i, then tree order of j. The DFS skips subtrees holding
+    * no record id above i, so a pair is not visited again from its
+    * larger id. Callback returns false to stop; returns false iff it
+    * stopped.
+    */
+  def selfJoin(cb: (Int, Int) => Boolean): Boolean = {
+    if (isEmpty) return true
+    val nodes = childCount.length
+    // maxId(node): largest record id below it (children precede their
+    // parent in the node arrays: levels are built bottom-up)
+    val maxId = new Array[Int](nodes)
+    val pos = new Array[Int](count) // record id -> leaf slot
+    var nd = 0
+    while (nd < nodes) {
+      val fc = firstChild(nd)
+      var m = -1
+      var c = 0
+      while (c < childCount(nd)) {
+        val id = if (fc < 0) { val slot = -fc - 1 + c; pos(recIds(slot)) = slot; recIds(slot) } else maxId(fc + c)
+        if (id > m) m = id
+        c += 1
+      }
+      maxId(nd) = m
+      nd += 1
+    }
+    var i = 0
+    while (i < count) {
+      val b = pos(i) * 4
+      val xmin = leafBoxes(b); val ymin = leafBoxes(b + 1)
+      val xmax = leafBoxes(b + 2); val ymax = leafBoxes(b + 3)
+      if (!(xmin > xmax || ymin > ymax) &&
+          !joinFrom(root, i, xmin, ymin, xmax, ymax, maxId, cb)) return false
+      i += 1
+    }
+    true
+  }
+
+  private def joinFrom(n: Int, i: Int, xmin: Double, ymin: Double, xmax: Double, ymax: Double,
+                       maxId: Array[Int], cb: (Int, Int) => Boolean): Boolean = {
+    if (maxId(n) <= i || !(boxes(n * 4) <= xmax && xmin <= boxes(n * 4 + 2) &&
+        boxes(n * 4 + 1) <= ymax && ymin <= boxes(n * 4 + 3))) return true
+    val fc = firstChild(n)
+    if (fc < 0) {
+      val start = -fc - 1
+      var k = 0
+      while (k < childCount(n)) {
+        val rid = recIds(start + k)
+        val b = (start + k) * 4
+        if (rid > i && leafBoxes(b) <= xmax && xmin <= leafBoxes(b + 2) &&
+            leafBoxes(b + 1) <= ymax && ymin <= leafBoxes(b + 3)) {
+          if (!cb(i, rid)) return false
+        }
+        k += 1
+      }
+      true
+    } else {
+      var k = 0
+      while (k < childCount(n)) {
+        if (!joinFrom(fc + k, i, xmin, ymin, xmax, ymax, maxId, cb)) return false
+        k += 1
       }
       true
     }
@@ -274,12 +340,13 @@ object RTree {
     val n = envs.length
     if (n == 0) return empty
     // sort record ids by STR tiles: primary X-center slabs, secondary Y-center
-    val ids = Array.range(0, n)
+    // (stable sorts, so records with equal centers keep id order)
+    val order = Array.range(0, n)
     val cx = new Array[Double](n); val cy = new Array[Double](n)
     var i = 0
     while (i < n) { cx(i) = envs(i).centerX; cy(i) = envs(i).centerY; i += 1 }
-    val idsBoxed = ids.map(Integer.valueOf)
-    java.util.Arrays.sort(idsBoxed, (a: Integer, b: Integer) => java.lang.Double.compare(cx(a), cx(b)))
+    val tmp = new Array[Int](n)
+    sortIdsByKey(order, 0, n, cx, tmp)
     val leafCount = (n + Fanout - 1) / Fanout
     val slices = math.max(1, math.ceil(math.sqrt(leafCount.toDouble)).toInt)
     val perSlice = (n + slices - 1) / slices
@@ -287,12 +354,9 @@ object RTree {
     while (s < slices) {
       val from = s * perSlice
       val to = math.min(n, from + perSlice)
-      if (from < to)
-        java.util.Arrays.sort(idsBoxed, from, to,
-          (a: Integer, b: Integer) => java.lang.Double.compare(cy(a), cy(b)))
+      if (from < to) sortIdsByKey(order, from, to, cy, tmp)
       s += 1
     }
-    val order = idsBoxed.map(_.intValue())
 
     // leaf record arrays in STR order
     val leafBoxesArr = new Array[Double](n * 4)
@@ -306,15 +370,14 @@ object RTree {
       i += 1
     }
 
-    // build levels bottom-up
-    val boxes = mutable.ArrayBuilder.make[Double]
-    val firstChild = mutable.ArrayBuilder.make[Int]
-    val childCount = mutable.ArrayBuilder.make[Int]
+    // build levels bottom-up, starting with the leaves
+    val leaves = (n + Fanout - 1) / Fanout
+    var bArr = new Array[Double](leaves * 4)
+    var fArr = new Array[Int](leaves)
+    var cArr = new Array[Int](leaves)
     var nodeCount = 0
-
-    // leaves
     var levelStart = 0
-    var levelSize = 0
+    var levelSize = leaves
     i = 0
     while (i < n) {
       val cnt = math.min(Fanout, n - i)
@@ -329,15 +392,13 @@ object RTree {
         if (leafBoxesArr(b + 3) > ymax) ymax = leafBoxesArr(b + 3)
         j += 1
       }
-      boxes += xmin += ymin += xmax += ymax
-      firstChild += -(i + 1)
-      childCount += cnt
+      bArr(nodeCount * 4) = xmin; bArr(nodeCount * 4 + 1) = ymin
+      bArr(nodeCount * 4 + 2) = xmax; bArr(nodeCount * 4 + 3) = ymax
+      fArr(nodeCount) = -(i + 1)
+      cArr(nodeCount) = cnt
       nodeCount += 1
-      levelSize += 1
       i += cnt
     }
-
-    var bArr = boxes.result(); var fArr = firstChild.result(); var cArr = childCount.result()
 
     while (levelSize > 1) {
       val nextStart = nodeCount
@@ -375,5 +436,41 @@ object RTree {
     }
 
     new RTree(bArr, fArr, cArr, recIds, leafBoxesArr, nodeCount - 1, n)
+  }
+
+  /** Stable sort of `ids(from until to)` by `key(id)` under
+    * `java.lang.Double.compare` (-0.0 before 0.0, NaN last): insertion
+    * sort for short ranges, merge sort through `tmp` (at least `to`
+    * long) above, so long ranges stay O(k log k).
+    */
+  private[core] def sortIdsByKey(ids: Array[Int], from: Int, to: Int,
+                                 key: Array[Double], tmp: Array[Int]): Unit = {
+    if (to - from <= 12) {
+      var i = from + 1
+      while (i < to) {
+        val id = ids(i); val k = key(id)
+        var j = i - 1
+        while (j >= from && java.lang.Double.compare(key(ids(j)), k) > 0) {
+          ids(j + 1) = ids(j); j -= 1
+        }
+        ids(j + 1) = id
+        i += 1
+      }
+    } else {
+      val mid = (from + to) >>> 1
+      sortIdsByKey(ids, from, mid, key, tmp)
+      sortIdsByKey(ids, mid, to, key, tmp)
+      if (java.lang.Double.compare(key(ids(mid - 1)), key(ids(mid))) > 0) {
+        System.arraycopy(ids, from, tmp, from, to - from)
+        var a = from; var b = mid; var o = from
+        while (a < mid && b < to) {
+          if (java.lang.Double.compare(key(tmp(a)), key(tmp(b))) <= 0) { ids(o) = tmp(a); a += 1 }
+          else { ids(o) = tmp(b); b += 1 }
+          o += 1
+        }
+        while (a < mid) { ids(o) = tmp(a); a += 1; o += 1 }
+        while (b < to) { ids(o) = tmp(b); b += 1; o += 1 }
+      }
+    }
   }
 }

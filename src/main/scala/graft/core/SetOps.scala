@@ -787,7 +787,7 @@ object SetOps {
         val endpoints = mutable.HashSet.empty[(Double, Double)]
         shared.foreach { e =>
           endpoints += ((e.x1, e.y1)); endpoints += ((e.x2, e.y2)) }
-        val touchPts = noder.abNodes.toSeq
+        val touchPts = abPoints(noder)
           .filterNot(p => endpoints.contains(p))
           .filterNot(p => shared.exists(e => Alg.onSegment(e.x1, e.y1, e.x2, e.y2, p._1, p._2)))
         assembleMixed(GPoly(Array.empty, CT.XY), lineG, dedupPoints(touchPts), emptyDim = 1)
@@ -820,7 +820,7 @@ object SetOps {
         val lineG = linesFromEdges(kept)
         val endpoints = mutable.HashSet.empty[(Double, Double)]
         kept.foreach { e => endpoints += ((e.x1, e.y1)); endpoints += ((e.x2, e.y2)) }
-        val touchPts = noder.abNodes.toSeq
+        val touchPts = abPoints(noder)
           .filterNot(p => endpoints.contains(p))
           .filterNot(p => kept.exists(e => Alg.onSegment(e.x1, e.y1, e.x2, e.y2, p._1, p._2)))
           .filter(p => Alg.pointInAreal(areal, p._1, p._2) >= 0)
@@ -893,7 +893,7 @@ object SetOps {
       if (e.aSrc && e.bSrc) anyShared = true
       ei += 1
     }
-    if (!anyShared && noder.abNodes.isEmpty) return arealResult
+    if (!anyShared && noder.abNodeCount == 0) return arealResult
 
     val sharedEdges = mutable.ArrayBuffer.empty[NodedEdge]
     ei = 0
@@ -906,32 +906,38 @@ object SetOps {
     val lineG = linesFromEdges(sharedEdges.toSeq)
 
     val touchPts =
-      if (noder.abNodes.isEmpty) Seq.empty[(Double, Double)]
+      if (noder.abNodeCount == 0) Seq.empty[(Double, Double)]
       else {
-        // abNodes is small (one entry per A-B contact); test edge
-        // endpoints against it instead of building a covered-point set
-        // over every edge endpoint
-        val abSet = noder.abNodes
-        val covered = mutable.HashSet.empty[(Double, Double)]
+        // the A-B nodes are few (one per A-B contact); look edge
+        // endpoints up among them instead of building a covered-point
+        // set over every edge endpoint
+        val covered = new Array[Boolean](noder.abNodeCount)
+        var nCovered = 0
+        def cover(k: Int): Unit = if (k >= 0 && !covered(k)) { covered(k) = true; nCovered += 1 }
         ei = 0
-        while (ei < arr.edges.length && covered.size < abSet.size) {
+        while (ei < arr.edges.length && nCovered < covered.length) {
           val e = arr.edges(ei)
           val keptAdj = keptFace(arr.leftFace(ei)) || keptFace(arr.rightFace(ei)) ||
             (e.aSrc && e.bSrc)
           if (keptAdj) {
-            val p1 = (e.x1, e.y1)
-            if (abSet.contains(p1)) covered += p1
-            val p2 = (e.x2, e.y2)
-            if (abSet.contains(p2)) covered += p2
+            cover(noder.abNodeIndex(e.x1, e.y1))
+            cover(noder.abNodeIndex(e.x2, e.y2))
           }
           ei += 1
         }
-        abSet.toSeq.filterNot(covered.contains)
+        val pts = abPoints(noder)
+        pts.indices.filterNot(covered).map(pts)
       }
     assembleMixed(arealResult, lineG, dedupPoints(touchPts))
   }
 
   // ------------------------------------------------------- assembly
+
+  /** The noder's A-B nodes (candidate touch points), in first-seen
+    * order.
+    */
+  private def abPoints(noder: Noder): IndexedSeq[(Double, Double)] =
+    IndexedSeq.tabulate(noder.abNodeCount)(k => (noder.abNodeX(k), noder.abNodeY(k)))
 
   /** Merge noded 2-point edges into maximal linestrings through
     * degree-2 nodes.
@@ -1014,18 +1020,106 @@ object Noder {
 final case class NodedEdge(x1: Double, y1: Double, x2: Double, y2: Double,
                            var aSrc: Boolean, var bSrc: Boolean)
 
+/** Open-addressing hash table from a long key to the ids filed under
+  * it. Ids are handed out densely (0, 1, 2, ...) by `add`, and each
+  * key's ids are chained in insertion order; callers keep the payload
+  * in their own arrays indexed by id. The noder's keys are mixed
+  * coordinate hashes, so two distinct points may share a key: callers
+  * walk the chain and compare the payload exactly. Most lookups miss
+  * (the snap registry probes nine cells per point), so the table keeps
+  * at most a quarter of its slots in use.
+  */
+private[core] final class IdChains(expectedIds: Int) {
+  private var mask = Integer.highestOneBit(math.max(8, 4 * expectedIds) - 1) * 2 - 1
+  private var keys = new Array[Long](mask + 1)
+  private var heads = freeSlots(mask + 1) // first id of the slot's chain; -1 = free
+  private var tails = new Array[Int](mask + 1)
+  private var nexts = new Array[Int](math.max(4, expectedIds))
+  private var ids = 0
+  private var keyCount = 0
+
+  /** Number of ids handed out. */
+  def size: Int = ids
+
+  @inline private def home(key: Long): Int = {
+    val h = (key ^ (key >>> 29)) * 0xBF58476D1CE4E5B9L
+    (h ^ (h >>> 32)).toInt & mask
+  }
+
+  private def slotOf(key: Long): Int = {
+    var s = home(key)
+    while (heads(s) >= 0 && keys(s) != key) s = (s + 1) & mask
+    s
+  }
+
+  /** First id filed under `key`, or -1. */
+  def first(key: Long): Int = heads(slotOf(key))
+
+  /** Id after `id` in its key's chain, or -1. */
+  def next(id: Int): Int = nexts(id)
+
+  /** Files a new id under `key`, after the ids already there. */
+  def add(key: Long): Int = {
+    val id = ids
+    if (id == nexts.length) nexts = java.util.Arrays.copyOf(nexts, id * 2)
+    nexts(id) = -1
+    ids += 1
+    val s = slotOf(key)
+    if (heads(s) >= 0) { nexts(tails(s)) = id; tails(s) = id }
+    else {
+      keys(s) = key; heads(s) = id; tails(s) = id
+      keyCount += 1
+      if (keyCount * 4 > mask) grow()
+    }
+    id
+  }
+
+  private def grow(): Unit = {
+    val (ok, oh, ot) = (keys, heads, tails)
+    mask = mask * 2 + 1
+    keys = new Array[Long](mask + 1)
+    heads = freeSlots(mask + 1)
+    tails = new Array[Int](mask + 1)
+    var s = 0
+    while (s < ok.length) {
+      if (oh(s) >= 0) {
+        val t = slotOf(ok(s))
+        keys(t) = ok(s); heads(t) = oh(s); tails(t) = ot(s)
+      }
+      s += 1
+    }
+  }
+
+  private def freeSlots(n: Int): Array[Int] = {
+    val a = new Array[Int](n)
+    java.util.Arrays.fill(a, -1)
+    a
+  }
+}
+
 /** Segment noder: collects tagged segments, splits them at mutual
   * intersections (computed once per crossing pair so the split point is
   * bit-identical on both), dedupes sub-segments, and records the nodes
   * where an A-segment meets a B-segment (candidate touch points).
   */
 final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
-  private val segs = mutable.ArrayBuffer.empty[Array[Double]] // x1,y1,x2,y2
-  private val segSrcA = mutable.ArrayBuffer.empty[Boolean]
-  private val splits = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[(Double, Double)]]
+  // segments: x1,y1,x2,y2 at 4*i
+  private var segXY = new Array[Double](64)
+  private var segSrcA = new Array[Boolean](16)
+  private var nSeg = 0
 
-  /** Nodes where an A-source segment intersects a B-source segment. */
-  val abNodes: mutable.LinkedHashSet[(Double, Double)] = mutable.LinkedHashSet.empty
+  // split points: per-segment chains in insertion order
+  private var splitHead: Array[Int] = _
+  private var splitTail: Array[Int] = _
+  private var splitXY = new Array[Double](32)
+  private var splitNext = new Array[Int](16)
+  private var nSplit = 0
+
+  // nodes where an A-source segment meets a B-source segment, distinct,
+  // in first-seen order
+  private val abIds = new IdChains(4)
+  private var abXY = new Array[Double](8)
+  private var nAb = 0
 
   var edges: IndexedSeq[NodedEdge] = IndexedSeq.empty
 
@@ -1036,41 +1130,49 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
   // independently-computed coordinates (e.g. r*cos(pi/2) = 9e-17 vs an
   // exact 0) would otherwise open in the arrangement.
   private var eps = 0.0
-  // cell -> interleaved x,y point list, keyed by a MIXED hash of the
-  // (ix, iy) cell (LongMap, no boxed tuple keys — the snap registry is
-  // the hottest allocation site of the whole overlay). Hash collisions
-  // between distinct cells are harmless: candidates are accepted only
-  // by the exact |dx|,|dy| <= eps comparison.
-  private val snapGrid = mutable.LongMap.empty[mutable.ArrayBuffer[Double]]
+  // registered points filed by a MIXED hash of their eps-grid cell
+  // (ix, iy); a lookup scans the 3x3 neighbouring cells' chains in
+  // registration order. Hash collisions between distinct cells are
+  // harmless: candidates are accepted only by the exact
+  // |dx|,|dy| <= eps comparison.
+  private var snapIds: IdChains = _
+  private var snapXY: Array[Double] = _
+  // snap's result (fields, not a tuple: snap runs once per vertex and
+  // per crossing)
+  private var sx = 0.0
+  private var sy = 0.0
 
   @inline private def cellKey(ix: Long, iy: Long): Long =
     ix * 0x9E3779B97F4A7C15L ^ java.lang.Long.rotateLeft(iy * 0xC2B2AE3D27D4EB4FL, 31)
 
-  private def snap(x0: Double, y0: Double): (Double, Double) = {
+  /** Snaps (x0, y0) to the first registered point within eps, or
+    * registers it; the result lands in (sx, sy).
+    */
+  private def snap(x0: Double, y0: Double): Unit = {
     val x = x0 + 0.0; val y = y0 + 0.0 // normalize -0.0
-    if (eps <= 0) return (x, y)
+    sx = x; sy = y
+    if (eps <= 0) return
     val ix = math.floor(x / eps).toLong; val iy = math.floor(y / eps).toLong
     var dx = -1
     while (dx <= 1) {
       var dy = -1
       while (dy <= 1) {
-        val lst = snapGrid.getOrNull(cellKey(ix + dx, iy + dy))
-        if (lst != null) {
-          var k = 0
-          while (k < lst.length) {
-            val px = lst(k); val py = lst(k + 1)
-            if (math.abs(px - x) <= eps && math.abs(py - y) <= eps)
-              return (px, py)
-            k += 2
+        var id = snapIds.first(cellKey(ix + dx, iy + dy))
+        while (id >= 0) {
+          val px = snapXY(2 * id); val py = snapXY(2 * id + 1)
+          if (math.abs(px - x) <= eps && math.abs(py - y) <= eps) {
+            sx = px; sy = py
+            return
           }
+          id = snapIds.next(id)
         }
         dy += 1
       }
       dx += 1
     }
-    val lst = snapGrid.getOrElseUpdate(cellKey(ix, iy), mutable.ArrayBuffer.empty[Double])
-    lst += x; lst += y
-    (x, y)
+    val id = snapIds.add(cellKey(ix, iy))
+    if (2 * id + 2 > snapXY.length) snapXY = java.util.Arrays.copyOf(snapXY, snapXY.length * 2)
+    snapXY(2 * id) = x; snapXY(2 * id + 1) = y
   }
 
   def addLine(s: Seqn, srcA: Boolean): Unit = {
@@ -1078,73 +1180,113 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
     while (i < s.n - 1) {
       val x1 = s.x(i); val y1 = s.y(i); val x2 = s.x(i + 1); val y2 = s.y(i + 1)
       if (x1 != x2 || y1 != y2) {
-        segs += Array(x1 + 0.0, y1 + 0.0, x2 + 0.0, y2 + 0.0)
-        segSrcA += srcA
-        splits += mutable.ArrayBuffer.empty
+        if (4 * nSeg + 4 > segXY.length) segXY = java.util.Arrays.copyOf(segXY, segXY.length * 2)
+        if (nSeg == segSrcA.length) segSrcA = java.util.Arrays.copyOf(segSrcA, nSeg * 2)
+        val b = 4 * nSeg
+        segXY(b) = x1 + 0.0; segXY(b + 1) = y1 + 0.0
+        segXY(b + 2) = x2 + 0.0; segXY(b + 3) = y2 + 0.0
+        segSrcA(nSeg) = srcA
+        nSeg += 1
       }
       i += 1
     }
   }
 
   private def addSplit(i: Int, x: Double, y: Double): Unit = {
-    val s = segs(i)
-    if ((x != s(0) || y != s(1)) && (x != s(2) || y != s(3)))
-      splits(i) += ((x, y))
+    val b = 4 * i
+    if ((x != segXY(b) || y != segXY(b + 1)) && (x != segXY(b + 2) || y != segXY(b + 3))) {
+      if (nSplit == splitNext.length) {
+        splitNext = java.util.Arrays.copyOf(splitNext, nSplit * 2)
+        splitXY = java.util.Arrays.copyOf(splitXY, nSplit * 4)
+      }
+      splitXY(2 * nSplit) = x; splitXY(2 * nSplit + 1) = y
+      splitNext(nSplit) = -1
+      if (splitHead(i) < 0) splitHead(i) = nSplit else splitNext(splitTail(i)) = nSplit
+      splitTail(i) = nSplit
+      nSplit += 1
+    }
   }
+
+  @inline private def pointKey(x: Double, y: Double): Long = {
+    var h = java.lang.Double.doubleToLongBits(x + 0.0) * 0x9E3779B97F4A7C15L
+    h ^= java.lang.Long.rotateLeft(java.lang.Double.doubleToLongBits(y + 0.0) * 0xC2B2AE3D27D4EB4FL, 31)
+    h
+  }
+
+  /** Index of (x, y) among the A-B nodes, or -1. */
+  def abNodeIndex(x: Double, y: Double): Int = {
+    var id = abIds.first(pointKey(x, y))
+    while (id >= 0 && !(abXY(2 * id) == x && abXY(2 * id + 1) == y)) id = abIds.next(id)
+    id
+  }
+
+  private def addAb(x: Double, y: Double): Unit =
+    if (abNodeIndex(x, y) < 0) {
+      val id = abIds.add(pointKey(x, y))
+      if (2 * id + 2 > abXY.length) abXY = java.util.Arrays.copyOf(abXY, abXY.length * 2)
+      abXY(2 * id) = x; abXY(2 * id + 1) = y
+      nAb += 1
+    }
+
+  /** Number of distinct nodes where an A-source segment meets a
+    * B-source segment.
+    */
+  def abNodeCount: Int = nAb
+  def abNodeX(k: Int): Double = abXY(2 * k)
+  def abNodeY(k: Int): Double = abXY(2 * k + 1)
 
   def node(): Unit = {
     // eps from coordinate scale, then canonicalize every input vertex
     // through the snap registry (input vertices register first, so
     // derived intersection points snap TO them, not the reverse)
     var maxAbs = 0.0
-    segs.foreach { s =>
-      var k = 0
-      while (k < 4) { val v = math.abs(s(k)); if (v > maxAbs) maxAbs = v; k += 1 }
-    }
+    var k = 0
+    while (k < 4 * nSeg) { val v = math.abs(segXY(k)); if (v > maxAbs) maxAbs = v; k += 1 }
     eps = maxAbs * epsFactor
+    // input vertices plus a margin for crossings
+    snapIds = new IdChains(nSeg + nSeg / 4 + 4)
+    snapXY = new Array[Double](2 * (nSeg + nSeg / 4 + 4))
     var w = 0
     var r = 0
-    while (r < segs.length) {
-      val s = segs(r)
-      val (x1, y1) = snap(s(0), s(1))
-      val (x2, y2) = snap(s(2), s(3))
+    while (r < nSeg) {
+      val b = 4 * r
+      snap(segXY(b), segXY(b + 1)); val x1 = sx; val y1 = sy
+      snap(segXY(b + 2), segXY(b + 3)); val x2 = sx; val y2 = sy
       if (x1 != x2 || y1 != y2) {
-        segs(w) = Array(x1, y1, x2, y2)
+        segXY(4 * w) = x1; segXY(4 * w + 1) = y1; segXY(4 * w + 2) = x2; segXY(4 * w + 3) = y2
         segSrcA(w) = segSrcA(r)
-        splits(w) = splits(r)
         w += 1
       }
       r += 1
     }
-    segs.takeInPlace(w); segSrcA.takeInPlace(w); splits.takeInPlace(w)
+    nSeg = w
 
-    val n = segs.length
+    val n = nSeg
+    splitHead = new Array[Int](n)
+    java.util.Arrays.fill(splitHead, -1)
+    splitTail = new Array[Int](n)
     val envs = new Array[Env](n)
     var i = 0
     while (i < n) {
-      val s = segs(i)
-      envs(i) = Env(math.min(s(0), s(2)) - eps, math.min(s(1), s(3)) - eps,
-        math.max(s(0), s(2)) + eps, math.max(s(1), s(3)) + eps)
+      val b = 4 * i
+      envs(i) = Env(math.min(segXY(b), segXY(b + 2)) - eps, math.min(segXY(b + 1), segXY(b + 3)) - eps,
+        math.max(segXY(b), segXY(b + 2)) + eps, math.max(segXY(b + 1), segXY(b + 3)) + eps)
       i += 1
     }
-    val tree = RTree.bulkLoad(envs)
-    i = 0
-    while (i < n) {
-      val s = segs(i)
-      tree.rangeSearch(envs(i)) { j =>
-        if (j > i) intersectPair(i, j)
-        true
-      }
-      i += 1
-    }
+    RTree.bulkLoad(envs).selfJoin { (i, j) => intersectPair(i, j); true }
 
-    // split + dedupe: edges land in an insertion-ordered buffer (the
+    // split + dedupe: edges are numbered in first-seen order (the
     // arrangement's half-edge ids, contour order, and ultimately ring
-    // start points depend on it) indexed by a LongMap of mixed
-    // coordinate-bit hashes — no boxed tuple4 key per sub-segment;
-    // hash collisions resolved by exact coordinate comparison
-    val edgeBuf = mutable.ArrayBuffer.empty[NodedEdge]
-    val edgeIdx = mutable.LongMap.empty[mutable.ArrayBuffer[Int]]
+    // start points depend on it) and filed by a mixed hash of their
+    // coordinate bits; hash collisions are resolved by exact
+    // coordinate comparison
+    // (a segment with k distinct split points yields k + 1 pieces, so
+    // n + nSplit bounds the edge count)
+    val edgeCap = n + nSplit
+    val edgeIds = new IdChains(edgeCap)
+    val eXY = new Array[Double](4 * edgeCap)
+    val eA = new Array[Boolean](edgeCap)
+    val eB = new Array[Boolean](edgeCap)
     def edgeKey(ax: Double, ay: Double, bx: Double, by: Double): Long = {
       var h = java.lang.Double.doubleToLongBits(ax) * 0x9E3779B97F4A7C15L
       h ^= java.lang.Long.rotateLeft(java.lang.Double.doubleToLongBits(ay) * 0xC2B2AE3D27D4EB4FL, 17)
@@ -1152,93 +1294,132 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
       h ^= java.lang.Long.rotateLeft(java.lang.Double.doubleToLongBits(by) * 0x27D4EB2F165667C5L, 47)
       h
     }
+    def emit(ax0: Double, ay0: Double, bx0: Double, by0: Double, srcA: Boolean): Unit =
+      if (ax0 != bx0 || ay0 != by0) {
+        val flip = !(ax0 < bx0 || (ax0 == bx0 && ay0 <= by0))
+        val ax = if (flip) bx0 else ax0; val ay = if (flip) by0 else ay0
+        val bx = if (flip) ax0 else bx0; val by = if (flip) ay0 else by0
+        val key = edgeKey(ax, ay, bx, by)
+        var e = edgeIds.first(key)
+        while (e >= 0 && !(eXY(4 * e) == ax && eXY(4 * e + 1) == ay &&
+                           eXY(4 * e + 2) == bx && eXY(4 * e + 3) == by)) e = edgeIds.next(e)
+        if (e >= 0) {
+          if (srcA) eA(e) = true else eB(e) = true
+        } else {
+          e = edgeIds.add(key)
+          eXY(4 * e) = ax; eXY(4 * e + 1) = ay; eXY(4 * e + 2) = bx; eXY(4 * e + 3) = by
+          eA(e) = srcA; eB(e) = !srcA
+        }
+      }
+    // one segment's split points: coordinates, parameter t along the
+    // segment, and their order
+    var px = new Array[Double](8); var py = new Array[Double](8)
+    var pt = new Array[Double](8)
+    var ord = new Array[Int](8); var tmp = new Array[Int](8)
     i = 0
     while (i < n) {
-      val s = segs(i)
-      val dx = s(2) - s(0); val dy = s(3) - s(1)
+      val b = 4 * i
+      val x1 = segXY(b); val y1 = segXY(b + 1); val x2 = segXY(b + 2); val y2 = segXY(b + 3)
+      val srcA = segSrcA(i)
+      val dx = x2 - x1; val dy = y2 - y1
       val horiz = math.abs(dx) >= math.abs(dy)
-      def t(px: Double, py: Double): Double =
-        if (horiz) (px - s(0)) / dx else (py - s(1)) / dy
-      val pts = ((s(0), s(1)) +: splits(i).distinct.sortBy(p => t(p._1, p._2))) :+ ((s(2), s(3)))
-      var k = 0
-      while (k < pts.length - 1) {
-        val (ax0, ay0) = pts(k); val (bx0, by0) = pts(k + 1)
-        if (ax0 != bx0 || ay0 != by0) {
-          val flip = !(ax0 < bx0 || (ax0 == bx0 && ay0 <= by0))
-          val ax = if (flip) bx0 else ax0; val ay = if (flip) by0 else ay0
-          val bx = if (flip) ax0 else bx0; val by = if (flip) ay0 else by0
-          val cands = edgeIdx.getOrElseUpdate(edgeKey(ax, ay, bx, by),
-            mutable.ArrayBuffer.empty[Int])
-          var found = -1
-          var c = 0
-          while (found < 0 && c < cands.length) {
-            val e = edgeBuf(cands(c))
-            if (e.x1 == ax && e.y1 == ay && e.x2 == bx && e.y2 == by) found = cands(c)
-            c += 1
-          }
-          if (found >= 0) {
-            val e = edgeBuf(found)
-            if (segSrcA(i)) e.aSrc = true else e.bSrc = true
-          } else {
-            cands += edgeBuf.length
-            edgeBuf += NodedEdge(ax, ay, bx, by,
-              aSrc = segSrcA(i), bSrc = !segSrcA(i))
-          }
+      var m = 0
+      var c = splitHead(i)
+      while (c >= 0) {
+        if (m == px.length) {
+          px = java.util.Arrays.copyOf(px, m * 2); py = java.util.Arrays.copyOf(py, m * 2)
+          pt = java.util.Arrays.copyOf(pt, m * 2)
+          ord = new Array[Int](m * 2); tmp = new Array[Int](m * 2)
+        }
+        val x = splitXY(2 * c); val y = splitXY(2 * c + 1)
+        px(m) = x; py(m) = y
+        pt(m) = if (horiz) (x - x1) / dx else (y - y1) / dy
+        m += 1
+        c = splitNext(c)
+      }
+      k = 0
+      while (k < m) { ord(k) = k; k += 1 }
+      // stable sort by t; equal points have bit-equal t, so a repeat of
+      // a point lands in the run of equal t after its first occurrence
+      // and is dropped there (= distinct, then a stable sort by t)
+      RTree.sortIdsByKey(ord, 0, m, pt, tmp)
+      var ax = x1; var ay = y1
+      var runStart = 0
+      k = 0
+      while (k < m) {
+        val p = ord(k)
+        if (k > 0 && java.lang.Double.compare(pt(ord(k - 1)), pt(p)) != 0) runStart = k
+        var dup = false
+        var q = runStart
+        while (!dup && q < k) {
+          dup = px(ord(q)) == px(p) && py(ord(q)) == py(p)
+          q += 1
+        }
+        if (!dup) {
+          emit(ax, ay, px(p), py(p), srcA)
+          ax = px(p); ay = py(p)
         }
         k += 1
       }
+      emit(ax, ay, x2, y2, srcA)
       i += 1
     }
     // array-backed: Arrangement/overlay index edges(i) in tight loops,
     // so positional apply must be O(1), not List's O(i)
-    edges = scala.collection.immutable.ArraySeq.unsafeWrapArray(edgeBuf.toArray)
+    val out = new Array[NodedEdge](edgeIds.size)
+    i = 0
+    while (i < out.length) {
+      out(i) = NodedEdge(eXY(4 * i), eXY(4 * i + 1), eXY(4 * i + 2), eXY(4 * i + 3), eA(i), eB(i))
+      i += 1
+    }
+    edges = scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
   }
 
   private def intersectPair(i: Int, j: Int): Unit = {
-    val a = segs(i); val b = segs(j)
-    val o1 = Alg.orient(a(0), a(1), a(2), a(3), b(0), b(1))
-    val o2 = Alg.orient(a(0), a(1), a(2), a(3), b(2), b(3))
-    val o3 = Alg.orient(b(0), b(1), b(2), b(3), a(0), a(1))
-    val o4 = Alg.orient(b(0), b(1), b(2), b(3), a(2), a(3))
+    val a = 4 * i; val b = 4 * j
+    val ax1 = segXY(a); val ay1 = segXY(a + 1); val ax2 = segXY(a + 2); val ay2 = segXY(a + 3)
+    val bx1 = segXY(b); val by1 = segXY(b + 1); val bx2 = segXY(b + 2); val by2 = segXY(b + 3)
+    val o1 = Alg.orient(ax1, ay1, ax2, ay2, bx1, by1)
+    val o2 = Alg.orient(ax1, ay1, ax2, ay2, bx2, by2)
+    val o3 = Alg.orient(bx1, by1, bx2, by2, ax1, ay1)
+    val o4 = Alg.orient(bx1, by1, bx2, by2, ax2, ay2)
     val crossSrc = segSrcA(i) != segSrcA(j)
 
     if (o1 * o2 < 0 && o3 * o4 < 0) {
       // proper crossing: one shared point, computed once, snapped to
       // any pre-existing node within eps
-      val (cx, cy) = Alg.crossingPoint(a(0), a(1), a(2), a(3), b(0), b(1), b(2), b(3))
-      val (px, py) = snap(cx, cy)
+      val (cx, cy) = Alg.crossingPoint(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
+      snap(cx, cy)
+      val px = sx; val py = sy
       addSplit(i, px, py); addSplit(j, px, py)
-      if (crossSrc) abNodes += ((px, py))
+      if (crossSrc) addAb(px, py)
       return
     }
     if (o1 == 0 && o2 == 0 && o3 == 0 && o4 == 0) {
       // collinear: project endpoints onto the other segment
-      def tryPt(si: Int, px: Double, py: Double): Unit = {
-        val s = segs(si)
-        if (Alg.onSegment(s(0), s(1), s(2), s(3), px, py)) {
-          addSplit(si, px, py)
-          if (crossSrc) abNodes += ((px, py))
-        }
-      }
-      tryPt(i, b(0), b(1)); tryPt(i, b(2), b(3))
-      tryPt(j, a(0), a(1)); tryPt(j, a(2), a(3))
+      splitIfOn(i, bx1, by1, crossSrc); splitIfOn(i, bx2, by2, crossSrc)
+      splitIfOn(j, ax1, ay1, crossSrc); splitIfOn(j, ax2, ay2, crossSrc)
       return
     }
     // endpoint touching / T-junctions: eps-tolerant — a vertex within
     // eps of the other segment nodes it (snapping-noder behavior)
-    def near(s: Array[Double], px: Double, py: Double): Boolean =
-      Alg.distPointSeg(px, py, s(0), s(1), s(2), s(3)) <= eps
-    if (near(a, b(0), b(1))) {
-      addSplit(i, b(0), b(1)); if (crossSrc) abNodes += ((b(0), b(1)))
+    splitIfNear(i, bx1, by1, crossSrc); splitIfNear(i, bx2, by2, crossSrc)
+    splitIfNear(j, ax1, ay1, crossSrc); splitIfNear(j, ax2, ay2, crossSrc)
+  }
+
+  private def splitIfOn(si: Int, px: Double, py: Double, crossSrc: Boolean): Unit = {
+    val b = 4 * si
+    if (Alg.onSegment(segXY(b), segXY(b + 1), segXY(b + 2), segXY(b + 3), px, py)) {
+      addSplit(si, px, py)
+      if (crossSrc) addAb(px, py)
     }
-    if (near(a, b(2), b(3))) {
-      addSplit(i, b(2), b(3)); if (crossSrc) abNodes += ((b(2), b(3)))
-    }
-    if (near(b, a(0), a(1))) {
-      addSplit(j, a(0), a(1)); if (crossSrc) abNodes += ((a(0), a(1)))
-    }
-    if (near(b, a(2), a(3))) {
-      addSplit(j, a(2), a(3)); if (crossSrc) abNodes += ((a(2), a(3)))
+  }
+
+  private def splitIfNear(si: Int, px: Double, py: Double, crossSrc: Boolean): Unit = {
+    val b = 4 * si
+    if (Alg.distPointSeg(px, py, segXY(b), segXY(b + 1), segXY(b + 2), segXY(b + 3)) <= eps) {
+      addSplit(si, px, py)
+      if (crossSrc) addAb(px, py)
     }
   }
 }
@@ -1248,13 +1429,12 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
   * of kept faces into shells + holes.
   */
 final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
-  // nodes
-  // node registry: primitive coordinate columns indexed by a LongMap
-  // of mixed coordinate-bit hashes (collisions resolved exactly) — no
-  // boxed tuple key/value per node; nid() runs once per half-edge
-  private val nodeIdx = mutable.LongMap.empty[mutable.ArrayBuffer[Int]]
-  private val nodeXs = mutable.ArrayBuffer.empty[Double]
-  private val nodeYs = mutable.ArrayBuffer.empty[Double]
+  // node registry: primitive coordinate columns, node ids filed by a
+  // mixed hash of the coordinate bits (collisions resolved exactly);
+  // nid() runs once per half-edge
+  private val nodeIds = new IdChains(math.max(16, edges.length))
+  private var nodeXs = new Array[Double](math.max(16, edges.length))
+  private var nodeYs = new Array[Double](math.max(16, edges.length))
   @inline private def nodeX(i: Int): Double = nodeXs(i)
   @inline private def nodeY(i: Int): Double = nodeYs(i)
   @inline private def nodeHash(x: Double, y: Double): Long = {
@@ -1262,18 +1442,19 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
     h ^= java.lang.Long.rotateLeft(java.lang.Double.doubleToLongBits(y) * 0xC2B2AE3D27D4EB4FL, 31)
     h
   }
-  private def nid(x: Double, y: Double): Int =
-  {
-    val lst = nodeIdx.getOrElseUpdate(nodeHash(x, y), new mutable.ArrayBuffer[Int](2))
-    var i = 0
-    while (i < lst.length) {
-      val id = lst(i)
+  private def nid(x: Double, y: Double): Int = {
+    val key = nodeHash(x, y)
+    var id = nodeIds.first(key)
+    while (id >= 0) {
       if (nodeXs(id) == x && nodeYs(id) == y) return id
-      i += 1
+      id = nodeIds.next(id)
     }
-    val id = nodeXs.length
-    nodeXs += x; nodeYs += y
-    lst += id
+    id = nodeIds.add(key)
+    if (id == nodeXs.length) {
+      nodeXs = java.util.Arrays.copyOf(nodeXs, id * 2)
+      nodeYs = java.util.Arrays.copyOf(nodeYs, id * 2)
+    }
+    nodeXs(id) = x; nodeYs(id) = y
     id
   }
 
@@ -1283,12 +1464,18 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
   private var heNext: Array[Int] = _ // next half-edge in left-face walk
   private var heFace: Array[Int] = _
   private var contourOf: Array[Int] = _ // half-edge -> contour id
-  private val contours = mutable.ArrayBuffer.empty[Array[Int]] // contour -> half-edges
-  private val contourArea = mutable.ArrayBuffer.empty[Double]
+  // contours, compressed: contour c walks contourHe(contourStart(c) until contourStart(c + 1))
+  private var contourStart: Array[Int] = _
+  private var contourHe: Array[Int] = _
+  private var contourArea: Array[Double] = _
+  private var nContours = 0
   private var contourFace: Array[Int] = _
   var nFaces: Int = 0
   private var unbounded: Array[Boolean] = _
-  private val faceContours = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[Int]]
+  // face f's contours: faceContour(faceStart(f) until faceStart(f + 1)),
+  // a bounded face's outer (CCW) contour first
+  private var faceStart: Array[Int] = _
+  private var faceContour: Array[Int] = _
 
   @inline private def twin(h: Int): Int = h ^ 1
 
@@ -1303,10 +1490,19 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
       heFrom(2 * i + 1) = v; heTo(2 * i + 1) = u
       i += 1
     }
-    // outgoing half-edges per node, sorted by angle (CCW order)
-    val out = Array.fill(nodeXs.length)(mutable.ArrayBuffer.empty[Int])
+    // outgoing half-edges per node (compressed rows, ascending half-edge
+    // id within a node), then each node's row stably sorted by angle
+    // (CCW order)
+    val nNodes = nodeIds.size
+    val outStart = new Array[Int](nNodes + 1)
     i = 0
-    while (i < 2 * m) { out(heFrom(i)) += i; i += 1 }
+    while (i < 2 * m) { outStart(heFrom(i) + 1) += 1; i += 1 }
+    i = 0
+    while (i < nNodes) { outStart(i + 1) += outStart(i); i += 1 }
+    val out = new Array[Int](2 * m)
+    val fill = java.util.Arrays.copyOf(outStart, nNodes)
+    i = 0
+    while (i < 2 * m) { out(fill(heFrom(i))) = i; fill(heFrom(i)) += 1; i += 1 }
     val angle = new Array[Double](2 * m)
     i = 0
     while (i < 2 * m) {
@@ -1315,50 +1511,63 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
       angle(i) = math.atan2(ty - fy, tx - fx)
       i += 1
     }
-    val rankAt = new Array[Int](2 * m) // position of h in out(from(h)) CCW order
-    out.foreach { lst =>
-      val sorted = lst.sortBy(angle)
-      var k = 0
-      while (k < sorted.length) { rankAt(sorted(k)) = k; k += 1 }
-      lst.clear(); lst ++= sorted
+    val rankAt = new Array[Int](2 * m) // position of h in its node's CCW row
+    val tmp = new Array[Int](2 * m)
+    var v = 0
+    while (v < nNodes) {
+      RTree.sortIdsByKey(out, outStart(v), outStart(v + 1), angle, tmp)
+      var k = outStart(v)
+      while (k < outStart(v + 1)) { rankAt(out(k)) = k - outStart(v); k += 1 }
+      v += 1
     }
     // next(h): at node v = to(h), take twin(h) (outgoing at v) and step
     // to the next outgoing half-edge in CLOCKWISE order (previous in the
-    // CCW-sorted list) — the standard left-face traversal rule
+    // CCW-sorted row) — the standard left-face traversal rule
     heNext = new Array[Int](2 * m)
     i = 0
     while (i < 2 * m) {
       val t = twin(i)
-      val lst = out(heFrom(t))
-      val k = rankAt(t)
-      heNext(i) = lst((k - 1 + lst.length) % lst.length)
+      val s = outStart(heFrom(t))
+      val d = outStart(heFrom(t) + 1) - s
+      heNext(i) = out(s + (rankAt(t) - 1 + d) % d)
       i += 1
     }
     // contours
-    contourOf = Array.fill(2 * m)(-1)
+    contourOf = new Array[Int](2 * m)
+    java.util.Arrays.fill(contourOf, -1)
+    contourHe = new Array[Int](2 * m)
+    var starts = new Array[Int](16)
+    var areas = new Array[Double](16)
+    var nc = 0
+    var filled = 0
     i = 0
     while (i < 2 * m) {
       if (contourOf(i) == -1) {
-        val cid = contours.length
-        val buf = mutable.ArrayBuffer.empty[Int]
-        var h = i
-        while (contourOf(h) == -1) {
-          contourOf(h) = cid
-          buf += h
-          h = heNext(h)
+        if (nc + 1 == starts.length) {
+          starts = java.util.Arrays.copyOf(starts, starts.length * 2)
+          areas = java.util.Arrays.copyOf(areas, areas.length * 2)
         }
-        contours += buf.toArray
+        starts(nc) = filled
         // signed area (shoelace over the walked cycle)
         var s = 0.0
-        buf.foreach { h2 =>
-          val x1 = nodeX(heFrom(h2)); val y1 = nodeY(heFrom(h2))
-          val x2 = nodeX(heTo(h2)); val y2 = nodeY(heTo(h2))
+        var h = i
+        while (contourOf(h) == -1) {
+          contourOf(h) = nc
+          contourHe(filled) = h; filled += 1
+          val x1 = nodeX(heFrom(h)); val y1 = nodeY(heFrom(h))
+          val x2 = nodeX(heTo(h)); val y2 = nodeY(heTo(h))
           s += x1 * y2 - x2 * y1
+          h = heNext(h)
         }
-        contourArea += s / 2
+        areas(nc) = s / 2
+        nc += 1
       }
       i += 1
     }
+    starts(nc) = filled
+    contourStart = starts
+    contourArea = areas
+    nContours = nc
     groupContoursIntoFaces()
     heFace = new Array[Int](2 * m)
     i = 0
@@ -1371,105 +1580,115 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
     * contains it. The unbounded face is face 0.
     */
   private def groupContoursIntoFaces(): Unit = {
-    val nc = contours.length
+    val nc = nContours
     contourFace = new Array[Int](nc)
-    val ccw = (0 until nc).filter(contourArea(_) > 0)
-    // face 0 = unbounded
-    nFaces = 1 + ccw.length
+    // face 0 = unbounded; CCW contours open faces 1, 2, ... in order
+    var nCcw = 0
+    var c = 0
+    while (c < nc) { if (contourArea(c) > 0) nCcw += 1; c += 1 }
+    nFaces = 1 + nCcw
     unbounded = new Array[Boolean](nFaces)
     unbounded(0) = true
-    faceContours.clear()
-    (0 until nFaces).foreach(_ => faceContours += mutable.ArrayBuffer.empty[Int])
-    val faceOfCcw = mutable.HashMap.empty[Int, Int]
-    ccw.zipWithIndex.foreach { case (c, k) =>
-      contourFace(c) = k + 1
-      faceOfCcw(c) = k + 1
-      faceContours(k + 1) += c
-    }
-    // ring coords of a contour
-    def contourPts(c: Int): Array[(Double, Double)] =
-      contours(c).map(h => (nodeX(heFrom(h)), nodeY(heFrom(h))))
-    // a point strictly inside contour c's cycle region, for nesting
-    def probePoint(c: Int): (Double, Double) = {
-      val hs = contours(c)
-      var k = 0
-      while (k < hs.length) {
-        val h = hs(k)
-        val x1 = nodeX(heFrom(h)); val y1 = nodeY(heFrom(h))
-        val x2 = nodeX(heTo(h)); val y2 = nodeY(heTo(h))
-        val mx = (x1 + x2) / 2; val my = (y1 + y2) / 2
-        return (mx, my)
-      }
-      (nodeX(heFrom(hs(0))), nodeY(heFrom(hs(0))))
+    val ccwArr = new Array[Int](nCcw)
+    var k = 0
+    c = 0
+    while (c < nc) {
+      if (contourArea(c) > 0) { ccwArr(k) = c; contourFace(c) = k + 1; k += 1 }
+      c += 1
     }
     // nest CW contours: smallest |area| CCW contour whose ring strictly
-    // contains a probe point of the CW contour
-    val cw = (0 until nc).filter(contourArea(_) <= 0)
+    // contains a probe point (the midpoint of the first half-edge) of
+    // the CW contour.
     // R-tree over the CCW contours' envelopes: a CW contour can only
     // nest into a CCW contour whose envelope contains its probe point.
     // (A linear scan of all larger CCW contours with an O(ring)
     // containment test each made n-ary union of scattered polygons —
     // st_union_agg's shape — quadratic in part count.)
-    val ccwArr = ccw.toArray
-    val ccwEnvs = new Array[Env](ccwArr.length)
-    var ci = 0
-    while (ci < ccwArr.length) {
-      val hs = contours(ccwArr(ci))
+    val ccwEnvs = new Array[Env](nCcw)
+    k = 0
+    while (k < nCcw) {
+      val cc = ccwArr(k)
       var xmin = Double.PositiveInfinity; var ymin = Double.PositiveInfinity
       var xmax = Double.NegativeInfinity; var ymax = Double.NegativeInfinity
-      var hi = 0
-      while (hi < hs.length) {
-        val x = nodeX(heFrom(hs(hi))); val y = nodeY(heFrom(hs(hi)))
+      var hi = contourStart(cc)
+      while (hi < contourStart(cc + 1)) {
+        val x = nodeX(heFrom(contourHe(hi))); val y = nodeY(heFrom(contourHe(hi)))
         if (x < xmin) xmin = x; if (x > xmax) xmax = x
         if (y < ymin) ymin = y; if (y > ymax) ymax = y
         hi += 1
       }
-      ccwEnvs(ci) = Env(xmin, ymin, xmax, ymax)
-      ci += 1
+      ccwEnvs(k) = Env(xmin, ymin, xmax, ymax)
+      k += 1
     }
     val ccwTree = RTree.bulkLoad(ccwEnvs)
-    val ringCache = new Array[Seqn](ccwArr.length)
-    cw.foreach { c =>
-      val (px, py) = probePoint(c)
-      // contours reachable from c through a twin half-edge: c walks the
-      // OTHER side of (part of) their boundary. c can never be a hole
-      // of such a contour — a hole lies strictly inside its container,
-      // not along its edges. The probe-point test alone is fragile
-      // here: the probe is an edge midpoint whose rounded coordinates
-      // may fall a hair inside the twin ring, which would nest a closed
-      // curve's outside walk as a hole of its own inside face and
-      // collapse the face to an empty annulus.
-      val twinCs = contours(c).iterator.map(h => contourOf(twin(h))).toSet
-      val cAbs = math.abs(contourArea(c))
-      // tightest strictly-containing CCW contour (same semantics as the
-      // previous ascending-area scan: smallest containing area wins)
-      var bestCc = -1
-      var bestArea = Double.PositiveInfinity
-      ccwTree.rangeSearch(Env(px, py, px, py)) { k =>
-        val cc = ccwArr(k)
-        val a = contourArea(cc)
-        if (a > cAbs - 1e-300 && a < bestArea && !twinCs.contains(cc)) {
-          if (ringCache(k) == null) ringCache(k) = ringSeqn(contourPts(cc))
-          // strict containment of the probe midpoint; a midpoint can't
-          // lie on the containing contour (edges are noded & deduped)
-          if (Alg.pointInRing(ringCache(k), px, py) > 0) {
-            bestCc = cc; bestArea = a
+    val ringCache = new Array[Seqn](nCcw)
+    val twinMark = new Array[Int](nc) // == c + 1: contour reachable from c through a twin
+    c = 0
+    while (c < nc) {
+      if (contourArea(c) <= 0) {
+        val h0 = contourHe(contourStart(c))
+        val px = (nodeX(heFrom(h0)) + nodeX(heTo(h0))) / 2
+        val py = (nodeY(heFrom(h0)) + nodeY(heTo(h0))) / 2
+        // contours reachable from c through a twin half-edge: c walks the
+        // OTHER side of (part of) their boundary. c can never be a hole
+        // of such a contour — a hole lies strictly inside its container,
+        // not along its edges. The probe-point test alone is fragile
+        // here: the probe is an edge midpoint whose rounded coordinates
+        // may fall a hair inside the twin ring, which would nest a closed
+        // curve's outside walk as a hole of its own inside face and
+        // collapse the face to an empty annulus.
+        var hi = contourStart(c)
+        while (hi < contourStart(c + 1)) { twinMark(contourOf(twin(contourHe(hi)))) = c + 1; hi += 1 }
+        val cAbs = math.abs(contourArea(c))
+        // tightest strictly-containing CCW contour (smallest containing
+        // area wins)
+        var bestCc = -1
+        var bestArea = Double.PositiveInfinity
+        ccwTree.pointSearch(px, py) { k =>
+          val cc = ccwArr(k)
+          val a = contourArea(cc)
+          if (a > cAbs - 1e-300 && a < bestArea && twinMark(cc) != c + 1) {
+            if (ringCache(k) == null) ringCache(k) = contourRing(cc)
+            // strict containment of the probe midpoint; a midpoint can't
+            // lie on the containing contour (edges are noded & deduped)
+            if (Alg.pointInRing(ringCache(k), px, py) > 0) {
+              bestCc = cc; bestArea = a
+            }
           }
+          true
         }
-        true
+        contourFace(c) = if (bestCc >= 0) contourFace(bestCc) else 0
       }
-      if (bestCc >= 0) {
-        contourFace(c) = faceOfCcw(bestCc)
-        faceContours(faceOfCcw(bestCc)) += c
-      } else { contourFace(c) = 0; faceContours(0) += c }
+      c += 1
+    }
+    // face rows: the CCW contour, then the CW contours in contour order
+    faceStart = new Array[Int](nFaces + 1)
+    c = 0
+    while (c < nc) { faceStart(contourFace(c) + 1) += 1; c += 1 }
+    var f = 0
+    while (f < nFaces) { faceStart(f + 1) += faceStart(f); f += 1 }
+    faceContour = new Array[Int](nc)
+    val fill = java.util.Arrays.copyOf(faceStart, nFaces)
+    k = 0
+    while (k < nCcw) { faceContour(fill(k + 1)) = ccwArr(k); fill(k + 1) += 1; k += 1 }
+    c = 0
+    while (c < nc) {
+      if (contourArea(c) <= 0) { faceContour(fill(contourFace(c))) = c; fill(contourFace(c)) += 1 }
+      c += 1
     }
   }
 
-  private def ringSeqn(pts: Array[(Double, Double)]): Seqn = {
-    val arr = new Array[Double]((pts.length + 1) * 2)
+  /** Closed ring through contour c's half-edge start nodes. */
+  private def contourRing(c: Int): Seqn = {
+    val from = contourStart(c); val len = contourStart(c + 1) - from
+    val arr = new Array[Double]((len + 1) * 2)
     var i = 0
-    while (i < pts.length) { arr(2 * i) = pts(i)._1; arr(2 * i + 1) = pts(i)._2; i += 1 }
-    arr(2 * pts.length) = pts(0)._1; arr(2 * pts.length + 1) = pts(0)._2
+    while (i < len) {
+      val n = heFrom(contourHe(from + i))
+      arr(2 * i) = nodeX(n); arr(2 * i + 1) = nodeY(n)
+      i += 1
+    }
+    arr(2 * len) = arr(0); arr(2 * len + 1) = arr(1)
     Seqn.xy(arr)
   }
 
@@ -1481,23 +1700,28 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
     * the face polygon (outer CCW contour + its hole contours).
     */
   def faceInteriorPoint(f: Int): (Double, Double) = {
-    val cs = faceContours(f)
-    val outer = cs.find(contourArea(_) > 0).get
-    val rings = mutable.ArrayBuffer[Seqn](
-      ringSeqn(contours(outer).map(h => (nodeX(heFrom(h)), nodeY(heFrom(h))))))
-    cs.filter(_ != outer).foreach { c =>
-      rings += ringSeqn(contours(c).map(h => (nodeX(heFrom(h)), nodeY(heFrom(h)))))
+    val from = faceStart(f); val to = faceStart(f + 1)
+    var o = from
+    while (contourArea(faceContour(o)) <= 0) o += 1
+    val outer = faceContour(o)
+    val rings = new Array[Seqn](to - from)
+    rings(0) = contourRing(outer)
+    var r = 1
+    var k = from
+    while (k < to) {
+      if (faceContour(k) != outer) { rings(r) = contourRing(faceContour(k)); r += 1 }
+      k += 1
     }
-    val poly = GPoly(rings.toArray, CT.XY)
+    val poly = GPoly(rings, CT.XY)
     PointOnSurface.compute(poly) match {
       case p: GPoint if !p.isEmpty && Alg.pointInPolygon(poly, p.x, p.y) > 0 =>
         (p.x, p.y)
       case _ =>
         // fallback: centroid of first edge triangle fan — robust enough
         // for degenerate slivers
-        val hs = contours(outer)
-        val x1 = nodeX(heFrom(hs(0))); val y1 = nodeY(heFrom(hs(0)))
-        val x2 = nodeX(heTo(hs(0))); val y2 = nodeY(heTo(hs(0)))
+        val h = contourHe(contourStart(outer))
+        val x1 = nodeX(heFrom(h)); val y1 = nodeY(heFrom(h))
+        val x2 = nodeX(heTo(h)); val y2 = nodeY(heTo(h))
         ((x1 + x2) / 2, (y1 + y2) / 2)
     }
   }
@@ -1521,7 +1745,9 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
     // walk chosen half-edges with next restricted to chosen: rotate
     // clockwise from twin until a chosen half-edge appears
     val visited = new Array[Boolean](2 * m)
-    val ringsOut = mutable.ArrayBuffer.empty[(Seqn, Double)] // (ring, signed area)
+    val shells = mutable.ArrayBuffer.empty[Seqn]
+    val shellAreas = mutable.ArrayBuffer.empty[Double]
+    val holes = mutable.ArrayBuffer.empty[Seqn]
 
     // rebuild rotational structures (outgoing lists) lazily via heNext:
     // nextChosen(h) = first chosen in the CW rotation at to(h) starting
@@ -1538,10 +1764,11 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
       cand
     }
 
+    var pts = new Array[Double](32) // interleaved ring vertices
     i = 0
     while (i < 2 * m) {
       if (chosen(i) && !visited(i)) {
-        val pts = mutable.ArrayBuffer.empty[(Double, Double)]
+        var np = 0
         var h = i
         var area2 = 0.0
         var ok = true
@@ -1549,46 +1776,53 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
           visited(h) = true
           val x1 = nodeX(heFrom(h)); val y1 = nodeY(heFrom(h))
           val x2 = nodeX(heTo(h)); val y2 = nodeY(heTo(h))
-          pts += ((x1, y1))
+          if (2 * np + 4 > pts.length) pts = java.util.Arrays.copyOf(pts, pts.length * 2)
+          pts(2 * np) = x1; pts(2 * np + 1) = y1; np += 1
           area2 += x1 * y2 - x2 * y1
           h = nextChosen(h)
           if (!chosen(h)) ok = false
         }
-        if (ok && pts.length >= 3) {
-          val arr = new Array[Double]((pts.length + 1) * 2)
-          var k = 0
-          while (k < pts.length) { arr(2 * k) = pts(k)._1; arr(2 * k + 1) = pts(k)._2; k += 1 }
-          arr(2 * pts.length) = pts(0)._1; arr(2 * pts.length + 1) = pts(0)._2
-          ringsOut += ((Seqn.xy(arr), area2 / 2))
+        if (ok && np >= 3) {
+          val arr = java.util.Arrays.copyOf(pts, (np + 1) * 2)
+          arr(2 * np) = pts(0); arr(2 * np + 1) = pts(1)
+          val area = area2 / 2
+          if (area > 0) { shells += Seqn.xy(arr); shellAreas += area }
+          else if (area <= 0) holes += Seqn.xy(arr)
         }
       }
       i += 1
     }
-
-    val shells = ringsOut.filter(_._2 > 0)
-    val holes = ringsOut.filter(_._2 <= 0)
     if (shells.isEmpty) return GPoly(Array.empty, CT.XY)
 
-    // assign each hole to the smallest shell containing it
-    val shellRings = shells.map(_._1)
-    val shellAreas = shells.map(_._2)
-    val holeAssign = Array.fill(holes.length)(-1)
-    holes.zipWithIndex.foreach { case ((hr, _), hi) =>
+    // assign each hole to the smallest shell containing it (ties: the
+    // lowest shell index); only shells whose envelope holds the probe
+    // point are tested
+    val shellTree = RTree.bulkLoad(shells.iterator.map(_.envelope).toArray)
+    val holeAssign = new Array[Int](holes.length)
+    var hi = 0
+    while (hi < holes.length) {
+      val hr = holes(hi)
       // probe: midpoint of first hole edge
       val px = (hr.x(0) + hr.x(1)) / 2; val py = (hr.y(0) + hr.y(1)) / 2
       var best = -1; var bestArea = Double.MaxValue
-      shellRings.zipWithIndex.foreach { case (sr, si) =>
-        if (shellAreas(si) < bestArea && Alg.pointInRing(sr, px, py) > 0) {
-          best = si; bestArea = shellAreas(si)
+      shellTree.pointSearch(px, py) { si =>
+        val a = shellAreas(si)
+        if ((a < bestArea || (a == bestArea && si < best)) &&
+            Alg.pointInRing(shells(si), px, py) > 0) {
+          best = si; bestArea = a
         }
+        true
       }
       holeAssign(hi) = best
+      hi += 1
     }
-    val polys = shellRings.zipWithIndex.map { case (sr, si) =>
-      val hs = holes.indices.filter(holeAssign(_) == si).map(holes(_)._1)
-      (sr +: hs).toArray
+    val polys = Array.tabulate(shells.length)(si => mutable.ArrayBuffer(shells(si)))
+    hi = 0
+    while (hi < holes.length) {
+      if (holeAssign(hi) >= 0) polys(holeAssign(hi)) += holes(hi)
+      hi += 1
     }
-    if (polys.length == 1) GPoly(polys.head, CT.XY)
-    else GMPoly(polys.toArray, CT.XY)
+    if (polys.length == 1) GPoly(polys(0).toArray, CT.XY)
+    else GMPoly(polys.map(_.toArray), CT.XY)
   }
 }

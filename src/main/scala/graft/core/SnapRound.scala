@@ -323,15 +323,9 @@ object SnapRound {
         math.max(p._1, q._1), math.max(p._2, q._2))
       i += 1
     }
-    val tree = RTree.bulkLoad(envs)
-    i = 0
-    while (i < n) {
-      val (p, q) = segs(i)
-      tree.rangeSearch(envs(i)) { j =>
-        if (j > i) crossingPt(p, q, segs(j)._1, segs(j)._2).foreach(f)
-        true
-      }
-      i += 1
+    RTree.bulkLoad(envs).selfJoin { (i, j) =>
+      crossingPt(segs(i)._1, segs(i)._2, segs(j)._1, segs(j)._2).foreach(f)
+      true
     }
   }
 

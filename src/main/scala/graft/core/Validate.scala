@@ -133,17 +133,7 @@ object Validate {
           math.max(r.x(i), r.x(i + 1)), math.max(r.y(i), r.y(i + 1)))
         i += 1
       }
-      val tree = RTree.bulkLoad(envs)
-      var ok = true
-      i = 0
-      while (ok && i < n) {
-        tree.rangeSearch(envs(i)) { j =>
-          if (j > i && !checkPair(i, j)) ok = false
-          ok
-        }
-        i += 1
-      }
-      ok
+      RTree.bulkLoad(envs).selfJoin(checkPair)
     }
   }
 
@@ -168,27 +158,20 @@ object Validate {
     // enclave holes)
     val ringEnvs = deduped.map(_.envelope)
     val ringTree = RTree.bulkLoad(ringEnvs)
-    var i = 0
-    var crossErr = false
-    while (i < deduped.length && !crossErr) {
-      ringTree.rangeSearch(ringEnvs(i)) { j =>
-        if (j > i) {
-          ringPairTouch(deduped(i), deduped(j)) match {
-            case RingPair.Crosses => crossErr = true
-            case RingPair.TouchAt(pt) =>
-              val pid = touchPoints.getOrElseUpdate(pt, deduped.length + touchPoints.size)
-              touchEdges += ((i, pid))
-              touchEdges += ((j, pid))
-            case RingPair.NoTouch =>
-          }
-        }
-        !crossErr
+    val crossErr = !ringTree.selfJoin { (i, j) =>
+      ringPairTouch(deduped(i), deduped(j)) match {
+        case RingPair.Crosses => false
+        case RingPair.TouchAt(pt) =>
+          val pid = touchPoints.getOrElseUpdate(pt, deduped.length + touchPoints.size)
+          touchEdges += ((i, pid))
+          touchEdges += ((j, pid))
+          true
+        case RingPair.NoTouch => true
       }
-      i += 1
     }
     if (crossErr) return Some("polygon rings must not intersect at more than one point")
     // holes inside shell
-    i = 1
+    var i = 1
     while (i < deduped.length) {
       val h = deduped(i)
       var inside = false
@@ -204,32 +187,20 @@ object Validate {
     }
     // holes must not nest inside each other (reference:
     // type_polygon.go:88-98 violateRingNested, extended to scan past
-    // shared boundary points)
-    i = 1
-    var nestedErr = false
-    while (i < deduped.length && !nestedErr) {
-      // candidate containers: rings whose envelope covers this hole's
-      // envelope — query the same ring R-tree with the hole's envelope
-      // (a container's envelope must intersect it; the exact
-      // containment check below rejects the rest)
-      ringTree.rangeSearch(ringEnvs(i)) { j =>
-        if (j >= 1 && j != i && ringEnvs(j).contains(ringEnvs(i))) {
-          val hi = deduped(i)
-          var k = 0
-          var decided = false
-          while (k < hi.n - 1 && !decided) {
-            Alg.pointInRing(deduped(j), hi.x(k), hi.y(k)) match {
-              case 1 => nestedErr = true; decided = true
-              case -1 => decided = true
-              case _ => // on boundary, try next vertex
-            }
-            k += 1
-          }
-        }
-        !nestedErr
+    // shared boundary points). Candidate containers of a hole are the
+    // rings whose envelope covers the hole's envelope, so only
+    // envelope-overlapping hole pairs are tested, both ways.
+    def nestedIn(h: Int, r: Int): Boolean = ringEnvs(r).contains(ringEnvs(h)) && {
+      val hr = deduped(h)
+      var k = 0
+      var loc = 0
+      while (k < hr.n - 1 && loc == 0) {
+        loc = Alg.pointInRing(deduped(r), hr.x(k), hr.y(k)) // 0: on boundary, try next vertex
+        k += 1
       }
-      i += 1
+      loc == 1
     }
+    val nestedErr = !ringTree.selfJoin((i, j) => i == 0 || !(nestedIn(i, j) || nestedIn(j, i)))
     if (nestedErr) return Some("polygon interior rings must not be nested")
     // connectivity: bipartite (ring, touch point) graph must be acyclic
     if (hasCycle(deduped.length + touchPoints.size, touchEdges.toSeq))
@@ -335,24 +306,17 @@ object Validate {
     // the disjoint-interiors constraint (all-pairs is quadratic for
     // many-part multipolygons, e.g. archipelago coverages)
     val envs = polys.map(_.envelope)
-    val tree = RTree.bulkLoad(envs)
     var err: Option[String] = None
-    var i = 0
-    while (i < polys.length && err.isEmpty) {
-      tree.rangeSearch(envs(i)) { j =>
-        if (j > i) {
-          val m = try Relate.relate(polys(i), polys(j)) catch { case _: Throwable => null }
-          if (m != null) {
-            // interiors must be disjoint and boundaries must not share 1-D parts
-            if (m.charAt(Relate.II) != 'F')
-              err = Some("multipolygon child interiors must not intersect")
-            else if (m.charAt(Relate.BB) == '1')
-              err = Some("multipolygon children must not share boundary segments")
-          }
-        }
-        err.isEmpty
+    RTree.bulkLoad(envs).selfJoin { (i, j) =>
+      val m = try Relate.relate(polys(i), polys(j)) catch { case _: Throwable => null }
+      if (m != null) {
+        // interiors must be disjoint and boundaries must not share 1-D parts
+        if (m.charAt(Relate.II) != 'F')
+          err = Some("multipolygon child interiors must not intersect")
+        else if (m.charAt(Relate.BB) == '1')
+          err = Some("multipolygon children must not share boundary segments")
       }
-      i += 1
+      err.isEmpty
     }
     err
   }
