@@ -186,19 +186,28 @@ object PointOnSurface {
     var onRow = false
     var hasLower = false
     var lower = env.ymin
-    Geom.transformSeq(g, s => {
-      var i = 0
-      while (i < s.n) {
-        val v = s.y(i)
-        val c = java.lang.Double.compare(v, y)
-        if (c == 0) onRow = true
-        else if (c < 0 && (!hasLower || java.lang.Double.compare(v, lower) > 0)) {
-          lower = v; hasLower = true
-        }
-        i += 1
+    def row(v: Double): Unit = {
+      val c = java.lang.Double.compare(v, y)
+      if (c == 0) onRow = true
+      else if (c < 0 && (!hasLower || java.lang.Double.compare(v, lower) > 0)) {
+        lower = v; hasLower = true
       }
-      s
-    })
+    }
+    def seqRows(s: Seqn): Unit = {
+      var i = 0
+      while (i < s.n) { row(s.y(i)); i += 1 }
+    }
+    // every vertex of every part, read in place
+    def rows(g: Geom): Unit = g match {
+      case p: GPoint => if (!p.isEmpty) row(p.y)
+      case GLine(s) => seqRows(s)
+      case GPoly(rs, _) => rs.foreach(seqRows)
+      case GMPoint(ps, _) => ps.foreach(rows)
+      case GMLine(ls, _) => ls.foreach(seqRows)
+      case GMPoly(ps, _) => ps.foreach(_.foreach(seqRows))
+      case GColl(gs, _) => gs.foreach(rows)
+    }
+    rows(g)
     if (onRow) {
       val cand = (lower + y) / 2
       if (cand != y) y = cand

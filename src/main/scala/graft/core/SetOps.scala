@@ -1417,6 +1417,11 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
 
   private def splitIfNear(si: Int, px: Double, py: Double, crossSrc: Boolean): Unit = {
     val b = 4 * si
+    // a same-source point equal to one of the segment's own endpoints
+    // (consecutive ring segments share one) is a no-op: addSplit drops
+    // it and there is no A-B node to record
+    if (!crossSrc && ((px == segXY(b) && py == segXY(b + 1)) || (px == segXY(b + 2) && py == segXY(b + 3))))
+      return
     if (Alg.distPointSeg(px, py, segXY(b), segXY(b + 1), segXY(b + 2), segXY(b + 3)) <= eps) {
       addSplit(si, px, py)
       if (crossSrc) addAb(px, py)

@@ -947,6 +947,36 @@ case class StCellCover(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** The cell join's per-row input, from ONE decode of the geometry:
+  * struct(cells = st_cellCover(geom, level), env = struct(xmin, ymin,
+  * xmax, ymax) of the geometry's envelope). Never null, so the
+  * optimizer can drop the not-null filters it infers for the fields
+  * instead of pushing them below the Project that evaluates this: a
+  * null or empty geometry has no cells and the empty envelope
+  * (xmin = ymin = +inf, xmax = ymax = -inf), which overlaps no box.
+  */
+case class StCellCoverEnv(left: Expression, right: Expression)
+    extends BinaryExpression with RowKernelCodegen {
+  override def dataType: DataType = StCellCoverEnv.Type
+  override def nullable: Boolean = false
+  override def prettyName: String = "st_cellcoverenv"
+  override def genEval(vs: Array[Any]): Any = {
+    val g = if (vs(0) == null) GPoint.empty else Wkb.read(vs(0).asInstanceOf[Array[Byte]])
+    val e = g.envelope
+    val cells = Cell.coverGeom(g, GeomOps.numI(vs(1)))
+    InternalRow(new GenericArrayData(cells.map(l => l: Any)), InternalRow(e.xmin, e.ymin, e.xmax, e.ymax))
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object StCellCoverEnv {
+  val Type: StructType = StructType(Seq(
+    StructField("cells", ArrayType(LongType), nullable = false),
+    StructField("env", StructType(Seq("xmin", "ymin", "xmax", "ymax")
+      .map(StructField(_, DoubleType, nullable = false))), nullable = false)))
+}
+
 /** st_cellRing(cell, k) -> Array[Long] neighbors for kNN expansion. */
 case class StCellRing(left: Expression, right: Expression)
     extends BinaryKernelCodegen {

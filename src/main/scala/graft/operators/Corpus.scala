@@ -7,12 +7,15 @@ import org.apache.spark.sql.functions._
 /** Corpus-level text operators for training-data curation:
   * benchmark-contamination detection, inverted-index construction,
   * PMI co-occurrence statistics, and paragraph-level keep-first
-  * dedup. All pure Column/DataFrame plans — every similarity or
-  * co-occurrence computation is an equi-join on a derived key
-  * (shingle / token / chunk text), never an all-pairs product, so the
-  * shapes hold at 100 TB; counts are exact integers and the only
-  * floating math is a final ln + floor6, making every operator
-  * bit-replayable by the DuckDB oracle.
+  * dedup. Every similarity or co-occurrence computation is an
+  * equi-join on a derived key (shingle / token / chunk text), never an
+  * all-pairs product, so the shapes hold at 100 TB. Two operators
+  * materialise a shared intermediate eagerly, so building their plan
+  * runs a Spark job and later filters do not push past it:
+  * `vocabCoverage` (the distinct-token frequency table) and
+  * `psiDrift` (the per-bucket count table). Counts are exact integers
+  * and the only floating math is a final ln + floor6, making every
+  * operator bit-replayable by the DuckDB oracle.
   */
 object Corpus {
 
@@ -242,8 +245,9 @@ object Corpus {
       // EAGER checkpoint: freqs feeds BOTH the top-k ranking and the
       // totals aggregate — unmaterialized, the tokenize + frequency
       // aggregation runs twice (the q154 plan showed the subtree
-      // duplicated). The table is the DISTINCT-token frequency list,
-      // vocabulary-bounded at any corpus size.
+      // duplicated). The table is the DISTINCT-token frequency list:
+      // far smaller than the corpus, but it still grows with it
+      // (sub-linearly, by Heaps' law).
       .localCheckpoint()
     // r5 ran the (freq desc, token) ranking window UNPARTITIONED —
     // a single-task global sort of the whole distinct-token table at

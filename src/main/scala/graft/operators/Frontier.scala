@@ -53,7 +53,10 @@ object Frontier {
       // (q168: frontier discovery + robots anti-join + the per-domain
       // window) is planned and executed twice (the q168 plan showed
       // the full subtree duplicated). Multi-consumer setup tables are
-      // eager per this round's checkpoint rule.
+      // checkpointed eagerly. Unlike the other eager checkpoints
+      // (candidate-, bucket- or vocabulary-sized tables), this one is
+      // O(input): one row per frontier URL, pinned in executor storage
+      // with its lineage cut, so losing an executor loses the table.
       .localCheckpoint()
     val roundSizes = withRound.groupBy(col("round"))
       .agg(count(lit(1)).as("__n"))

@@ -178,8 +178,11 @@ object SpatialJoins {
   /** Partitioned cell equi-join for big-vs-big spatial joins: the
     * [[graft.plans.CellJoinPlan]] over both geometries at `level`,
     * refined with pred(leftGeom, rightGeom) for pred in "intersects",
-    * "contains", "within". `saltBuckets` > 1 salts hot cells by the
-    * left row's hash; the rows are identical either way.
+    * "contains", "within". Same-cell pairs whose envelopes do not
+    * overlap are dropped before the dedup and the refine (each
+    * predicate implies overlapping envelopes). `saltBuckets` > 1 salts
+    * hot cells by the left row's hash; the rows are identical either
+    * way.
     *
     * `leftKeys` and `rightKeys` are unused; they remain for callers
     * that pass them positionally.
@@ -208,7 +211,8 @@ object SpatialJoins {
     * st_distance <= radius as the refine. The padding guarantees
     * completeness: any right geometry within `radius` of the left
     * geometry intersects the padded left envelope, so the two covers
-    * share at least one cell.
+    * share at least one cell and the plan's envelope prefilter (right
+    * envelope against the padded left envelope) keeps the pair.
     */
   def cellDWithinJoin(
       left: DataFrame, leftGeom: String,

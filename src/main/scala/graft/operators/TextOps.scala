@@ -247,9 +247,10 @@ object TextOps {
   /** Word-repetition quality signals (Gopher-style repetition filters,
     * word-level): fraction of duplicate tokens and the share of the
     * most frequent token. Pure per-row Column expressions — O(tokens ×
-    * distinct) per row, no shuffle; the distinct-token count of natural
-    * text is vocabulary-bounded, so the quadratic term stays small at
-    * any corpus scale. Returns struct(dup_frac, top_share), 6-dp
+    * distinct) per row, no shuffle; the distinct-token count of a text
+    * grows sub-linearly with its length (Heaps' law), so the quadratic
+    * term stays far below tokens² on natural text. Returns
+    * struct(dup_frac, top_share), 6-dp
     * truncated for oracle parity.
     */
   def wordRepetition(text: Column): Column = {

@@ -7,15 +7,22 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
-import graft.functions.{GeomBinaryOp, StCellCover}
+import graft.functions.{GeomBinaryOp, StCellCoverEnv}
 
 /** The one cell-partitioned spatial join plan. [[CellJoinRule]],
   * `SpatialJoins.cellJoin` and `SpatialJoins.cellDWithinJoin` all build
   * it here:
   *
-  *   st_cellcover(cover, level) once per input row on each side (the
-  *     full cover array rides along), exploded to one row per cell,
+  *   st_cellcover(cover, level) and the envelope of `cover` once per
+  *     input row on each side, from one decode (the full cover array
+  *     and the envelope ride along as `__cover_l/r` and `__env_l/r`),
+  *     exploded to one row per cell,
   *   equi-join on the cell id (hash-partitioned shuffle),
+  *   drop the pair unless the two envelopes overlap (closed: touching
+  *     boxes overlap); every refine the plan serves implies this —
+  *     intersects, contains and within imply intersecting envelopes,
+  *     and the dwithin join's left cover is its radius-padded
+  *     envelope,
   *   keep each pair only in its MIN SHARED COVER CELL (the least
   *     cell of both cover arrays) — duplicate elimination without a
   *     Distinct, so multiset semantics are exact; the min shared cover
@@ -41,18 +48,26 @@ object CellJoinPlan {
     def explode(arr: Expression, out: Attribute, child: LogicalPlan): LogicalPlan =
       Generate(Explode(arr), unrequiredChildIndex = Nil, outer = false, qualifier = None,
         generatorOutput = Seq(out), child = child)
-    // each cover is computed ONCE per input row, below the Generate, so
-    // the dedup reads the full arrays without re-covering per pair
+    // each cover and envelope is computed ONCE per input row, below the
+    // Generate, so the prefilter and the dedup read them without
+    // decoding or re-covering per pair. The Generate explodes a field
+    // of the (never null) struct rather than an attribute, so the
+    // optimizer infers no filter that would re-evaluate the struct
+    // below its Project; the fields are named above the Generate.
     def side(child: LogicalPlan, cover: Expression, salt: Seq[NamedExpression], tag: String) = {
-      val cov = Alias(StCellCover(cover, Literal(level)), s"__cover_$tag")()
+      val ce = Alias(StCellCoverEnv(cover, Literal(level)), s"__cellenv_$tag")()
       val cell = AttributeReference(s"__cell_$tag", LongType, nullable = false)()
-      (explode(cov.toAttribute, cell, Project(child.output ++ (cov +: salt), child)), cov.toAttribute, cell)
+      val gen = explode(GetStructField(ce.toAttribute, 0), cell, Project(child.output ++ (ce +: salt), child))
+      val cov = Alias(GetStructField(ce.toAttribute, 0), s"__cover_$tag")()
+      val env = Alias(GetStructField(ce.toAttribute, 1), s"__env_$tag")()
+      (Project(child.output ++ salt.map(_.toAttribute) ++ Seq(cov, env, cell), gen),
+        cov.toAttribute, env.toAttribute, cell)
     }
     val saltL =
       if (saltBuckets <= 1) None
       else Some(Alias(Pmod(new XxHash64(left.output), Literal(saltBuckets.toLong)), "__graft_salt_l")())
-    val (joinL, covL, cellL) = side(left, leftCover, saltL.toSeq, "l")
-    val (genR, covR, cellR) = side(right, rightCover, Nil, "r")
+    val (joinL, covL, envL, cellL) = side(left, leftCover, saltL.toSeq, "l")
+    val (genR, covR, envR, cellR) = side(right, rightCover, Nil, "r")
     val (joinR, keys) = saltL match {
       case None => (genR, EqualTo(cellL, cellR))
       case Some(sl) =>
@@ -61,9 +76,16 @@ object CellJoinPlan {
           ArrayType(LongType, containsNull = false))
         (explode(buckets, saltR, genR), And(EqualTo(cellL, cellR), EqualTo(sl.toAttribute, saltR)))
     }
-    // dedup before the refine: the exact geometry test then runs once
-    // per pair, not once per shared cell
-    val cond = And(And(keys, EqualTo(cellL, ArrayMin(ArrayIntersect(covL, covR)))), refine)
+    // envelope overlap, then dedup, then the refine: the cheap box test
+    // drops most same-cell pairs before the dedup builds a hash set for
+    // them, and the exact geometry test runs once per pair, not once per
+    // shared cell
+    val boxes = Seq((0, 2), (1, 3)).map { case (lo, hi) => // (xmin, xmax), (ymin, ymax)
+      And(LessThanOrEqual(GetStructField(envL, lo), GetStructField(envR, hi)),
+        LessThanOrEqual(GetStructField(envR, lo), GetStructField(envL, hi)))
+    }.reduce(And)
+    val dedup = EqualTo(cellL, ArrayMin(ArrayIntersect(covL, covR)))
+    val cond = And(And(And(keys, boxes), dedup), refine)
     Project(left.output ++ right.output, Join(joinL, joinR, Inner, Some(cond), hint))
   }
 }

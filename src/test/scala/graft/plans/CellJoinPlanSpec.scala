@@ -1,14 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{And, ArrayIntersect, Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.SparkTestSession
+import graft.core.{Env, Wkt}
+import graft.functions.{GeomBinaryOp, SparkTestSession, StCellCoverEnv}
 import graft.functions.ST._
 import graft.operators.SpatialJoins
 
@@ -17,7 +19,10 @@ import graft.operators.SpatialJoins
   * CellJoinRule rewrite of a bare st_intersects join and
   * `cellDWithinJoin(radius = 0)` — returns the nested-loop join's pair
   * multiset, unsalted and salted, and shuffles each side exactly once
-  * on its cell (and salt).
+  * on its cell (and salt). A grid fixture of touching boxes, points,
+  * axis-parallel lines and empties checks the envelope prefilter on
+  * every path and predicate, and where the executed join condition
+  * evaluates it.
   */
 class CellJoinPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
@@ -81,6 +86,127 @@ class CellJoinPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  /** Boxes, triangles, points and horizontal / vertical lines on a
+    * small integer grid, so envelopes often touch at an edge or a corner
+    * only and zero-width boxes lie on other boxes' edges; every sixth
+    * row is an empty geometry.
+    */
+  private def gridShapes(seed: Long, n: Int, name: String): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val empties = Seq("POINT EMPTY", "LINESTRING EMPTY", "POLYGON EMPTY", "GEOMETRYCOLLECTION EMPTY")
+    val rows = (0 until n).map { i =>
+      val x = rnd.nextInt(12) - 6
+      val y = rnd.nextInt(12) - 6
+      val w = 1 + rnd.nextInt(2)
+      val h = 1 + rnd.nextInt(2)
+      val wkt = i % 6 match {
+        case 0 => s"POLYGON(($x $y,${x + w} $y,${x + w} ${y + h},$x ${y + h},$x $y))"
+        // its box corner (x + w, y + h) lies outside the shape
+        case 1 => s"POLYGON(($x $y,${x + w} $y,$x ${y + h},$x $y))"
+        case 2 => s"POINT($x $y)"
+        case 3 => s"LINESTRING($x $y,${x + w} $y)"
+        case 4 => s"LINESTRING($x $y,$x ${y + h})"
+        case _ => empties(i / 6 % empties.size)
+      }
+      (i.toLong, wkt)
+    }
+    val base = rows.toDF(s"${name}_id", s"${name}_wkt")
+      .select(col(s"${name}_id"), col(s"${name}_wkt"), st_geomFromWKT(col(s"${name}_wkt")).as(s"${name}_g"))
+    // checkpointed: over a local relation the optimizer would fold the
+    // per-row cover and envelope into the scan, hiding them from the plan
+    base.unionAll(base.filter(col(s"${name}_id") % 5 === 0)).localCheckpoint()
+  }
+
+  /** The executed join condition, split into its conjuncts in
+    * evaluation order.
+    */
+  private def joinConjuncts(df: DataFrame): Seq[Expression] = {
+    val conds = collect(df.queryExecution.executedPlan) { case j: BaseJoinExec => j.condition }.flatten
+    assert(conds.size == 1, s"expected one join condition, got $conds")
+    def split(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => split(a) ++ split(b)
+      case other     => Seq(other)
+    }
+    split(conds.head)
+  }
+
+  /** The envelope test reads `__env_l` and `__env_r` and runs before
+    * the dedup's array_intersect, which runs before the exact st_*
+    * refine; each side's cover and envelope come from one expression.
+    */
+  private def assertPrefilterFirst(df: DataFrame, what: String): Unit = {
+    val cs = joinConjuncts(df)
+    def refs(e: Expression) = e.references.map(_.name).toSet
+    val env = cs.indices.filter(i => refs(cs(i)).exists(_.startsWith("__env_")))
+    val dedup = cs.indexWhere(_.exists(_.isInstanceOf[ArrayIntersect]))
+    val refine = cs.indexWhere(_.exists(_.isInstanceOf[GeomBinaryOp]))
+    val shown = cs.map(_.sql).mkString("\n  ")
+    assert(env.nonEmpty && env.flatMap(i => refs(cs(i))).toSet == Set("__env_l", "__env_r"),
+      s"$what: the join condition does not compare __env_l with __env_r:\n  $shown")
+    assert(dedup >= 0 && refine >= 0, s"$what: no dedup or refine in the join condition:\n  $shown")
+    assert(env.max < dedup && dedup < refine,
+      s"$what: expected envelope test < array_intersect < refine:\n  $shown")
+    val decodes = collect(df.queryExecution.executedPlan) { case p => p.expressions }.flatten
+      .flatMap(_.collect { case c: StCellCoverEnv => c })
+    assert(decodes.size == 2,
+      s"$what: expected one cover+envelope per side, got ${decodes.size}:\n${df.queryExecution.executedPlan}")
+  }
+
+  /** Runs `body` with the CellJoinRule on at `Level` and `salt` buckets. */
+  private def withRule[T](salt: Int)(body: => T): T = {
+    val before = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = before :+ new CellJoinRule(spark)
+    try withConf(
+        "spark.graft.celljoin.level" -> Level.toString,
+        "spark.graft.celljoin.saltBuckets" -> salt.toString)(body)
+    finally spark.experimental.extraOptimizations = before
+  }
+
+  test("envelope prefilter: touching boxes, zero-width boxes and empties equal the nested-loop join") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val a = gridShapes(7L, 90, "a")
+      val b = gridShapes(8L, 90, "b")
+      val preds: Seq[(String, (Column, Column) => Column)] =
+        Seq("intersects" -> st_intersects, "contains" -> st_contains, "within" -> st_within)
+      val radii = Seq(0.0, 1.0)
+      val expected = (preds.map { case (p, f) => p -> pairs(a.join(b, f(col("a_g"), col("b_g")))) } ++
+        radii.map(r => s"dwithin $r" -> pairs(a.join(b, st_distance(col("a_g"), col("b_g")) <= r)))).toMap
+
+      // the fixture reaches the cases the prefilter must keep
+      val env = (a.select("a_id", "a_wkt").as[(Long, String)].collect() ++
+        b.select("b_id", "b_wkt").as[(Long, String)].collect().map { case (i, w) => (i + 1000000L, w) })
+        .map { case (i, w) => i -> Wkt.parse(w).envelope }.toMap
+      def touching(l: Env, r: Env) = (l.xmax == r.xmin || r.xmax == l.xmin, l.ymax == r.ymin || r.ymax == l.ymin)
+      val hits = expected("intersects").map { case (i, j) => (env(i), env(j + 1000000L)) }
+      assert(hits.exists { case (l, r) => touching(l, r) == (true, false) }, "no edge-touching pair")
+      assert(hits.exists { case (l, r) => touching(l, r) == (true, true) }, "no corner-touching pair")
+      assert(hits.exists { case (l, r) => l.width == 0 && r.height == 0 }, "no pair of zero-width boxes")
+      assert(expected("within").nonEmpty && expected("contains").nonEmpty)
+      assert(expected("dwithin 1.0").size > expected("intersects").size)
+      assert(env.values.exists(_.isEmpty), "no empty geometry")
+
+      for (salt <- Seq(1, 4)) {
+        val paths: Seq[(String, String, () => DataFrame)] =
+          preds.flatMap { case (p, f) => Seq(
+            (s"cellJoin($p)", p, () => SpatialJoins.cellJoin(a, "a_g", b, "b_g", p,
+              Level, Seq("a_id"), Seq("b_id"), saltBuckets = salt)),
+            (s"CellJoinRule($p)", p, () => a.join(b, f(col("a_g"), col("b_g"))))) } ++
+          radii.map(r => (s"cellDWithinJoin($r)", s"dwithin $r", () => SpatialJoins.cellDWithinJoin(
+            a, "a_g", b, "b_g", radius = r, level = Level, saltBuckets = salt)))
+        for ((what, key, df) <- paths) {
+          def check(): Unit = {
+            val d = df()
+            val got = pairs(d)
+            assert(got == expected(key),
+              s"salt $salt: $what returned ${got.size} pairs, nested loop ${expected(key).size}")
+            assertPrefilterFirst(d, s"salt $salt: $what")
+          }
+          if (what.startsWith("CellJoinRule")) withRule(salt)(check()) else check()
+        }
+      }
+    }
+  }
+
   test("cellJoin, the rule rewrite and cellDWithinJoin(0) equal the nested-loop join") {
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       for (seed <- Seq(1L, 2L, 3L)) {
@@ -96,14 +222,10 @@ class CellJoinPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
             Level, Seq("a_id"), Seq("b_id"), saltBuckets = salt)
           val viaDWithin = SpatialJoins.cellDWithinJoin(a, "a_g", b, "b_g",
             radius = 0.0, level = Level, saltBuckets = salt)
-          val before = spark.experimental.extraOptimizations
-          spark.experimental.extraOptimizations = before :+ new CellJoinRule(spark)
-          val viaRule = try withConf(
-              "spark.graft.celljoin.level" -> Level.toString,
-              "spark.graft.celljoin.saltBuckets" -> salt.toString) {
-              val df = bare
-              (pairs(df), shuffleKeys(df))
-            } finally spark.experimental.extraOptimizations = before
+          val viaRule = withRule(salt) {
+            val df = bare
+            (pairs(df), shuffleKeys(df))
+          }
 
           val keys =
             if (salt == 1) Seq(Seq("__cell_l"), Seq("__cell_r"))
