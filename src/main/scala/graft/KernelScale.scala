@@ -6,7 +6,8 @@ import graft.core._
   * indexing, the snap-round hot-pixel scans, and the piece-union
   * buffer blowup), after a small-n rung at web-geometry sizes: buffer,
   * relate, isValid and intersection of concave star polygons at
-  * n = 2^2..2^8, in microseconds per call.
+  * n = 2^2..2^8, in microseconds per call; buffer also with
+  * "endcap=flat join=mitre" and "join=bevel".
   * Usage: runMain graft.KernelScale [small]  ("small": the rung only)
   */
 object KernelScale {
@@ -65,17 +66,22 @@ object KernelScale {
   /** Two passes over the sizes; only the second is printed, so the
     * JIT's recompiles on moving between sizes fall in the first.
     */
-  def smallRung(): Unit =
+  def smallRung(): Unit = {
+    val flatMitre = BufferOp.parseStyle("endcap=flat join=mitre")._1
+    val bevel = BufferOp.parseStyle("join=bevel")._1
     for (pass <- 1 to 2; pow <- 2 to 8) {
       val n = 1 << pow
       val p = star(0, n); val p2 = star(0.5, n)
       val out = pass == 2
       if (out) println(s"--- small n=2^$pow (star)")
       timeUs(s"buffer n=$n", out)(BufferOp.buffer(p, 0.1))
+      timeUs(s"buffer flat-mitre n=$n", out)(BufferOp.buffer(p, 0.1, flatMitre))
+      timeUs(s"buffer bevel n=$n", out)(BufferOp.buffer(p, 0.1, bevel))
       timeUs(s"relate n=$n", out)(Relate.relate(p, p2))
       timeUs(s"isValid n=$n", out)(Validate.isValid(p))
       timeUs(s"intersection n=$n", out)(Overlay.intersection(p, p2))
     }
+  }
   def main(args: Array[String]): Unit = {
     // global JIT warm-up at a small size so the first timed op of the
     // sweep doesn't carry interpreter/C1 cost for the whole stack

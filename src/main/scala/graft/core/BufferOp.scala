@@ -2,33 +2,35 @@ package graft.core
 
 import scala.collection.mutable
 
-/** Buffer (Minkowski sum with a disc).
+/** Buffer: the region within distance d of a geometry, shaped by the
+  * cap and join style.
   *
-  * Round caps + round joins (the default, and the only styles whose
-  * region is distance-characterised) run through ONE planar
-  * arrangement of the raw offset linework with distance-classified
-  * faces — see [[tryArrangementBuffer]] — which is near-linear in
-  * vertex count. All other style combinations use the piece union:
-  * a cap/join piece per vertex and an oriented rectangle per segment,
-  * dissolved by SetOps' union (quadratic when the buffer distance
-  * spans many segments, but those styles are used on small
-  * geometries; the round path also falls back here on sanity
-  * failure).
+  * Every style runs on one path, [[arrangementBuffer]]: emit the raw
+  * offset linework of the style, node it once on the shared [[Noder]],
+  * build the face arrangement, and keep each face whose interior
+  * point lies in the buffer region. The region is the union of g
+  * itself (even-odd) with one piece per segment and per vertex: the
+  * segment's rectangle of half-width d, the join piece on the convex
+  * (gap) side of each turn, and the cap piece at each open end. Round
+  * caps with round joins make that union exactly {p : dist(p, g) <= d};
+  * they first try the least linework (the round walk) and retry with
+  * every piece outlined (the piece walk, which all other styles take)
+  * when that leaks or fails a sanity test, see [[offsetBuffer]].
   *
   * Style surface mirrors the reference's option set
   * (geom/alg_buffer.go:24-124): quadrant segments, end caps
   * round/flat/square, joins round/mitre(limit)/bevel, single-sided.
-  * Negative distance erodes areal geometries and empties
-  * lower-dimensional ones; single-sided picks the side from the
-  * distance sign (positive = left) and forces flat caps, as the
-  * reference documents.
+  * Negative distance erodes areal geometries (g minus the pieces of
+  * its rings) and empties lower-dimensional ones; single-sided picks
+  * the side from the distance sign (positive = left) and forces flat
+  * caps, as the reference documents. A single-sided buffer offsets
+  * lines on one side only; areal parts take the two-sided buffer and
+  * points have no side.
   *
-  * In the piece path, join pieces only fill the CONVEX side of each
-  * turn — on the concave side the two segment rectangles overlap and
-  * their union boundary is already the exact offset intersection
-  * (which is also why erosion corners stay sharp regardless of join
-  * style: the inner band boundary comes from rectangle overlap, not
-  * join fill).
+  * Join pieces only fill the convex side of each turn: on the concave
+  * side the two segment rectangles overlap and their union boundary
+  * is already the exact offset intersection (which is also why
+  * erosion corners stay sharp regardless of join style).
   */
 object BufferOp {
 
@@ -82,12 +84,16 @@ object BufferOp {
     (st, side)
   }
 
+
   def buffer(g: Geom, dist: Double, quadSegs: Int = 8): Geom =
     buffer(g, dist, Style(quadSegs = quadSegs))
 
   def buffer(g: Geom, dist: Double, st: Style): Geom = {
-    if (st.singleSided) return singleSided(g, dist, st)
     if (g.isEmpty) return GPoly(Array.empty, CT.XY)
+    if (st.singleSided) {
+      if (dist == 0) return GPoly(Array.empty, CT.XY)
+      return offsetBuffer(g, math.abs(dist), st, grow = true, side = if (dist > 0) 1 else -1)
+    }
     if (dist == 0) {
       // buffer(0) = cleaned areal result; zero-area (flat/degenerate)
       // rings vanish, as in JTS (TestBuffer.xml degenerate cases)
@@ -95,105 +101,161 @@ object BufferOp {
       val u = try SetOps.unaryUnion(g) catch { case _: Exception => Geom.emptyGC }
       return if (u.dimension == 2 && Measure.area(u) > 0) u else GPoly(Array.empty, CT.XY)
     }
-    if (dist < 0) {
-      if (g.dimension < 2) return GPoly(Array.empty, CT.XY)
-      return erode(g, -dist, st)
-    }
-    if (st.cap == CapRound && st.join == JoinRound) {
-      val r = tryArrangementBuffer(g, dist, st.quadSegs, grow = true)
-      if (r != null) return r
-    }
-    val pieces = mutable.ArrayBuffer.empty[Geom]
-    collectPieces(g, dist, st, pieces)
-    if (pieces.isEmpty) GPoly(Array.empty, CT.XY)
-    else SetOps.unionMany(pieces.toSeq)
+    if (dist > 0) return offsetBuffer(g, dist, st, grow = true, side = 0)
+    if (g.dimension < 2) return GPoly(Array.empty, CT.XY)
+    val r = offsetBuffer(g, -dist, st, grow = false, side = 0)
+    if (r.dimension == 2) r else GPoly(Array.empty, CT.XY)
   }
 
   // ------------------------------------------- arrangement buffer core
 
-  /** Round-style buffer via ONE planar arrangement instead of a union
-    * of per-segment/per-vertex pieces (whose pairwise overlaps make
-    * the piece union O(n * d/segLen) — quadratic when the buffer
-    * distance spans many segments).
-    *
-    * The boundary of {p : dist(p, g) <= d} is contained in the "raw
-    * offset linework": per-segment parallels at distance d, plus arcs
-    * around vertices where the corner opens on the offset side, plus
-    * cap/endpoint circles. So: emit that linework, node it, build the
-    * face arrangement, and keep each face iff its interior point is in
-    * the buffer (inside g, or within d of g's boundary — both O(log n)
-    * with a prepared locator / segment R-tree). Faces cannot straddle
-    * the d-contour because the contour is covered by the linework.
-    * Same idea as JTS's raw-offset-curve + labeling buffer, re-derived
-    * on this engine's arrangement; join/cap styles other than round
-    * are not distance-characterised and keep the piece path.
-    *
-    * Returns null when the result fails cheap area sanity (caller
-    * falls back to the piece path).
+  /** Round caps with round joins first take the round walk (see
+    * [[arrangementBuffer]]). It offsets each ring on one side only, the
+    * side away from the region when growing and into it when eroding,
+    * and it relies on arcs and parallels of different vertices to
+    * cross where the exact offset curves do. An invalid ring (a
+    * bowtie, a self-crossing star) has no orientation to pick the side
+    * from, and a coarse arc can pass a parallel's end without crossing
+    * it. So a round-walk result that leaks (null), throws, or fails a
+    * cheap sanity test (growing must cover g's area, eroding must not
+    * exceed it, and the envelope must stay within d of g's) is
+    * recomputed on the piece walk. Other styles take the piece walk at
+    * once.
     */
-  private def tryArrangementBuffer(g: Geom, d: Double, qs: Int,
-                                   grow: Boolean): Geom =
-    try {
-      val r = arrangementBuffer(g, d, qs, grow)
-      // cheap sanity: grow must cover g's area; erode must not exceed it
-      val gA = Measure.area(g)
-      val rA = Measure.area(r)
-      val e = g.envelope
-      val tol = 1e-9 * math.max(gA, d * d) + java.lang.Double.MIN_NORMAL
-      val envOk = {
-        val re = r.envelope
-        re.isEmpty || (re.xmin >= e.xmin - d - tol && re.ymin >= e.ymin - d - tol &&
-          re.xmax <= e.xmax + d + tol && re.ymax <= e.ymax + d + tol)
-      }
-      val areaOk =
-        if (grow) rA >= gA - tol && !r.isEmpty
-        else rA <= gA + tol
-      if (envOk && areaOk) r else null
-    } catch { case _: Exception => null }
+  private def offsetBuffer(g: Geom, d: Double, st: Style, grow: Boolean,
+                           side: Int): Geom = {
+    if (st.cap == CapRound && st.join == JoinRound) {
+      val r =
+        try arrangementBuffer(g, d, st, grow, side, pieceWalk = false)
+        catch { case _: Exception => null }
+      if (r != null && sane(g, r, d, grow)) return r
+    }
+    arrangementBuffer(g, d, st, grow, side, pieceWalk = true)
+  }
 
-  private[core] def arrangementBuffer(g: Geom, d: Double, qs: Int,
-                                grow: Boolean): Geom = {
-    // ---- boundary segments of g (for distance classification);
-    // points contribute degenerate segments
-    val bs = mutable.ArrayBuffer.empty[Array[Double]]
-    def addSeq(s: Seqn): Unit = {
+  private def sane(g: Geom, r: Geom, d: Double, grow: Boolean): Boolean = {
+    val gA = Measure.area(g)
+    val rA = Measure.area(r)
+    val e = g.envelope
+    val tol = 1e-9 * math.max(gA, d * d) + java.lang.Double.MIN_NORMAL
+    val envOk = {
+      val re = r.envelope
+      re.isEmpty || (re.xmin >= e.xmin - d - tol && re.ymin >= e.ymin - d - tol &&
+        re.xmax <= e.xmax + d + tol && re.ymax <= e.ymax + d + tol)
+    }
+    val areaOk =
+      if (grow) rA >= gA - tol && !r.isEmpty
+      else rA <= gA + tol
+    envOk && areaOk
+  }
+
+  // piece kinds of the face classifier; each piece keeps 8 doubles
+  private final val PDist = 0   // a, b: within d of segment a-b (a == b: a disc)
+  private final val PRect = 1   // a, unit u, length, lo, hi: rectangle of a segment,
+                                // normal offsets in [lo * d, hi * d]
+  private final val PSquare = 2 // v, outward unit u: half-square beyond an end
+  private final val PRound = 3  // v, u1, u2, side: sector on the gap side of a turn
+  private final val PBevel = 4  // v, u1, u2, side: triangle v, p1, p2
+  private final val PMitre = 5  // v, u1, u2, side, lim: mitre clipped at lim
+                                // along the gap bisector
+
+  /** Buffer through ONE planar arrangement of the raw offset linework,
+    * instead of a union of per-segment/per-vertex pieces (whose
+    * pairwise overlaps make a piece union O(n * d/segLen)).
+    *
+    * The boundary of the buffer region (g plus the style's pieces; see
+    * the object doc) lies on the linework emitted here:
+    *  - the parallels of each segment at distance d;
+    *  - at the convex (gap) side of each turn, the round arc, bevel
+    *    chord, or mitre / limited-mitre chain;
+    *  - the round, flat or square cap chain at each open end;
+    *  - on the piece walk, the end edges v ± d·n of every segment;
+    *  - for single-sided buffers, the line itself.
+    * So: node it, build the face arrangement, and keep each face iff
+    * its interior point lies in the region. Faces cannot straddle the
+    * region's boundary because the boundary is covered by the
+    * linework. The point test is analytic: inside g (even-odd,
+    * [[ArealLocator]]), or inside a piece found through an R-tree of
+    * piece boxes. Same idea as JTS's raw-offset-curve + labeling
+    * buffer, re-derived on this engine's arrangement.
+    *
+    * Two walks emit the linework. The piece walk emits the whole
+    * outline of every piece (parallels on both sides, end edges, join
+    * and cap chains), so each piece is a union of bounded faces and no
+    * face can join a piece's inside to the outside. The round walk,
+    * for round caps and joins only, emits the least linework: rings on
+    * one side, no end edges; every segment's test is
+    * dist(p, segment) <= d. It returns null when its leak test (at the
+    * end) finds faces on both sides of the buffer's boundary merged
+    * through an open linework end (see [[offsetBuffer]]).
+    * `side` is 0 for two-sided buffers, +1 / -1 for single-sided
+    * left / right; single-sided lines always take the piece walk.
+    */
+  private[core] def arrangementBuffer(g: Geom, d: Double, st: Style, grow: Boolean,
+                                      side: Int, pieceWalk: Boolean): Geom = {
+    val qs = st.quadSegs
+
+    // ---- pieces of the buffer region, with their boxes
+    var pk = new Array[Int](16)
+    var pv = new Array[Double](8 * 16)
+    val penvs = mutable.ArrayBuffer.empty[Env]
+    def piece(kind: Int, a0: Double, a1: Double, a2: Double, a3: Double, a4: Double,
+              a5: Double, a6: Double, a7: Double, env: Env): Unit = {
+      val i = penvs.length
+      if (i == pk.length) {
+        pk = java.util.Arrays.copyOf(pk, 2 * i); pv = java.util.Arrays.copyOf(pv, 16 * i)
+      }
+      pk(i) = kind
+      val b = 8 * i
+      pv(b) = a0; pv(b + 1) = a1; pv(b + 2) = a2; pv(b + 3) = a3
+      pv(b + 4) = a4; pv(b + 5) = a5; pv(b + 6) = a6; pv(b + 7) = a7
+      penvs += env
+    }
+    def distPiece(ax: Double, ay: Double, bx: Double, by: Double): Unit =
+      piece(PDist, ax, ay, bx, by, 0, 0, 0, 0, Env(math.min(ax, bx) - d, math.min(ay, by) - d,
+        math.max(ax, bx) + d, math.max(ay, by) + d))
+    def distPieces(s: Seqn): Unit = {
       var i = 0
       while (i < s.n - 1) {
-        bs += Array(s.x(i), s.y(i), s.x(i + 1), s.y(i + 1))
+        distPiece(s.x(i), s.y(i), s.x(i + 1), s.y(i + 1))
         i += 1
       }
-      if (s.n == 1) bs += Array(s.x(0), s.y(0), s.x(0), s.y(0))
+      if (s.n == 1) distPiece(s.x(0), s.y(0), s.x(0), s.y(0))
     }
-    def walkB(x: Geom): Unit = x match {
-      case p: GPoint if !p.isEmpty => bs += Array(p.x, p.y, p.x, p.y)
-      case GMPoint(ps, _) => ps.foreach(walkB)
-      case GLine(s) => addSeq(s)
-      case GMLine(ls, _) => ls.foreach(addSeq)
-      case GPoly(rs, _) => rs.foreach(addSeq)
-      case GMPoly(ps, _) => ps.foreach(_.foreach(addSeq))
-      case GColl(cs, _) => cs.foreach(walkB)
-      case _ => ()
-    }
-    walkB(g)
-    if (bs.isEmpty) return GPoly(Array.empty, CT.XY)
-    val bsegs = bs.toArray
-    val benvs = bsegs.map(s => Env(math.min(s(0), s(2)), math.min(s(1), s(3)),
-      math.max(s(0), s(2)), math.max(s(1), s(3))))
-    val btree = RTree.bulkLoad(benvs)
-    def withinD(px: Double, py: Double): Boolean = {
-      var hit = false
-      btree.rangeSearch(Env(px - d, py - d, px + d, py + d)) { i =>
-        val s = bsegs(i)
-        if (Alg.distPointSeg(px, py, s(0), s(1), s(2), s(3)) <= d) hit = true
-        !hit
+    /** p is in piece i grown to reach r (r = d: the piece itself). */
+    def inPiece(i: Int, px: Double, py: Double, r: Double): Boolean = {
+      val b = 8 * i
+      val wx = px - pv(b); val wy = py - pv(b + 1)
+      pk(i) match {
+        case PDist => Alg.distPointSeg(px, py, pv(b), pv(b + 1), pv(b + 2), pv(b + 3)) <= r
+        case PRect =>
+          val ux = pv(b + 2); val uy = pv(b + 3)
+          val s = wx * ux + wy * uy
+          val t = wy * ux - wx * uy
+          s >= 0 && s <= pv(b + 4) && t >= pv(b + 5) * r && t <= pv(b + 6) * r
+        case PSquare =>
+          val ux = pv(b + 2); val uy = pv(b + 3)
+          val s = wx * ux + wy * uy
+          s >= 0 && s <= r && math.abs(wy * ux - wx * uy) <= r
+        case k =>
+          val u1x = pv(b + 2); val u1y = pv(b + 3); val u2x = pv(b + 4); val u2y = pv(b + 5)
+          // inside the cone between the two gap normals
+          if (wx * u1x + wy * u1y < 0 || wx * u2x + wy * u2y > 0) false
+          else if (k == PRound) math.hypot(wx, wy) <= r
+          else {
+            val sg = pv(b + 6)
+            val g1x = -u1y * sg; val g1y = u1x * sg
+            val g2x = -u2y * sg; val g2y = u2x * sg
+            if (k == PBevel)
+              wx * (g1x + g2x) + wy * (g1y + g2y) <= r * (1 + g1x * g2x + g1y * g2y)
+            else {
+              val bl = math.hypot(g1x + g2x, g1y + g2y)
+              wx * g1x + wy * g1y <= r && wx * g2x + wy * g2y <= r &&
+                (wx * (g1x + g2x) + wy * (g1y + g2y)) / bl <= pv(b + 7)
+            }
+          }
       }
-      hit
     }
-    val loc =
-      if (g.dimension == 2 && ArealLocator.edgeCount(g) > 0) ArealLocator.build(g)
-      else null
-    def insideG(px: Double, py: Double): Boolean =
-      loc != null && loc.locate(px, py) > 0
 
     // ---- offset linework
     val noder = new Noder
@@ -221,12 +283,17 @@ object BufferOp {
       */
     def emitCircle(cx: Double, cy: Double, a0: Double): Unit =
       emitArc(cx, cy, a0, 2 * math.Pi)
+    /** Disc of radius d around c, outlined from angle a0. */
+    def discPiece(cx: Double, cy: Double, a0: Double): Unit = {
+      distPiece(cx, cy, cx, cy)
+      emitCircle(cx, cy, a0)
+    }
 
-    /** Offset one walk. closed: ring (first==last). sides: +1 left of
-      * travel, -1 right, 0 both (open lines). For rings the caller
-      * picks the single offset side.
+    /** Round walk of one vertex sequence. closed: ring (first==last).
+      * side: +1 left of travel, -1 right, 0 both (open lines). For
+      * rings the caller picks the single offset side.
       */
-    def offsetWalk(s: Seqn, closed: Boolean, side: Int): Unit = {
+    def roundOffsets(s: Seqn, closed: Boolean, side: Int): Unit = {
       val n = s.n
       if (n < 2) { if (n == 1) emitCircle(s.x(0), s.y(0), 0.0); return }
       val sides = if (side == 0) Seq(1.0, -1.0) else Seq(side.toDouble)
@@ -293,17 +360,148 @@ object BufferOp {
       }
     }
 
-    def walkO(x: Geom): Unit = x match {
-      case p: GPoint if !p.isEmpty => emitCircle(p.x, p.y, 0.0)
-      case GMPoint(ps, _) => ps.foreach(walkO)
-      case GLine(s) => offsetWalk(s, closed = false, side = 0)
-      case GMLine(ls, _) => ls.foreach(offsetWalk(_, closed = false, side = 0))
-      case GPoly(rs, _) => offsetRings(rs)
-      case GMPoly(ps, _) => ps.foreach(offsetRings)
-      case GColl(cs, _) => cs.foreach(walkO)
+    /** Join piece and its linework at vertex v between incoming unit
+      * direction u1 and outgoing u2, on the gap side of the turn; with
+      * a single side sd, only when the gap opens on that side.
+      */
+    def join(vx: Double, vy: Double, u1x: Double, u1y: Double, u2x: Double, u2y: Double,
+             sd: Int): Unit = {
+      val cross = u1x * u2y - u1y * u2x
+      if (math.abs(cross) < 1e-12) {
+        // straight on needs nothing; a two-sided u-turn folds the line
+        // back on itself: round fills the disc, mitre/bevel leave the
+        // flat fold that the end edges bound (JTS's limited mitre
+        // degenerates the same way for antiparallel edges)
+        if (sd == 0 && st.join == JoinRound && u1x * u2x + u1y * u2y < 0)
+          discPiece(vx, vy, math.atan2(u1x, -u1y))
+        return
+      }
+      val sg = if (cross < 0) 1.0 else -1.0 // gap on the left of a right turn
+      if (sd != 0 && sd != sg) return
+      val p1x = vx - u1y * sg * d; val p1y = vy + u1x * sg * d
+      val p2x = vx - u2y * sg * d; val p2y = vy + u2x * sg * d
+      def box(xs: Double*)(ys: Double*): Env = Env(xs.min, ys.min, xs.max, ys.max)
+      def bevel(): Unit = {
+        emitLine(Array(p1x, p1y, p2x, p2y))
+        piece(PBevel, vx, vy, u1x, u1y, u2x, u2y, sg, 0, box(vx, p1x, p2x)(vy, p1y, p2y))
+      }
+      st.join match {
+        case JoinRound =>
+          arcAtVertex(vx, vy, u1x, u1y, u2x, u2y, sg)
+          piece(PRound, vx, vy, u1x, u1y, u2x, u2y, sg, 0, Env(vx - d, vy - d, vx + d, vy + d))
+        case JoinBevel => bevel()
+        case _ =>
+          // mitre tip: intersection of the two offset-edge lines
+          // p1 + t*u1 = p2 + s2*u2  =>  t = cross(p2-p1, u2) / cross(u1, u2)
+          val t = ((p2x - p1x) * u2y - (p2y - p1y) * u2x) / cross
+          val mx = p1x + t * u1x; val my = p1y + t * u1y
+          val lim = st.mitreLimit * d
+          if (math.hypot(mx - vx, my - vy) <= lim) {
+            emitLine(Array(p1x, p1y, mx, my, p2x, p2y))
+            piece(PMitre, vx, vy, u1x, u1y, u2x, u2y, sg, lim,
+              box(vx, p1x, mx, p2x)(vy, p1y, my, p2y))
+          } else {
+            // limited mitre: clip the spike with the line perpendicular
+            // to the gap bisector at distance limit*d from v; a clip
+            // line short of the bevel chord leaves the bevel
+            val gx = p1x - vx + p2x - vx; val gy = p1y - vy + p2y - vy
+            val bl = math.hypot(gx, gy)
+            if (bl < 1e-12 * d) return bevel()
+            val bx = gx / bl; val by = gy / bl
+            val den1 = u1x * bx + u1y * by
+            val den2 = u2x * bx + u2y * by
+            val chord = (p1x - vx) * bx + (p1y - vy) * by
+            if (math.abs(den1) < 1e-12 || math.abs(den2) < 1e-12 || lim < chord) return bevel()
+            val t1 = (lim - chord) / den1
+            val t2 = (lim - ((p2x - vx) * bx + (p2y - vy) * by)) / den2
+            val q1x = p1x + t1 * u1x; val q1y = p1y + t1 * u1y
+            val q2x = p2x + t2 * u2x; val q2y = p2y + t2 * u2y
+            emitLine(Array(p1x, p1y, q1x, q1y, q2x, q2y, p2x, p2y))
+            piece(PMitre, vx, vy, u1x, u1y, u2x, u2y, sg, lim,
+              box(vx, p1x, q1x, q2x, p2x)(vy, p1y, q1y, q2y, p2y))
+          }
+      }
+    }
+
+    /** Cap piece and its linework at open end v with outward unit
+      * direction u (pointing away from the line).
+      */
+    def cap(vx: Double, vy: Double, ux: Double, uy: Double): Unit = st.cap match {
+      case CapRound => discPiece(vx, vy, math.atan2(-ux, uy))
+      case CapSquare =>
+        val nx = -uy * d; val ny = ux * d
+        val c1x = vx + nx + ux * d; val c1y = vy + ny + uy * d
+        val c2x = vx - nx + ux * d; val c2y = vy - ny + uy * d
+        emitLine(Array(vx + nx, vy + ny, c1x, c1y, c2x, c2y, vx - nx, vy - ny))
+        piece(PSquare, vx, vy, ux, uy, 0, 0, 0, 0, Env(
+          math.min(math.min(vx + nx, vx - nx), math.min(c1x, c2x)),
+          math.min(math.min(vy + ny, vy - ny), math.min(c1y, c2y)),
+          math.max(math.max(vx + nx, vx - nx), math.max(c1x, c2x)),
+          math.max(math.max(vy + ny, vy - ny), math.max(c1y, c2y))))
       case _ => ()
     }
+
+    /** Piece walk of one vertex sequence: every piece with its whole
+      * outline. sd = 0 both sides, +1 / -1 the left / right side only.
+      * Repeated vertices are dropped; a ring walks its closing vertex
+      * too.
+      */
+    def pieceOutlines(s: Seqn, closed: Boolean, sd: Int): Unit = {
+      val xy = new Array[Double](2 * s.n + 2)
+      var k = 0
+      var i = 0
+      while (i < s.n) {
+        if (k == 0 || s.x(i) != xy(2 * k - 2) || s.y(i) != xy(2 * k - 1)) {
+          xy(2 * k) = s.x(i); xy(2 * k + 1) = s.y(i); k += 1
+        }
+        i += 1
+      }
+      if (k == 0) return
+      if (closed && k > 1 && (xy(0) != xy(2 * k - 2) || xy(1) != xy(2 * k - 1))) {
+        xy(2 * k) = xy(0); xy(2 * k + 1) = xy(1); k += 1
+      }
+      if (k == 1) {
+        if (sd == 0 && st.cap == CapRound) discPiece(xy(0), xy(1), 0.0)
+        return
+      }
+      val lo = if (sd > 0) 0.0 else -1.0
+      val hi = if (sd < 0) 0.0 else 1.0
+      val u = new Array[Double](2 * (k - 1))
+      i = 0
+      while (i < k - 1) {
+        val x1 = xy(2 * i); val y1 = xy(2 * i + 1); val x2 = xy(2 * i + 2); val y2 = xy(2 * i + 3)
+        val len = math.hypot(x2 - x1, y2 - y1)
+        val ux = (x2 - x1) / len; val uy = (y2 - y1) / len
+        u(2 * i) = ux; u(2 * i + 1) = uy
+        piece(PRect, x1, y1, ux, uy, len, lo, hi, 0, Env(math.min(x1, x2) - d,
+          math.min(y1, y2) - d, math.max(x1, x2) + d, math.max(y1, y2) + d))
+        // offsets of the left side; the right side is their negation
+        val nx = -uy * d; val ny = ux * d
+        if (hi > 0) emitLine(Array(x1 + nx, y1 + ny, x2 + nx, y2 + ny))
+        if (lo < 0) emitLine(Array(x1 - nx, y1 - ny, x2 - nx, y2 - ny))
+        if (sd != 0) emitLine(Array(x1, y1, x2, y2))
+        emitLine(Array(x1 + lo * nx, y1 + lo * ny, x1 + hi * nx, y1 + hi * ny))
+        emitLine(Array(x2 + lo * nx, y2 + lo * ny, x2 + hi * nx, y2 + hi * ny))
+        i += 1
+      }
+      i = if (closed) 0 else 1
+      while (i < k - 1) {
+        val p = if (i == 0) k - 2 else i - 1
+        join(xy(2 * i), xy(2 * i + 1), u(2 * p), u(2 * p + 1), u(2 * i), u(2 * i + 1), sd)
+        i += 1
+      }
+      if (!closed && sd == 0) {
+        cap(xy(0), xy(1), -u(0), -u(1))
+        cap(xy(2 * k - 2), xy(2 * k - 1), u(2 * k - 4), u(2 * k - 3))
+      }
+    }
+
+    def line(s: Seqn): Unit =
+      if (pieceWalk || side != 0) pieceOutlines(s, closed = false, side)
+      else { distPieces(s); roundOffsets(s, closed = false, side = 0) }
     def offsetRings(rs: Array[Seqn]): Unit = {
+      if (pieceWalk) { rs.foreach(pieceOutlines(_, closed = true, 0)); return }
+      rs.foreach(distPieces)
       var ri = 0
       while (ri < rs.length) {
         val r = rs(ri)
@@ -316,12 +514,33 @@ object BufferOp {
           // region lies LEFT of travel iff ring is CCW
           val regionSide = if (ccw) 1 else -1
           val side = if (intoRegion) regionSide else -regionSide
-          offsetWalk(r, closed = true, side = side)
+          roundOffsets(r, closed = true, side = side)
         } else if (r.n == 1) emitCircle(r.x(0), r.y(0), 0.0)
         ri += 1
       }
     }
-    walkO(g)
+    def walk(x: Geom): Unit = x match {
+      case p: GPoint if !p.isEmpty => if (side == 0) discPiece(p.x, p.y, 0.0)
+      case GMPoint(ps, _) => ps.foreach(walk)
+      case GLine(s) => line(s)
+      case GMLine(ls, _) => ls.foreach(line)
+      case GPoly(rs, _) => offsetRings(rs)
+      case GMPoly(ps, _) => ps.foreach(offsetRings)
+      case GColl(cs, _) => cs.foreach(walk)
+      case _ => ()
+    }
+    walk(g)
+    if (penvs.isEmpty) return GPoly(Array.empty, CT.XY)
+
+    val ptree = RTree.bulkLoad(penvs.toArray)
+    def inPieces(px: Double, py: Double): Boolean =
+      !ptree.pointSearch(px, py)(i => !inPiece(i, px, py, d))
+    val loc =
+      if (g.dimension == 2 && ArealLocator.edgeCount(g) > 0) ArealLocator.build(g)
+      else null
+    def insideG(px: Double, py: Double): Boolean =
+      loc != null && loc.locate(px, py) > 0
+
     noder.node()
     val arr = new Arrangement(noder.edges)
     arr.build()
@@ -331,316 +550,66 @@ object BufferOp {
       if (!arr.faceUnbounded(f)) {
         val (px, py) = arr.faceInteriorPoint(f)
         kept(f) =
-          if (grow) insideG(px, py) || withinD(px, py)
-          else insideG(px, py) && !withinD(px, py)
+          if (grow) insideG(px, py) || inPieces(px, py)
+          else insideG(px, py) && !inPieces(px, py)
       }
       f += 1
     }
-    arr.dissolve(kept)
-  }
+    val r = arr.dissolve(kept)
+    if (pieceWalk) return r
 
-  private def collectPieces(g: Geom, d: Double, st: Style,
-                            out: mutable.ArrayBuffer[Geom]): Unit = g match {
-    case p: GPoint if !p.isEmpty => out += disc(p.x, p.y, d, st.quadSegs)
-    case GMPoint(ps, _) => ps.foreach(collectPieces(_, d, st, out))
-    case GLine(s) => seqPieces(s, d, st, out)
-    case GMLine(ls, _) => ls.foreach(seqPieces(_, d, st, out))
-    case poly @ GPoly(rings, _) if rings.nonEmpty =>
-      out += poly
-      rings.foreach(seqPieces(_, d, st, out))
-    case GMPoly(ps, ct) =>
-      ps.filter(_.nonEmpty).foreach(rs => collectPieces(GPoly(rs, ct), d, st, out))
-    case GColl(gs, _) => gs.foreach(collectPieces(_, d, st, out))
-    case _ => ()
-  }
-
-  /** Negative buffer of an areal geometry: interior points at distance
-    * > d from the boundary, i.e. g minus the boundary's buffer. Join
-    * style shapes the band at reflex corners (convex from inside).
-    */
-  private def erode(g: Geom, d: Double, st: Style): Geom = {
-    if (st.cap == CapRound && st.join == JoinRound) {
-      val r = tryArrangementBuffer(g, d, st.quadSegs, grow = false)
-      if (r != null) {
-        return if (r.dimension == 2) r else GPoly(Array.empty, CT.XY)
+    /* Round walk leak test. An open linework end lets faces on both
+     * sides of the buffer boundary merge into one face. The walk around
+     * a linework curve with a gap has no area; rounding can still make
+     * it a bounded face, which then borders no other face. Otherwise
+     * the merged face carries linework that ends inside it, as do
+     * sound faces: a parallel running on past the crossing at a
+     * concave corner, or a flap left outside where two coarse arcs
+     * cross short of the true circles. The points beside such an edge
+     * lie on the face's side of the boundary, except in a merged face.
+     * So on every edge with one face on both sides, step two sagittas
+     * off each side: a point there that is in (out of) the buffer by
+     * that margin while the face is not kept (kept), and that the
+     * result has on the wrong side too, is a leak. */
+    val separated = new Array[Boolean](arr.nFaces)
+    var e = 0
+    while (e < arr.edges.length) {
+      val lf = arr.leftFace(e); val rf = arr.rightFace(e)
+      if (lf != rf) { separated(lf) = true; separated(rf) = true }
+      e += 1
+    }
+    f = 0
+    while (f < arr.nFaces) {
+      if (!separated(f) && !arr.faceUnbounded(f)) return null
+      f += 1
+    }
+    val m = math.min(d / 2, 2 * d * (1 - math.cos(math.Pi / (4 * math.max(1, qs)))))
+    def within(px: Double, py: Double, reach: Double): Boolean =
+      !ptree.rangeSearch(Env(px - m, py - m, px + m, py + m))(i => !inPiece(i, px, py, reach))
+    def surely(in: Boolean, px: Double, py: Double): Boolean =
+      if (grow) {
+        if (in) insideG(px, py) || within(px, py, d - m)
+        else !insideG(px, py) && !within(px, py, d + m)
+      } else {
+        if (in) insideG(px, py) && !within(px, py, d + m)
+        else !insideG(px, py) || within(px, py, d - m)
       }
-    }
-    val boundaryPieces = mutable.ArrayBuffer.empty[Geom]
-    def rings(x: Geom): Unit = x match {
-      case GPoly(rs, _) => rs.foreach(seqPieces(_, d, st, boundaryPieces))
-      case GMPoly(ps, _) => ps.foreach(_.foreach(seqPieces(_, d, st, boundaryPieces)))
-      case GColl(cs, _) => cs.foreach(rings)
-      case _ => ()
-    }
-    rings(g)
-    if (boundaryPieces.isEmpty) return GPoly(Array.empty, CT.XY)
-    val band = SetOps.unionMany(boundaryPieces.toSeq)
-    SetOps.difference(g, band) match {
-      case r if r.dimension == 2 => r
-      case _ => GPoly(Array.empty, CT.XY)
-    }
-  }
-
-  /** Single-sided buffer: region between each lineal component and its
-    * offset curve at distance |dist| on one side (positive = left,
-    * negative = right, matching the reference's sign convention); caps
-    * forced flat. Areal inputs take the ordinary two-sided buffer;
-    * puntal inputs are empty (a point has no side).
-    */
-  private def singleSided(g: Geom, dist: Double, st: Style): Geom = {
-    if (g.isEmpty || dist == 0) return GPoly(Array.empty, CT.XY)
-    val leftSide = dist > 0
-    val d = math.abs(dist)
-    val pieces = mutable.ArrayBuffer.empty[Geom]
-    def walk(x: Geom): Unit = x match {
-      case GLine(s) => sideSeqPieces(s, d, leftSide, st, pieces)
-      case GMLine(ls, _) => ls.foreach(sideSeqPieces(_, d, leftSide, st, pieces))
-      case p @ (_: GPoly | _: GMPoly) =>
-        collectPieces(p, d, st.copy(singleSided = false), pieces)
-      case GColl(cs, _) => cs.foreach(walk)
-      case _ => ()
-    }
-    walk(g)
-    if (pieces.isEmpty) GPoly(Array.empty, CT.XY)
-    else SetOps.unionMany(pieces.toSeq)
-  }
-
-  /** Disc approximation: regular polygon with 4*qs vertices. */
-  private def disc(cx: Double, cy: Double, r: Double, qs: Int): Geom = {
-    val n = math.max(8, 4 * qs)
-    val arr = new Array[Double]((n + 1) * 2)
-    var i = 0
-    while (i < n) {
-      val a = 2 * math.Pi * i / n
-      arr(2 * i) = cx + r * math.cos(a)
-      arr(2 * i + 1) = cy + r * math.sin(a)
-      i += 1
-    }
-    arr(2 * n) = arr(0); arr(2 * n + 1) = arr(1)
-    GPoly(Array(Seqn.xy(arr)), CT.XY)
-  }
-
-  /** Circular-sector fan: centre v, radius r, sweeping the SHORT way
-    * from angle a1 to a2 (gap angles at joins are always < pi).
-    */
-  private def sector(cx: Double, cy: Double, r: Double,
-                     a1: Double, a2: Double, qs: Int): Geom = {
-    var sweep = a2 - a1
-    while (sweep <= -math.Pi) sweep += 2 * math.Pi
-    while (sweep > math.Pi) sweep -= 2 * math.Pi
-    val steps = math.max(2, math.ceil(math.abs(sweep) / (math.Pi / 2) * qs).toInt)
-    val arr = new Array[Double]((steps + 3) * 2)
-    arr(0) = cx; arr(1) = cy
-    var i = 0
-    while (i <= steps) {
-      val a = a1 + sweep * i / steps
-      arr(2 * (i + 1)) = cx + r * math.cos(a)
-      arr(2 * (i + 1) + 1) = cy + r * math.sin(a)
-      i += 1
-    }
-    arr(2 * (steps + 2)) = cx; arr(2 * (steps + 2) + 1) = cy
-    GPoly(Array(Seqn.xy(arr)), CT.XY)
-  }
-
-  private def poly(xys: Double*): Geom = {
-    val closed = xys ++ Seq(xys(0), xys(1))
-    GPoly(Array(Seqn.of(closed: _*)), CT.XY)
-  }
-
-  /** Join piece at vertex v between incoming unit direction u1 and
-    * outgoing unit u2, on the convex (gap) side, radius d. Returns
-    * null when no piece is needed (collinear, or concave-only).
-    */
-  private def joinPiece(vx: Double, vy: Double,
-                        u1x: Double, u1y: Double, u2x: Double, u2y: Double,
-                        d: Double, st: Style): Geom = {
-    val cross = u1x * u2y - u1y * u2x
-    val dot = u1x * u2x + u1y * u2y
-    if (math.abs(cross) < 1e-12) {
-      // collinear: straight-through needs nothing; a u-turn folds the
-      // line back on itself — round fills the half-disc, mitre/bevel
-      // leave the flat fold (JTS's limited-mitre degenerates the same
-      // way for antiparallel edges)
-      if (dot < 0 && st.join == JoinRound)
-        return disc(vx, vy, d, st.quadSegs)
-      return null
-    }
-    // gap side: left of the path when turning right (cross<0), right
-    // when turning left. Outward normals n1/n2 on that side.
-    val s = if (cross < 0) 1.0 else -1.0 // +1 = rotate left, -1 = rotate right
-    val n1x = -u1y * s * d; val n1y = u1x * s * d
-    val n2x = -u2y * s * d; val n2y = u2x * s * d
-    val p1x = vx + n1x; val p1y = vy + n1y
-    val p2x = vx + n2x; val p2y = vy + n2y
-    st.join match {
-      case JoinRound =>
-        sector(vx, vy, d, math.atan2(n1y, n1x), math.atan2(n2y, n2x), st.quadSegs)
-      case JoinBevel =>
-        poly(vx, vy, p1x, p1y, p2x, p2y)
-      case JoinMitre =>
-        // mitre tip: intersection of the two offset-edge lines
-        // p1 + t*u1 = p2 + s2*u2  =>  t = cross(p2-p1, u2) / cross(u1, u2)
-        val t = ((p2x - p1x) * u2y - (p2y - p1y) * u2x) / cross
-        val mx = p1x + t * u1x; val my = p1y + t * u1y
-        val mdist = math.hypot(mx - vx, my - vy)
-        if (mdist <= st.mitreLimit * d) poly(vx, vy, p1x, p1y, mx, my, p2x, p2y)
-        else {
-          // limited mitre: clip the spike with the line perpendicular
-          // to the gap bisector at distance limit*d from v
-          val bl = math.hypot(n1x + n2x, n1y + n2y)
-          if (bl < 1e-12 * d) return poly(vx, vy, p1x, p1y, p2x, p2y)
-          val bx = (n1x + n2x) / bl; val by = (n1y + n2y) / bl
-          val lim = st.mitreLimit * d
-          val den1 = u1x * bx + u1y * by
-          val den2 = u2x * bx + u2y * by
-          if (math.abs(den1) < 1e-12 || math.abs(den2) < 1e-12)
-            return poly(vx, vy, p1x, p1y, p2x, p2y)
-          val t1 = (lim - ((p1x - vx) * bx + (p1y - vy) * by)) / den1
-          val t2 = (lim - ((p2x - vx) * bx + (p2y - vy) * by)) / den2
-          val q1x = p1x + t1 * u1x; val q1y = p1y + t1 * u1y
-          val q2x = p2x + t2 * u2x; val q2y = p2y + t2 * u2y
-          poly(vx, vy, p1x, p1y, q1x, q1y, q2x, q2y, p2x, p2y)
-        }
-    }
-  }
-
-  /** Cap piece at an open endpoint v with outward unit direction u
-    * (pointing away from the line).
-    */
-  private def capPiece(vx: Double, vy: Double, ux: Double, uy: Double,
-                       d: Double, st: Style): Geom = st.cap match {
-    case CapRound => disc(vx, vy, d, st.quadSegs)
-    case CapFlat => null
-    case CapSquare =>
-      // square extension: half-square beyond the endpoint
-      val nx = -uy * d; val ny = ux * d
-      poly(vx + nx, vy + ny,
-        vx + nx + ux * d, vy + ny + uy * d,
-        vx - nx + ux * d, vy - ny + uy * d,
-        vx - nx, vy - ny)
-    case _ => null
-  }
-
-  /** Per-segment rectangle + styled vertex pieces for a sequence. A
-    * closed sequence (ring) takes joins at every vertex incl. the
-    * closure; an open one takes caps at its two ends.
-    */
-  private def seqPieces(sq: Seqn, d: Double, st: Style,
-                        out: mutable.ArrayBuffer[Geom]): Unit = {
-    if (sq.isEmpty) return
-    val n = sq.n
-    if (n == 1) { out += disc(sq.x(0), sq.y(0), d, st.quadSegs); return }
-    val closed = sq.x(0) == sq.x(n - 1) && sq.y(0) == sq.y(n - 1)
-
-    // segment rectangles + per-segment unit directions (zero-length skipped)
-    val dirs = new Array[Double](2 * (n - 1)) // ux, uy per segment; NaN if degenerate
-    var i = 0
-    while (i < n - 1) {
-      val x1 = sq.x(i); val y1 = sq.y(i); val x2 = sq.x(i + 1); val y2 = sq.y(i + 1)
-      val dx = x2 - x1; val dy = y2 - y1
-      val len = math.hypot(dx, dy)
-      if (len > 0) {
-        dirs(2 * i) = dx / len; dirs(2 * i + 1) = dy / len
-        val nx = -dy / len * d; val ny = dx / len * d
-        out += poly(x1 + nx, y1 + ny, x2 + nx, y2 + ny, x2 - nx, y2 - ny, x1 - nx, y1 - ny)
-      } else { dirs(2 * i) = Double.NaN; dirs(2 * i + 1) = Double.NaN }
-      i += 1
-    }
-    // previous non-degenerate segment index for each vertex
-    def prevSeg(v: Int): Int = {
-      var j = v - 1
-      while (j >= 0 && dirs(2 * j).isNaN) j -= 1
-      if (j >= 0) j
-      else if (closed) { var k = n - 2; while (k > v && dirs(2 * k).isNaN) k -= 1
-        if (k > v && !dirs(2 * k).isNaN) k else -1 }
-      else -1
-    }
-    def nextSeg(v: Int): Int = {
-      var j = v
-      while (j < n - 1 && dirs(2 * j).isNaN) j += 1
-      if (j < n - 1) j
-      else if (closed) { var k = 0; while (k < v && dirs(2 * k).isNaN) k += 1
-        if (k < v && !dirs(2 * k).isNaN) k else -1 }
-      else -1
-    }
-    if (st.join == JoinRound && st.cap == CapRound && !st.singleSided) {
-      // fast path, identical to the classic construction: a full disc
-      // at every vertex covers all round joins and round caps at once
-      i = 0
-      val last = if (closed) n - 1 else n
-      while (i < last) { out += disc(sq.x(i), sq.y(i), d, st.quadSegs); i += 1 }
-      return
-    }
-    // joins at interior vertices (all vertices for a ring)
-    val vs = if (closed) 0 until (n - 1) else 1 until (n - 1)
-    for (v <- vs) {
-      val pi = prevSeg(v); val ni = nextSeg(v)
-      if (pi >= 0 && ni >= 0 && !(pi == ni)) {
-        val g = joinPiece(sq.x(v), sq.y(v),
-          dirs(2 * pi), dirs(2 * pi + 1), dirs(2 * ni), dirs(2 * ni + 1), d, st)
-        if (g != null) out += g
-      } else if (st.join == JoinRound && (pi >= 0 || ni >= 0)) {
-        // isolated repeated-coordinate vertex inside a line
-        out += disc(sq.x(v), sq.y(v), d, st.quadSegs)
+    lazy val rLoc = if (ArealLocator.edgeCount(r) > 0) ArealLocator.build(r) else null
+    def inResult(px: Double, py: Double): Boolean = rLoc != null && rLoc.locate(px, py) >= 0
+    def wrong(k: Boolean, px: Double, py: Double): Boolean =
+      surely(!k, px, py) && inResult(px, py) == k
+    e = 0
+    while (e < arr.edges.length) {
+      val lf = arr.leftFace(e)
+      if (lf == arr.rightFace(e)) {
+        val ed = arr.edges(e)
+        val len = math.hypot(ed.x2 - ed.x1, ed.y2 - ed.y1)
+        val mx = (ed.x1 + ed.x2) / 2; val my = (ed.y1 + ed.y2) / 2
+        val nx = -(ed.y2 - ed.y1) / len * m; val ny = (ed.x2 - ed.x1) / len * m
+        if (wrong(kept(lf), mx + nx, my + ny) || wrong(kept(lf), mx - nx, my - ny)) return null
       }
+      e += 1
     }
-    if (!closed) {
-      val s0 = nextSeg(0)
-      if (s0 >= 0) {
-        val g = capPiece(sq.x(0), sq.y(0), -dirs(2 * s0), -dirs(2 * s0 + 1), d, st)
-        if (g != null) out += g
-      }
-      val sl = prevSeg(n - 1)
-      if (sl >= 0) {
-        val g = capPiece(sq.x(n - 1), sq.y(n - 1), dirs(2 * sl), dirs(2 * sl + 1), d, st)
-        if (g != null) out += g
-      }
-    }
-  }
-
-  /** One-sided pieces for a sequence: per-segment one-sided rectangles
-    * plus gap-side join fills where the path turns away from the
-    * offset side. Flat ends (the reference forces flat caps).
-    */
-  private def sideSeqPieces(sq: Seqn, d: Double, leftSide: Boolean, st: Style,
-                            out: mutable.ArrayBuffer[Geom]): Unit = {
-    if (sq.isEmpty || sq.n < 2) return
-    val n = sq.n
-    val s = if (leftSide) 1.0 else -1.0
-    val dirs = new Array[Double](2 * (n - 1))
-    var i = 0
-    while (i < n - 1) {
-      val x1 = sq.x(i); val y1 = sq.y(i); val x2 = sq.x(i + 1); val y2 = sq.y(i + 1)
-      val dx = x2 - x1; val dy = y2 - y1
-      val len = math.hypot(dx, dy)
-      if (len > 0) {
-        dirs(2 * i) = dx / len; dirs(2 * i + 1) = dy / len
-        val nx = -dy / len * s * d; val ny = dx / len * s * d
-        out += poly(x1, y1, x2, y2, x2 + nx, y2 + ny, x1 + nx, y1 + ny)
-      } else { dirs(2 * i) = Double.NaN; dirs(2 * i + 1) = Double.NaN }
-      i += 1
-    }
-    // gap fills: at vertex v, a gap opens on the offset side when the
-    // turn is AWAY from it (right turn for a left buffer, and vice
-    // versa) — exactly when the convex side of the turn is the offset
-    // side, so joinPiece's own side selection already matches.
-    var prev = -1
-    i = 0
-    while (i < n - 1) {
-      if (!dirs(2 * i).isNaN) {
-        if (prev >= 0) {
-          val cross = dirs(2 * prev) * dirs(2 * i + 1) - dirs(2 * prev + 1) * dirs(2 * i)
-          val gapOnSide = if (leftSide) cross < 0 else cross > 0
-          if (gapOnSide) {
-            val v = i // vertex between segment prev and segment i
-            val g = joinPiece(sq.x(v), sq.y(v),
-              dirs(2 * prev), dirs(2 * prev + 1), dirs(2 * i), dirs(2 * i + 1), d, st)
-            if (g != null) out += g
-          }
-        }
-        prev = i
-      }
-      i += 1
-    }
+    r
   }
 }

@@ -15,15 +15,13 @@ import org.apache.spark.sql.functions._
   * frequent pair (ties by pair ascending — a total order, so training
   * is deterministic and engine-replayable), and apply the merge.
   *
-  * Merge application is string `replace` on an anchor-delimited symbol
-  * string ("|a|b|c|"): the pattern "|a|b|" can never match inside a
-  * multi-char symbol, and the replace runs TWICE because consecutive
-  * occurrences share their anchor ("|a|b|a|b|": the first replacement
-  * consumes the shared '|', hiding the second occurrence from the same
-  * left-to-right scan; after one pass the missed occurrences are
-  * non-adjacent, so a second pass catches exactly them and no new ones
-  * — two passes reproduce greedy left-to-right BPE merging precisely,
-  * spec-gated against a scalar reference implementation).
+  * Merge application is ONE string `replace` on a symbol string in
+  * which every symbol sits in its own delimiters ("|a||b||c|"): the
+  * pattern "|a||b|" starts only at a symbol's opening '|' and matches
+  * whole symbols only, and consecutive occurrences share no character,
+  * so the left-to-right non-overlapping scan of a literal `replace`
+  * is exactly greedy left-to-right BPE merging (spec-gated against a
+  * scalar reference implementation, runs of equal symbols included).
   *
   * No driver-side data loop: per iteration the driver pulls ONE
   * control row (the argmax pair — vocab-dimension metadata, like the
@@ -48,7 +46,7 @@ object Bpe {
     val chars = transform(sequence(lit(1), length(col("w"))),
       i => col("w").substr(i, lit(1)))
     var sym = words
-      .withColumn("sym", concat(lit("|"), concat_ws("|", chars), lit("|")))
+      .withColumn("sym", concat(lit("|"), concat_ws("||", chars), lit("|")))
       .select(col("freq"), col("sym"))
       .localCheckpoint(false)
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
@@ -84,11 +82,9 @@ object Bpe {
         val (pa, pb, c) =
           (bestRow.getString(0), bestRow.getString(1), bestRow.getLong(2))
         picked += ((it, pa, pb, c))
-        val pat = lit("|" + pa + "|" + pb + "|")
-        val rep = lit("|" + pa + pb + "|")
         val applied = sym
-          .withColumn("sym",
-            replaceLit(replaceLit(col("sym"), pat, rep), pat, rep))
+          .withColumn("sym", call_function("replace", col("sym"),
+            lit(symString(Seq(pa, pb))), lit(symString(Seq(pa + pb)))))
           .select(col("freq"), col("sym"))
         sym = applied.localCheckpoint(false)
       }
@@ -97,12 +93,14 @@ object Bpe {
       .toDF("merge_rank", "pa", "pb", "c")
   }
 
-  /** Literal (non-regex) string replace as a Column — SQL `replace`. */
-  private def replaceLit(s: Column, p: Column, r: Column): Column =
-    call_function("replace", s, p, r)
+  /** The symbol string of a symbol sequence: "|a||b||c|". A merge of
+    * (pa, pb) replaces symString(Seq(pa, pb)) by symString(Seq(pa + pb)).
+    */
+  private[operators] def symString(syms: Seq[String]): String =
+    syms.map(x => s"|$x|").mkString
 
   /** Greedy left-to-right merge of one pair into a symbol sequence —
-    * the scalar reference the two-pass replace must match (specs).
+    * the scalar reference the literal replace must match (specs).
     */
   private[operators] def mergeOnce(syms: List[String], pa: String,
                                    pb: String): List[String] = syms match {
@@ -126,9 +124,8 @@ object Bpe {
          |  GROUP BY pa, pb),
          |b$i AS (SELECT pa, pb, c FROM p$i ORDER BY c DESC, pa ASC, pb ASC LIMIT 1),
          |s$i AS (
-         |  SELECT freq, replace(replace(sym,
-         |      '|' || pa || '|' || pb || '|', '|' || pa || pb || '|'),
-         |      '|' || pa || '|' || pb || '|', '|' || pa || pb || '|') AS sym
+         |  SELECT freq, replace(sym,
+         |      '|' || pa || '||' || pb || '|', '|' || pa || pb || '|') AS sym
          |  FROM s${i - 1}, b$i)""".stripMargin
     }
     val union = (1 to merges)
@@ -144,7 +141,7 @@ object Bpe {
        |s0 AS (
        |  SELECT freq, '|' || array_to_string(
        |    list_transform(range(1, len(w) + 1),
-       |      i -> substr(w, CAST(i AS INT), 1)), '|') || '|' AS sym
+       |      i -> substr(w, CAST(i AS INT), 1)), '||') || '|' AS sym
        |  FROM w),
        |${stages.mkString(",\n")}
        |$union""".stripMargin

@@ -151,4 +151,106 @@ class PropertySpec extends AnyFunSuite {
       }
     })
   }
+
+  // ---- buffer: seeded stars, holed stars, lines, points, touching
+  // multipolygons and bowties, under every cap/join/side style
+  private val genXY: Gen[(Double, Double)] =
+    Gen.zip(Gen.choose(-50.0, 50.0), Gen.choose(-50.0, 50.0))
+
+  /** Star ring around (cx, cy): sorted random angles, radii in
+    * [rIn, rOut], half the time snapped to a 1/64 grid (which can make
+    * the ring touch or cross itself).
+    */
+  private def starRing(cx: Double, cy: Double, rIn: Double, rOut: Double,
+                       ccw: Boolean): Gen[Seqn] = for {
+    n <- Gen.choose(3, 48)
+    angles <- Gen.listOfN(n, Gen.choose(0.0, 2 * math.Pi))
+    radii <- Gen.listOfN(n, Gen.choose(rIn, rOut))
+    grid <- Gen.oneOf(true, false)
+  } yield {
+    def snap(v: Double) = if (grid) math.rint(v * 64) / 64 else v
+    val pts = angles.sorted.zip(radii).map { case (a, r) =>
+      (snap(cx + r * math.cos(a)), snap(cy + r * math.sin(a))) }
+    val ring = if (ccw) pts :+ pts.head else (pts :+ pts.head).reverse
+    Seqn.xy(ring.flatMap { case (x, y) => Seq(x, y) }.toArray)
+  }
+
+  private val genStar: Gen[Geom] = for {
+    (cx, cy) <- genXY; r <- Gen.choose(2.0, 20.0)
+    shell <- starRing(cx, cy, 0.3 * r, r, ccw = true)
+  } yield GPoly(Array(shell), CT.XY)
+
+  private val genHoledStar: Gen[Geom] = for {
+    (cx, cy) <- genXY; r <- Gen.choose(4.0, 20.0)
+    shell <- starRing(cx, cy, 0.6 * r, r, ccw = true)
+    hole <- starRing(cx, cy, 0.1 * r, 0.45 * r, ccw = false)
+  } yield GPoly(Array(shell, hole), CT.XY)
+
+  private val genWalk: Gen[Geom] = for {
+    (x, y) <- genXY
+    steps <- Gen.listOf(Gen.zip(Gen.choose(-6.0, 6.0), Gen.choose(-6.0, 6.0)))
+      .map(_.take(24)).suchThat(_.nonEmpty)
+  } yield {
+    val pts = steps.scanLeft((x, y)) { case ((px, py), (dx, dy)) => (px + dx, py + dy) }
+    GLine(Seqn.xy(pts.flatMap { case (a, b) => Seq(a, b) }.toArray))
+  }
+
+  /** Two squares meeting at one corner plus a detached star. */
+  private val genTouching: Gen[Geom] = for {
+    (x, y) <- genXY; s <- Gen.choose(1.0, 10.0)
+    far <- starRing(x - 3 * s, y - 3 * s, 0.3 * s, s, ccw = true)
+  } yield {
+    def sq(x0: Double, y0: Double): Array[Seqn] =
+      Array(Seqn.of(x0, y0, x0 + s, y0, x0 + s, y0 + s, x0, y0 + s, x0, y0))
+    GMPoly(Array(sq(x, y), sq(x + s, y + s), Array(far)), CT.XY)
+  }
+
+  /** Self-crossing quadrilateral, optionally with extra wiggle. */
+  private val genBowtie: Gen[Geom] = for {
+    (x, y) <- genXY; w <- Gen.choose(1.0, 20.0); h <- Gen.choose(1.0, 20.0)
+    wiggle <- Gen.oneOf(true, false)
+  } yield {
+    val mid = if (wiggle) Seq(x + w / 2, y + h * 1.5) else Seq.empty
+    GPoly(Array(Seqn.of(Seq(x, y, x + w, y + h) ++ mid ++ Seq(x + w, y, x, y + h, x, y): _*)), CT.XY)
+  }
+
+  private val genBufferInput: Gen[Geom] = Gen.oneOf(genStar, genHoledStar, genWalk,
+    genXY.map { case (x, y) => GPoint.xy(x, y) }, genTouching, genBowtie)
+
+  private def bufferRadius(g: Geom): Double = {
+    val e = g.envelope
+    math.max(e.width, e.height) * 0.08 + 0.05
+  }
+
+  private val bufferStyles = Seq("", "endcap=flat join=mitre", "endcap=square join=mitre",
+    "join=bevel", "mitre_limit=1", "quad_segs=2", "side=left", "side=right")
+
+  test("buffer: every style gives a valid result that covers, or erodes within, a valid areal input") {
+    check("buffer", Prop.forAll(genBufferInput) { g =>
+      val r = bufferRadius(g)
+      val arealValid = g.dimension == 2 && Validate.isValid(g)
+      val bad = for {
+        params <- bufferStyles
+        st = BufferOp.parseStyle(params)._1
+        d <- Seq(r, -r / 2)
+        b = BufferOp.buffer(g, d, st)
+        // single-sided buffers of areal inputs are their two-sided buffer
+        grows = d > 0 || st.singleSided
+        if !Validate.isValid(b) || (arealValid &&
+          !(if (grows) Relate.covers(b, g) else b.isEmpty || Relate.coveredBy(b, g)))
+      } yield s"'$params' d=$d: ${Wkt.write(b)}"
+      bad.isEmpty :| s"${Wkt.write(g)}: ${bad.mkString("; ")}"
+    }, n = 120)
+  }
+
+  test("buffer: side=left of an areal input is its two-sided buffer, byte for byte") {
+    check("side", Prop.forAll(Gen.oneOf(genStar, genHoledStar, genTouching, genBowtie)) { g =>
+      val r = bufferRadius(g)
+      Seq("", "endcap=flat join=mitre", "join=bevel").forall { params =>
+        val two = BufferOp.buffer(g, r, BufferOp.parseStyle(params)._1)
+        val left = BufferOp.buffer(g, r, BufferOp.parseStyle(params + " side=left")._1)
+        java.util.Arrays.equals(Wkb.write(left), Wkb.write(two))
+      } :| Wkt.write(g)
+    }, n = 100)
+  }
 }

@@ -7,8 +7,9 @@ import graft.functions.SparkTestSession
 
 /** BPE merge training (q158): the distributed trainer must reproduce a
   * scalar reference implementation exactly — same merges, same order,
-  * same counts — and the two-pass anchored replace must equal greedy
-  * left-to-right merging on hostile symbol runs.
+  * same counts — and one literal replace on the delimited symbol
+  * string must equal greedy left-to-right merging on hostile symbol
+  * runs.
   */
 class BpeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -42,23 +43,21 @@ class BpeSpec extends AnyFunSuite {
     assert(out.isEmpty)
   }
 
-  test("two-pass anchored replace equals greedy merge on hostile runs") {
+  test("one delimited replace equals greedy merge on hostile runs") {
     // runs with shared anchors, odd/even counts, multi-char symbols
     val cases = Seq(
       List("a", "b", "a", "b"),
       List("a", "b", "a", "b", "a", "b"),
       List("a", "b", "a", "b", "a", "b", "a", "b"),
       List("a", "a", "a"),
+      List.fill(5)("a"), List.fill(6)("a"), List.fill(7)("a"),
       List("b", "a", "b"),
       List("xa", "b", "a", "b"),
       List("a", "b"), List("a"), Nil)
     for (syms <- cases; (pa, pb) <- Seq(("a", "b"), ("a", "a"))) {
-      val s = "|" + syms.mkString("|") + "|"
-      val pat = s"|$pa|$pb|"
-      val rep = s"|$pa$pb|"
-      val twoPass = s.replace(pat, rep).replace(pat, rep)
-      val want = "|" + Bpe.mergeOnce(syms, pa, pb).mkString("|") + "|"
-      assert(twoPass === want, s"syms=$syms pair=($pa,$pb)")
+      val merged = Bpe.symString(syms)
+        .replace(Bpe.symString(Seq(pa, pb)), Bpe.symString(Seq(pa + pb)))
+      assert(merged === Bpe.symString(Bpe.mergeOnce(syms, pa, pb)), s"syms=$syms pair=($pa,$pb)")
     }
   }
 
