@@ -7,7 +7,8 @@ import graft.core._
   * buffer blowup), after a small-n rung at web-geometry sizes: buffer,
   * relate, isValid and intersection of concave star polygons at
   * n = 2^2..2^8, in microseconds per call; buffer also with
-  * "endcap=flat join=mitre" and "join=bevel".
+  * "endcap=flat join=mitre" and "join=bevel", and relate also against
+  * [[relateGC]].
   * Usage: runMain graft.KernelScale [small]  ("small": the rung only)
   */
 object KernelScale {
@@ -37,6 +38,13 @@ object KernelScale {
     coords(2 * n) = coords(0); coords(2 * n + 1) = coords(1)
     GPoly(Array(new Seqn(coords, CT.XY)), CT.XY)
   }
+  /** A notched polygon, a line across it and a point in the notch, which
+    * sits at the star's centre: the shape of the engine benchmark's
+    * constant relate argument, scaled to the star.
+    */
+  val relateGC: Geom = Wkt.parse("GEOMETRYCOLLECTION(" +
+    "POLYGON((-0.75 -0.5,0.75 -0.5,0.75 0.5,0 0,-0.75 0.5,-0.75 -0.5))," +
+    "LINESTRING(-1.75 1,1.75 -0.75),POINT(0 0.25))")
   // zigzag line with n vertices
   def zig(n: Int): Geom = {
     val c = new Array[Double](2 * n)
@@ -78,6 +86,7 @@ object KernelScale {
       timeUs(s"buffer flat-mitre n=$n", out)(BufferOp.buffer(p, 0.1, flatMitre))
       timeUs(s"buffer bevel n=$n", out)(BufferOp.buffer(p, 0.1, bevel))
       timeUs(s"relate n=$n", out)(Relate.relate(p, p2))
+      timeUs(s"relate vs GC n=$n", out)(Relate.relate(p, relateGC))
       timeUs(s"isValid n=$n", out)(Validate.isValid(p))
       timeUs(s"intersection n=$n", out)(Overlay.intersection(p, p2))
     }

@@ -102,13 +102,15 @@ object Alg {
 
   // --- segment predicates ---------------------------------------------
 
-  /** Is point (px,py) on the closed segment (ax,ay)-(bx,by)? */
+  /** Is point (px,py) on the closed segment (ax,ay)-(bx,by)? The box
+    * test comes first: it rejects most segments of a ray cast without
+    * an orientation.
+    */
   def onSegment(ax: Double, ay: Double, bx: Double, by: Double,
-                px: Double, py: Double): Boolean = {
-    if (orient(ax, ay, bx, by, px, py) != 0) return false
+                px: Double, py: Double): Boolean =
     px >= math.min(ax, bx) && px <= math.max(ax, bx) &&
-      py >= math.min(ay, by) && py <= math.max(ay, by)
-  }
+      py >= math.min(ay, by) && py <= math.max(ay, by) &&
+      orient(ax, ay, bx, by, px, py) == 0
 
   /** Do closed segments AB and CD share at least one point?
     * (reference semantics: geom/line.go:95-148).
@@ -145,6 +147,47 @@ object Alg {
     val denom = rx * sy - ry * sx
     val t = ((cx - ax) * sy - (cy - ay) * sx) / denom
     (ax + t * rx, ay + t * ry)
+  }
+
+  /** Crossing point of segments AB and CD computed in double-double
+    * arithmetic, each ordinate rounded once to the nearest double: the
+    * same point whichever segment comes first, and one point for every
+    * segment of one line that CD or AB crosses there.
+    */
+  def crossingPointExact(ax: Double, ay: Double, bx: Double, by: Double,
+                         cx: Double, cy: Double, dx: Double, dy: Double): (Double, Double) = {
+    val rx = new Array[Double](2); val ry = new Array[Double](2)
+    val sx = new Array[Double](2); val sy = new Array[Double](2)
+    val qx = new Array[Double](2); val qy = new Array[Double](2)
+    ddDiff(bx, ax, rx); ddDiff(by, ay, ry)
+    ddDiff(dx, cx, sx); ddDiff(dy, cy, sy)
+    ddDiff(cx, ax, qx); ddDiff(cy, ay, qy)
+    val num = cross(qx, qy, sx, sy)
+    val den = cross(rx, ry, sx, sy)
+    // t = num / den: a quotient, then a correction from its remainder
+    val q1 = num(0) / den(0)
+    val p = new Array[Double](2); val rem = new Array[Double](2)
+    ddMul(q1, 0.0, den(0), den(1), p)
+    ddSub(num(0), num(1), p(0), p(1), rem)
+    val q2 = rem(0) / den(0)
+    val t0 = twoSumHi(q1, q2); val t1 = twoSumLo(q1, q2, t0)
+    def along(a: Double, r: Array[Double]): Double = {
+      ddMul(t0, t1, r(0), r(1), p)
+      val s = twoSumHi(a, p(0))
+      s + (twoSumLo(a, p(0), s) + p(1))
+    }
+    (along(ax, rx), along(ay, ry))
+  }
+
+  /** dd cross product (ux, uy) x (vx, vy). */
+  private def cross(ux: Array[Double], uy: Array[Double],
+                    vx: Array[Double], vy: Array[Double]): Array[Double] = {
+    val m1 = new Array[Double](2); val m2 = new Array[Double](2)
+    ddMul(ux(0), ux(1), vy(0), vy(1), m1)
+    ddMul(uy(0), uy(1), vx(0), vx(1), m2)
+    val out = new Array[Double](2)
+    ddSub(m1(0), m1(1), m2(0), m2(1), out)
+    out
   }
 
   // --- point in ring / polygon ----------------------------------------

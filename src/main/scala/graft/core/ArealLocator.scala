@@ -20,7 +20,7 @@ final class ArealLocator private (
     env: Env,
     ex1: Array[Double], ey1: Array[Double],
     ex2: Array[Double], ey2: Array[Double],
-    epoly: Array[Int], npolys: Int,
+    negMaxX: Array[Double], epoly: Array[Int], npolys: Int,
     y0: Double, invW: Double, nb: Int,
     bucketStart: Array[Int], bucketEdges: Array[Int]) {
 
@@ -35,7 +35,7 @@ final class ArealLocator private (
     val par: Array[Boolean] = if (npolys > 64) new Array[Boolean](npolys) else null
     var k = bucketStart(b)
     val end = bucketStart(b + 1)
-    while (k < end) {
+    while (k < end && -negMaxX(bucketEdges(k)) >= px) {
       val e = bucketEdges(k)
       val x1 = ex1(e); val y1 = ey1(e); val x2 = ex2(e); val y2 = ey2(e)
       if (Alg.onSegment(x1, y1, x2, y2, px, py)) return 0
@@ -154,7 +154,16 @@ object ArealLocator {
       while (bb <= b2) { bucketEdges(fill(bb)) = e; fill(bb) += 1; bb += 1 }
       e += 1
     }
-    new ArealLocator(env, ex1, ey1, ex2, ey2, epoly, poly,
+    // each bucket by decreasing max x: locate stops at the first edge
+    // that lies left of the point, which can neither hold it nor cross
+    // its rightward ray
+    val negMaxX = new Array[Double](w)
+    e = 0
+    while (e < w) { negMaxX(e) = -math.max(ex1(e), ex2(e)); e += 1 }
+    val tmp = new Array[Int](bucketEdges.length)
+    b = 0
+    while (b < nb) { RTree.sortIdsByKey(bucketEdges, bucketStart(b), bucketStart(b + 1), negMaxX, tmp); b += 1 }
+    new ArealLocator(env, ex1, ey1, ex2, ey2, negMaxX, epoly, poly,
       y0, invW, nb, bucketStart, bucketEdges)
   }
 }

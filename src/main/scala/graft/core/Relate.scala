@@ -10,19 +10,24 @@ import scala.collection.mutable
   * row-major as 9 chars over {F,0,1,2}, and named predicates defined as
   * pattern matches over that matrix.
   *
-  * The computation strategy is original: boundaries are noded against
-  * each other, and each resulting piece's midpoint is classified
-  * against the other geometry (inside / on-boundary / outside); for
-  * pieces lying ON the other boundary, local interior sides are
-  * compared. The line boundary uses the mod-2 rule
-  * (reference: geom/type_multi_line_string.go:221-258).
+  * One computation serves every pair of inputs, after the reference's
+  * port of JTS RelateNG
+  * (internal/jtsport/jts/operation_relateng_relate_ng.go): each input is
+  * split into its points, lines and polygons, and the line and ring
+  * segments of both are noded together once by the shared [[Noder]],
+  * exactly (no snapping, so no metric tolerance enters a matrix). Each
+  * noded edge is labelled Interior, Boundary or Exterior in each input,
+  * and so is the face on each side of it and each node; an input point
+  * that is no node is located directly. Entry (a, b) is the largest
+  * dimension among the nodes (0), edges (1) and edge sides (2) labelled
+  * (a, b). Every bounded face has an edge, so no faces are built.
   *
-  * Supported inputs: homogeneous-dimension geometries (puntal,
-  * lineal, areal, incl. Multi* and homogeneous collections) AND mixed
-  * GeometryCollections — the latter via relateMixedGC (dispatched
-  * below), which applies the union-of-members semantics; oracled end
-  * to end by q62. (This header previously claimed mixed GCs throw —
-  * stale since the r3 relateMixedGC landing.)
+  * A collection has union semantics with interior dominance: a point
+  * in the interior of any of its lines or polygons is Interior, so an
+  * edge shared by two rings with opposite interior sides, or lying
+  * inside another of its polygons, is Interior; line ends follow the
+  * mod-2 rule (reference: geom/type_multi_line_string.go:221-258); a
+  * point on a line or polygon of its own collection adds nothing.
   */
 object Relate {
 
@@ -59,13 +64,111 @@ object Relate {
 
   // ---------------------------------------------------------- decompose
 
-  /** Homogeneous decomposition of a geometry. */
-  private final case class Parts(
-      pts: Array[Double],       // xy pairs of non-empty points
-      lines: Array[Seqn],       // non-empty linestrings
-      polys: Array[GPoly],      // non-empty polygons
-      dim: Int) {               // -1 empty, 0 puntal, 1 lineal, 2 areal
+  /** Ring edges from which a polygon set is located through an
+    * [[ArealLocator]] rather than a plain ray cast.
+    */
+  private final val IndexCutoff = 64
+
+  /** One input split into its points, lines and polygons. `side` is 0
+    * for the first input and 1 for the second; it picks the noder tag
+    * bits of the input's segments.
+    */
+  private final class Parts(val pts: Array[Double], // xy pairs of non-empty points
+                            val lines: Array[Seqn],  // non-empty linestrings
+                            val polys: Array[GPoly], // non-empty polygons
+                            side: Int) {
+    /** -1 empty, else the largest element dimension. */
+    val dim: Int = if (polys.nonEmpty) 2 else if (lines.nonEmpty) 1 else if (pts.nonEmpty) 0 else -1
     def isEmpty: Boolean = dim == -1
+    def mixed: Boolean =
+      (if (pts.nonEmpty) 1 else 0) + (if (lines.nonEmpty) 1 else 0) + (if (polys.nonEmpty) 1 else 0) > 1
+
+    val src: Int = if (side == 0) Noder.SrcA else Noder.SrcB
+    val lineBit: Int = 4 << (3 * side)
+    /** A ring segment with its polygon's interior on its left / right. */
+    val leftBit: Int = 8 << (3 * side)
+    val rightBit: Int = 16 << (3 * side)
+
+    // ArealLocator from IndexCutoff ring edges up (one location per
+    // edge midpoint would make relate O(edges x ring edges)), a plain
+    // ray cast below it
+    private lazy val index: ArealLocator =
+      if (polys.iterator.map(p => ArealLocator.edgeCount(p)).sum >= IndexCutoff)
+        ArealLocator.build(GColl(polys.toArray[Geom], CT.XY))
+      else null
+
+    /** Location in the union of the polygons: 1 interior, 0 boundary,
+      * -1 exterior.
+      */
+    def locateAreal(x: Double, y: Double): Int = {
+      if (index != null) return index.locate(x, y)
+      var best = -1
+      var i = 0
+      while (i < polys.length && best != 1) {
+        val l = Alg.pointInPolygon(polys(i), x, y)
+        if (l > best) best = l
+        i += 1
+      }
+      best
+    }
+
+    // noder segment ids of the polygons' rings: polygon k's are
+    // polySegEnd(k - 1) (polyStart for k = 0) until polySegEnd(k)
+    var polyStart = 0
+    val polySegEnd = new Array[Int](polys.length)
+    private lazy val polyIndex: Array[ArealLocator] = polys.map(p =>
+      if (ArealLocator.edgeCount(p) >= IndexCutoff) ArealLocator.build(p) else null)
+
+    private def locatePoly(k: Int, x: Double, y: Double): Int =
+      if (polyIndex(k) == null) Alg.pointInPolygon(polys(k), x, y) else polyIndex(k).locate(x, y)
+
+    /** Whether (x, y), the midpoint of noded edge e of one of these
+      * rings, lies inside a polygon that e does not bound. Those it
+      * bounds are skipped, not located: a rounded crossing point can
+      * put the midpoint a hair inside them.
+      */
+    def insideOther(noder: Noder, e: Int, x: Double, y: Double): Boolean = {
+      var k = 0
+      while (k < polys.length) {
+        if (polys(k).envelope.containsPt(x, y) && !bounds(noder, e, k) && locatePoly(k, x, y) == 1)
+          return true
+        k += 1
+      }
+      false
+    }
+
+    private def bounds(noder: Noder, e: Int, k: Int): Boolean = {
+      val lo = if (k == 0) polyStart else polySegEnd(k - 1)
+      var l = noder.firstSource(e)
+      while (l >= 0) {
+        val seg = noder.sourceSegment(l)
+        if (seg >= lo && seg < polySegEnd(k)) return true
+        l = noder.nextSource(l)
+      }
+      false
+    }
+
+    /** Location of a point that is no node: it lies on no line end and
+      * no vertex, so a line through it holds it in its interior.
+      */
+    def locatePoint(x: Double, y: Double, isPoint: Boolean): Int = {
+      val a = if (polys.isEmpty) -1 else locateAreal(x, y)
+      if (a == 1 || onLine(x, y)) LocI
+      else if (a == 0) LocB
+      else if (isPoint) LocI
+      else LocE
+    }
+
+    private def onLine(x: Double, y: Double): Boolean = {
+      for (s <- lines) {
+        var i = 0
+        while (i < s.n - 1) {
+          if (Alg.onSegment(s.x(i), s.y(i), s.x(i + 1), s.y(i + 1), x, y)) return true
+          i += 1
+        }
+      }
+      false
+    }
   }
 
   /** A non-empty line every vertex of which is the same point: its
@@ -83,7 +186,7 @@ object Relate {
     true
   }
 
-  private def decompose(g: Geom): Parts = {
+  private def decompose(g: Geom, side: Int): Parts = {
     val pts = new mutable.ArrayBuilder.ofDouble
     val lines = mutable.ArrayBuffer.empty[Seqn]
     val polys = mutable.ArrayBuffer.empty[GPoly]
@@ -98,15 +201,7 @@ object Relate {
       case GColl(gs, _) => gs.foreach(walk)
     }
     walk(g)
-    val p = pts.result()
-    val dims = mutable.Set.empty[Int]
-    if (p.nonEmpty) dims += 0
-    if (lines.nonEmpty) dims += 1
-    if (polys.nonEmpty) dims += 2
-    if (dims.size > 1)
-      throw new UnsupportedOperationException(
-        "relate over mixed-dimension GeometryCollection is not supported")
-    Parts(p, lines.toArray, polys.toArray, if (dims.isEmpty) -1 else dims.head)
+    new Parts(pts.result(), lines.toArray, polys.toArray, side)
   }
 
   /** Odd-degree endpoints of the lineal component (mod-2 rule). */
@@ -125,499 +220,13 @@ object Relate {
     out
   }
 
-  // ------------------------------------------------------------ pieces
-
-  /** A noded sub-segment of a boundary/line. `onOther` is COMBINATORIAL
-    * incidence from the noder: true iff this sub-interval lies inside a
-    * robust-exact collinear overlap with a cutter segment. Distance
-    * thresholds cannot make this call — a genuinely-thin sliver
-    * (TestRelateAA-big's 1e15-wide polygon, interior thinner than any
-    * eps) and a rounded-but-conceptually-on piece are metrically
-    * indistinguishable; only the noder knows which one it built.
-    */
-  private final case class Piece(
-      x1: Double, y1: Double, x2: Double, y2: Double,
-      interiorLeft: Boolean, // for ring pieces: polygon interior left of 1->2?
-      onOther: Boolean = false) {
-    def mx: Double = (x1 + x2) / 2
-    def my: Double = (y1 + y2) / 2
-  }
-
-  private final case class Seg(x1: Double, y1: Double, x2: Double, y2: Double)
-
-  private def lineSegs(lines: Array[Seqn]): Array[Seg] = {
-    val out = mutable.ArrayBuffer.empty[Seg]
-    for (s <- lines) {
-      var i = 0
-      while (i < s.n - 1) {
-        if (s.x(i) != s.x(i + 1) || s.y(i) != s.y(i + 1))
-          out += Seg(s.x(i), s.y(i), s.x(i + 1), s.y(i + 1))
-        i += 1
-      }
-    }
-    out.toArray
-  }
-
-  private def ringSegsWithSide(polys: Array[GPoly]): Array[(Seg, Boolean)] = {
-    val out = mutable.ArrayBuffer.empty[(Seg, Boolean)]
-    for (p <- polys; k <- p.rings.indices) {
-      val r = p.rings(k)
-      val ccw = Alg.ringIsCCW(r)
-      val interiorLeft = (k == 0) == ccw
-      var i = 0
-      while (i < r.n - 1) {
-        if (r.x(i) != r.x(i + 1) || r.y(i) != r.y(i + 1))
-          out += ((Seg(r.x(i), r.y(i), r.x(i + 1), r.y(i + 1)), interiorLeft))
-        i += 1
-      }
-    }
-    out.toArray
-  }
-
-  /** Node source segments against cutter segments; returns pieces and
-    * accumulates contact points (where source touches a cutter).
-    */
-  private def nodePieces(src: Array[(Seg, Boolean)], cutters: Array[Seg],
-                         contacts: mutable.HashSet[(Double, Double)]): Array[Piece] = {
-    val out = mutable.ArrayBuffer.empty[Piece]
-    // simple envelope grid prefilter via RTree when cutter count is large
-    val tree =
-      if (cutters.length > 16)
-        RTree.bulkLoad(cutters.map(s => Env(
-          math.min(s.x1, s.x2), math.min(s.y1, s.y2),
-          math.max(s.x1, s.x2), math.max(s.y1, s.y2))))
-      else null
-    for ((a, interiorLeft) <- src) {
-      val ts = mutable.ArrayBuffer[Double](0.0, 1.0)
-      val overlaps = mutable.ArrayBuffer.empty[(Double, Double)]
-      val ax = a.x2 - a.x1; val ay = a.y2 - a.y1
-      val alen2 = ax * ax + ay * ay
-      def tOf(px: Double, py: Double): Double =
-        ((px - a.x1) * ax + (py - a.y1) * ay) / alen2
-      def handleCutter(b: Seg): Unit = {
-        if (Alg.segmentsIntersect(a.x1, a.y1, a.x2, a.y2, b.x1, b.y1, b.x2, b.y2)) {
-          val collinear =
-            Alg.orient(a.x1, a.y1, a.x2, a.y2, b.x1, b.y1) == 0 &&
-              Alg.orient(a.x1, a.y1, a.x2, a.y2, b.x2, b.y2) == 0
-          if (collinear) {
-            val t1 = tOf(b.x1, b.y1); val t2 = tOf(b.x2, b.y2)
-            for (t <- Seq(t1, t2) if t > 0 && t < 1) ts += t
-            for ((t, px, py) <- Seq((t1, b.x1, b.y1), (t2, b.x2, b.y2)))
-              if (t >= 0 && t <= 1) contacts += ((px, py))
-            val lo = math.max(0.0, math.min(t1, t2))
-            val hi = math.min(1.0, math.max(t1, t2))
-            if (hi > lo) overlaps += ((lo, hi))
-          } else if (Alg.segmentsCross(a.x1, a.y1, a.x2, a.y2, b.x1, b.y1, b.x2, b.y2)) {
-            val (px, py) = Alg.crossingPoint(a.x1, a.y1, a.x2, a.y2, b.x1, b.y1, b.x2, b.y2)
-            val t = tOf(px, py)
-            if (t > 0 && t < 1) ts += t
-            contacts += ((px, py))
-          } else {
-            // endpoint touch: one of the four endpoints lies on the other seg
-            if (Alg.onSegment(a.x1, a.y1, a.x2, a.y2, b.x1, b.y1)) {
-              val t = tOf(b.x1, b.y1); if (t > 0 && t < 1) ts += t
-              contacts += ((b.x1, b.y1))
-            }
-            if (Alg.onSegment(a.x1, a.y1, a.x2, a.y2, b.x2, b.y2)) {
-              val t = tOf(b.x2, b.y2); if (t > 0 && t < 1) ts += t
-              contacts += ((b.x2, b.y2))
-            }
-            if (Alg.onSegment(b.x1, b.y1, b.x2, b.y2, a.x1, a.y1)) contacts += ((a.x1, a.y1))
-            if (Alg.onSegment(b.x1, b.y1, b.x2, b.y2, a.x2, a.y2)) contacts += ((a.x2, a.y2))
-          }
-        }
-      }
-      if (tree != null) {
-        val e = Env(math.min(a.x1, a.x2), math.min(a.y1, a.y2),
-          math.max(a.x1, a.x2), math.max(a.y1, a.y2))
-        tree.rangeSearch(e) { i => handleCutter(cutters(i)); true }
-      } else {
-        var i = 0
-        while (i < cutters.length) { handleCutter(cutters(i)); i += 1 }
-      }
-      val sorted = ts.distinct.sorted
-      var i = 0
-      while (i < sorted.length - 1) {
-        val t1 = sorted(i); val t2 = sorted(i + 1)
-        val x1 = a.x1 + t1 * ax; val y1 = a.y1 + t1 * ay
-        val x2 = a.x1 + t2 * ax; val y2 = a.y1 + t2 * ay
-        // pieces never straddle an overlap endpoint (those t's are
-        // split points), so the midpoint decides containment exactly
-        val tm = (t1 + t2) / 2
-        val on = overlaps.exists(o => tm >= o._1 && tm <= o._2)
-        if (x1 != x2 || y1 != y2) out += Piece(x1, y1, x2, y2, interiorLeft, on)
-        i += 1
-      }
-    }
-    out.toArray
-  }
-
-  private def onAnySeg(segs: Array[Seg], px: Double, py: Double): Boolean = {
-    var i = 0
-    while (i < segs.length) {
-      val s = segs(i)
-      if (Alg.onSegment(s.x1, s.y1, s.x2, s.y2, px, py)) return true
-      i += 1
-    }
-    false
-  }
-
-  /** Tolerant variant for midpoints of FLOATING-NODED pieces: a piece
-    * endpoint produced by crossingPoint carries ~ulp-scale error, so
-    * its midpoint can sit epsilon off the underlying segment. eps is
-    * relative to coordinate magnitude.
-    */
-  private def nearAnySeg(segs: Array[Seg], px: Double, py: Double): Boolean = {
-    val eps = 1e-9 * math.max(1.0, math.max(math.abs(px), math.abs(py)))
-    var i = 0
-    while (i < segs.length) {
-      val s = segs(i)
-      if (Alg.distPointSeg(px, py, s.x1, s.y1, s.x2, s.y2) <= eps) return true
-      i += 1
-    }
-    false
-  }
-
-  /** Interior side of areal geometry at a boundary point (mx,my) wrt
-    * direction (dx,dy): +1 left, -1 right, 0 not found / ambiguous.
-    * Indexed above a size cutoff: relateAA calls this once per
-    * ON-boundary piece, and shared-boundary-heavy pairs (e.g. equal
-    * polygons) have O(n) such pieces — a linear scan each made that
-    * case quadratic.
-    */
-  private final class SideIndex(ringSegs: Array[(Seg, Boolean)]) {
-    private val tree =
-      if (ringSegs.length < 32) null
-      else RTree.bulkLoad(ringSegs.map { case (s, _) =>
-        Env(math.min(s.x1, s.x2), math.min(s.y1, s.y2),
-          math.max(s.x1, s.x2), math.max(s.y1, s.y2))
-      })
-    def sideAt(mx: Double, my: Double, dx: Double, dy: Double): Int = {
-      if (tree == null) return interiorSideAt(ringSegs, mx, my, dx, dy)
-      val eps = 1e-9 * math.max(1.0, math.max(math.abs(mx), math.abs(my)))
-      // several segments can lie within eps of the probe (shared
-      // corners, near-degenerate rings); the R-tree visit order is
-      // layout-dependent, so take the MINIMUM segment index among the
-      // parallel candidates — the same segment the <32-segment linear
-      // scan (interiorSideAt, ring order) would pick, keeping relateAA
-      // results independent of geometry size on degenerate inputs
-      var res = 0
-      var bestIdx = Int.MaxValue
-      tree.rangeSearch(Env(mx - eps, my - eps, mx + eps, my + eps)) { i =>
-        if (i < bestIdx) {
-          val (s, interiorLeft) = ringSegs(i)
-          if (Alg.distPointSeg(mx, my, s.x1, s.y1, s.x2, s.y2) <= eps) {
-            val sx = s.x2 - s.x1; val sy = s.y2 - s.y1
-            val cross = sx * dy - sy * dx
-            val dot = sx * dx + sy * dy
-            if (math.abs(cross) <= 1e-9 * math.abs(dot) || cross == 0) {
-              val aligned = dot > 0
-              val left = if (aligned) interiorLeft else !interiorLeft
-              res = if (left) 1 else -1
-              bestIdx = i
-            }
-          }
-        }
-        true
-      }
-      res
-    }
-  }
-
-  private def interiorSideAt(ringSegs: Array[(Seg, Boolean)],
-                             mx: Double, my: Double, dx: Double, dy: Double): Int = {
-    val eps = 1e-9 * math.max(1.0, math.max(math.abs(mx), math.abs(my)))
-    var i = 0
-    while (i < ringSegs.length) {
-      val (s, interiorLeft) = ringSegs(i)
-      if (Alg.distPointSeg(mx, my, s.x1, s.y1, s.x2, s.y2) <= eps) {
-        val sx = s.x2 - s.x1; val sy = s.y2 - s.y1
-        val cross = sx * dy - sy * dx
-        // direction parallelism with relative tolerance
-        val dot = sx * dx + sy * dy
-        if (math.abs(cross) <= 1e-9 * math.abs(dot) || cross == 0) {
-          val aligned = dot > 0
-          val left = if (aligned) interiorLeft else !interiorLeft
-          return if (left) 1 else -1
-        }
-      }
-      i += 1
-    }
-    0
-  }
-
   // --------------------------------------------------------- relate API
 
   def relate(a: Geom, b: Geom): String = {
-    if (dimsOf(a).size > 1 || dimsOf(b).size > 1) return relateMixedGC(a, b)
-    val pa = decompose(a)
-    val pb = decompose(b)
-    if (pa.isEmpty || pb.isEmpty) return relateEmpty(pa, pb)
-    if (pa.dim > pb.dim) return transpose(relateParts(pb, pa))
-    relateParts(pa, pb)
-  }
-
-  // ------------------------------------- mixed-dimension GC (union semantics)
-
-  private def dimsOf(g: Geom): Set[Int] = {
-    val dims = mutable.Set.empty[Int]
-    def walk(x: Geom): Unit = x match {
-      case p: GPoint => if (!p.isEmpty) dims += 0
-      case GLine(s) => if (!s.isEmpty) dims += (if (pointLikeLine(s)) 0 else 1)
-      case GPoly(rs, _) => if (rs.nonEmpty) dims += 2
-      case GMPoint(ps, _) => ps.foreach(walk)
-      case GMLine(ls, _) => ls.foreach(s => walk(GLine(s)))
-      case GMPoly(ps, _) => if (ps.exists(_.nonEmpty)) dims += 2
-      case GColl(gs, _) => gs.foreach(walk)
-    }
-    walk(g)
-    dims.toSet
-  }
-
-  /** Homogeneous per-dimension components of a (normalized) geometry:
-    * (areal, lineal, puntal), each present only if non-empty.
-    */
-  private def sideComponents(g: Geom): (Option[Geom], Option[Geom], Option[Geom]) = {
-    val pts = mutable.ArrayBuffer.empty[GPoint]
-    val lines = mutable.ArrayBuffer.empty[Seqn]
-    val polys = mutable.ArrayBuffer.empty[Array[Seqn]]
-    def walk(x: Geom): Unit = x match {
-      case p: GPoint => if (!p.isEmpty) pts += p
-      case GLine(s) if pointLikeLine(s) => pts += GPoint.xy(s.x(0), s.y(0))
-      case GLine(s) => if (!s.isEmpty) lines += s
-      case GMPoint(ps, _) => ps.foreach(walk)
-      case GPoly(rs, _) => if (rs.nonEmpty) polys += rs
-      case GMLine(ls, _) => ls.filter(!_.isEmpty).foreach(s => walk(GLine(s)))
-      case GMPoly(ps, _) => ps.filter(_.nonEmpty).foreach(polys += _)
-      case GColl(gs, _) => gs.foreach(walk)
-    }
-    walk(g)
-    val areal: Option[Geom] =
-      if (polys.isEmpty) None
-      else if (polys.length == 1) Some(GPoly(polys.head, CT.XY))
-      else Some(GMPoly(polys.toArray, CT.XY))
-    val lineal: Option[Geom] =
-      if (lines.isEmpty) None
-      else if (lines.length == 1) Some(GLine(lines.head))
-      else Some(GMLine(lines.toArray, CT.XY))
-    val puntal: Option[Geom] =
-      if (pts.isEmpty) None
-      else if (pts.length == 1) Some(pts.head)
-      else Some(GMPoint(pts.toArray, CT.XY))
-    (areal, lineal, puntal)
-  }
-
-  private def rankOf(c: Char): Int = c match {
-    case 'F' => 0; case '0' => 1; case '1' => 2; case _ => 3
-  }
-  private def cmax(x: Char, y: Char): Char = if (rankOf(x) >= rankOf(y)) x else y
-
-  /** Is point p in the closure of the (areal, lineal, puntal) side? */
-  private def inClosure(px: Double, py: Double,
-                        s: (Option[Geom], Option[Geom], Option[Geom])): Boolean =
-    s._1.exists(ar => Alg.pointInAreal(ar, px, py) >= 0) ||
-      s._2.exists(l => Intersects.intersects(GPoint.xy(px, py), l)) ||
-      s._3.exists(p => Intersects.intersects(GPoint.xy(px, py), p))
-
-  /** dim char of (point set of areal x) \ closure(side). */
-  private def uncoveredArealDim(x: Geom,
-                                s: (Option[Geom], Option[Geom], Option[Geom])): Char =
-    s._1 match {
-      case Some(ar) if covers(ar, x) => 'F'
-      case _ => '2'
-    }
-
-  /** dim char of (point set of lineal x) \ closure(side) — finite
-    * leftover points don't count (they're dimension 0 against a
-    * 1-dim feature only via explicit puntal features, handled
-    * separately).
-    */
-  private def uncoveredLinealDim(x: Geom,
-                                 s: (Option[Geom], Option[Geom], Option[Geom])): Char = {
-    var res = x
-    s._1.foreach(ar => res = SetOps.difference(res, ar))
-    if (res.isEmpty || res.dimension < 1) return 'F'
-    s._2.foreach(l => res = SetOps.difference(res, l))
-    if (res.isEmpty || res.dimension < 1) 'F' else '1'
-  }
-
-  private def uncoveredPuntalDim(x: Geom,
-                                 s: (Option[Geom], Option[Geom], Option[Geom])): Char = {
-    val anyUncovered = Geom.dump(x).exists {
-      case p: GPoint if !p.isEmpty => !inClosure(p.x, p.y, s)
-      case _ => false
-    }
-    if (anyUncovered) '0' else 'F'
-  }
-
-  /** DE-9IM for inputs where at least one side is a mixed-dimension
-    * GeometryCollection, using UNION SEMANTICS like the reference's
-    * RelateNG (internal/jtsport/jts/operation_relateng_relate_ng.go:16-20):
-    * each side is first normalized through unaryUnion into disjoint
-    * areal/lineal/puntal components (this also resolves overlapping
-    * polygons and collinear overlaps inside one collection), then
-    *  - the Interior/Boundary 2x2 block is the entrywise max over the
-    *    pairwise homogeneous matrices (interiors and boundaries of the
-    *    normalized components are pairwise disjoint), and
-    *  - the Exterior row/column are resolved by explicit coverage tests
-    *    of each component's features against the WHOLE other side
-    *    (exterior is an intersection across components, so it cannot be
-    *    combined entrywise).
-    * Interior dominance (RelateNG): a point that lies in the interior
-    * of ANY component of a side is Interior of that side — in
-    * particular a node where a lineal component tangentially touches
-    * its own collection's areal boundary at a non-endpoint. The
-    * entrywise max over pairwise matrices can surface such a node as a
-    * spurious dim-0 Boundary intersection (the areal component's
-    * boundary still passes through it); a witness-based post-pass
-    * recomputes the affected 0-dimensional Boundary entries with
-    * dominance-aware point location (round 2 documented this as the
-    * engine's one knowing divergence; round 3 removed it).
-    */
-  private def relateMixedGC(a: Geom, b: Geom): String = {
-    val na = if (dimsOf(a).size > 1) SetOps.unionMany(Seq(a)) else a
-    val nb = if (dimsOf(b).size > 1) SetOps.unionMany(Seq(b)) else b
-    if (dimsOf(na).size <= 1 && dimsOf(nb).size <= 1) return relate(na, nb)
-
-    val sa = sideComponents(na)
-    val sb = sideComponents(nb)
-    val cas = Seq(sa._1, sa._2, sa._3).flatten
-    val cbs = Seq(sb._1, sb._2, sb._3).flatten
-    val m = Array.fill(9)('F')
-    m(EE) = '2'
-
-    // Int/Bnd block: union of disjoint interiors/boundaries -> max
-    for (ca <- cas; cb <- cbs) {
-      val im = relate(ca, cb)
-      var i = 0
-      while (i < 2) {
-        var j = 0
-        while (j < 2) { m(i * 3 + j) = cmax(m(i * 3 + j), im(i * 3 + j)); j += 1 }
-        i += 1
-      }
-    }
-
-    // Exterior column: rows = U's interior/boundary features not
-    // covered by closure(B)
-    def extColumn(s: (Option[Geom], Option[Geom], Option[Geom]),
-                  other: (Option[Geom], Option[Geom], Option[Geom]),
-                  mm: Array[Char], rowI: Int, rowB: Int): Unit = {
-      s._1.foreach { ar =>
-        mm(rowI) = cmax(mm(rowI), uncoveredArealDim(ar, other))
-        mm(rowB) = cmax(mm(rowB), uncoveredLinealDim(Geom.boundary(ar), other))
-      }
-      s._2.foreach { l =>
-        mm(rowI) = cmax(mm(rowI), uncoveredLinealDim(l, other))
-        val ends = lineBoundary(l match {
-          case GLine(sq) => Array(sq)
-          case GMLine(ls, _) => ls
-          case _ => Array.empty[Seqn]
-        })
-        if (ends.exists { case (px, py) => !inClosure(px, py, other) })
-          mm(rowB) = cmax(mm(rowB), '0')
-      }
-      s._3.foreach { p =>
-        mm(rowI) = cmax(mm(rowI), uncoveredPuntalDim(p, other))
-      }
-    }
-    // interior-dominance correction: 0-dim Boundary-block entries whose
-    // only witnesses are dominated nodes (in the interior of a sibling
-    // lineal component) must not count as Boundary
-    val dA = dominatedNodes(sa)
-    val dB = dominatedNodes(sb)
-    fixDominatedBoundary(dA, sa, sb, cbs, m, BI, BB)
-    fixDominatedBoundary(dB, sb, sa, cas, m, IB, BB)
-
-    extColumn(sa, sb, m, IE, BE)
-    extColumn(sb, sa, m, EI, EB)
-    new String(m)
-  }
-
-  private def linealSeqs(g: Geom): Array[Seqn] = g match {
-    case GLine(sq)     => Array(sq)
-    case GMLine(ls, _) => ls
-    case _             => Array.empty[Seqn]
-  }
-
-  /** Dominance-aware point location against a normalized side
-    * (RelateNG interior dominance): 'I' when p lies in ANY component's
-    * interior — areal interior, lineal non-boundary (mod-2) point, or
-    * a puntal point — else 'B' when on any component's boundary, else
-    * 'E'.
-    */
-  private def locateDominant(px: Double, py: Double,
-      s: (Option[Geom], Option[Geom], Option[Geom])): Char = {
-    var res = 'E'
-    s._1.foreach { ar =>
-      val loc = Alg.pointInAreal(ar, px, py)
-      if (loc == 1) return 'I'
-      if (loc == 0) res = 'B'
-    }
-    s._2 match {
-      case Some(l) if Intersects.intersects(GPoint.xy(px, py), l) =>
-        if (lineBoundary(linealSeqs(l)).contains((px, py))) res = 'B'
-        else return 'I'
-      case _ => ()
-    }
-    s._3 match {
-      case Some(p) if Intersects.intersects(GPoint.xy(px, py), p) => 'I'
-      case _ => res
-    }
-  }
-
-  /** Nodes of a side where its lineal component tangentially touches
-    * its own areal boundary at a NON-endpoint — interior under
-    * dominance, excluded from the side's boundary.
-    */
-  private def dominatedNodes(
-      s: (Option[Geom], Option[Geom], Option[Geom])): Set[(Double, Double)] =
-    (s._1, s._2) match {
-      case (Some(ar), Some(l)) =>
-        val ends = lineBoundary(linealSeqs(l))
-        Geom.dump(Overlay.intersection(Geom.boundary(ar), l)).collect {
-          case p: GPoint if !p.isEmpty && !ends.contains((p.x, p.y)) => (p.x, p.y)
-        }.toSet
-      case _ => Set.empty
-    }
-
-  /** Recompute the 0-dimensional Boundary entries of `thisSide`'s
-    * boundary row/column from explicit finite witnesses, skipping
-    * dominated nodes. 1-dim entries are untouched (a finite dominated
-    * set cannot change them).
-    */
-  private def fixDominatedBoundary(
-      dThis: Set[(Double, Double)],
-      sThis: (Option[Geom], Option[Geom], Option[Geom]),
-      sOther: (Option[Geom], Option[Geom], Option[Geom]),
-      otherComponents: Seq[Geom],
-      m: Array[Char], biIdx: Int, bbIdx: Int): Unit = {
-    if (dThis.isEmpty) return
-    if (m(biIdx) != '0' && m(bbIdx) != '0') return
-    val cands = mutable.LinkedHashSet.empty[(Double, Double)]
-    sThis._1.foreach { ar =>
-      val bnd = Geom.boundary(ar)
-      for (cb <- otherComponents)
-        Geom.dump(Overlay.intersection(bnd, cb)).foreach {
-          case p: GPoint if !p.isEmpty => cands += ((p.x, p.y))
-          case GLine(sq) if sq.n > 0 =>
-            // endpoints of 1-dim pieces: where this boundary enters /
-            // leaves the other component's closure
-            cands += ((sq.x(0), sq.y(0)))
-            cands += ((sq.x(sq.n - 1), sq.y(sq.n - 1)))
-          case _ => ()
-        }
-    }
-    sThis._2.foreach(l => cands ++= lineBoundary(linealSeqs(l)))
-    var bi = false; var bb = false
-    for (w <- cands if locateDominant(w._1, w._2, sThis) == 'B') {
-      locateDominant(w._1, w._2, sOther) match {
-        case 'I' => bi = true
-        case 'B' => bb = true
-        case _   => ()
-      }
-    }
-    if (m(biIdx) == '0' && !bi) m(biIdx) = 'F'
-    if (m(bbIdx) == '0' && !bb) m(bbIdx) = 'F'
+    val pa = decompose(a, 0)
+    val pb = decompose(b, 1)
+    if ((pa.isEmpty || pb.isEmpty) && !pa.mixed && !pb.mixed) relateEmpty(pa, pb)
+    else relateNoded(pa, pb)
   }
 
   /** Empty-input fast path (reference: geom/alg_relate.go:33-63). */
@@ -645,232 +254,150 @@ object Relate {
     case _ => 'F'
   }
 
-  private def relateParts(pa: Parts, pb: Parts): String = (pa.dim, pb.dim) match {
-    case (0, 0) => relatePP(pa, pb)
-    case (0, 1) => relatePL(pa, pb)
-    case (0, 2) => relatePA(pa, pb)
-    case (1, 1) => relateLL(pa, pb)
-    case (1, 2) => relateLA(pa, pb)
-    case (2, 2) => relateAA(pa, pb)
-    case other => throw new IllegalStateException(s"unexpected dim pair $other")
-  }
+  // ------------------------------------------------------ labelled noding
 
-  private def ptSet(p: Parts): mutable.HashSet[(Double, Double)] = {
-    val s = mutable.HashSet.empty[(Double, Double)]
-    var i = 0
-    while (i < p.pts.length) { s += ((p.pts(i), p.pts(i + 1))); i += 2 }
-    s
-  }
+  // locations: the row (first input) or column (second input) of the
+  // matrix; Unknown for the sides of an edge whose midpoint fell on a
+  // ring it was not noded against (a rounded crossing point)
+  private final val LocI = 0; private final val LocB = 1; private final val LocE = 2
+  private final val Unknown = 3
 
-  private def relatePP(pa: Parts, pb: Parts): String = {
-    val sa = ptSet(pa); val sb = ptSet(pb)
-    val m = Array.fill(9)('F')
-    m(EE) = '2'
-    if (sa.exists(sb.contains)) m(II) = '0'
-    if (sa.exists(p => !sb.contains(p))) m(IE) = '0'
-    if (sb.exists(p => !sa.contains(p))) m(EI) = '0'
-    new String(m)
-  }
+  // what one input tells a node, from its incident edges, its line ends
+  // and its points (the second input's bits sit NodeShift higher)
+  private final val ArealB = 1  // an incident edge is on a polygon boundary
+  private final val ArealI = 2  // a face at an incident edge is polygon interior
+  private final val OnLine = 4  // an incident edge is on a line
+  private final val OddEnd = 8  // an odd number of line ends meet here
+  private final val Point = 16  // an input point is here
+  private final val NodeShift = 8
+  private final val EdgeNode = 1 << 16 // an end of some noded edge
 
-  private def relatePL(pa: Parts, pb: Parts): String = {
-    val sa = ptSet(pa)
-    val segsB = lineSegs(pb.lines)
-    val bndB = lineBoundary(pb.lines)
-    val m = Array.fill(9)('F')
-    m(EE) = '2'
-    m(EI) = '1' // a finite point set can't cover a 1-D interior
-    var anyOff = false
-    for (p <- sa) {
-      if (bndB.contains(p)) m(IB) = '0'
-      else if (onAnySeg(segsB, p._1, p._2)) m(II) = '0'
-      else anyOff = true
-    }
-    if (anyOff) m(IE) = '0'
-    if (bndB.exists(p => !sa.contains(p))) m(EB) = '0'
-    new String(m)
-  }
-
-  /** Locate vs a GPoly set: ArealLocator-backed above a size cutoff
-    * (midpoint classification otherwise made relate O(pieces x edges)),
-    * plain best-of-pointInPolygon loop below it.
+  /** One input's label of the edge with these tags and midpoint,
+    * packed: the edge's location in bits 0-1, the location of the face
+    * left of it in bits 2-3 and right of it in bits 4-5, and the node
+    * bits it gives its ends from bit 6 up.
     */
-  private final class PolyLocator(polys: Array[GPoly]) {
-    private val indexed: ArealLocator = {
-      var edges = 0
-      polys.foreach(p => edges += ArealLocator.edgeCount(p))
-      if (edges >= 64) ArealLocator.build(GColl(polys.toArray[Geom], CT.XY))
-      else null
+  private def edgeLabel(p: Parts, noder: Noder, e: Int, mx: Double, my: Double): Int = {
+    val fwd = noder.fwdTags(e); val rev = noder.revTags(e)
+    val left = (fwd & p.leftBit) != 0 || (rev & p.rightBit) != 0
+    val right = (fwd & p.rightBit) != 0 || (rev & p.leftBit) != 0
+    var loc = LocE; var sl = LocE; var sr = LocE
+    if (left && right) { loc = LocI; sl = LocI; sr = LocI } // between two rings
+    else if (left || right) {
+      if (p.polys.length > 1 && p.insideOther(noder, e, mx, my)) { loc = LocI; sl = LocI; sr = LocI }
+      else { loc = LocB; sl = if (left) LocI else LocE; sr = if (right) LocI else LocE }
+    } else if (p.polys.nonEmpty) p.locateAreal(mx, my) match {
+      case 1 => loc = LocI; sl = LocI; sr = LocI
+      case 0 => loc = LocB; sl = Unknown; sr = Unknown
+      case _ =>
     }
-    def locate(x: Double, y: Double): Int = {
-      if (indexed != null) return indexed.locate(x, y)
-      var best = -1
+    var node = if (sl == LocI || sr == LocI) ArealI else 0
+    if (loc == LocB) node |= ArealB
+    if (((fwd | rev) & p.lineBit) != 0) { loc = LocI; node |= OnLine }
+    loc | sl << 2 | sr << 4 | node << 6
+  }
+
+  /** Location of a node in one input from its node bits: interior of a
+    * polygon or a line dominates, then the boundary of either, then a
+    * lone point.
+    */
+  private def nodeLoc(f: Int): Int =
+    if ((f & (ArealI | ArealB)) == ArealI || (f & (OnLine | OddEnd)) == OnLine) LocI
+    else if ((f & (ArealB | OddEnd)) != 0) LocB
+    else if ((f & Point) != 0) LocI
+    else LocE
+
+  private def addSegments(noder: Noder, p: Parts): Unit = {
+    p.lines.foreach(l => noder.addLine(l, p.src | p.lineBit))
+    p.polyStart = noder.segmentCount
+    for ((poly, i) <- p.polys.zipWithIndex) {
+      for (k <- poly.rings.indices) {
+        val r = poly.rings(k)
+        val interiorLeft = (k == 0) == Alg.ringIsCCW(r)
+        noder.addLine(r, p.src | (if (interiorLeft) p.leftBit else p.rightBit))
+      }
+      p.polySegEnd(i) = noder.segmentCount
+    }
+  }
+
+  private def relateNoded(pa: Parts, pb: Parts): String = {
+    val noder = new Noder(0.0)
+    addSegments(noder, pa)
+    addSegments(noder, pb)
+    noder.node()
+    val edges = noder.edges
+    val dims = Array.fill(9)(-1)
+    dims(EE) = 2
+
+    // The nodes whose label can add an entry: where the inputs meet, line
+    // ends and input points. Any other node lies on one input's linework
+    // only, away from the other's, so an incident edge carries its label.
+    val maxNodes = noder.abNodeCount + (pa.pts.length + pb.pts.length) / 2 +
+      2 * (pa.lines.length + pb.lines.length)
+    val ids = new IdChains(maxNodes)
+    val nodeXY = new Array[Double](2 * maxNodes)
+    val flags = new Array[Int](maxNodes)
+    def nodeIndex(x: Double, y: Double): Int = {
+      var id = ids.first(Noder.pointKey(x, y))
+      while (id >= 0 && !(nodeXY(2 * id) == x && nodeXY(2 * id + 1) == y)) id = ids.next(id)
+      id
+    }
+    def nodeAt(x: Double, y: Double): Int = {
+      var id = nodeIndex(x, y)
+      if (id < 0) {
+        id = ids.add(Noder.pointKey(x, y))
+        nodeXY(2 * id) = x + 0.0; nodeXY(2 * id + 1) = y + 0.0
+      }
+      id
+    }
+    var ab = 0
+    while (ab < noder.abNodeCount) { nodeAt(noder.abNodeX(ab), noder.abNodeY(ab)); ab += 1 }
+    for ((p, shift) <- Seq((pa, 0), (pb, NodeShift))) {
+      for (s <- p.lines if s.x(0) != s.x(s.n - 1) || s.y(0) != s.y(s.n - 1)) {
+        flags(nodeAt(s.x(0), s.y(0))) ^= OddEnd << shift
+        flags(nodeAt(s.x(s.n - 1), s.y(s.n - 1))) ^= OddEnd << shift
+      }
       var i = 0
-      while (i < polys.length && best != 1) {
-        val l = Alg.pointInPolygon(polys(i), x, y)
-        if (l > best) best = l
-        i += 1
-      }
-      best
-    }
-  }
-
-  private def relatePA(pa: Parts, pb: Parts): String = {
-    val sa = ptSet(pa)
-    val m = Array.fill(9)('F')
-    m(EE) = '2'; m(EI) = '2'; m(EB) = '1'
-    var anyOff = false
-    val locB = new PolyLocator(pb.polys)
-    for (p <- sa) {
-      val loc = locB.locate(p._1, p._2)
-      if (loc == 1) m(II) = '0'
-      else if (loc == 0) m(IB) = '0'
-      else anyOff = true
-    }
-    if (anyOff) m(IE) = '0'
-    new String(m)
-  }
-
-  private def relateLL(pa: Parts, pb: Parts): String = {
-    val segsA = lineSegs(pa.lines)
-    val segsB = lineSegs(pb.lines)
-    val bndA = lineBoundary(pa.lines)
-    val bndB = lineBoundary(pb.lines)
-    val contacts = mutable.HashSet.empty[(Double, Double)]
-    val piecesA = nodePieces(segsA.map((_, false)), segsB, contacts)
-    val piecesB = nodePieces(segsB.map((_, false)), segsA, contacts)
-    val m = Array.fill(9)('F')
-    m(EE) = '2'
-
-    var aOn = false; var aOff = false
-    for (p <- piecesA) {
-      if (p.onOther) aOn = true else aOff = true
-    }
-    var bOn = false; var bOff = false
-    for (p <- piecesB) {
-      if (p.onOther) bOn = true else bOff = true
-    }
-    if (aOn) m(II) = '1'
-    if (aOff) m(IE) = '1'
-    if (bOff) m(EI) = '1'
-    // contact points: classify into I/B of each side
-    for (c <- contacts) {
-      val aB = bndA.contains(c); val bB = bndB.contains(c)
-      if (!aB && !bB) { if (m(II) == 'F') m(II) = '0' }
-      else if (!aB && bB) { if (m(IB) == 'F') m(IB) = '0' }
-      else if (aB && !bB) { if (m(BI) == 'F') m(BI) = '0' }
-      else m(BB) = '0'
-    }
-    if (bndA.exists(p => !onAnySeg(segsB, p._1, p._2))) m(BE) = '0'
-    if (bndB.exists(p => !onAnySeg(segsA, p._1, p._2))) m(EB) = '0'
-    new String(m)
-  }
-
-  private def relateLA(pa: Parts, pb: Parts): String = {
-    val segsA = lineSegs(pa.lines)
-    val bndA = lineBoundary(pa.lines)
-    val ringsB = ringSegsWithSide(pb.polys)
-    val ringSegsB = ringsB.map(_._1)
-    val contacts = mutable.HashSet.empty[(Double, Double)]
-    val piecesA = nodePieces(segsA.map((_, false)), ringSegsB, contacts)
-    val piecesB = nodePieces(ringsB, segsA, contacts)
-    val m = Array.fill(9)('F')
-    m(EE) = '2'; m(EI) = '2'
-
-    val bLocator = new PolyLocator(pb.polys)
-    def locB(x: Double, y: Double): Int = bLocator.locate(x, y)
-
-    var anyOnBoundary = false
-    for (p <- piecesA) {
-      // on-boundary is the noder's combinatorial incidence (exact
-      // collinear overlap), not a distance test — see relateAA
-      val loc = if (p.onOther) 0 else locB(p.mx, p.my)
-      loc match {
-        case 1  => m(II) = '1'
-        case 0  => m(IB) = '1'; anyOnBoundary = true
-        case -1 => m(IE) = '1'
-      }
-    }
-    // isolated interior-of-A touches with B's boundary
-    for (c <- contacts if !bndA.contains(c)) {
-      if (m(IB) == 'F') m(IB) = '0'
-    }
-    for (p <- bndA) {
-      locB(p._1, p._2) match {
-        case 1  => m(BI) = '0'
-        case 0  => m(BB) = '0'
-        case -1 => m(BE) = '0'
-      }
-    }
-    // does A cover any/all of B's boundary?
-    var ringOff = false
-    for (p <- piecesB) {
-      if (!p.onOther) ringOff = true
-    }
-    if (ringOff) m(EB) = '1'
-    new String(m)
-  }
-
-  private def relateAA(pa: Parts, pb: Parts): String = {
-    val ringsA = ringSegsWithSide(pa.polys)
-    val ringsB = ringSegsWithSide(pb.polys)
-    val segsA = ringsA.map(_._1)
-    val segsB = ringsB.map(_._1)
-    val contacts = mutable.HashSet.empty[(Double, Double)]
-    val piecesA = nodePieces(ringsA, segsB, contacts)
-    val piecesB = nodePieces(ringsB, segsA, contacts)
-
-    // "on the other boundary" is the noder's COMBINATORIAL incidence
-    // flag (exact collinear overlap), not a distance test: a metric eps
-    // both swallows genuinely-thin slivers (TestRelateAA-big: interior
-    // thinner than any tolerance) and is still needed nowhere else,
-    // because non-overlap piece midpoints sit strictly between nodes
-    val locatorA = new PolyLocator(pa.polys)
-    val locatorB = new PolyLocator(pb.polys)
-    val sideIdxB = new SideIndex(ringsB)
-    def locIn(p: Piece, loc: PolyLocator): Int = {
-      if (p.onOther) return 0
-      loc.locate(p.mx, p.my)
-    }
-
-    var aIn = false; var aOn = false; var aOut = false
-    var onSameSide = false; var onOppSide = false
-    for (p <- piecesA) {
-      locIn(p, locatorB) match {
-        case 1 => aIn = true
-        case -1 => aOut = true
-        case 0 =>
-          aOn = true
-          val dx = p.x2 - p.x1; val dy = p.y2 - p.y1
-          val sideA = if (p.interiorLeft) 1 else -1
-          val sideB = sideIdxB.sideAt(p.mx, p.my, dx, dy)
-          if (sideB != 0) {
-            if (sideA == sideB) onSameSide = true else onOppSide = true
-          }
-      }
-    }
-    var bIn = false; var bOut = false
-    for (p <- piecesB) {
-      locIn(p, locatorA) match {
-        case 1 => bIn = true
-        case -1 => bOut = true
-        case 0 =>
+      while (i < p.pts.length) {
+        flags(nodeAt(p.pts(i), p.pts(i + 1))) |= Point << shift
+        i += 2
       }
     }
 
-    val m = Array.fill(9)('F')
-    m(EE) = '2'
-    // interiors
-    if (aIn || bIn || onSameSide) m(II) = '2'
-    if (aOut || onOppSide || bIn) m(IE) = '2'
-    if (bOut || onOppSide || aIn) m(EI) = '2'
-    // A boundary vs B
-    if (aIn) m(BI) = '1'
-    if (aOn) m(BB) = '1' else if (contacts.nonEmpty) m(BB) = '0'
-    if (aOut) m(BE) = '1'
-    // B boundary vs A
-    if (bIn) m(IB) = '1'
-    if (bOut) m(EB) = '1'
-    new String(m)
+    var e = 0
+    while (e < edges.length) {
+      val ed = edges(e)
+      val mx = (ed.x1 + ed.x2) / 2; val my = (ed.y1 + ed.y2) / 2
+      val la = edgeLabel(pa, noder, e, mx, my)
+      val lb = edgeLabel(pb, noder, e, mx, my)
+      val k = (la & 3) * 3 + (lb & 3)
+      if (dims(k) < 1) dims(k) = 1
+      var s = 2
+      while (s <= 4) {
+        val sa = (la >> s) & 3; val sb = (lb >> s) & 3
+        if (sa != Unknown && sb != Unknown) dims(sa * 3 + sb) = 2
+        s += 2
+      }
+      if (ids.size > 0) {
+        val f = EdgeNode | (la >> 6) | (lb >> 6) << NodeShift
+        val n1 = nodeIndex(ed.x1, ed.y1); if (n1 >= 0) flags(n1) |= f
+        val n2 = nodeIndex(ed.x2, ed.y2); if (n2 >= 0) flags(n2) |= f
+      }
+      e += 1
+    }
+    var n = 0
+    while (n < ids.size) {
+      val f = flags(n)
+      val k =
+        if ((f & EdgeNode) != 0) nodeLoc(f) * 3 + nodeLoc(f >> NodeShift)
+        else {
+          val x = nodeXY(2 * n); val y = nodeXY(2 * n + 1)
+          pa.locatePoint(x, y, (f & Point) != 0) * 3 + pb.locatePoint(x, y, (f >> NodeShift & Point) != 0)
+        }
+      if (dims(k) < 0) dims(k) = 0
+      n += 1
+    }
+    new String(dims.map(d => if (d < 0) 'F' else ('0' + d).toChar))
   }
 
   // ------------------------------------------------- named predicates

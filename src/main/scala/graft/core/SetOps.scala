@@ -1014,6 +1014,18 @@ object SetOps {
 object Noder {
   /** Default snap tolerance as a fraction of the coordinate scale. */
   final val BaseEpsFactor = 1e-12
+  /** Source-tag bits of the two operands. A segment's tag holds exactly
+    * one of them; callers may set further bits of their own.
+    */
+  final val SrcA = 1
+  final val SrcB = 2
+
+  /** Mixed hash of a point's coordinate bits (-0.0 and 0.0 alike). */
+  @inline def pointKey(x: Double, y: Double): Long = {
+    var h = java.lang.Double.doubleToLongBits(x + 0.0) * 0x9E3779B97F4A7C15L
+    h ^= java.lang.Long.rotateLeft(java.lang.Double.doubleToLongBits(y + 0.0) * 0xC2B2AE3D27D4EB4FL, 31)
+    h
+  }
 }
 
 /** One noded, deduplicated, undirected edge of the overlay graph. */
@@ -1101,11 +1113,16 @@ private[core] final class IdChains(expectedIds: Int) {
   * intersections (computed once per crossing pair so the split point is
   * bit-identical on both), dedupes sub-segments, and records the nodes
   * where an A-segment meets a B-segment (candidate touch points).
+  * Each noded edge keeps the OR of the tags of the segments running
+  * along it in its stored direction (`fwdTags`) and against it
+  * (`revTags`), and the ids of those segments (`firstSource`). With
+  * `epsFactor = 0` nothing is snapped and a vertex nodes a segment only
+  * when it lies exactly on it.
   */
 final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
   // segments: x1,y1,x2,y2 at 4*i
   private var segXY = new Array[Double](64)
-  private var segSrcA = new Array[Boolean](16)
+  private var segTag = new Array[Int](16)
   private var nSeg = 0
 
   // split points: per-segment chains in insertion order
@@ -1122,6 +1139,20 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
   private var nAb = 0
 
   var edges: IndexedSeq[NodedEdge] = IndexedSeq.empty
+  var fwdTags: Array[Int] = Array.emptyIntArray
+  var revTags: Array[Int] = Array.emptyIntArray
+  // the segments each edge came from: a chain per edge through srcNext,
+  // holding segment ids (the order of addLine's non-degenerate segments)
+  private var srcHead: Array[Int] = Array.emptyIntArray
+  private var srcSeg: Array[Int] = Array.emptyIntArray
+  private var srcNext: Array[Int] = Array.emptyIntArray
+
+  /** Number of non-degenerate segments added so far. */
+  def segmentCount: Int = nSeg
+  /** First link of edge e's source chain, or -1. */
+  def firstSource(e: Int): Int = srcHead(e)
+  def sourceSegment(link: Int): Int = srcSeg(link)
+  def nextSource(link: Int): Int = srcNext(link)
 
   // ---- eps-snapping node registry (the snapping-noder idea from the
   // reference's fallback ladder, jts OverlayNGRobust): vertices and
@@ -1175,17 +1206,19 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
     snapXY(2 * id) = x; snapXY(2 * id + 1) = y
   }
 
-  def addLine(s: Seqn, srcA: Boolean): Unit = {
+  def addLine(s: Seqn, srcA: Boolean): Unit = addLine(s, if (srcA) Noder.SrcA else Noder.SrcB)
+
+  def addLine(s: Seqn, tag: Int): Unit = {
     var i = 0
     while (i < s.n - 1) {
       val x1 = s.x(i); val y1 = s.y(i); val x2 = s.x(i + 1); val y2 = s.y(i + 1)
       if (x1 != x2 || y1 != y2) {
         if (4 * nSeg + 4 > segXY.length) segXY = java.util.Arrays.copyOf(segXY, segXY.length * 2)
-        if (nSeg == segSrcA.length) segSrcA = java.util.Arrays.copyOf(segSrcA, nSeg * 2)
+        if (nSeg == segTag.length) segTag = java.util.Arrays.copyOf(segTag, nSeg * 2)
         val b = 4 * nSeg
         segXY(b) = x1 + 0.0; segXY(b + 1) = y1 + 0.0
         segXY(b + 2) = x2 + 0.0; segXY(b + 3) = y2 + 0.0
-        segSrcA(nSeg) = srcA
+        segTag(nSeg) = tag
         nSeg += 1
       }
       i += 1
@@ -1207,22 +1240,16 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
     }
   }
 
-  @inline private def pointKey(x: Double, y: Double): Long = {
-    var h = java.lang.Double.doubleToLongBits(x + 0.0) * 0x9E3779B97F4A7C15L
-    h ^= java.lang.Long.rotateLeft(java.lang.Double.doubleToLongBits(y + 0.0) * 0xC2B2AE3D27D4EB4FL, 31)
-    h
-  }
-
   /** Index of (x, y) among the A-B nodes, or -1. */
   def abNodeIndex(x: Double, y: Double): Int = {
-    var id = abIds.first(pointKey(x, y))
+    var id = abIds.first(Noder.pointKey(x, y))
     while (id >= 0 && !(abXY(2 * id) == x && abXY(2 * id + 1) == y)) id = abIds.next(id)
     id
   }
 
   private def addAb(x: Double, y: Double): Unit =
     if (abNodeIndex(x, y) < 0) {
-      val id = abIds.add(pointKey(x, y))
+      val id = abIds.add(Noder.pointKey(x, y))
       if (2 * id + 2 > abXY.length) abXY = java.util.Arrays.copyOf(abXY, abXY.length * 2)
       abXY(2 * id) = x; abXY(2 * id + 1) = y
       nAb += 1
@@ -1244,8 +1271,11 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
     while (k < 4 * nSeg) { val v = math.abs(segXY(k)); if (v > maxAbs) maxAbs = v; k += 1 }
     eps = maxAbs * epsFactor
     // input vertices plus a margin for crossings
-    snapIds = new IdChains(nSeg + nSeg / 4 + 4)
-    snapXY = new Array[Double](2 * (nSeg + nSeg / 4 + 4))
+    if (eps > 0) {
+      snapIds = new IdChains(nSeg + nSeg / 4 + 4)
+      snapXY = new Array[Double](2 * (nSeg + nSeg / 4 + 4))
+    }
+    val segId = new Array[Int](nSeg)
     var w = 0
     var r = 0
     while (r < nSeg) {
@@ -1254,7 +1284,8 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
       snap(segXY(b + 2), segXY(b + 3)); val x2 = sx; val y2 = sy
       if (x1 != x2 || y1 != y2) {
         segXY(4 * w) = x1; segXY(4 * w + 1) = y1; segXY(4 * w + 2) = x2; segXY(4 * w + 3) = y2
-        segSrcA(w) = segSrcA(r)
+        segTag(w) = segTag(r)
+        segId(w) = r
         w += 1
       }
       r += 1
@@ -1285,8 +1316,12 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
     val edgeCap = n + nSplit
     val edgeIds = new IdChains(edgeCap)
     val eXY = new Array[Double](4 * edgeCap)
-    val eA = new Array[Boolean](edgeCap)
-    val eB = new Array[Boolean](edgeCap)
+    val eFwd = new Array[Int](edgeCap)
+    val eRev = new Array[Int](edgeCap)
+    srcHead = new Array[Int](edgeCap)
+    srcSeg = new Array[Int](edgeCap)
+    srcNext = new Array[Int](edgeCap)
+    var nSrc = 0
     def edgeKey(ax: Double, ay: Double, bx: Double, by: Double): Long = {
       var h = java.lang.Double.doubleToLongBits(ax) * 0x9E3779B97F4A7C15L
       h ^= java.lang.Long.rotateLeft(java.lang.Double.doubleToLongBits(ay) * 0xC2B2AE3D27D4EB4FL, 17)
@@ -1294,7 +1329,7 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
       h ^= java.lang.Long.rotateLeft(java.lang.Double.doubleToLongBits(by) * 0x27D4EB2F165667C5L, 47)
       h
     }
-    def emit(ax0: Double, ay0: Double, bx0: Double, by0: Double, srcA: Boolean): Unit =
+    def emit(ax0: Double, ay0: Double, bx0: Double, by0: Double, seg: Int): Unit =
       if (ax0 != bx0 || ay0 != by0) {
         val flip = !(ax0 < bx0 || (ax0 == bx0 && ay0 <= by0))
         val ax = if (flip) bx0 else ax0; val ay = if (flip) by0 else ay0
@@ -1303,13 +1338,14 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
         var e = edgeIds.first(key)
         while (e >= 0 && !(eXY(4 * e) == ax && eXY(4 * e + 1) == ay &&
                            eXY(4 * e + 2) == bx && eXY(4 * e + 3) == by)) e = edgeIds.next(e)
-        if (e >= 0) {
-          if (srcA) eA(e) = true else eB(e) = true
-        } else {
+        if (e < 0) {
           e = edgeIds.add(key)
           eXY(4 * e) = ax; eXY(4 * e + 1) = ay; eXY(4 * e + 2) = bx; eXY(4 * e + 3) = by
-          eA(e) = srcA; eB(e) = !srcA
+          srcHead(e) = -1
         }
+        if (flip) eRev(e) |= segTag(seg) else eFwd(e) |= segTag(seg)
+        srcSeg(nSrc) = segId(seg); srcNext(nSrc) = srcHead(e); srcHead(e) = nSrc
+        nSrc += 1
       }
     // one segment's split points: coordinates, parameter t along the
     // segment, and their order
@@ -1320,7 +1356,6 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
     while (i < n) {
       val b = 4 * i
       val x1 = segXY(b); val y1 = segXY(b + 1); val x2 = segXY(b + 2); val y2 = segXY(b + 3)
-      val srcA = segSrcA(i)
       val dx = x2 - x1; val dy = y2 - y1
       val horiz = math.abs(dx) >= math.abs(dy)
       var m = 0
@@ -1356,12 +1391,12 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
           q += 1
         }
         if (!dup) {
-          emit(ax, ay, px(p), py(p), srcA)
+          emit(ax, ay, px(p), py(p), i)
           ax = px(p); ay = py(p)
         }
         k += 1
       }
-      emit(ax, ay, x2, y2, srcA)
+      emit(ax, ay, x2, y2, i)
       i += 1
     }
     // array-backed: Arrangement/overlay index edges(i) in tight loops,
@@ -1369,10 +1404,14 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
     val out = new Array[NodedEdge](edgeIds.size)
     i = 0
     while (i < out.length) {
-      out(i) = NodedEdge(eXY(4 * i), eXY(4 * i + 1), eXY(4 * i + 2), eXY(4 * i + 3), eA(i), eB(i))
+      val t = eFwd(i) | eRev(i)
+      out(i) = NodedEdge(eXY(4 * i), eXY(4 * i + 1), eXY(4 * i + 2), eXY(4 * i + 3),
+        (t & Noder.SrcA) != 0, (t & Noder.SrcB) != 0)
       i += 1
     }
     edges = scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+    fwdTags = eFwd
+    revTags = eRev
   }
 
   private def intersectPair(i: Int, j: Int): Unit = {
@@ -1383,12 +1422,16 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
     val o2 = Alg.orient(ax1, ay1, ax2, ay2, bx2, by2)
     val o3 = Alg.orient(bx1, by1, bx2, by2, ax1, ay1)
     val o4 = Alg.orient(bx1, by1, bx2, by2, ax2, ay2)
-    val crossSrc = segSrcA(i) != segSrcA(j)
+    val crossSrc = ((segTag(i) ^ segTag(j)) & Noder.SrcA) != 0
 
     if (o1 * o2 < 0 && o3 * o4 < 0) {
       // proper crossing: one shared point, computed once, snapped to
-      // any pre-existing node within eps
-      val (cx, cy) = Alg.crossingPoint(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
+      // any pre-existing node within eps. Without snapping nothing would
+      // merge two roundings of one crossing, so there it is rounded once
+      // from the exact point.
+      val (cx, cy) =
+        if (eps > 0) Alg.crossingPoint(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
+        else Alg.crossingPointExact(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
       snap(cx, cy)
       val px = sx; val py = sy
       addSplit(i, px, py); addSplit(j, px, py)
@@ -1402,9 +1445,13 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
       return
     }
     // endpoint touching / T-junctions: eps-tolerant — a vertex within
-    // eps of the other segment nodes it (snapping-noder behavior)
-    splitIfNear(i, bx1, by1, crossSrc); splitIfNear(i, bx2, by2, crossSrc)
-    splitIfNear(j, ax1, ay1, crossSrc); splitIfNear(j, ax2, ay2, crossSrc)
+    // eps of the other segment nodes it (snapping-noder behavior); with
+    // eps = 0, only a vertex exactly on it, so only one whose
+    // orientation to the segment is 0
+    if (eps > 0 || o1 == 0) splitIfNear(i, bx1, by1, crossSrc)
+    if (eps > 0 || o2 == 0) splitIfNear(i, bx2, by2, crossSrc)
+    if (eps > 0 || o3 == 0) splitIfNear(j, ax1, ay1, crossSrc)
+    if (eps > 0 || o4 == 0) splitIfNear(j, ax2, ay2, crossSrc)
   }
 
   private def splitIfOn(si: Int, px: Double, py: Double, crossSrc: Boolean): Unit = {
@@ -1422,7 +1469,10 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
     // it and there is no A-B node to record
     if (!crossSrc && ((px == segXY(b) && py == segXY(b + 1)) || (px == segXY(b + 2) && py == segXY(b + 3))))
       return
-    if (Alg.distPointSeg(px, py, segXY(b), segXY(b + 1), segXY(b + 2), segXY(b + 3)) <= eps) {
+    val near =
+      if (eps > 0) Alg.distPointSeg(px, py, segXY(b), segXY(b + 1), segXY(b + 2), segXY(b + 3)) <= eps
+      else Alg.onSegment(segXY(b), segXY(b + 1), segXY(b + 2), segXY(b + 3), px, py)
+    if (near) {
       addSplit(si, px, py)
       if (crossSrc) addAb(px, py)
     }

@@ -189,6 +189,63 @@ class CoreSpec extends AnyFunSuite {
     assert(Relate.covers(g(sq), edgeInner))
     assert(Relate.coveredBy(edgeInner, g(sq)))
     assert(Relate.contains(g(sq), edgeInner)) // interior contact exists
+    // a touching-squares-plus-star multipolygon and its
+    // "endcap=flat join=mitre" buffer at d = 2.361706925871409, as
+    // built: the buffer carries a 2e-14 triangular hole that lies in
+    // the star's interior, so the star's interior meets the buffer's
+    // exterior (EI = 2) and the buffer does not cover it; a relate that
+    // snapped or used a distance tolerance would lose the hole
+    def hex(h: String): Geom = Wkb.read(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
+    val parts = hex(
+      "010600000003000000010300000001000000050000004c9f08442b4c434020d76a3885c50cc0e43a7d18a7c8454020d7" +
+      "6a3885c50cc0e43a7d18a7c84540c4c4bd1d7004f63f4c9f08442b4c4340c4c4bd1d7004f63f4c9f08442b4c434020d7" +
+      "6a3885c50cc001030000000100000005000000e43a7d18a7c84540c4c4bd1d7004f63f7cd6f1ec22454840c4c4bd1d70" +
+      "04f63f7cd6f1ec22454840f24d14abfa641940e43a7d18a7c84540f24d14abfa641940e43a7d18a7c84540c4c4bd1d70" +
+      "04f63f0103000000010000002800000060c0530ab6673940de28caaa1a4732c0c36d33d278cd3a4047813b5e73c230c0" +
+      "6c8d23d2eeb53a401d170905db0d30c0807d22cbb1d539404e4fd3d4ae9130c0ba139e1bfef5394061e8d135cdbf2fc0" +
+      "44d97a2c6060394041d359976ecf2dc0dcc8f793ca49384003e1a22fda0731c0805b24b277603940154811a8ede32bc0" +
+      "3637944e27293840008c4df125a030c0318ab133488938404065caa208ef2bc000c6a577a5eb37403c0ac43a0f9530c0" +
+      "f65f4f969b7f3740621081fd3d7e2fc0cf4fc15387e43640abf9cb2d246b2cc0101ba8ad8bd835405ac8903a298d2cc0" +
+      "c64b145479cb3540700fca3bdd812ec0259f81c937473540207df94d7c502dc0ab11114408db3540e782c509da4b30c0" +
+      "6cfd211b260d3640ba18ec8ba18932c0c9932c5affa23440dfd8babbeffa32c0fa86b2277919344046c2f6ff97d933c0" +
+      "10d25bd053383640fe3e11e3be2133c05f85d583e7aa34402f99b3053d6834c0b0349a619ac133406e958101ec0635c0" +
+      "23d27f06a0643440aa8a04671e2035c0794fa92a84843640522cb87446d633c0bcd072e88b133640dc34aae9975834c0" +
+      "123b91b54e523540f45a96adba4635c0caa09233de173540f1b4b9f32f3936c074e98afd45dc3640f7355b5305d833c0" +
+      "56f9428a5f70354098da87a5378c36c06e215479c4c436407249be7cba5034c079ff651594213640b720d3f579e135c0" +
+      "048d157f8d163640ce0520ee565336c01db07f7a3a4b374080afd1cbb7a235c04f8af593edda3740d4084859914036c0" +
+      "f3a8353afe113a403031cee8337836c055692902bd5539405c914b4a67e133c0b31a1fce333f3b404874226a5f2f34c0" +
+      "0af986cdfd7d3c407a6b00c1204533c060c0530ab6673940de28caaa1a4732c0")
+    val buf = hex(
+      "010600000002000000010300000001000000150000004c9f08442b4c434078d61ae925d517c0e43a7d18a7c8454078d6" +
+      "1ae925d517c041e81982f3f6464078d61ae925d517c041e81982f3f6464020d76a3885c50cc041e81982f3f64640b4cd" +
+      "af2b3a8aefbf7cd6f1ec22454840b4cdaf2b3a8aefbfd9838e566f734940b4cdaf2b3a8aefbfd9838e566f734940c4c4" +
+      "bd1d7004f63fd9838e566f734940f24d14abfa641940d9838e566f7349406ddcfcfbae6b21407cd6f1ec224548406ddc" +
+      "fcfbae6b2140e43a7d18a7c845406ddcfcfbae6b2140878de0ae5a9a44406ddcfcfbae6b2140878de0ae5a9a4440f24d" +
+      "14abfa641940878de0ae5a9a444031b8a9a8fee60d404c9f08442b4c434031b8a9a8fee60d40eff16bdade1d424031b8" +
+      "a9a8fee60d40eff16bdade1d4240c4c4bd1d7004f63feff16bdade1d424020d76a3885c50cc0eff16bdade1d424078d6" +
+      "1ae925d517c04c9f08442b4c434078d61ae925d517c00103000000020000002d000000ab25db0f149b364076d43899d6" +
+      "b827c064d73bdc6403364054f5a41d18cc27c01838c0889cf92e40a0829dd06c7511c01d456fd186692e408854e227d2" +
+      "1c12c03f17c6dff70c3340fb17c7ed3ee22ec0578fd180618733405942c8589fcc30c0dcfc677488883340c8e35137d0" +
+      "d930c0f7a60bea28173340a33b7ebd48fd30c0d8e5cdb19ba03240d886ca5c39bd31c009d9537f151732403f7006a1e1" +
+      "9b32c0f257ec5b8c593140d0e6c953bfce33c0dc66227275f12a40cad8a256077236c0cfe6dbce930c2f4013b6d67942" +
+      "c336c056ccd97caa482d40cac9f155173138c08d58312fd8d0314024328e19eb1d37c06e479cc21a6c3240fe907a5fea" +
+      "3537c0487922ae08c32b4064d22ff957d93fc0bbf4ef008a743140ec0db48af2ec40c0eb94fbf8b0ba344009d3bbfeb7" +
+      "5a3cc0151e8fe9b51135407a47e62625803cc0a22df13c0b483540e523f53005163cc0b01070add78535405a3e9ec6ff" +
+      "273cc050b16e0fea273740c08a6f25818e38c0f40059eae49f3740fb772498469a38c0981f9990f5d6394057a0aa27e9" +
+      "d138c0dc9c26d0034a3d409b97f4388c2839c00410078fdd743c404c167cb1193a36c01f3bb9bf33a53c4046899a3195" +
+      "1636c0761921bffde33d4078807888562c35c096d95e00c9ce4040633d6a00a76f32c07f7a999af7373d403590af15d8" +
+      "0531c0620d63275d263d40629526f2c97e30c04f2ed3d3a1544040c4792bfaa3382bc00139a4ff33364040cb29d24792" +
+      "5d2ac09047f7c1b8fd3e4030ffeaeaf0552bc0c0f667348ee33f40fe1b310aaf4329c02ac19be34e323f40aabca5a68d" +
+      "9f27c0465e8e032b133d404a1f0a5854322ac0f2bc1bc485603e40a6efdf57243e25c0ef03b0534c4b3d402080efe772" +
+      "e123c0a3ab711b9a803f402c1f7a0a49730dc07f71ba622f113c40f019d7a4816402c064d58c3e5bef3b40a208c6ec03" +
+      "b904c0505053ecf8eb38400c0d37c6433100c0ab25db0f149b364076d43899d6b827c00400000044b6724971a9364001" +
+      "55dd983ad234c01494e64571a936402375f9993ad234c0d63d884671a93640ca987f963ad234c044b6724971a9364001" +
+      "55dd983ad234c0")
+    val hole = buf match { case GMPoly(ps, _) => ps(1)(1) }
+    val (hx, hy) = ((hole.x(0) + hole.x(1) + hole.x(2)) / 3, (hole.y(0) + hole.y(1) + hole.y(2)) / 3)
+    assert(Alg.pointInAreal(buf, hx, hy) == -1 && Alg.pointInAreal(parts, hx, hy) == 1)
+    assert(Relate.relate(buf, parts) == "2121F12F2")
+    assert(!Relate.covers(buf, parts))
   }
 
   test("containsProperly (T**FF*FF*)") {

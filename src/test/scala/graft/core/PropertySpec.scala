@@ -64,6 +64,57 @@ class PropertySpec extends AnyFunSuite {
 
   private val genAreal: Gen[Geom] = Gen.oneOf(genBoxPoly, genHolePoly)
 
+  // ---- hostile relate inputs on a small quarter grid, so parts meet:
+  // mixed collections, polygons sharing an edge or a vertex, a line
+  // along a ring, repeated vertices (zero-length segments)
+  private val hq: Gen[Double] = Gen.choose(-24, 24).map(_ / 4.0)
+  private val hlen: Gen[Double] = Gen.choose(1, 16).map(_ / 4.0)
+
+  private def boxRing(x: Double, y: Double, w: Double, h: Double): Seqn =
+    Seqn.of(x, y, x + w, y, x + w, y + h, x, y + h, x, y)
+
+  /** s, half the time with one vertex repeated. */
+  private def withRepeat(s: Seqn): Gen[Seqn] = for {
+    rep <- Gen.oneOf(true, false); k <- Gen.choose(0, s.n - 1)
+  } yield if (!rep) s else Seqn.xy((0 until s.n).flatMap { i =>
+    Seq.fill(if (i == k) 2 else 1)(Seq(s.x(i), s.y(i))).flatten
+  }.toArray)
+
+  private val genHBox: Gen[GPoly] = for {
+    x <- hq; y <- hq; w <- hlen; h <- hlen; r <- withRepeat(boxRing(x, y, w, h))
+  } yield GPoly(Array(r), CT.XY)
+
+  /** Two boxes sharing an edge, or only a corner. */
+  private val genHAdjacent: Gen[Geom] = for {
+    x <- hq; y <- hq; w <- hlen; h <- hlen; w2 <- hlen; h2 <- hlen
+    corner <- Gen.oneOf(true, false)
+  } yield GMPoly(Array(Array(boxRing(x, y, w, h)),
+    Array(boxRing(x + w, if (corner) y + h else y, w2, h2))), CT.XY)
+
+  private val genHLine: Gen[Geom] = for {
+    n <- Gen.choose(2, 5); xs <- Gen.listOfN(n, hq); ys <- Gen.listOfN(n, hq)
+    if xs.zip(ys).distinct.size >= 2
+    s <- withRepeat(Seqn.xy(xs.zip(ys).flatMap { case (x, y) => Seq(x, y) }.toArray))
+  } yield GLine(s)
+
+  /** A line along the first edge of p's shell and on past its end. */
+  private def lineAlong(p: GPoly): Gen[Geom] = hlen.map { d =>
+    val r = p.rings(0)
+    GLine(Seqn.of(r.x(0), r.y(0), r.x(2), r.y(2), r.x(2) + d, r.y(2)))
+  }
+
+  private val genHPoint: Gen[Geom] = for (x <- hq; y <- hq) yield GPoint.xy(x, y)
+
+  private val genHCollection: Gen[Geom] = for {
+    p <- genHBox; l <- Gen.oneOf(lineAlong(p), genHLine); pt <- genHPoint
+    extra <- Gen.oneOf(genHAdjacent, genHBox, genHLine, genHPoint)
+  } yield GColl(Array(p, l, pt, extra), CT.XY)
+
+  private val genHostile: Gen[Geom] =
+    Gen.oneOf(genHCollection, genHAdjacent, genHBox, genHLine, genHPoint)
+
+  private val genRelate: Gen[Geom] = Gen.oneOf(genAny, genHostile, genHostile)
+
   test("WKT and WKB round-trip bit-identically") {
     check("roundtrip", Prop.forAll(genAny) { g =>
       val viaWkt = Wkt.parse(Wkt.write(g))
@@ -81,13 +132,59 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("contains(a,b) iff within(b,a); relate transposes") {
-    check("transpose", Prop.forAll(genAny, genAny) { (a, b) =>
+    check("transpose", Prop.forAll(genRelate, genRelate) { (a, b) =>
       val m = Relate.relate(a, b)
       val mt = Relate.relate(b, a)
       def t(s: String) = "" + s(0) + s(3) + s(6) + s(1) + s(4) + s(7) + s(2) + s(5) + s(8)
       m == t(mt) &&
         Relate.contains(a, b) == Relate.within(b, a) &&
         Relate.covers(a, b) == Relate.coveredBy(b, a)
+    })
+  }
+
+  test("relate(A, A) matches T*F**FFF*") {
+    check("self", Prop.forAll(genRelate) { a =>
+      val m = Relate.relate(a, a)
+      Relate.matches(m, "T*F**FFF*") :| s"${Wkt.write(a)}: $m"
+    })
+  }
+
+  test("each named predicate is its pattern over relate") {
+    check("predicates", Prop.forAll(genRelate, genRelate) { (a, b) =>
+      val m = Relate.relate(a, b)
+      def p(patterns: String*): Boolean = patterns.exists(Relate.matches(m, _))
+      val da = a.dimension; val db = b.dimension
+      val wrong = Seq(
+        "intersects" -> (Intersects.intersects(a, b) == !p("FF*FF****")),
+        "disjoint" -> (Relate.disjoint(a, b) == p("FF*FF****")),
+        "touches" -> (Relate.touches(a, b) == p("FT*******", "F**T*****", "F***T****")),
+        "contains" -> (Relate.contains(a, b) == p("T*****FF*")),
+        "containsProperly" -> (Relate.containsProperly(a, b) == p("T**FF*FF*")),
+        "within" -> (Relate.within(a, b) == p("T*F**F***")),
+        "covers" -> (Relate.covers(a, b) == p("T*****FF*", "*T****FF*", "***T**FF*", "****T*FF*")),
+        "coveredBy" -> (Relate.coveredBy(a, b) == p("T*F**F***", "*TF**F***", "**FT*F***", "**F*TF***")),
+        "crosses" -> (Relate.crosses(a, b) ==
+          (if (da < db) p("T*T******") else if (da > db) p("T*****T**")
+           else da == 1 && p("0********"))),
+        "overlaps" -> (Relate.overlaps(a, b) ==
+          (if (da == db && da != 1) p("T*T***T**") else da == 1 && db == 1 && p("1*T***T**"))),
+        "equalsTopo" -> (Relate.equalsTopo(a, b) == (da == db && p("T*F**FFF*")))
+      ).collect { case (name, false) => name }
+      wrong.isEmpty :| s"${Wkt.write(a)} / ${Wkt.write(b)}: $m, ${wrong.mkString(", ")}"
+    })
+  }
+
+  test("relate of valid areal pairs: II, IE and EI are 2 iff the overlay has area") {
+    val gen = Gen.oneOf(genBoxPoly, genHolePoly, genHBox, genHAdjacent)
+    check("areal", Prop.forAll(gen, gen) { (a, b) =>
+      !(Validate.isValid(a) && Validate.isValid(b)) || {
+        val m = Relate.relate(a, b)
+        def dim(g: Geom): Char = if (Measure.area(g) > 0) '2' else 'F'
+        val want = "" + dim(SetOps.intersection(a, b)) + dim(SetOps.difference(a, b)) +
+          dim(SetOps.difference(b, a))
+        (want == "" + m(Relate.II) + m(Relate.IE) + m(Relate.EI)) :|
+          s"${Wkt.write(a)} / ${Wkt.write(b)}: $m, overlay $want"
+      }
     })
   }
 

@@ -85,6 +85,24 @@ class RelateMixedGCSpec extends AnyFunSuite {
     assert(Relate.disjoint(Wkt.parse(a), Wkt.parse("POINT(9 9)")))
   }
 
+  test("full matrices: boxes against the engine benchmark's constant relate argument") {
+    // a polygon notched down to (1.25 41.2) from its top edge, a line
+    // through the notch and across the polygon, and a point in the notch
+    val lit = "GEOMETRYCOLLECTION(POLYGON((1.1 41.1,1.4 41.1,1.4 41.3,1.25 41.2,1.1 41.3,1.1 41.1))," +
+      "LINESTRING(0.9 41.4,1.6 41.05),POINT(1.25 41.25))"
+    def box(x0: Double, y0: Double, x1: Double, y1: Double): String =
+      s"POLYGON(($x0 $y0,$x1 $y0,$x1 $y1,$x0 $y1,$x0 $y0))"
+    // inside the notch, crossed by the line (in at its left side, out at
+    // its bottom): the line's interior meets the box in 1D and its
+    // boundary in two points
+    assert(im(box(1.17, 41.26, 1.22, 41.29), lit) == "1F20F1212")
+    // inside the notch, holding the point, clear of the line
+    assert(im(box(1.24, 41.24, 1.26, 41.26), lit) == "0F2FF1212")
+    // under the polygon, sharing part of its bottom edge
+    assert(im(box(1.15, 41.0, 1.35, 41.1), lit) == "FF2F11212")
+    assert(im(box(2, 42, 3, 43), lit) == "FF2FF1212")
+  }
+
   test("mixed GC with empty other side keeps the empty-relate shape") {
     val a = "GEOMETRYCOLLECTION (POLYGON((0 0,4 0,4 4,0 4,0 0)), LINESTRING(5 5,7 7))"
     assert(im(a, "POLYGON EMPTY") == "FF2FF1FF2")
