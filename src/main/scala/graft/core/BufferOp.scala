@@ -15,7 +15,10 @@ import scala.collection.mutable
   * caps with round joins make that union exactly {p : dist(p, g) <= d};
   * they first try the least linework (the round walk) and retry with
   * every piece outlined (the piece walk, which all other styles take)
-  * when that leaks or fails a sanity test, see [[offsetBuffer]].
+  * when that leaks or fails a sanity test, see [[offsetBuffer]]. When
+  * growing, the round walk drops before noding every offset segment
+  * that lies a margin deep inside one segment's capsule (most of a
+  * large buffer's arcs): it can only split faces that are kept anyway.
   *
   * Style surface mirrors the reference's option set
   * (geom/alg_buffer.go:24-124): quadrant segments, end caps
@@ -120,7 +123,11 @@ object BufferOp {
     * cheap sanity test (growing must cover g's area, eroding must not
     * exceed it, and the envelope must stay within d of g's) is
     * recomputed on the piece walk. Other styles take the piece walk at
-    * once.
+    * once. A growing round walk drops its covered linework
+    * (see [[arrangementBuffer]]). On rings that cross themselves or
+    * each other, whose one-sided offsets do not bound the region, that
+    * can lose area while passing both tests; so the walk also returns
+    * null when a dropped segment is not inside its result.
     */
   private def offsetBuffer(g: Geom, d: Double, st: Style, grow: Boolean,
                            side: Int): Geom = {
@@ -188,6 +195,17 @@ object BufferOp {
     * dist(p, segment) <= d. It returns null when its leak test (at the
     * end) finds faces on both sides of the buffer's boundary merged
     * through an open linework end (see [[offsetBuffer]]).
+    *
+    * Covered linework: when growing, the round walk drops each emitted
+    * segment whose two endpoints both lie within d - mc of one input
+    * segment (a PDist piece), mc = 4 d (1 - cos(pi / (4 qs))), four
+    * sagittas of the coarsest arc step. Such a segment lies at least mc
+    * inside that segment's capsule, and the emitted arcs lie at most one
+    * sagitta inside the true circles, so every face beside it is kept.
+    * The candidate pieces come from the piece R-tree; a join arc is
+    * tested only when a segment that does not end at its vertex passes
+    * within 2d of it. The guard: the midpoint of every dropped segment
+    * must be interior to the result, else the walk returns null.
     * `side` is 0 for two-sided buffers, +1 / -1 for single-sided
     * left / right; single-sided lines always take the piece walk.
     */
@@ -257,11 +275,18 @@ object BufferOp {
       }
     }
 
-    // ---- offset linework
-    val noder = new Noder
-    def emitLine(pts: Array[Double]): Unit =
-      if (pts.length >= 4) noder.addLine(Seqn.xy(pts), srcA = true)
-    def emitArc(cx: Double, cy: Double, a1: Double, sweep: Double): Unit = {
+    // ---- offset linework, noded after the walk (see the covered step)
+    val lines = mutable.ArrayBuffer.empty[Array[Double]]
+    var turns = new Array[Double](32) // per line: the vertex a join arc turns at, else NaN
+    def emitLine(pts: Array[Double], vx: Double = Double.NaN, vy: Double = Double.NaN): Unit =
+      if (pts.length >= 4) {
+        val i = lines.length
+        if (2 * i + 2 > turns.length) turns = java.util.Arrays.copyOf(turns, 2 * turns.length)
+        turns(2 * i) = vx; turns(2 * i + 1) = vy
+        lines += pts
+      }
+    def emitArc(cx: Double, cy: Double, a1: Double, sweep: Double,
+                turn: Boolean = false): Unit = {
       val steps = math.max(2, math.ceil(math.abs(sweep) / (math.Pi / 2) * qs).toInt)
       val arr = new Array[Double]((steps + 1) * 2)
       var i = 0
@@ -271,7 +296,7 @@ object BufferOp {
         arr(2 * i + 1) = cy + d * math.sin(a)
         i += 1
       }
-      emitLine(arr)
+      if (turn) emitLine(arr, cx, cy) else emitLine(arr)
     }
     /** Full circle polygonized starting at a0. The start angle MUST be
       * the normal angle of any attaching parallel: parallel endpoints
@@ -356,7 +381,7 @@ object BufferOp {
         var sweep = n2a - n1a
         while (sweep <= -math.Pi) sweep += 2 * math.Pi
         while (sweep > math.Pi) sweep -= 2 * math.Pi
-        emitArc(vx, vy, n1a, sweep)
+        emitArc(vx, vy, n1a, sweep, turn = true)
       }
     }
 
@@ -541,6 +566,68 @@ object BufferOp {
     def insideG(px: Double, py: Double): Boolean =
       loc != null && loc.locate(px, py) > 0
 
+    /* Covered linework (see the scaladoc). Distance to a segment is
+     * convex along a segment, so a segment whose two endpoints lie within
+     * reach of one input segment lies wholly within reach of it. The
+     * margin of four sagittas also leaves room for the leak test's
+     * two-sagitta probes. Only a segment's piece (PDist) covers: the
+     * other kinds come from single-sided lines, whose own linework
+     * bounds the buffer. */
+    val noder = new Noder
+    val sag = d * (1 - math.cos(math.Pi / (4 * math.max(1, qs))))
+    val reach = d - 4 * sag
+    val dropping = grow && !pieceWalk && reach > 0
+    var dropped = new Array[Double](16) // midpoints of dropped segments
+    var nDropped = 0
+    var hint = -1 // the piece that covered the last dropped segment
+    def coveredBy(i: Int, x1: Double, y1: Double, x2: Double, y2: Double): Boolean = {
+      val b = 8 * i
+      pk(i) == PDist && Alg.distPointSeg(x1, y1, pv(b), pv(b + 1), pv(b + 2), pv(b + 3)) <= reach &&
+        Alg.distPointSeg(x2, y2, pv(b), pv(b + 1), pv(b + 2), pv(b + 3)) <= reach
+    }
+    def covered(x1: Double, y1: Double, x2: Double, y2: Double): Boolean =
+      (hint >= 0 && coveredBy(hint, x1, y1, x2, y2)) ||
+        !ptree.pointSearch(x1, y1) { i =>
+          if (coveredBy(i, x1, y1, x2, y2)) { hint = i; false } else true
+        }
+    /* A join arc around v (|sweep| < pi) lies d from v and, on the gap
+     * side, d from both segments that end at v; so only a segment that
+     * does not end at v and passes within d + reach < 2d of v can cover
+     * part of it. */
+    def lonelyTurn(vx: Double, vy: Double): Boolean =
+      ptree.rangeSearch(Env(vx - d, vy - d, vx + d, vy + d)) { i =>
+        val b = 8 * i
+        pk(i) != PDist || (pv(b) == vx && pv(b + 1) == vy) || (pv(b + 2) == vx && pv(b + 3) == vy) ||
+          Alg.distPointSeg(vx, vy, pv(b), pv(b + 1), pv(b + 2), pv(b + 3)) > 2 * d
+      }
+    def nodeUncovered(li: Int): Unit = {
+      val pts = lines(li)
+      val nv = pts.length / 2
+      def node(from: Int, until: Int): Unit = // vertices from .. until - 1
+        if (until - from >= 2)
+          noder.addLine(Seqn.xy(if (until - from == nv) pts
+            else java.util.Arrays.copyOfRange(pts, 2 * from, 2 * until)), srcA = true)
+      val vx = turns(2 * li); val vy = turns(2 * li + 1)
+      val test = dropping && (vx.isNaN || !lonelyTurn(vx, vy))
+      var run = 0 // first vertex of the current run of kept segments
+      var j = 0
+      while (test && j < nv - 1) {
+        val x1 = pts(2 * j); val y1 = pts(2 * j + 1); val x2 = pts(2 * j + 2); val y2 = pts(2 * j + 3)
+        if (covered(x1, y1, x2, y2)) {
+          node(run, j + 1)
+          if (2 * nDropped + 2 > dropped.length)
+            dropped = java.util.Arrays.copyOf(dropped, 2 * dropped.length)
+          dropped(2 * nDropped) = (x1 + x2) / 2; dropped(2 * nDropped + 1) = (y1 + y2) / 2
+          nDropped += 1
+          run = j + 1
+        }
+        j += 1
+      }
+      node(run, nv)
+    }
+    var li = 0
+    while (li < lines.length) { nodeUncovered(li); li += 1 }
+
     noder.node()
     val arr = new Arrangement(noder.edges)
     arr.build()
@@ -583,7 +670,7 @@ object BufferOp {
       if (!separated(f) && !arr.faceUnbounded(f)) return null
       f += 1
     }
-    val m = math.min(d / 2, 2 * d * (1 - math.cos(math.Pi / (4 * math.max(1, qs)))))
+    val m = math.min(d / 2, 2 * sag)
     def within(px: Double, py: Double, reach: Double): Boolean =
       !ptree.rangeSearch(Env(px - m, py - m, px + m, py + m))(i => !inPiece(i, px, py, reach))
     def surely(in: Boolean, px: Double, py: Double): Boolean =
@@ -609,6 +696,13 @@ object BufferOp {
         if (wrong(kept(lf), mx + nx, my + ny) || wrong(kept(lf), mx - nx, my - ny)) return null
       }
       e += 1
+    }
+    // covered-linework guard: every dropped segment lies inside the result
+    var k = 0
+    while (k < nDropped) {
+      if (rLoc == null || rLoc.locate(dropped(2 * k), dropped(2 * k + 1)) <= 0)
+        return null
+      k += 1
     }
     r
   }

@@ -85,6 +85,8 @@ object ST {
   def st_ymin(c: Column): Column = u("st_ymin")(c)
   def st_xmax(c: Column): Column = u("st_xmax")(c)
   def st_ymax(c: Column): Column = u("st_ymax")(c)
+  /** [xmin, ymin, xmax, ymax] from one decode; null for an empty geometry. */
+  def st_envBounds(c: Column): Column = u("st_envbounds")(c)
   def st_envelope(c: Column): Column = u("st_envelope")(c)
   def st_envWidth(c: Column): Column = u("st_envwidth")(c)
   def st_envHeight(c: Column): Column = u("st_envheight")(c)

@@ -220,9 +220,14 @@ object SpatialJoins {
       radius: Double, level: Int,
       saltBuckets: Int = 1): DataFrame = {
     require(radius >= 0, "radius must be non-negative")
+    // the four bounds come from one st_envBounds (the Project evaluates
+    // the repeated subexpression once); a null or empty geometry gives a
+    // null envelope, which covers no cell
     planCellJoin(left, leftGeom, right, rightGeom, level, saltBuckets)(
-      g => st_makeEnvelope(st_xmin(g) - radius, st_ymin(g) - radius,
-        st_xmax(g) + radius, st_ymax(g) + radius),
+      g => {
+        val b = st_envBounds(g)
+        st_makeEnvelope(b(0) - radius, b(1) - radius, b(2) + radius, b(3) + radius)
+      },
       (l, r) => st_distance(l, r) <= radius)
   }
 

@@ -183,6 +183,23 @@ class BufferStyleSpec extends AnyFunSuite {
     assert(Relate.covers(right, g("POINT(11.0 -0.9)"))) // round join fills outer corner (dist ~1.35 < 1.5)
   }
 
+  test("single-sided: short segments keep their linework on the first walk") {
+    // segments shorter than d lie inside their neighbours' reach; the
+    // first (round-style) walk must still emit the line itself, which
+    // bounds a single-sided buffer, and give the piece walk's result
+    for (wkt <- Seq("LINESTRING(0 0,1 0,2 0,3 0)", "LINESTRING(0 0,0.5 0.2,1 0,1.5 0.3,2 0)",
+                    "LINESTRING(0 0,1 0,1 1,0 1,0 0)");
+         d <- Seq(2.0, -2.0)) {
+      val l = g(wkt)
+      val side = if (d > 0) 1 else -1
+      val st = Style(singleSided = true)
+      val first = BufferOp.arrangementBuffer(l, 2.0, st, grow = true, side, pieceWalk = false)
+      val piece = BufferOp.arrangementBuffer(l, 2.0, st, grow = true, side, pieceWalk = true)
+      assert(first != null && Wkt.write(first) == Wkt.write(piece), s"$wkt d=$d")
+      assert(Wkt.write(BufferOp.buffer(l, d, st)) == Wkt.write(piece), s"$wkt d=$d")
+    }
+  }
+
   test("styled buffer on polygon rings: mitred erosion keeps corners sharp") {
     val sq = g("POLYGON((0 0,10 0,10 10,0 10,0 0))")
     val er = BufferOp.buffer(sq, -2.0, Style(join = JoinMitre))

@@ -350,4 +350,49 @@ class PropertySpec extends AnyFunSuite {
       } :| Wkt.write(g)
     }, n = 100)
   }
+
+  /** Dense star of 64-256 vertices alternating between an outer radius
+    * in [0.8, 1] r and an inner one in [0.35, 0.6] r, with angular
+    * jitter under a quarter step and, half the time, a small hole,
+    * buffered by d = 0.1 r: its tips lie closer than 2d, so most of the
+    * round walk's arcs fall deep inside the buffer (the engine
+    * benchmark's large polygons, and KernelScale's star from n = 128).
+    */
+  private val genDenseStar: Gen[(Geom, Double)] = for {
+    (cx, cy) <- genXY; r <- Gen.choose(0.01, 20.0); n <- Gen.choose(64, 256)
+    phase <- Gen.choose(0.0, 1.0); holed <- Gen.oneOf(true, false)
+    jitter <- Gen.listOfN(n, Gen.choose(-0.25, 0.25))
+    radii <- Gen.listOfN(n, Gen.choose(0.0, 1.0))
+  } yield {
+    val step = 2 * math.Pi / n
+    def ring(pts: Seq[(Double, Double)]): Seqn =
+      Seqn.xy((pts :+ pts.head).flatMap { case (x, y) => Seq(x, y) }.toArray)
+    val shell = (0 until n).map { i =>
+      val a = (phase + i + jitter(i)) * step
+      val rr = r * (if (i % 2 == 0) 0.8 + 0.2 * radii(i) else 0.35 + 0.25 * radii(i))
+      (cx + rr * math.cos(a), cy + rr * math.sin(a))
+    }
+    val hole = (0 until 6).reverse.map { i =>
+      val a = i * math.Pi / 3
+      (cx + 0.1 * r * math.cos(a), cy + 0.1 * r * math.sin(a))
+    }
+    (GPoly(if (holed) Array(ring(shell), ring(hole)) else Array(ring(shell)), CT.XY), 0.1 * r)
+  }
+
+  test("buffer: the default buffer is the piece walk's region") {
+    val gen = Gen.oneOf(
+      Gen.oneOf(genBoxPoly, genHolePoly, genLine, genStar, genHoledStar, genWalk)
+        .map(g => (g, bufferRadius(g))),
+      genDenseStar)
+    check("region", Prop.forAll(gen) { case (g, d) =>
+      Validate.isValid(g) ==> {
+        val b = BufferOp.buffer(g, d)
+        val p = BufferOp.arrangementBuffer(g, d, BufferOp.Style(), grow = true, side = 0,
+          pieceWalk = true)
+        val sd = Measure.area(SetOps.symDifference(b, p))
+        (Validate.isValid(b) && sd <= 1e-9 * Measure.area(p)) :|
+          s"${Wkt.write(g)} d=$d: symmetric difference $sd"
+      }
+    }, n = 150)
+  }
 }
