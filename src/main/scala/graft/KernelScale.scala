@@ -8,7 +8,9 @@ import graft.core._
   * relate, isValid and intersection of concave star polygons at
   * n = 2^2..2^8, in microseconds per call; buffer also with
   * "endcap=flat join=mitre" and "join=bevel", and relate also against
-  * [[relateGC]].
+  * [[relateGC]]; then the unary union of 16 overlapping 64-vertex stars
+  * on a 4 x 4 grid (the single-arrangement n-ary path) and makeValid of
+  * [[selfCrossingStar]] at n = 128.
   * Usage: runMain graft.KernelScale [small]  ("small": the rung only)
   */
 object KernelScale {
@@ -23,19 +25,32 @@ object KernelScale {
     coords(2 * n) = coords(0); coords(2 * n + 1) = coords(1)
     GPoly(Array(new Seqn(coords, CT.XY)), CT.XY)
   }
-  /** Star polygon around (cx, 0): n vertices alternating between
+  /** Star polygon around (cx, cy): n vertices alternating between
     * radius 1 and 0.6 (concave from n = 6 on).
     */
-  def star(cx: Double, n: Int): Geom = {
+  def star(cx: Double, n: Int, cy: Double = 0.0): Geom = {
     val coords = new Array[Double](2 * (n + 1))
     var i = 0
     while (i < n) {
       val a = math.Pi / 2 + i.toDouble / n * 2 * math.Pi
       val r = if (i % 2 == 0) 1.0 else 0.6
-      coords(2 * i) = cx + r * math.cos(a); coords(2 * i + 1) = r * math.sin(a)
+      coords(2 * i) = cx + r * math.cos(a); coords(2 * i + 1) = cy + r * math.sin(a)
       i += 1
     }
     coords(2 * n) = coords(0); coords(2 * n + 1) = coords(1)
+    GPoly(Array(new Seqn(coords, CT.XY)), CT.XY)
+  }
+  /** The star polygon {n/3} on the unit circle: its ring winds three
+    * times round the centre and crosses itself 2n times.
+    */
+  def selfCrossingStar(n: Int): Geom = {
+    val coords = new Array[Double](2 * (n + 1))
+    var i = 0
+    while (i <= n) {
+      val a = 3.0 * (i % n) / n * 2 * math.Pi
+      coords(2 * i) = math.cos(a); coords(2 * i + 1) = math.sin(a)
+      i += 1
+    }
     GPoly(Array(new Seqn(coords, CT.XY)), CT.XY)
   }
   /** A notched polygon, a line across it and a point in the notch, which
@@ -89,6 +104,14 @@ object KernelScale {
       timeUs(s"relate vs GC n=$n", out)(Relate.relate(p, relateGC))
       timeUs(s"isValid n=$n", out)(Validate.isValid(p))
       timeUs(s"intersection n=$n", out)(Overlay.intersection(p, p2))
+    }
+    val stars = GColl(Array.tabulate(16)(k => star(k % 4 * 1.5, 64, k / 4 * 1.5)), CT.XY)
+    val crossing = selfCrossingStar(128)
+    for (pass <- 1 to 2) {
+      val out = pass == 2
+      if (out) println("--- n-ary union and makeValid")
+      timeUs("unaryUnion 16 stars n=64", out)(SetOps.unaryUnion(stars))
+      timeUs("makeValid crossing n=128", out)(SetOps.makeValid(crossing))
     }
   }
   def main(args: Array[String]): Unit = {

@@ -9,12 +9,12 @@ package graft.core
   * horizontal line through the query point at ANY x.) Crossing semantics are identical to
   * [[Alg.pointInRing]]/[[Alg.pointInPolygon]]: half-open Y rule with
   * orientation test, explicit boundary detection, holes folded in via
-  * per-polygon even-odd parity (equivalent for valid shell/hole
-  * nesting, which is what the overlay feeds it).
+  * per-polygon even-odd parity (equivalent to shell-minus-holes for
+  * valid shell/hole nesting).
   *
-  * Used by the arrangement overlay's face classification, where an
-  * O(faces x edges) plain ray cast made n-ary union (and thus buffer)
-  * quadratic in vertex count.
+  * Used by relate, to locate edge midpoints in large polygon sets, and
+  * by buffer, to classify arrangement faces against the input, where
+  * an O(faces x edges) plain ray cast is quadratic in vertex count.
   */
 final class ArealLocator private (
     env: Env,

@@ -18,8 +18,9 @@ import scala.collection.mutable
   *  2. ARRANGE: the noded edges form a planar subdivision; faces are
   *     extracted by left-face half-edge traversal with hole-contour
   *     nesting.
-  *  3. CLASSIFY: each face takes one strictly-interior point, located
-  *     against both inputs (ray-casting), giving (inA, inB).
+  *  3. LABEL: faces take (inA, inB) from the input edges crossed on a
+  *     walk from the unbounded face (Arrangement.labelFaces): even-odd
+  *     within each polygon, union across polygons; no point is located.
   *  4. KEEP + DISSOLVE: faces are kept per the boolean op; edges
   *     between a kept and an unkept face are walked into shells and
   *     holes (the union of kept faces).
@@ -77,18 +78,8 @@ object SetOps {
   }
 
   def unionMany(gs: Seq[Geom]): Geom = {
-    val parts = mutable.ArrayBuffer.empty[Geom]
-    def walk(g: Geom): Unit = g match {
-      case GColl(cs, _) => cs.foreach(walk)
-      case g if g.isEmpty => ()
-      case GMPoint(ps, _) => ps.filter(!_.isEmpty).foreach(parts += _)
-      case GMLine(ls, ct) => ls.filter(!_.isEmpty).foreach(s => parts += GLine(s))
-      case GMPoly(ps, ct) => ps.filter(_.nonEmpty).foreach(p => parts += GPoly(p, ct))
-      case g => parts += g
-    }
-    gs.foreach(walk)
-    if (parts.isEmpty) return Geom.emptyGC
-    nAryUnion(parts.toSeq)
+    val parts = gs.flatMap(atomicParts)
+    if (parts.isEmpty) Geom.emptyGC else nAryUnion(parts)
   }
 
   /** Repair an invalid geometry (GEOS wrapper analogue — reference
@@ -144,53 +135,15 @@ object SetOps {
     false
   }
 
-  /** All rings of an areal geometry, defensively closed (the parser
-    * stores rings as given; pointInRing and the noder both need the
-    * closing segment explicit).
-    */
-  private def collectRings(g: Geom): IndexedSeq[Seqn] = {
-    val out = mutable.ArrayBuffer.empty[Seqn]
-    def add(r: Seqn): Unit = if (r.n >= 2) {
-      val closed =
-        if (r.x(0) == r.x(r.n - 1) && r.y(0) == r.y(r.n - 1)) r
-        else {
-          val pts = (0 until r.n).map(i => (r.x(i), r.y(i))) :+ (r.x(0), r.y(0))
-          seqnOf(pts)
-        }
-      out += closed
-    }
-    g match {
-      case GPoly(rings, _) => rings.foreach(add)
-      case GMPoly(ps, _) => ps.foreach(_.foreach(add))
-      case _ => ()
-    }
-    out.toIndexedSeq
-  }
-
+  /** Even-odd over all rings: they form one parity group. */
   private def arealMakeValid(g: Geom, epsFactor: Double): Geom = {
-    val rings = collectRings(g)
     val noder = new Noder(epsFactor)
-    rings.foreach(r => noder.addLine(r, srcA = true))
+    addRingsOf(noder, g, srcA = true)
+    val ends = Array(noder.segmentCount)
     noder.node()
     if (noder.edges.isEmpty) return GPoly(Array.empty[Seqn], CT.XY)
-    val arr = new Arrangement(noder.edges)
-    arr.build()
-    val kept = new Array[Boolean](arr.nFaces)
-    var f = 0
-    while (f < arr.nFaces) {
-      if (!arr.faceUnbounded(f)) {
-        val (px, py) = arr.faceInteriorPoint(f)
-        var odd = false
-        var i = 0
-        while (i < rings.length) {
-          if (Alg.pointInRing(rings(i), px, py) > 0) odd = !odd
-          i += 1
-        }
-        kept(f) = odd
-      }
-      f += 1
-    }
-    normalizePinches(arr.dissolve(kept))
+    val (arr, label) = labelledArrangement(noder, ends, 1)
+    normalizePinches(arr.dissolve(label.map(_ != 0)))
   }
 
   /** Dissolve can emit a pinched kept-region (two lobes sharing one
@@ -309,37 +262,15 @@ object SetOps {
     else GMPoly(polyRings.map(_.toArray).toArray, CT.XY)
   }
 
-  /** makeValid with the same escalation ladder as overlay: base
-    * tolerance first, widening snap eps on exception/invalid output,
-    * finally snap-rounding the input coordinates to a shared grid.
-    * The acceptance test IS validity — that is the operator's
-    * postcondition.
+  /** makeValid on the snap ladder; the acceptance test IS validity —
+    * that is the operator's postcondition.
     */
   private def arealMakeValidRobust(g: Geom): Geom = {
-    var lastEx: Throwable = null
-    var i = 0
-    while (i < SnapLadder.length) {
-      try {
-        val f = Noder.BaseEpsFactor * SnapLadder(i)
-        val r = arealMakeValid(g, f)
-        if (r.isEmpty || Validate.isValid(r)) return r
-      } catch { case e: Exception => lastEx = e }
-      i += 1
+    def valid(r: Geom): Boolean = r.isEmpty || Validate.isValid(r)
+    snapLadder("makeValid")(f => arealMakeValid(g, f))((r, _, _) => valid(r)) {
+      val r = arealMakeValid(gridSnapped(g)._1.head, Noder.BaseEpsFactor)
+      if (valid(r)) r else null
     }
-    try {
-      val e = g.envelope
-      val scale =
-        if (e.isEmpty) 0.0
-        else math.max(math.max(math.abs(e.xmin), math.abs(e.xmax)),
-          math.max(math.abs(e.ymin), math.abs(e.ymax)))
-      val decimals = math.max(0, math.min(12,
-        9 - math.ceil(math.log10(math.max(scale, 1e-30))).toInt))
-      val r = arealMakeValid(Geom.snapToGrid(g, decimals), Noder.BaseEpsFactor)
-      if (r.isEmpty || Validate.isValid(r)) return r
-    } catch { case e: Exception => lastEx = e }
-    if (lastEx != null) throw lastEx
-    throw new IllegalStateException(
-      "makeValid produced an invalid result at every snap-ladder rung")
   }
 
   // --------------------------------------------------- GC-aware plans
@@ -442,76 +373,31 @@ object SetOps {
     assembleMixed(arealResult, lineResult, pointResult)
   }
 
-  private[core] def debugNaryRung(polys: IndexedSeq[Geom], f: Double): Geom =
-    nAryArealUnionRung(polys, f)
-  private[core] def debugNarySane(polys: IndexedSeq[Geom], r: Geom, f: Double): Boolean =
-    nAryUnionSane(polys, r, f)
-
   /** Single-pass n-ary areal union: node ALL input boundaries in one
-    * arrangement and keep the faces covered by at least one input
-    * (inputs located per face interior point through an R-tree over
-    * input envelopes). Each input vertex participates in ONE noding
-    * pass instead of the O(log n) cascaded pairwise overlays — this is
-    * what makes buffer (union of ~2 pieces per input vertex) and large
-    * st_union_agg groups near-linear.
+    * arrangement and keep the faces inside at least one input (each
+    * input polygon is its own parity group). Each input vertex
+    * participates in ONE noding pass instead of the O(log n) cascaded
+    * pairwise overlays — this is what makes large st_union_agg groups
+    * near-linear.
     */
   private def nAryArealUnionRung(polys: IndexedSeq[Geom],
                                  epsFactor: Double): Geom = {
     val noder = new Noder(epsFactor)
-    polys.foreach(p => addRingsOf(noder, p, srcA = true))
+    val ends = mutable.ArrayBuffer.empty[Int]
+    polys.foreach(p => addRingsOf(noder, p, srcA = true, ends))
     noder.node()
-    val arr = new Arrangement(noder.edges)
-    arr.build()
-    val envs = new Array[Env](polys.length)
-    val locs = new Array[ArealLocator](polys.length)
-    var i = 0
-    while (i < polys.length) {
-      envs(i) = polys(i).envelope
-      // prepared locator for big inputs only: tiny capsule pieces are
-      // cheaper to ray-cast directly than to index
-      if (ArealLocator.edgeCount(polys(i)) >= 32)
-        locs(i) = ArealLocator.build(polys(i))
-      i += 1
-    }
-    val tree = RTree.bulkLoad(envs)
-    val kept = new Array[Boolean](arr.nFaces)
-    var f = 0
-    while (f < arr.nFaces) {
-      if (!arr.faceUnbounded(f)) {
-        val (px, py) = arr.faceInteriorPoint(f)
-        var in = false
-        tree.rangeSearch(Env(px, py, px, py)) { pi =>
-          val loc =
-            if (locs(pi) != null) locs(pi).locate(px, py)
-            else Alg.pointInAreal(polys(pi), px, py)
-          if (loc > 0) { in = true; false }
-          else true
-        }
-        kept(f) = in
-      }
-      f += 1
-    }
-    arr.dissolve(kept)
+    val (arr, label) = labelledArrangement(noder, ends.toArray, ends.length)
+    arr.dissolve(label.map(_ != 0))
   }
 
   private def nAryUnionSane(polys: IndexedSeq[Geom], r: Geom,
                             epsFactor: Double): Boolean = {
     var sumA = 0.0; var maxA = 0.0; var sumP = 0.0; var scale = 0.0
-    def perimeter(g: Geom): Double = g match {
-      case GPoly(rs, _) => rs.iterator.map(Measure.seqLength).sum
-      case GMPoly(ps, _) => ps.iterator.map(_.iterator.map(Measure.seqLength).sum).sum
-      case GColl(cs, _) => cs.iterator.map(perimeter).sum
-      case _ => 0.0
-    }
     polys.foreach { p =>
       val a = Measure.area(p)
       sumA += a; if (a > maxA) maxA = a
       sumP += perimeter(p)
-      val e = p.envelope
-      if (!e.isEmpty) {
-        scale = math.max(scale, math.max(math.max(math.abs(e.xmin), math.abs(e.xmax)),
-          math.max(math.abs(e.ymin), math.abs(e.ymax))))
-      }
+      scale = math.max(scale, scaleOf(p))
     }
     val rA = Measure.area(r)
     val tol = 4 * epsFactor * scale * sumP + 1e-9 * maxA + java.lang.Double.MIN_NORMAL
@@ -531,34 +417,14 @@ object SetOps {
     * union envelope's area approximates the mean overlap multiplicity.
     */
   private def nAryArealUnionRobust(polys: IndexedSeq[Geom]): Geom = {
-    var sumEnvA = 0.0
-    var uxmin = Double.PositiveInfinity; var uymin = Double.PositiveInfinity
-    var uxmax = Double.NegativeInfinity; var uymax = Double.NegativeInfinity
-    polys.foreach { p =>
-      val e = p.envelope
-      if (!e.isEmpty) {
-        sumEnvA += (e.xmax - e.xmin) * (e.ymax - e.ymin)
-        if (e.xmin < uxmin) uxmin = e.xmin
-        if (e.ymin < uymin) uymin = e.ymin
-        if (e.xmax > uxmax) uxmax = e.xmax
-        if (e.ymax > uymax) uymax = e.ymax
-      }
-    }
-    val unionEnvA = math.max(uxmax - uxmin, 0.0) * math.max(uymax - uymin, 0.0)
+    val envs = polys.map(_.envelope).filterNot(_.isEmpty)
+    val sumEnvA = envs.iterator.map(_.area).sum
+    val unionEnvA = if (envs.isEmpty) 0.0 else envs.reduce(_ merge _).area
     if (unionEnvA > 0 && sumEnvA > 4.0 * unionEnvA)
       return cascadedArealUnion(polys)
-    var i = 0
-    while (i < SnapLadder.length) {
-      try {
-        val f = Noder.BaseEpsFactor * SnapLadder(i)
-        val r = nAryArealUnionRung(polys, f)
-        val ok = nAryUnionSane(polys, r, f) &&
-          (i == 0 || r.isEmpty || r.dimension < 2 || Validate.isValid(r))
-        if (ok) return r
-      } catch { case _: Exception => () }
-      i += 1
-    }
-    cascadedArealUnion(polys)
+    snapLadder("n-ary union")(f => nAryArealUnionRung(polys, f)) { (r, f, escalated) =>
+      nAryUnionSane(polys, r, f) && (!escalated || validAreal(r))
+    }(cascadedArealUnion(polys))
   }
 
   /** Cascaded (balanced-tree) pairwise union in envelope-sorted order —
@@ -605,7 +471,7 @@ object SetOps {
       case (0, _) | (_, 0) => pointOverlay(a, b, op)
       case (1, 1) => lineLineOverlay(a, b, op)
       case (1, 2) => lineArealOverlay(a, b, op, lineIsA = true)
-      case (2, 1) => lineArealOverlay(b, a, swapDiffOp(op), lineIsA = false)
+      case (2, 1) => lineArealOverlay(b, a, op, lineIsA = false)
       case _ => throw new UnsupportedOperationException(
         s"overlay for dims ($da,$db) not supported")
     }
@@ -617,36 +483,79 @@ object SetOps {
     * (reference: operation_overlayng_overlay_ng_robust.go:5-34 — float
     * noder, then snapping at escalating tolerance, then snap-rounding).
     * Our base attempt already IS an eps-snapping noder, so the ladder
-    * is: base eps -> x5 -> x25 -> x125 -> x625 -> grid snap-rounding.
+    * is: base eps -> x5 -> x25 -> x125 -> x625 -> the caller's last
+    * resort.
     */
   private val SnapLadder = Seq(1.0, 5.0, 25.0, 125.0, 625.0)
 
+  /** The one snap ladder of every areal operation. `rung(f)` runs the
+    * operation with the noder's eps factor f; `accept(r, f, escalated)`
+    * is its acceptance test (`escalated` past the base rung, the hot
+    * path, where a validity check is worth its cost). A rung that
+    * throws or is not accepted hands on to the next. After the last,
+    * `lastResort` answers; when it gives null or throws, the latest
+    * exception is rethrown, or else a failure naming `what`.
+    */
+  private def snapLadder[R <: AnyRef](what: String)(rung: Double => R)(
+      accept: (R, Double, Boolean) => Boolean)(lastResort: => R): R = {
+    var lastEx: Throwable = null
+    var i = 0
+    while (i < SnapLadder.length) {
+      val f = Noder.BaseEpsFactor * SnapLadder(i)
+      try {
+        val r = rung(f)
+        if (accept(r, f, i > 0)) return r
+      } catch { case e: Exception => lastEx = e }
+      i += 1
+    }
+    val r = try lastResort catch { case e: Exception => lastEx = e; null.asInstanceOf[R] }
+    if (r != null) r
+    else if (lastEx != null) throw lastEx
+    else throw new IllegalStateException(s"$what failed at every snap-ladder rung")
+  }
+
+  /** The usual last resort: the inputs snap-rounded to a shared grid
+    * of ~9 significant figures at their coordinate scale, so every
+    * coordinate is exactly representable, and the eps factor the grid
+    * pitch amounts to (the points moved by up to that much).
+    */
+  private def gridSnapped(gs: Geom*): (Seq[Geom], Double) = {
+    val scale = math.max(gs.map(scaleOf).max, 1e-30)
+    val decimals = math.max(0, math.min(12, 9 - math.ceil(math.log10(scale)).toInt))
+    (gs.map(Geom.snapToGrid(_, decimals)), math.pow(10.0, -decimals) / scale)
+  }
+
+  private def scaleOf(g: Geom): Double = {
+    val e = g.envelope
+    if (e.isEmpty) 0.0
+    else math.max(math.max(math.abs(e.xmin), math.abs(e.xmax)),
+      math.max(math.abs(e.ymin), math.abs(e.ymax)))
+  }
+
+  private def perimeter(g: Geom): Double = g match {
+    case GPoly(rs, _) => rs.iterator.map(Measure.seqLength).sum
+    case GMPoly(ps, _) => ps.iterator.map(_.iterator.map(Measure.seqLength).sum).sum
+    case GColl(cs, _) => cs.iterator.map(perimeter).sum
+    case _ => 0.0
+  }
+
+  private def validAreal(r: Geom): Boolean = r.isEmpty || r.dimension < 2 || Validate.isValid(r)
+
   /** Cheap result invariants that a broken arrangement violates: the
     * output area must be consistent with the inputs' areas up to the
-    * snapping budget (a face misclassification or dropped face moves
-    * area by whole-face amounts, far beyond it). Legitimate snapping
-    * at tolerance eps moves each boundary point by <= ~eps, so the
-    * area can shift by at most ~eps x total boundary length — that,
-    * not a fixed relative factor, is the honest tolerance: extreme
-    * slivers (perimeter >> sqrt(area)) legitimately lose a larger
-    * area fraction to snapping.
+    * snapping budget. The inputs' areas are those of the faces the
+    * labels put inside them — their areas under the engine's even-odd
+    * rule, which is `Measure.area` for valid inputs but not for rings
+    * that overlap. Legitimate snapping at tolerance eps moves each
+    * boundary point by <= ~eps, so the area can shift by at most ~eps x
+    * total boundary length — that, not a fixed relative factor, is the
+    * honest tolerance: extreme slivers (perimeter >> sqrt(area))
+    * legitimately lose a larger area fraction to snapping.
     */
-  private def arealSane(a: Geom, b: Geom, op: Int, r: Geom,
+  private def arealSane(a: Geom, b: Geom, op: Int, r: Overlaid,
                         epsFactor: Double): Boolean = {
-    val aA = Measure.area(a); val aB = Measure.area(b)
-    val rA = Measure.area(r)
-    def scaleOf(g: Geom): Double = {
-      val e = g.envelope
-      if (e.isEmpty) 0.0
-      else math.max(math.max(math.abs(e.xmin), math.abs(e.xmax)),
-        math.max(math.abs(e.ymin), math.abs(e.ymax)))
-    }
-    def perimeter(g: Geom): Double = g match {
-      case GPoly(rs, _) => rs.iterator.map(Measure.seqLength).sum
-      case GMPoly(ps, _) => ps.iterator.map(_.iterator.map(Measure.seqLength).sum).sum
-      case GColl(cs, _) => cs.iterator.map(perimeter).sum
-      case _ => 0.0
-    }
+    val aA = r.areaA; val aB = r.areaB
+    val rA = Measure.area(r.geom)
     val eps = epsFactor * math.max(scaleOf(a), scaleOf(b))
     val tol = 4 * eps * (perimeter(a) + perimeter(b)) +
       1e-9 * math.max(aA, aB) + java.lang.Double.MIN_NORMAL
@@ -668,57 +577,24 @@ object SetOps {
                                     epsFactor: Double): Option[Geom] =
     try {
       val r = arealOverlay(a, b, OpUnion, epsFactor)
-      if (arealSane(a, b, OpUnion, r, epsFactor) &&
-          (r.isEmpty || r.dimension < 2 || Validate.isValid(r))) Some(r)
+      if (arealSane(a, b, OpUnion, r, epsFactor) && validAreal(r.geom)) Some(r.geom)
       else None
     } catch { case _: Exception => None }
 
-  /** Areal overlay with the escalation ladder: try at base tolerance
-    * (the hot path — no extra validation cost beyond an O(n) area
-    * check); on an exception or an insane result, retry with widening
-    * snap tolerance, validating escalated results; finally snap-round
-    * the INPUTS to a precision-preserving grid (~9 significant
-    * figures at the coordinate scale) and overlay the rounded inputs.
+  /** Areal overlay on the snap ladder: at base tolerance (the hot path
+    * — no extra validation cost beyond an O(n) area check), then at
+    * widening snap tolerance with validated results; the last resort
+    * overlays the grid snap-rounded inputs and judges the result at
+    * the grid's eps factor.
     */
-  private def arealOverlayRobust(a: Geom, b: Geom, op: Int): Geom = {
-    var lastEx: Throwable = null
-    var i = 0
-    while (i < SnapLadder.length) {
-      try {
-        val f = Noder.BaseEpsFactor * SnapLadder(i)
-        val r = arealOverlay(a, b, op, f)
-        val ok = arealSane(a, b, op, r, f) &&
-          (i == 0 || r.isEmpty || r.dimension < 2 || Validate.isValid(r))
-        if (ok) return r
-      } catch { case e: Exception => lastEx = e }
-      i += 1
-    }
-    // final rung: snap-rounding — quantize the inputs themselves so
-    // every coordinate is exactly representable on a common grid
-    try {
-      def scaleOf(g: Geom): Double = {
-        val e = g.envelope
-        if (e.isEmpty) 0.0
-        else math.max(math.max(math.abs(e.xmin), math.abs(e.xmax)),
-          math.max(math.abs(e.ymin), math.abs(e.ymax)))
-      }
-      val scale = math.max(scaleOf(a), scaleOf(b))
-      val decimals = math.max(0, math.min(12,
-        9 - math.ceil(math.log10(math.max(scale, 1e-30))).toInt))
-      val ga = Geom.snapToGrid(a, decimals)
-      val gb = Geom.snapToGrid(b, decimals)
+  private def arealOverlayRobust(a: Geom, b: Geom, op: Int): Geom =
+    snapLadder(s"overlay (op=$op)")(f => arealOverlay(a, b, op, f)) { (r, f, escalated) =>
+      arealSane(a, b, op, r, f) && (!escalated || validAreal(r.geom))
+    } {
+      val (Seq(ga, gb), gridEps) = gridSnapped(a, b)
       val r = arealOverlay(ga, gb, op, Noder.BaseEpsFactor)
-      // grid snapping moved points by up to the grid pitch; judge the
-      // result at the equivalent eps factor, not the base one
-      val gridEps = math.pow(10.0, -decimals) / math.max(scale, 1e-30)
-      if (arealSane(ga, gb, op, r, math.max(gridEps, Noder.BaseEpsFactor))) return r
-    } catch { case e: Exception => lastEx = e }
-    if (lastEx != null) throw lastEx
-    throw new IllegalStateException(
-      s"overlay failed area-sanity at every snap-ladder rung (op=$op)")
-  }
-
-  private def swapDiffOp(op: Int): Int = op // symmetry handled inside
+      if (arealSane(ga, gb, op, r, math.max(gridEps, Noder.BaseEpsFactor))) r else null
+    }.geom
 
   // --------------------------------------------------- point overlays
 
@@ -837,11 +713,33 @@ object SetOps {
 
   // ---------------------------------------------------- areal x areal
 
-  private def addRingsOf(noder: Noder, g: Geom, srcA: Boolean): Unit = g match {
-    case GPoly(rings, _) => rings.foreach(r => noder.addLine(r, srcA))
-    case GMPoly(ps, _) => ps.foreach(_.foreach(r => noder.addLine(r, srcA)))
-    case GColl(cs, _) => cs.foreach(addRingsOf(noder, _, srcA))
+  /** Adds g's rings to the noder, each closed (the parser keeps a ring
+    * as given), and after each polygon appends the noder's segment
+    * count to `ends`: the end of that polygon's parity group.
+    */
+  private def addRingsOf(noder: Noder, g: Geom, srcA: Boolean,
+                         ends: mutable.ArrayBuffer[Int] = null): Unit = g match {
+    case GPoly(rings, _) =>
+      rings.foreach { r =>
+        noder.addLine(r, srcA)
+        if (r.n >= 2 && (r.x(0) != r.x(r.n - 1) || r.y(0) != r.y(r.n - 1)))
+          noder.addLine(Seqn.of(r.x(r.n - 1), r.y(r.n - 1), r.x(0), r.y(0)), srcA)
+      }
+      if (ends != null) ends += noder.segmentCount
+    case GMPoly(ps, ct) => ps.foreach(p => addRingsOf(noder, GPoly(p, ct), srcA, ends))
+    case GColl(cs, _) => cs.foreach(addRingsOf(noder, _, srcA, ends))
     case _ => ()
+  }
+
+  /** The arrangement of a noded set of rings, with each face's label
+    * (bit 1: inside A, bit 2: inside B); `ends` closes the parity
+    * groups, of which the first `groupsA` are A's.
+    */
+  private def labelledArrangement(noder: Noder, ends: Array[Int],
+                                  groupsA: Int): (Arrangement, Array[Int]) = {
+    val arr = new Arrangement(noder.edges)
+    arr.build()
+    (arr, arr.labelFaces(noder, ends, groupsA))
   }
 
   private def keep(op: Int, inA: Boolean, inB: Boolean): Boolean = op match {
@@ -851,59 +749,48 @@ object SetOps {
     case OpSym => inA ^ inB
   }
 
-  private def arealOverlay(a: Geom, b: Geom, op: Int,
-                           epsFactor: Double = Noder.BaseEpsFactor): Geom = {
-    val noder = new Noder(epsFactor)
-    addRingsOf(noder, a, srcA = true)
-    addRingsOf(noder, b, srcA = false)
-    noder.node()
-    val arr = new Arrangement(noder.edges)
-    arr.build()
+  /** An overlay rung's result, and the areas of the faces labelled
+    * inside each input (what its area check judges against).
+    */
+  private final class Overlaid(val geom: Geom, val areaA: Double, val areaB: Double)
 
-    // classify faces — prepared locators when the inputs are big
-    // enough that O(faces x edges) plain ray casts would dominate
-    val locA = if (ArealLocator.edgeCount(a) >= 32) ArealLocator.build(a) else null
-    val locB = if (ArealLocator.edgeCount(b) >= 32) ArealLocator.build(b) else null
+  /** Each input polygon is its own parity group. */
+  private def arealOverlay(a: Geom, b: Geom, op: Int, epsFactor: Double): Overlaid = {
+    val noder = new Noder(epsFactor)
+    val ends = mutable.ArrayBuffer.empty[Int]
+    addRingsOf(noder, a, srcA = true, ends)
+    val groupsA = ends.length
+    addRingsOf(noder, b, srcA = false, ends)
+    noder.node()
+    val (arr, label) = labelledArrangement(noder, ends.toArray, groupsA)
     val keptFace = new Array[Boolean](arr.nFaces)
-    var f = 0
+    var areaA = 0.0; var areaB = 0.0
+    var f = 1 // face 0, the unbounded face, is in neither input
     while (f < arr.nFaces) {
-      if (!arr.faceUnbounded(f)) {
-        val (px, py) = arr.faceInteriorPoint(f)
-        val inA = (if (locA != null) locA.locate(px, py)
-                   else Alg.pointInAreal(a, px, py)) > 0
-        val inB = (if (locB != null) locB.locate(px, py)
-                   else Alg.pointInAreal(b, px, py)) > 0
-        keptFace(f) = keep(op, inA, inB)
-      }
+      val inA = (label(f) & 1) != 0; val inB = (label(f) & 2) != 0
+      keptFace(f) = keep(op, inA, inB)
+      if (inA) areaA += arr.faceArea(f)
+      if (inB) areaB += arr.faceArea(f)
       f += 1
     }
-
     val arealResult = arr.dissolve(keptFace)
+    val geom = if (op == OpInt) withLowerDims(noder, arr, keptFace, arealResult) else arealResult
+    new Overlaid(geom, areaA, areaB)
+  }
 
-    if (op != OpInt) return arealResult
-
-    // lower-dimensional intersection output: collinear boundary pieces
-    // between A and B not adjacent to a kept face; then isolated touch
-    // points not covered by anything kept. Typical clean polygon
-    // intersections have neither — skip the hash-set bookkeeping.
-    var anyShared = false
-    var ei = 0
-    while (!anyShared && ei < arr.edges.length) {
-      val e = arr.edges(ei)
-      if (e.aSrc && e.bSrc) anyShared = true
-      ei += 1
-    }
-    if (!anyShared && noder.abNodeCount == 0) return arealResult
-
-    val sharedEdges = mutable.ArrayBuffer.empty[NodedEdge]
-    ei = 0
-    while (ei < arr.edges.length) {
-      val e = arr.edges(ei)
-      if (e.aSrc && e.bSrc && !keptFace(arr.leftFace(ei)) && !keptFace(arr.rightFace(ei)))
-        sharedEdges += e
-      ei += 1
-    }
-    val lineG = linesFromEdges(sharedEdges.toSeq)
+  /** The intersection's lower-dimensional output besides its areal
+    * part: collinear boundary pieces between A and B not adjacent to a
+    * kept face, then isolated touch points not covered by anything
+    * kept. Typical clean polygon intersections have neither — skip the
+    * hash-set bookkeeping.
+    */
+  private def withLowerDims(noder: Noder, arr: Arrangement, keptFace: Array[Boolean],
+                            arealResult: Geom): Geom = {
+    if (noder.abNodeCount == 0 && !arr.edges.exists(e => e.aSrc && e.bSrc)) return arealResult
+    val lineG = linesFromEdges(arr.edges.indices.collect {
+      case ei if arr.edges(ei).aSrc && arr.edges(ei).bSrc &&
+        !keptFace(arr.leftFace(ei)) && !keptFace(arr.rightFace(ei)) => arr.edges(ei)
+    })
 
     val touchPts =
       if (noder.abNodeCount == 0) Seq.empty[(Double, Double)]
@@ -914,7 +801,7 @@ object SetOps {
         val covered = new Array[Boolean](noder.abNodeCount)
         var nCovered = 0
         def cover(k: Int): Unit = if (k >= 0 && !covered(k)) { covered(k) = true; nCovered += 1 }
-        ei = 0
+        var ei = 0
         while (ei < arr.edges.length && nCovered < covered.length) {
           val e = arr.edges(ei)
           val keptAdj = keptFace(arr.leftFace(ei)) || keptFace(arr.rightFace(ei)) ||
@@ -1480,8 +1367,8 @@ final class Noder(epsFactor: Double = Noder.BaseEpsFactor) {
 }
 
 /** Planar arrangement over noded edges: half-edge structure, left-face
-  * traversal, hole-contour nesting, face interior points, and dissolve
-  * of kept faces into shells + holes.
+  * traversal, hole-contour nesting, face labels from the edges crossed,
+  * face interior points, and dissolve of kept faces into shells + holes.
   */
 final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
   // node registry: primitive coordinate columns, node ids filed by a
@@ -1526,7 +1413,6 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
   private var nContours = 0
   private var contourFace: Array[Int] = _
   var nFaces: Int = 0
-  private var unbounded: Array[Boolean] = _
   // face f's contours: faceContour(faceStart(f) until faceStart(f + 1)),
   // a bounded face's outer (CCW) contour first
   private var faceStart: Array[Int] = _
@@ -1642,8 +1528,6 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
     var c = 0
     while (c < nc) { if (contourArea(c) > 0) nCcw += 1; c += 1 }
     nFaces = 1 + nCcw
-    unbounded = new Array[Boolean](nFaces)
-    unbounded(0) = true
     val ccwArr = new Array[Int](nCcw)
     var k = 0
     c = 0
@@ -1747,9 +1631,123 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
     Seqn.xy(arr)
   }
 
-  def faceUnbounded(f: Int): Boolean = unbounded(f)
+  def faceUnbounded(f: Int): Boolean = f == 0
   def leftFace(edgeIdx: Int): Int = heFace(2 * edgeIdx)
   def rightFace(edgeIdx: Int): Int = heFace(2 * edgeIdx + 1)
+
+  /** Signed area of bounded face f: its outer contour less its holes. */
+  def faceArea(f: Int): Double = {
+    var s = 0.0
+    var k = faceStart(f)
+    while (k < faceStart(f + 1)) { s += contourArea(faceContour(k)); k += 1 }
+    s
+  }
+
+  /** Inside/outside of every face, from the input edges crossed (the
+    * reference's OverlayNG labels faces this way, JTS OverlayLabeller;
+    * no point is located). `noder` is the one these edges came from.
+    * Each of its source segments belongs to one parity group: group g
+    * holds the segment ids `groupEnd(g - 1)` (0 for g = 0) until
+    * `groupEnd(g)`, and groups below `groupsA` belong to input A, the
+    * rest to B. An edge toggles each group that has an odd number of
+    * source segments on it, so a face lies inside group g iff a path to
+    * it from the unbounded face crosses g's edges an odd number of
+    * times, and inside an input iff some group of that input is odd
+    * there: even-odd within a group, union across groups.
+    *
+    * The walk is depth-first from face 0 across edges, with one parity
+    * array toggled on entering a face and untoggled on leaving it; a
+    * nested component is reached through its outer contour, which
+    * belongs to the enclosing face. Each face keeps a 64-bit XOR of the
+    * keys of its odd groups, and every edge must separate two faces
+    * whose hashes differ by exactly the edge's own groups. A face that
+    * no walk reaches, or an edge that breaks this, means the noding
+    * broke the topology: that throws, and the snap ladder escalates.
+    *
+    * Returns per face bit 1 (inside A) and bit 2 (inside B).
+    */
+  def labelFaces(noder: Noder, groupEnd: Array[Int], groupsA: Int): Array[Int] = {
+    val nGroups = groupEnd.length
+    val segGroup = new Array[Int](if (nGroups == 0) 0 else groupEnd(nGroups - 1))
+    val key = new Array[Long](nGroups)
+    val keys = new java.util.SplittableRandom(1L)
+    var g = 0
+    while (g < nGroups) {
+      java.util.Arrays.fill(segGroup, if (g == 0) 0 else groupEnd(g - 1), groupEnd(g), g)
+      key(g) = keys.nextLong()
+      g += 1
+    }
+    def edgeHash(e: Int): Long = {
+      var h = 0L
+      var l = noder.firstSource(e)
+      while (l >= 0) { h ^= key(segGroup(noder.sourceSegment(l))); l = noder.nextSource(l) }
+      h
+    }
+    // each face's half-edges, over all its contours
+    val m = edges.length
+    val rowStart = new Array[Int](nFaces + 1)
+    var h = 0
+    while (h < 2 * m) { rowStart(heFace(h) + 1) += 1; h += 1 }
+    var f = 0
+    while (f < nFaces) { rowStart(f + 1) += rowStart(f); f += 1 }
+    val row = new Array[Int](2 * m)
+    val fill = java.util.Arrays.copyOf(rowStart, nFaces)
+    h = 0
+    while (h < 2 * m) { row(fill(heFace(h))) = h; fill(heFace(h)) += 1; h += 1 }
+
+    val odd = new Array[Boolean](nGroups)
+    var oddA = 0; var oddB = 0; var hash = 0L
+    def cross(e: Int): Unit = {
+      var l = noder.firstSource(e)
+      while (l >= 0) {
+        val g = segGroup(noder.sourceSegment(l))
+        odd(g) = !odd(g)
+        val d = if (odd(g)) 1 else -1
+        if (g < groupsA) oddA += d else oddB += d
+        hash ^= key(g)
+        l = noder.nextSource(l)
+      }
+    }
+    val label = new Array[Int](nFaces)
+    val faceHash = new Array[Long](nFaces)
+    val seen = new Array[Boolean](nFaces)
+    // the walk's stack: a face, the next of its half-edges to cross,
+    // and the edge it was entered by
+    val stFace = new Array[Int](nFaces)
+    val stNext = new Array[Int](nFaces)
+    val stEdge = new Array[Int](nFaces)
+    seen(0) = true
+    stNext(0) = rowStart(0); stEdge(0) = -1
+    var sp = 1
+    while (sp > 0) {
+      val f = stFace(sp - 1)
+      val k = stNext(sp - 1)
+      if (k == rowStart(f + 1)) {
+        sp -= 1
+        if (stEdge(sp) >= 0) cross(stEdge(sp))
+      } else {
+        stNext(sp - 1) = k + 1
+        val e = row(k) >> 1
+        val to = heFace(row(k) ^ 1)
+        if (!seen(to)) {
+          seen(to) = true
+          cross(e)
+          label(to) = (if (oddA > 0) 1 else 0) | (if (oddB > 0) 2 else 0)
+          faceHash(to) = hash
+          stFace(sp) = to; stNext(sp) = rowStart(to); stEdge(sp) = e
+          sp += 1
+        }
+      }
+    }
+    if (seen.contains(false)) throw new IllegalStateException("a face is not reached from the unbounded face")
+    var e = 0
+    while (e < m) {
+      if ((faceHash(heFace(2 * e)) ^ faceHash(heFace(2 * e + 1))) != edgeHash(e))
+        throw new IllegalStateException(s"the face labels disagree across edge $e")
+      e += 1
+    }
+    label
+  }
 
   /** A point strictly interior to bounded face f: point-on-surface of
     * the face polygon (outer CCW contour + its hole contours).

@@ -240,6 +240,19 @@ class PropertySpec extends AnyFunSuite {
     }, n = 200)
   }
 
+  for ((name, op) <- Seq[(String, (Geom, Geom) => Geom)](
+         "st_union" -> SetOps.union, "st_difference" -> SetOps.difference)) {
+    test(s"$name of the same pairs is valid, either way round") {
+      check(name, Prop.forAll(Gen.oneOf(genNotchPoly, genHolePoly),
+        Gen.oneOf(genBoxPoly, genOctagon)) { (a, b) =>
+        val ab = op(a, b)
+        val ba = op(b, a)
+        (Validate.isValid(ab) && Validate.isValid(ba)) :|
+          s"${Wkt.write(a)}, ${Wkt.write(b)}: ${Wkt.write(ab)}; ${Wkt.write(ba)}"
+      }, n = 200)
+    }
+  }
+
   test("distance zero iff intersects") {
     check("distance", Prop.forAll(genAny, genAny) { (a, b) =>
       Intersects.distance(a, b) match {
