@@ -30,10 +30,10 @@ import scala.collection.mutable
   */
 object SetOps {
 
-  private final val OpInt = 0
-  private final val OpUnion = 1
-  private final val OpDiff = 2
-  private final val OpSym = 3
+  private[core] final val OpInt = 0
+  private[core] final val OpUnion = 1
+  private[core] final val OpDiff = 2
+  private[core] final val OpSym = 3
 
   // ------------------------------------------------------------ public
 
@@ -142,8 +142,9 @@ object SetOps {
     val ends = Array(noder.segmentCount)
     noder.node()
     if (noder.edges.isEmpty) return GPoly(Array.empty[Seqn], CT.XY)
-    val (arr, label) = labelledArrangement(noder, ends, 1)
-    normalizePinches(arr.dissolve(label.map(_ != 0)))
+    val arr = new Arrangement(noder.edges)
+    arr.build()
+    normalizePinches(arr.dissolve(arr.labelFaces(noder, ends, 1, new Array[Double](1)).map(_ != 0)))
   }
 
   /** Dissolve can emit a pinched kept-region (two lobes sharing one
@@ -373,40 +374,15 @@ object SetOps {
     assembleMixed(arealResult, lineResult, pointResult)
   }
 
-  /** Single-pass n-ary areal union: node ALL input boundaries in one
-    * arrangement and keep the faces inside at least one input (each
-    * input polygon is its own parity group). Each input vertex
-    * participates in ONE noding pass instead of the O(log n) cascaded
-    * pairwise overlays — this is what makes large st_union_agg groups
-    * near-linear.
-    */
-  private def nAryArealUnionRung(polys: IndexedSeq[Geom],
-                                 epsFactor: Double): Geom = {
-    val noder = new Noder(epsFactor)
-    val ends = mutable.ArrayBuffer.empty[Int]
-    polys.foreach(p => addRingsOf(noder, p, srcA = true, ends))
-    noder.node()
-    val (arr, label) = labelledArrangement(noder, ends.toArray, ends.length)
-    arr.dissolve(label.map(_ != 0))
-  }
-
-  private def nAryUnionSane(polys: IndexedSeq[Geom], r: Geom,
-                            epsFactor: Double): Boolean = {
-    var sumA = 0.0; var maxA = 0.0; var sumP = 0.0; var scale = 0.0
-    polys.foreach { p =>
-      val a = Measure.area(p)
-      sumA += a; if (a > maxA) maxA = a
-      sumP += perimeter(p)
-      scale = math.max(scale, scaleOf(p))
-    }
-    val rA = Measure.area(r)
-    val tol = 4 * epsFactor * scale * sumP + 1e-9 * maxA + java.lang.Double.MIN_NORMAL
-    rA >= maxA - tol && rA <= sumA + tol
-  }
-
-  /** n-ary areal union with the same escalation ladder as the binary
-    * overlay; falls back to the cascaded pairwise union (whose
-    * per-pair ladders localize hard cases) if every rung fails.
+  /** Single-pass n-ary areal union: the areal overlay rung with every
+    * input polygon in A (each its own parity group) and no B, so ALL
+    * input boundaries are noded in one arrangement and the faces inside
+    * at least one input are kept. Each input vertex participates in ONE
+    * noding pass instead of the O(log n) cascaded pairwise overlays —
+    * this is what makes large st_union_agg groups near-linear. It runs
+    * on the binary overlay's ladder and acceptance test, and falls back
+    * to the cascaded pairwise union (whose per-pair ladders localize
+    * hard cases) if every rung fails.
     *
     * The single-arrangement pass wins when inputs are mostly disjoint
     * (each vertex noded once instead of O(log n) times) but loses
@@ -422,9 +398,11 @@ object SetOps {
     val unionEnvA = if (envs.isEmpty) 0.0 else envs.reduce(_ merge _).area
     if (unionEnvA > 0 && sumEnvA > 4.0 * unionEnvA)
       return cascadedArealUnion(polys)
-    snapLadder("n-ary union")(f => nAryArealUnionRung(polys, f)) { (r, f, escalated) =>
-      nAryUnionSane(polys, r, f) && (!escalated || validAreal(r))
-    }(cascadedArealUnion(polys))
+    val all = GColl(polys.toArray, CT.XY)
+    snapLadder("n-ary union")(f => arealOverlay(all, GPoly(Array.empty, CT.XY), OpUnion, f))(
+        accepted(new Groups(all), OpUnion)) {
+      new Overlaid(cascadedArealUnion(polys), 0.0, 0.0, null)
+    }.geom
   }
 
   /** Cascaded (balanced-tree) pairwise union in envelope-sorted order —
@@ -532,33 +510,46 @@ object SetOps {
       math.max(math.abs(e.ymin), math.abs(e.ymax)))
   }
 
-  private def perimeter(g: Geom): Double = g match {
-    case GPoly(rs, _) => rs.iterator.map(Measure.seqLength).sum
-    case GMPoly(ps, _) => ps.iterator.map(_.iterator.map(Measure.seqLength).sum).sum
-    case GColl(cs, _) => cs.iterator.map(perimeter).sum
-    case _ => 0.0
+  /** The polygons of an areal rung's inputs, in parity-group order,
+    * with what its area check judges the labels against: each polygon's
+    * own area (shell less holes) and perimeter, and — asked only where
+    * a labelled area disagrees with that area — their validity.
+    */
+  private[core] final class Groups(gs: Geom*) {
+    val polys: IndexedSeq[GPoly] = gs.flatMap(polygonsOf).toIndexedSeq
+    val area: Array[Double] = polys.map(Measure.area).toArray
+    val perim: Array[Double] = polys.map(_.rings.iterator.map(Measure.seqLength).sum).toArray
+    val scale: Double = gs.map(scaleOf).max
+    lazy val valid: IndexedSeq[Boolean] = polys.map(Validate.isValid)
   }
 
-  private def validAreal(r: Geom): Boolean = r.isEmpty || r.dimension < 2 || Validate.isValid(r)
-
-  /** Cheap result invariants that a broken arrangement violates: the
-    * output area must be consistent with the inputs' areas up to the
-    * snapping budget. The inputs' areas are those of the faces the
-    * labels put inside them — their areas under the engine's even-odd
-    * rule, which is `Measure.area` for valid inputs but not for rings
-    * that overlap. Legitimate snapping at tolerance eps moves each
-    * boundary point by <= ~eps, so the area can shift by at most ~eps x
-    * total boundary length — that, not a fixed relative factor, is the
+  /** Cheap result invariants that a broken arrangement violates, up to
+    * the snapping budget. Legitimate snapping at tolerance eps moves
+    * each boundary point by <= ~eps, so an area can shift by at most
+    * ~eps x boundary length — that, not a fixed relative factor, is the
     * honest tolerance: extreme slivers (perimeter >> sqrt(area))
     * legitimately lose a larger area fraction to snapping.
+    *
+    * First, each parity group's labelled area must be its polygon's
+    * own area, which does not come from the labels: a missed crossing
+    * or a component nested in the wrong face moves area between the
+    * labels. Where the two disagree the polygon is validated; an
+    * invalid polygon's shell-less-holes sum is no area at all when its
+    * rings overlap or cross, so its labelled (even-odd) area stands,
+    * judged by the bounds below only. Second, the result's area must
+    * lie within the op's bounds on the inputs' labelled areas.
     */
-  private def arealSane(a: Geom, b: Geom, op: Int, r: Overlaid,
-                        epsFactor: Double): Boolean = {
+  private[core] def arealSane(gr: Groups, op: Int, r: Overlaid, epsFactor: Double): Boolean = {
+    val eps = epsFactor * gr.scale
+    var g = 0
+    while (g < gr.polys.length) {
+      val tol = 4 * eps * gr.perim(g) + 1e-9 * math.abs(gr.area(g)) + java.lang.Double.MIN_NORMAL
+      if (math.abs(r.groupArea(g) - gr.area(g)) > tol && gr.valid(g)) return false
+      g += 1
+    }
     val aA = r.areaA; val aB = r.areaB
     val rA = Measure.area(r.geom)
-    val eps = epsFactor * math.max(scaleOf(a), scaleOf(b))
-    val tol = 4 * eps * (perimeter(a) + perimeter(b)) +
-      1e-9 * math.max(aA, aB) + java.lang.Double.MIN_NORMAL
+    val tol = 4 * eps * gr.perim.sum + 1e-9 * math.max(aA, aB) + java.lang.Double.MIN_NORMAL
     op match {
       case OpInt => rA <= math.min(aA, aB) + tol
       case OpUnion => rA >= math.max(aA, aB) - tol && rA <= aA + aB + tol
@@ -567,33 +558,31 @@ object SetOps {
     }
   }
 
-  /** Test hook: one rung of the ladder at a fixed eps factor, with
-    * the same pass criteria the ladder applies — lets specs exhibit
-    * inputs where the base rung demonstrably fails and the escalation
-    * recovers. Returns None when the rung throws or produces an
-    * insane/invalid result.
+  /** The ladder's acceptance test of an areal overlay rung: the area
+    * check, and past the base rung (the hot path, where an O(n) area
+    * check is all it pays) validity too.
     */
-  private[core] def unionSingleRung(a: Geom, b: Geom,
-                                    epsFactor: Double): Option[Geom] =
-    try {
-      val r = arealOverlay(a, b, OpUnion, epsFactor)
-      if (arealSane(a, b, OpUnion, r, epsFactor) && validAreal(r.geom)) Some(r.geom)
-      else None
-    } catch { case _: Exception => None }
+  private def accepted(gr: Groups, op: Int)(r: Overlaid, f: Double, escalated: Boolean): Boolean =
+    arealSane(gr, op, r, f) && (!escalated || r.geom.dimension < 2 || Validate.isValid(r.geom))
 
-  /** Areal overlay on the snap ladder: at base tolerance (the hot path
-    * — no extra validation cost beyond an O(n) area check), then at
+  /** Test hook: an escalated union rung — lets specs exhibit inputs
+    * where the base rung fails and the escalation recovers.
+    */
+  private[core] def unionSingleRung(a: Geom, b: Geom, epsFactor: Double): Option[Geom] =
+    try Some(arealOverlay(a, b, OpUnion, epsFactor))
+      .filter(accepted(new Groups(a, b), OpUnion)(_, epsFactor, escalated = true)).map(_.geom)
+    catch { case _: Exception => None }
+
+  /** Areal overlay on the snap ladder: at base tolerance, then at
     * widening snap tolerance with validated results; the last resort
     * overlays the grid snap-rounded inputs and judges the result at
     * the grid's eps factor.
     */
   private def arealOverlayRobust(a: Geom, b: Geom, op: Int): Geom =
-    snapLadder(s"overlay (op=$op)")(f => arealOverlay(a, b, op, f)) { (r, f, escalated) =>
-      arealSane(a, b, op, r, f) && (!escalated || validAreal(r.geom))
-    } {
+    snapLadder(s"overlay (op=$op)")(f => arealOverlay(a, b, op, f))(accepted(new Groups(a, b), op)) {
       val (Seq(ga, gb), gridEps) = gridSnapped(a, b)
       val r = arealOverlay(ga, gb, op, Noder.BaseEpsFactor)
-      if (arealSane(ga, gb, op, r, math.max(gridEps, Noder.BaseEpsFactor))) r else null
+      if (arealSane(new Groups(ga, gb), op, r, math.max(gridEps, Noder.BaseEpsFactor))) r else null
     }.geom
 
   // --------------------------------------------------- point overlays
@@ -713,34 +702,28 @@ object SetOps {
 
   // ---------------------------------------------------- areal x areal
 
+  /** g's polygons, in the order they become parity groups. */
+  private def polygonsOf(g: Geom): IndexedSeq[GPoly] = g match {
+    case p: GPoly => IndexedSeq(p)
+    case GMPoly(ps, ct) => ps.toIndexedSeq.map(GPoly(_, ct))
+    case GColl(cs, _) => cs.toIndexedSeq.flatMap(polygonsOf)
+    case _ => IndexedSeq.empty
+  }
+
   /** Adds g's rings to the noder, each closed (the parser keeps a ring
     * as given), and after each polygon appends the noder's segment
     * count to `ends`: the end of that polygon's parity group.
     */
   private def addRingsOf(noder: Noder, g: Geom, srcA: Boolean,
-                         ends: mutable.ArrayBuffer[Int] = null): Unit = g match {
-    case GPoly(rings, _) =>
-      rings.foreach { r =>
+                         ends: mutable.ArrayBuffer[Int] = null): Unit =
+    polygonsOf(g).foreach { p =>
+      p.rings.foreach { r =>
         noder.addLine(r, srcA)
         if (r.n >= 2 && (r.x(0) != r.x(r.n - 1) || r.y(0) != r.y(r.n - 1)))
           noder.addLine(Seqn.of(r.x(r.n - 1), r.y(r.n - 1), r.x(0), r.y(0)), srcA)
       }
       if (ends != null) ends += noder.segmentCount
-    case GMPoly(ps, ct) => ps.foreach(p => addRingsOf(noder, GPoly(p, ct), srcA, ends))
-    case GColl(cs, _) => cs.foreach(addRingsOf(noder, _, srcA, ends))
-    case _ => ()
-  }
-
-  /** The arrangement of a noded set of rings, with each face's label
-    * (bit 1: inside A, bit 2: inside B); `ends` closes the parity
-    * groups, of which the first `groupsA` are A's.
-    */
-  private def labelledArrangement(noder: Noder, ends: Array[Int],
-                                  groupsA: Int): (Arrangement, Array[Int]) = {
-    val arr = new Arrangement(noder.edges)
-    arr.build()
-    (arr, arr.labelFaces(noder, ends, groupsA))
-  }
+    }
 
   private def keep(op: Int, inA: Boolean, inB: Boolean): Boolean = op match {
     case OpInt => inA && inB
@@ -749,20 +732,24 @@ object SetOps {
     case OpSym => inA ^ inB
   }
 
-  /** An overlay rung's result, and the areas of the faces labelled
-    * inside each input (what its area check judges against).
+  /** An overlay rung's result and, per input and per parity group, the
+    * area of the faces labelled inside (what its area check judges).
     */
-  private final class Overlaid(val geom: Geom, val areaA: Double, val areaB: Double)
+  private[core] final class Overlaid(val geom: Geom, val areaA: Double, val areaB: Double,
+                                     val groupArea: Array[Double])
 
   /** Each input polygon is its own parity group. */
-  private def arealOverlay(a: Geom, b: Geom, op: Int, epsFactor: Double): Overlaid = {
+  private[core] def arealOverlay(a: Geom, b: Geom, op: Int, epsFactor: Double): Overlaid = {
     val noder = new Noder(epsFactor)
     val ends = mutable.ArrayBuffer.empty[Int]
     addRingsOf(noder, a, srcA = true, ends)
     val groupsA = ends.length
     addRingsOf(noder, b, srcA = false, ends)
     noder.node()
-    val (arr, label) = labelledArrangement(noder, ends.toArray, groupsA)
+    val arr = new Arrangement(noder.edges)
+    arr.build()
+    val groupArea = new Array[Double](ends.length)
+    val label = arr.labelFaces(noder, ends.toArray, groupsA, groupArea)
     val keptFace = new Array[Boolean](arr.nFaces)
     var areaA = 0.0; var areaB = 0.0
     var f = 1 // face 0, the unbounded face, is in neither input
@@ -775,7 +762,7 @@ object SetOps {
     }
     val arealResult = arr.dissolve(keptFace)
     val geom = if (op == OpInt) withLowerDims(noder, arr, keptFace, arealResult) else arealResult
-    new Overlaid(geom, areaA, areaB)
+    new Overlaid(geom, areaA, areaB, groupArea)
   }
 
   /** The intersection's lower-dimensional output besides its areal
@@ -1664,9 +1651,11 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
     * no walk reaches, or an edge that breaks this, means the noding
     * broke the topology: that throws, and the snap ladder escalates.
     *
-    * Returns per face bit 1 (inside A) and bit 2 (inside B).
+    * Returns per face bit 1 (inside A) and bit 2 (inside B), and adds
+    * each face's area to `groupArea(g)` of every group g odd there.
     */
-  def labelFaces(noder: Noder, groupEnd: Array[Int], groupsA: Int): Array[Int] = {
+  def labelFaces(noder: Noder, groupEnd: Array[Int], groupsA: Int,
+                 groupArea: Array[Double]): Array[Int] = {
     val nGroups = groupEnd.length
     val segGroup = new Array[Int](if (nGroups == 0) 0 else groupEnd(nGroups - 1))
     val key = new Array[Long](nGroups)
@@ -1695,14 +1684,18 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
     h = 0
     while (h < 2 * m) { row(fill(heFace(h))) = h; fill(heFace(h)) += 1; h += 1 }
 
-    val odd = new Array[Boolean](nGroups)
-    var oddA = 0; var oddB = 0; var hash = 0L
+    // the odd groups: oddList(0 until nOdd), oddPos(g) g's place there or -1
+    val oddList = new Array[Int](nGroups)
+    val oddPos = Array.fill(nGroups)(-1)
+    var nOdd = 0; var oddA = 0; var oddB = 0; var hash = 0L
     def cross(e: Int): Unit = {
       var l = noder.firstSource(e)
       while (l >= 0) {
         val g = segGroup(noder.sourceSegment(l))
-        odd(g) = !odd(g)
-        val d = if (odd(g)) 1 else -1
+        val p = oddPos(g)
+        if (p < 0) { oddPos(g) = nOdd; oddList(nOdd) = g; nOdd += 1 }
+        else { nOdd -= 1; oddList(p) = oddList(nOdd); oddPos(oddList(p)) = p; oddPos(g) = -1 }
+        val d = if (p < 0) 1 else -1
         if (g < groupsA) oddA += d else oddB += d
         hash ^= key(g)
         l = noder.nextSource(l)
@@ -1734,6 +1727,8 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
           cross(e)
           label(to) = (if (oddA > 0) 1 else 0) | (if (oddB > 0) 2 else 0)
           faceHash(to) = hash
+          val a = faceArea(to); var i = 0
+          while (i < nOdd) { groupArea(oddList(i)) += a; i += 1 }
           stFace(sp) = to; stNext(sp) = rowStart(to); stEdge(sp) = e
           sp += 1
         }

@@ -295,7 +295,7 @@ class KernelGoldenSpec extends AnyFunSuite {
     "symDifference" ->
       "ef6c9cc11a8d653e3df7e505d6501ba97369237d6b2fbc0a1145df264175e5c2",
     "unaryUnion" ->
-      "f91a63b13387cd3f13c277bf085e1a2ee6a46056fbe496ca82d7e51bc02d4202",
+      "88abd2c9f5f19fc4fb0cbe9dab71e49f3adb26d941cc018e52cc1d816fc6dbc2",
     "makeValid of bowties" ->
       "f2e479e38222a0ddde16545b472274a6a772e519fbc2592b51aa589cfb7d12de",
     "relate" ->
@@ -369,10 +369,10 @@ class KernelGoldenSpec extends AnyFunSuite {
     """,
     "unaryUnion" -> """
       ee701c6e 3c26f0c8 25636f2b 19e0fac7 69691bfd 1b488aa6 d202a0a0 09854768 cb212c5c 443567c4
-      5e2dc4a4 5a0ab86c 52c72c5e 91bc32ee 12bdfe84 db79059d d44bc62e 84c4a469 0f9198c6 de90f3b3
-      d7b00c36 b2ab88cc 8772d7a7 0fc205d8 ca5fd57c d2e6f74a ed675433 c6805771 f37e985e fae850d7
-      4ee2daea c2da479d 5eb9f528 3619ee0c b44bfdd3 94513c15 028e3e28 498daefe c36f5759 b8bfa121
-      ca82aabc b4435a5f 980146bd 79202b84 be40c546 271bb8da b20d356d 495ac5a0 425ad843 9da7267c
+      5e2dc4a4 5a0ab86c 52c72c5e 91bc32ee 12bdfe84 1ad7f871 d44bc62e 84c4a469 0f9198c6 de90f3b3
+      d7b00c36 b2ab88cc 8772d7a7 0fc205d8 15a42588 d2e6f74a ed675433 c6805771 f37e985e fae850d7
+      4ee2daea c2da479d 5eb9f528 3619ee0c bad9ac07 94513c15 028e3e28 498daefe c36f5759 b8bfa121
+      ca82aabc b4435a5f 980146bd 79202b84 be40c546 271bb8da b20d356d 495ac5a0 ef720448 9da7267c
       156eca73 41e8cf5f eb39dd1f 5226476c f4535963 a96a0f28 1dfa75ba 72ab1812 d756af0d f9f81af9
     """,
     "makeValid of bowties" -> """

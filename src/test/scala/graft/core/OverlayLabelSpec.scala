@@ -63,4 +63,60 @@ class OverlayLabelSpec extends AnyFunSuite {
     assert(Measure.area(SetOps.intersection(a, square)) == 1.0)
     assert(Measure.area(SetOps.unaryUnion(a)) == 88.0)
   }
+
+  test("the area check judges each valid polygon's labels against its own area") {
+    val f = Noder.BaseEpsFactor
+    val a = g("POLYGON((0 0,10 0,10 10,0 10,0 0),(2 2,2 8,8 8,8 2,2 2))")
+    val gr = new SetOps.Groups(a, square)
+    val u = SetOps.union(a, square)
+    assert(Measure.area(u) == 65.0)
+    assert(SetOps.arealSane(gr, SetOps.OpUnion, new SetOps.Overlaid(u, 64, 1, Array(64.0, 1.0)), f))
+    // labels that put the hole inside a (as a hole contour nested in the
+    // wrong face would) agree with their own areas and the op's bounds,
+    // but not with a's area
+    val filled = g("POLYGON((0 0,10 0,10 10,0 10,0 0))")
+    assert(!SetOps.arealSane(gr, SetOps.OpUnion, new SetOps.Overlaid(filled, 100, 1, Array(100.0, 1.0)), f))
+    // an invalid polygon's shell-less-holes sum (60 here) is no area:
+    // its labelled even-odd area stands
+    val n = nestedHoles(1)
+    val s = SetOps.symDifference(n, square)
+    assert(SetOps.arealSane(new SetOps.Groups(n, square), SetOps.OpSym,
+      new SetOps.Overlaid(s, 68, 1, Array(68.0, 1.0)), f))
+  }
+
+  test("the base rung, judged as the ladder judges it, keeps only area-sane unions") {
+    // pinwheels of thin wedges whose edges all pass within ~1e-13
+    // relative of one point at a large coordinate scale
+    val rnd = new java.util.Random(7)
+    def pinwheel(cx: Double, cy: Double, r: Double, phase: Double, jit: Double): Geom = {
+      def j() = (rnd.nextDouble() - 0.5) * 2 * jit
+      GMPoly((0 until 12).map { i =>
+        val t = phase + 2 * math.Pi * i / 12
+        val (ax, ay) = (cx + j(), cy + j())
+        Array(Seqn.of(ax, ay, cx + r * math.cos(t - 1e-4) + j(), cy + r * math.sin(t - 1e-4) + j(),
+          cx + r * math.cos(t + 1e-4) + j(), cy + r * math.sin(t + 1e-4) + j(), ax, ay))
+      }.toArray, CT.XY)
+    }
+    val f = Noder.BaseEpsFactor
+    var threw = 0; var rejected = 0; var invalid = 0
+    for (_ <- 0 until 60) {
+      val scale = 1e7
+      val (cx, cy) = (scale * (0.5 + rnd.nextDouble()), scale * (0.5 + rnd.nextDouble()))
+      val jit = scale * 1e-13 * (1 + 9 * rnd.nextDouble())
+      val a = pinwheel(cx, cy, scale / 100, 0.0, jit)
+      val b = pinwheel(cx, cy, scale / 100, 1e-5 + 0.26 * rnd.nextDouble(), jit)
+      try {
+        val r = SetOps.arealOverlay(a, b, SetOps.OpUnion, f)
+        if (!SetOps.arealSane(new SetOps.Groups(a, b), SetOps.OpUnion, r, f)) rejected += 1
+        else {
+          val (aA, aB, rA) = (Measure.area(a), Measure.area(b), Measure.area(r.geom))
+          val tol = 1e-6 * math.max(aA, aB)
+          assert(rA >= math.max(aA, aB) - tol && rA <= aA + aB + tol, s"area $rA of $aA + $aB")
+          if (!Validate.isValid(r.geom)) invalid += 1
+        }
+      } catch { case _: IllegalStateException => threw += 1 }
+    }
+    info(s"base rung: $threw/60 threw, $rejected/60 failed the area check, $invalid/60 kept invalid")
+    assert(threw + rejected > 0, "the generator no longer breaks the base rung")
+  }
 }
