@@ -760,7 +760,7 @@ object SetOps {
       if (inB) areaB += arr.faceArea(f)
       f += 1
     }
-    val arealResult = arr.dissolve(keptFace)
+    val arealResult = normalizePinches(arr.dissolve(keptFace))
     val geom = if (op == OpInt) withLowerDims(noder, arr, keptFace, arealResult) else arealResult
     new Overlaid(geom, areaA, areaB, groupArea)
   }

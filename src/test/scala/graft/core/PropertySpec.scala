@@ -241,7 +241,8 @@ class PropertySpec extends AnyFunSuite {
   }
 
   for ((name, op) <- Seq[(String, (Geom, Geom) => Geom)](
-         "st_union" -> SetOps.union, "st_difference" -> SetOps.difference)) {
+         "st_union" -> SetOps.union, "st_difference" -> SetOps.difference,
+         "st_symdifference" -> SetOps.symDifference)) {
     test(s"$name of the same pairs is valid, either way round") {
       check(name, Prop.forAll(Gen.oneOf(genNotchPoly, genHolePoly),
         Gen.oneOf(genBoxPoly, genOctagon)) { (a, b) =>
