@@ -1476,23 +1476,35 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
           areas = java.util.Arrays.copyOf(areas, areas.length * 2)
         }
         starts(nc) = filled
-        // signed area (shoelace over the walked cycle)
-        var s = 0.0
         var h = i
         while (contourOf(h) == -1) {
           contourOf(h) = nc
           contourHe(filled) = h; filled += 1
-          val x1 = nodeX(heFrom(h)); val y1 = nodeY(heFrom(h))
-          val x2 = nodeX(heTo(h)); val y2 = nodeY(heTo(h))
-          s += x1 * y2 - x2 * y1
           h = heNext(h)
         }
-        areas(nc) = s / 2
         nc += 1
       }
       i += 1
     }
     starts(nc) = filled
+    // signed areas: shoelace about each contour's first node (about the
+    // origin, the products' rounding at geographic coordinates exceeds
+    // the area of a face 1e-7 across and can flip its sign), skipping
+    // edges the contour walks both ways: their terms cancel exactly, so
+    // a walk round linework that encloses nothing has area exactly 0
+    var c = 0
+    while (c < nc) {
+      val o = heFrom(contourHe(starts(c)))
+      var s = 0.0
+      var k = starts(c)
+      while (k < starts(c + 1)) {
+        val h = contourHe(k); k += 1
+        if (contourOf(h ^ 1) != c)
+          s += (nodeX(heFrom(h)) - nodeX(o)) * (nodeY(heTo(h)) - nodeY(o)) -
+            (nodeX(heTo(h)) - nodeX(o)) * (nodeY(heFrom(h)) - nodeY(o))
+      }
+      areas(c) = s / 2; c += 1
+    }
     contourStart = starts
     contourArea = areas
     nContours = nc

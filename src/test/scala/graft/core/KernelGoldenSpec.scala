@@ -36,6 +36,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * splitting self-touching output rings at their repeated vertex: six
   * cases changed, each from an invalid output to a valid one covering
   * the same region (symmetric difference of the two answers: area 0).
+  * "buffer default" was re-recorded once more when arrangement contours
+  * began taking their signed area about their first node: case #39
+  * moved 11 coordinates by their last bits (same region, same vertex
+  * count, valid before and after).
   */
 class KernelGoldenSpec extends AnyFunSuite {
 
@@ -285,7 +289,7 @@ class KernelGoldenSpec extends AnyFunSuite {
 
   private val expected: Map[String, String] = Map(
     "buffer default" ->
-      "df7ed7adc43d6127cd7c271840f82203b24f70b7538b78a744d6fed9f34e3f5f",
+      "565791b42a530063af813412cb6eb50d8a3c8bcee80742b4be43345d88c701be",
     "buffer endcap=flat join=mitre" ->
       "d0d930e9bc0f1b0b8abcecc7312424aa3e5bc57033612c21a067008131ea3ee7",
     "buffer negative distance" ->
@@ -335,7 +339,7 @@ class KernelGoldenSpec extends AnyFunSuite {
       438fc8f2 e98ae7e2 cda62592 e6455956 dec850bd 48bd94f1 af6d128a 766192d6 a87a2863 e9d1d80e
       e2fcd7b4 632e0ca8 6a1ccce4 07fb83f2 4f999fe9 7f9738c3 71ffa208 1d5511b4 6132e242 232c856b
       fd2ffcbf 5a643cbe 61cc58e1 9d4649cc 80bccddb caaf8c6f 3d63d9d9 8e0d3f30 db7bdc1f a1469b58
-      a62c821e 996f7473 9060404d b7f10483 794b9cf6 a36515c1 bcb5011f e4e4c2a7 3ad6e3f9 5a05f46b
+      a62c821e 996f7473 9060404d b7f10483 794b9cf6 a36515c1 bcb5011f e4e4c2a7 3ad6e3f9 db30df4b
       22a89879 9e5015c6 9a2a1396 b89b8a29 17eba996 73cdfad6 e77ba7b8 5a14c3f4 7f2462b8 cb901989
       b5fc0223 3af32501 ced5b0c5 31321b27 88832315 e29f8c4d 3c130a2d 1ef67539 3f0d4cd3 27429172
     """,

@@ -119,4 +119,51 @@ class OverlayLabelSpec extends AnyFunSuite {
     info(s"base rung: $threw/60 threw, $rejected/60 failed the area check, $invalid/60 kept invalid")
     assert(threw + rejected > 0, "the generator no longer breaks the base rung")
   }
+
+  test("a face 1e-7 across at geographic coordinates keeps its orientation") {
+    // a spike tip 3e-7 above the clip box's top edge leaves a triangle
+    // of area ~1e-14 outside the box: its signed area, summed about the
+    // origin, is lost in the products' rounding, and the triangle
+    // merged into the unbounded face made the labels disagree at every
+    // rung
+    val a = g(
+      "POLYGON((" +
+      "3.9941199724510663 40.19895181831944,3.9905327264876966 40.199024567071454," +
+      "3.994139274738709 40.20045210789598,3.9916449672911423 40.20003487453456," +
+      "3.993478729381932 40.20186610032545,3.9907944280551932 40.200653654311175," +
+      "3.9926745475821006 40.203282978716764,3.990561362898229 40.20165812905942," +
+      "3.991424333011809 40.20395749663267,3.989363929645879 40.20154592332777," +
+      "3.990118893374993 40.20513213254612,3.988564703405881 40.20127781051437," +
+      "3.988497320026167 40.20466826772936,3.9877680925641177 40.20185033463079," +
+      "3.98707733036852 40.205036410993024,3.987197924711901 40.20117023058833," +
+      "3.985496553512891 40.2046114041767,3.9862253070793963 40.20145901525206," +
+      "3.983977506105303 40.203945731706284,3.985795890694656 40.200680435362635," +
+      "3.9834741318880473 40.20246156428489,3.9845027714749026 40.200752634034004," +
+      "3.9825433570970024 40.20112977798937,3.984283941981007 40.19981259390259," +
+      "3.981817255847471 40.20005596353937,3.983823104503921 40.19894120863879," +
+      "3.9820940943185086 40.198443180915326,3.9840052193717694 40.19798854610872," +
+      "3.9815355275075093 40.19696739883309,3.983835148430017 40.197020737230545," +
+      "3.9822664937631203 40.195662914259664,3.98543079154834 40.19699212081912," +
+      "3.9829061992144426 40.19438631912891,3.985401683371672 40.19581469398804," +
+      "3.98360935031206 40.1930433132178,3.986484981585044 40.19603040979892," +
+      "3.985352432687351 40.193010175542966,3.9866811550726227 40.19497162551168," +
+      "3.98666838964126 40.19172309824805,3.9875954718616793 40.195518434032536," +
+      "3.9880869760388213 40.19238476704261,3.988272453007524 40.19515003993308," +
+      "3.989343999382311 40.192606847202676,3.989323790725405 40.194995133559715," +
+      "3.9908083736496605 40.193067808135346,3.990097990825554 40.1953596207064," +
+      "3.992496796351691 40.193193998823354,3.9911093343836765 40.19552125356874," +
+      "3.992704290994119 40.19511335844642,3.9907452703835515 40.19687412748921," +
+      "3.994027397024963 40.196012391154554,3.991695001031505 40.19744607278398," +
+      "3.994109720945386 40.19754787311136,3.9904464741756325 40.198327352370875," +
+      "3.9941199724510663 40.19895181831944))")
+    val box = g(
+      "POLYGON((3.981667362035528 40.194504954862865,3.991773513062441 40.194504954862865," +
+      "3.991773513062441 40.20461110588978,3.981667362035528 40.20461110588978," +
+      "3.981667362035528 40.194504954862865))")
+    val r = SetOps.intersection(a, box)
+    assert(Validate.isValid(r))
+    val rest = Measure.area(SetOps.difference(a, box))
+    // Measure.area itself sums about the origin: ~1e-13 of rounding here
+    assert(math.abs(Measure.area(r) + rest - Measure.area(a)) <= 1e-6 * Measure.area(a))
+  }
 }
