@@ -7,7 +7,8 @@ import graft.core._
   * buffer blowup), after a small-n rung at web-geometry sizes: buffer,
   * relate, isValid and intersection of concave star polygons at
   * n = 2^2..2^8, in microseconds per call; buffer also with
-  * "endcap=flat join=mitre" and "join=bevel", and relate also against
+  * "endcap=flat join=mitre" and "join=bevel", eroding with "join=bevel",
+  * and "side=left" of the star's ring as a line, and relate also against
   * [[relateGC]]; then the unary union of 16 overlapping 64-vertex stars
   * on a 4 x 4 grid (the single-arrangement n-ary path) and makeValid of
   * [[selfCrossingStar]] at n = 128.
@@ -92,14 +93,18 @@ object KernelScale {
   def smallRung(): Unit = {
     val flatMitre = BufferOp.parseStyle("endcap=flat join=mitre")._1
     val bevel = BufferOp.parseStyle("join=bevel")._1
+    val left = BufferOp.parseStyle("side=left")._1
     for (pass <- 1 to 2; pow <- 2 to 8) {
       val n = 1 << pow
       val p = star(0, n); val p2 = star(0.5, n)
+      val ring = GLine(p.asInstanceOf[GPoly].rings(0))
       val out = pass == 2
       if (out) println(s"--- small n=2^$pow (star)")
       timeUs(s"buffer n=$n", out)(BufferOp.buffer(p, 0.1))
       timeUs(s"buffer flat-mitre n=$n", out)(BufferOp.buffer(p, 0.1, flatMitre))
       timeUs(s"buffer bevel n=$n", out)(BufferOp.buffer(p, 0.1, bevel))
+      timeUs(s"buffer bevel -0.05 n=$n", out)(BufferOp.buffer(p, -0.05, bevel))
+      timeUs(s"buffer side=left line n=$n", out)(BufferOp.buffer(ring, 0.1, left))
       timeUs(s"relate n=$n", out)(Relate.relate(p, p2))
       timeUs(s"relate vs GC n=$n", out)(Relate.relate(p, relateGC))
       timeUs(s"isValid n=$n", out)(Validate.isValid(p))

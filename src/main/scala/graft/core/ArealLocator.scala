@@ -13,8 +13,10 @@ package graft.core
   * valid shell/hole nesting).
   *
   * Used by relate, to locate edge midpoints in large polygon sets, and
-  * by buffer, to classify arrangement faces against the input, where
-  * an O(faces x edges) plain ray cast is quadratic in vertex count.
+  * by buffer's round walk, to classify arrangement faces against the
+  * input, where an O(faces x edges) plain ray cast is quadratic in
+  * vertex count (the piece walk labels its faces from the edges
+  * crossed instead).
   */
 final class ArealLocator private (
     env: Env,

@@ -7,15 +7,19 @@ import scala.collection.mutable
   *
   * Every style runs on one path, [[arrangementBuffer]]: emit the raw
   * offset linework of the style, node it once on the shared [[Noder]],
-  * build the face arrangement, and keep each face whose interior
-  * point lies in the buffer region. The region is the union of g
-  * itself (even-odd) with one piece per segment and per vertex: the
-  * segment's rectangle of half-width d, the join piece on the convex
-  * (gap) side of each turn, and the cap piece at each open end. Round
-  * caps with round joins make that union exactly {p : dist(p, g) <= d};
-  * they first try the least linework (the round walk) and retry with
-  * every piece outlined (the piece walk, which all other styles take)
-  * when that leaks or fails a sanity test, see [[offsetBuffer]]. When
+  * build the face arrangement, and keep the faces in the buffer
+  * region. The region is the union of g itself (even-odd within a
+  * polygon) with one piece per segment and per vertex: the segment's
+  * rectangle of half-width d, the join piece on the convex (gap) side
+  * of each turn, and the cap piece at each open end. Round caps with
+  * round joins make that union {p : dist(p, g) <= d}, up to the
+  * polygonised arcs; they first try the least linework (the round
+  * walk) and retry with every piece outlined (the piece walk, which
+  * all other styles take) when that leaks or fails a sanity test, see
+  * [[offsetBuffer]]. The piece walk labels the faces from the piece
+  * outlines and rings crossed, as overlay does
+  * ([[Arrangement.labelFaces]]); the round walk, whose one-sided
+  * linework bounds no piece, still locates a point per face. When
   * growing, the round walk drops before noding every offset segment
   * that lies a margin deep inside one segment's capsule (most of a
   * large buffer's arcs): it can only split faces that are kept anyway.
@@ -122,12 +126,16 @@ object BufferOp {
     * it. So a round-walk result that leaks (null), throws, or fails a
     * cheap sanity test (growing must cover g's area, eroding must not
     * exceed it, and the envelope must stay within d of g's) is
-    * recomputed on the piece walk. Other styles take the piece walk at
-    * once. A growing round walk drops its covered linework
+    * recomputed on the piece walk. Other styles, and single-sided
+    * buffers of inputs with a lineal part, take the piece walk at once.
+    * A growing round walk drops its covered linework
     * (see [[arrangementBuffer]]). On rings that cross themselves or
     * each other, whose one-sided offsets do not bound the region, that
     * can lose area while passing both tests; so the walk also returns
-    * null when a dropped segment is not inside its result.
+    * null when a dropped segment is not inside its result. The piece
+    * walk runs on the overlay's snap ladder: where pieces thinner than
+    * the snapping tolerance leave labels that disagree across an edge,
+    * a wider tolerance merges them.
     */
   private def offsetBuffer(g: Geom, d: Double, st: Style, grow: Boolean,
                            side: Int): Geom = {
@@ -137,7 +145,8 @@ object BufferOp {
         catch { case _: Exception => null }
       if (r != null && sane(g, r, d, grow)) return r
     }
-    arrangementBuffer(g, d, st, grow, side, pieceWalk = true)
+    SetOps.snapLadder("buffer")(f => arrangementBuffer(g, d, st, grow, side, pieceWalk = true, f))(
+      (_, _, _) => true)(null)
   }
 
   private def sane(g: Geom, r: Geom, d: Double, grow: Boolean): Boolean = {
@@ -156,16 +165,6 @@ object BufferOp {
     envOk && areaOk
   }
 
-  // piece kinds of the face classifier; each piece keeps 8 doubles
-  private final val PDist = 0   // a, b: within d of segment a-b (a == b: a disc)
-  private final val PRect = 1   // a, unit u, length, lo, hi: rectangle of a segment,
-                                // normal offsets in [lo * d, hi * d]
-  private final val PSquare = 2 // v, outward unit u: half-square beyond an end
-  private final val PRound = 3  // v, u1, u2, side: sector on the gap side of a turn
-  private final val PBevel = 4  // v, u1, u2, side: triangle v, p1, p2
-  private final val PMitre = 5  // v, u1, u2, side, lim: mitre clipped at lim
-                                // along the gap bisector
-
   /** Buffer through ONE planar arrangement of the raw offset linework,
     * instead of a union of per-segment/per-vertex pieces (whose
     * pairwise overlaps make a piece union O(n * d/segLen)).
@@ -178,60 +177,64 @@ object BufferOp {
     *  - the round, flat or square cap chain at each open end;
     *  - on the piece walk, the end edges v ± d·n of every segment;
     *  - for single-sided buffers, the line itself.
-    * So: node it, build the face arrangement, and keep each face iff
-    * its interior point lies in the region. Faces cannot straddle the
-    * region's boundary because the boundary is covered by the
-    * linework. The point test is analytic: inside g (even-odd,
-    * [[ArealLocator]]), or inside a piece found through an R-tree of
-    * piece boxes. Same idea as JTS's raw-offset-curve + labeling
-    * buffer, re-derived on this engine's arrangement.
+    * So: node it, build the face arrangement, and keep the faces inside
+    * the region. Faces cannot straddle the region's boundary because
+    * the boundary is covered by the linework. Same idea as JTS's
+    * raw-offset-curve + labeling buffer, re-derived on this engine's
+    * arrangement.
     *
-    * Two walks emit the linework. The piece walk emits the whole
-    * outline of every piece (parallels on both sides, end edges, join
-    * and cap chains), so each piece is a union of bounded faces and no
-    * face can join a piece's inside to the outside. The round walk,
-    * for round caps and joins only, emits the least linework: rings on
-    * one side, no end edges; every segment's test is
-    * dist(p, segment) <= d. It returns null when its leak test (at the
-    * end) finds faces on both sides of the buffer's boundary merged
-    * through an open linework end (see [[offsetBuffer]]).
+    * Two walks emit the linework. The piece walk emits the closed
+    * outline of every piece: a segment's rectangle (parallels and end
+    * edges; on one side, the line itself and half the end edges), a
+    * join's arc, chord or mitre chain closed by the radials v -> p1
+    * and p2 -> v, a square cap's chain closed by the end edge, a disc's
+    * circle. Each outline is its own parity group, and so is each of
+    * g's polygons, added after them; [[Arrangement.labelFaces]] labels
+    * every face from the outlines crossed, no point located. Growing
+    * keeps the faces inside g (even-odd within a polygon, union across
+    * polygons) or inside some piece; eroding keeps those inside g and
+    * inside no piece. Round pieces are their polygonised outlines.
+    *
+    * The round walk, for round caps and joins only, emits the least
+    * linework: rings on one side, no end edges. Its faces are still
+    * point-tested: a face is kept iff its interior point lies inside g
+    * ([[ArealLocator]], even-odd) or within d of an input segment found
+    * through an R-tree of the segments' boxes. It returns null when its
+    * leak test (at the end) finds faces on both sides of the buffer's
+    * boundary merged through an open linework end (see
+    * [[offsetBuffer]]).
     *
     * Covered linework: when growing, the round walk drops each emitted
     * segment whose two endpoints both lie within d - mc of one input
-    * segment (a PDist piece), mc = 4 d (1 - cos(pi / (4 qs))), four
-    * sagittas of the coarsest arc step. Such a segment lies at least mc
-    * inside that segment's capsule, and the emitted arcs lie at most one
-    * sagitta inside the true circles, so every face beside it is kept.
-    * The candidate pieces come from the piece R-tree; a join arc is
-    * tested only when a segment that does not end at its vertex passes
-    * within 2d of it. The guard: the midpoint of every dropped segment
-    * must be interior to the result, else the walk returns null.
+    * segment, mc = 4 d (1 - cos(pi / (4 qs))), four sagittas of the
+    * coarsest arc step. Such a segment lies at least mc inside that
+    * segment's capsule, and the emitted arcs lie at most one sagitta
+    * inside the true circles, so every face beside it is kept. The
+    * candidate segments come from the R-tree; a join arc is tested only
+    * when a segment that does not end at its vertex passes within 2d of
+    * it. The guard: the midpoint of every dropped segment must be
+    * interior to the result, else the walk returns null.
     * `side` is 0 for two-sided buffers, +1 / -1 for single-sided
-    * left / right; single-sided lines always take the piece walk.
+    * left / right. A single-sided buffer of an input with a lineal part
+    * always takes the piece walk: the line itself bounds it there.
     */
   private[core] def arrangementBuffer(g: Geom, d: Double, st: Style, grow: Boolean,
-                                      side: Int, pieceWalk: Boolean): Geom = {
+                                      side: Int, pieceWalk: Boolean,
+                                      epsFactor: Double = Noder.BaseEpsFactor): Geom = {
     val qs = st.quadSegs
+    // a single-sided line's own piece outlines bound its buffer
+    val outlined = pieceWalk || side != 0 && Geom.dump(g).exists(_.isInstanceOf[GLine])
+    val noder = new Noder(epsFactor)
 
-    // ---- pieces of the buffer region, with their boxes
-    var pk = new Array[Int](16)
-    var pv = new Array[Double](8 * 16)
+    // ---- round walk: the input segments, each with its box
+    var pv = new Array[Double](4 * 16) // a, b: within d of segment a-b (a == b: a disc)
     val penvs = mutable.ArrayBuffer.empty[Env]
-    def piece(kind: Int, a0: Double, a1: Double, a2: Double, a3: Double, a4: Double,
-              a5: Double, a6: Double, a7: Double, env: Env): Unit = {
-      val i = penvs.length
-      if (i == pk.length) {
-        pk = java.util.Arrays.copyOf(pk, 2 * i); pv = java.util.Arrays.copyOf(pv, 16 * i)
-      }
-      pk(i) = kind
-      val b = 8 * i
-      pv(b) = a0; pv(b + 1) = a1; pv(b + 2) = a2; pv(b + 3) = a3
-      pv(b + 4) = a4; pv(b + 5) = a5; pv(b + 6) = a6; pv(b + 7) = a7
-      penvs += env
+    def distPiece(ax: Double, ay: Double, bx: Double, by: Double): Unit = {
+      val b = 4 * penvs.length
+      if (b == pv.length) pv = java.util.Arrays.copyOf(pv, 2 * b)
+      pv(b) = ax; pv(b + 1) = ay; pv(b + 2) = bx; pv(b + 3) = by
+      penvs += Env(math.min(ax, bx) - d, math.min(ay, by) - d, math.max(ax, bx) + d, math.max(ay, by) + d)
     }
-    def distPiece(ax: Double, ay: Double, bx: Double, by: Double): Unit =
-      piece(PDist, ax, ay, bx, by, 0, 0, 0, 0, Env(math.min(ax, bx) - d, math.min(ay, by) - d,
-        math.max(ax, bx) + d, math.max(ay, by) + d))
     def distPieces(s: Seqn): Unit = {
       var i = 0
       while (i < s.n - 1) {
@@ -240,46 +243,23 @@ object BufferOp {
       }
       if (s.n == 1) distPiece(s.x(0), s.y(0), s.x(0), s.y(0))
     }
-    /** p is in piece i grown to reach r (r = d: the piece itself). */
+    /** p is within r of input segment i. */
     def inPiece(i: Int, px: Double, py: Double, r: Double): Boolean = {
-      val b = 8 * i
-      val wx = px - pv(b); val wy = py - pv(b + 1)
-      pk(i) match {
-        case PDist => Alg.distPointSeg(px, py, pv(b), pv(b + 1), pv(b + 2), pv(b + 3)) <= r
-        case PRect =>
-          val ux = pv(b + 2); val uy = pv(b + 3)
-          val s = wx * ux + wy * uy
-          val t = wy * ux - wx * uy
-          s >= 0 && s <= pv(b + 4) && t >= pv(b + 5) * r && t <= pv(b + 6) * r
-        case PSquare =>
-          val ux = pv(b + 2); val uy = pv(b + 3)
-          val s = wx * ux + wy * uy
-          s >= 0 && s <= r && math.abs(wy * ux - wx * uy) <= r
-        case k =>
-          val u1x = pv(b + 2); val u1y = pv(b + 3); val u2x = pv(b + 4); val u2y = pv(b + 5)
-          // inside the cone between the two gap normals
-          if (wx * u1x + wy * u1y < 0 || wx * u2x + wy * u2y > 0) false
-          else if (k == PRound) math.hypot(wx, wy) <= r
-          else {
-            val sg = pv(b + 6)
-            val g1x = -u1y * sg; val g1y = u1x * sg
-            val g2x = -u2y * sg; val g2y = u2x * sg
-            if (k == PBevel)
-              wx * (g1x + g2x) + wy * (g1y + g2y) <= r * (1 + g1x * g2x + g1y * g2y)
-            else {
-              val bl = math.hypot(g1x + g2x, g1y + g2y)
-              wx * g1x + wy * g1y <= r && wx * g2x + wy * g2y <= r &&
-                (wx * (g1x + g2x) + wy * (g1y + g2y)) / bl <= pv(b + 7)
-            }
-          }
-      }
+      val b = 4 * i
+      Alg.distPointSeg(px, py, pv(b), pv(b + 1), pv(b + 2), pv(b + 3)) <= r
     }
 
-    // ---- offset linework, noded after the walk (see the covered step)
+    // ---- offset linework: the piece walk nodes it as emitted and ends
+    // a parity group after each piece; the round walk nodes it after
+    // the walk (see the covered step)
+    val groupEnd = mutable.ArrayBuffer.empty[Int]
+    def endPiece(): Unit = if (outlined) groupEnd += noder.segmentCount
     val lines = mutable.ArrayBuffer.empty[Array[Double]]
     var turns = new Array[Double](32) // per line: the vertex a join arc turns at, else NaN
     def emitLine(pts: Array[Double], vx: Double = Double.NaN, vy: Double = Double.NaN): Unit =
-      if (pts.length >= 4) {
+      if (pts.length < 4) ()
+      else if (outlined) noder.addLine(Seqn.xy(pts), srcA = true)
+      else {
         val i = lines.length
         if (2 * i + 2 > turns.length) turns = java.util.Arrays.copyOf(turns, 2 * turns.length)
         turns(2 * i) = vx; turns(2 * i + 1) = vy
@@ -310,8 +290,9 @@ object BufferOp {
       emitArc(cx, cy, a0, 2 * math.Pi)
     /** Disc of radius d around c, outlined from angle a0. */
     def discPiece(cx: Double, cy: Double, a0: Double): Unit = {
-      distPiece(cx, cy, cx, cy)
+      if (!outlined) distPiece(cx, cy, cx, cy)
       emitCircle(cx, cy, a0)
+      endPiece()
     }
 
     /** Round walk of one vertex sequence. closed: ring (first==last).
@@ -385,9 +366,10 @@ object BufferOp {
       }
     }
 
-    /** Join piece and its linework at vertex v between incoming unit
-      * direction u1 and outgoing u2, on the gap side of the turn; with
-      * a single side sd, only when the gap opens on that side.
+    /** Join piece at vertex v between incoming unit direction u1 and
+      * outgoing u2, on the gap side of the turn; with a single side sd,
+      * only when the gap opens on that side. Its outline is the arc,
+      * chord or mitre chain from p1 to p2, closed through v.
       */
     def join(vx: Double, vy: Double, u1x: Double, u1y: Double, u2x: Double, u2y: Double,
              sd: Int): Unit = {
@@ -405,64 +387,49 @@ object BufferOp {
       if (sd != 0 && sd != sg) return
       val p1x = vx - u1y * sg * d; val p1y = vy + u1x * sg * d
       val p2x = vx - u2y * sg * d; val p2y = vy + u2x * sg * d
-      def box(xs: Double*)(ys: Double*): Env = Env(xs.min, ys.min, xs.max, ys.max)
-      def bevel(): Unit = {
-        emitLine(Array(p1x, p1y, p2x, p2y))
-        piece(PBevel, vx, vy, u1x, u1y, u2x, u2y, sg, 0, box(vx, p1x, p2x)(vy, p1y, p2y))
+      def mitre(): Array[Double] = {
+        // mitre tip: intersection of the two offset-edge lines
+        // p1 + t*u1 = p2 + s2*u2  =>  t = cross(p2-p1, u2) / cross(u1, u2)
+        val t = ((p2x - p1x) * u2y - (p2y - p1y) * u2x) / cross
+        val mx = p1x + t * u1x; val my = p1y + t * u1y
+        val lim = st.mitreLimit * d
+        if (math.hypot(mx - vx, my - vy) <= lim) return Array(p1x, p1y, mx, my, p2x, p2y)
+        // limited mitre: clip the spike with the line perpendicular
+        // to the gap bisector at distance limit*d from v; a clip
+        // line short of the bevel chord leaves the bevel
+        val bevel = Array(p1x, p1y, p2x, p2y)
+        val gx = p1x - vx + p2x - vx; val gy = p1y - vy + p2y - vy
+        val bl = math.hypot(gx, gy)
+        if (bl < 1e-12 * d) return bevel
+        val bx = gx / bl; val by = gy / bl
+        val den1 = u1x * bx + u1y * by
+        val den2 = u2x * bx + u2y * by
+        val chord = (p1x - vx) * bx + (p1y - vy) * by
+        if (math.abs(den1) < 1e-12 || math.abs(den2) < 1e-12 || lim < chord) return bevel
+        val t1 = (lim - chord) / den1
+        val t2 = (lim - ((p2x - vx) * bx + (p2y - vy) * by)) / den2
+        Array(p1x, p1y, p1x + t1 * u1x, p1y + t1 * u1y, p2x + t2 * u2x, p2y + t2 * u2y, p2x, p2y)
       }
       st.join match {
-        case JoinRound =>
-          arcAtVertex(vx, vy, u1x, u1y, u2x, u2y, sg)
-          piece(PRound, vx, vy, u1x, u1y, u2x, u2y, sg, 0, Env(vx - d, vy - d, vx + d, vy + d))
-        case JoinBevel => bevel()
-        case _ =>
-          // mitre tip: intersection of the two offset-edge lines
-          // p1 + t*u1 = p2 + s2*u2  =>  t = cross(p2-p1, u2) / cross(u1, u2)
-          val t = ((p2x - p1x) * u2y - (p2y - p1y) * u2x) / cross
-          val mx = p1x + t * u1x; val my = p1y + t * u1y
-          val lim = st.mitreLimit * d
-          if (math.hypot(mx - vx, my - vy) <= lim) {
-            emitLine(Array(p1x, p1y, mx, my, p2x, p2y))
-            piece(PMitre, vx, vy, u1x, u1y, u2x, u2y, sg, lim,
-              box(vx, p1x, mx, p2x)(vy, p1y, my, p2y))
-          } else {
-            // limited mitre: clip the spike with the line perpendicular
-            // to the gap bisector at distance limit*d from v; a clip
-            // line short of the bevel chord leaves the bevel
-            val gx = p1x - vx + p2x - vx; val gy = p1y - vy + p2y - vy
-            val bl = math.hypot(gx, gy)
-            if (bl < 1e-12 * d) return bevel()
-            val bx = gx / bl; val by = gy / bl
-            val den1 = u1x * bx + u1y * by
-            val den2 = u2x * bx + u2y * by
-            val chord = (p1x - vx) * bx + (p1y - vy) * by
-            if (math.abs(den1) < 1e-12 || math.abs(den2) < 1e-12 || lim < chord) return bevel()
-            val t1 = (lim - chord) / den1
-            val t2 = (lim - ((p2x - vx) * bx + (p2y - vy) * by)) / den2
-            val q1x = p1x + t1 * u1x; val q1y = p1y + t1 * u1y
-            val q2x = p2x + t2 * u2x; val q2y = p2y + t2 * u2y
-            emitLine(Array(p1x, p1y, q1x, q1y, q2x, q2y, p2x, p2y))
-            piece(PMitre, vx, vy, u1x, u1y, u2x, u2y, sg, lim,
-              box(vx, p1x, q1x, q2x, p2x)(vy, p1y, q1y, q2y, p2y))
-          }
+        case JoinRound => arcAtVertex(vx, vy, u1x, u1y, u2x, u2y, sg)
+        case JoinBevel => emitLine(Array(p1x, p1y, p2x, p2y))
+        case _ => emitLine(mitre())
       }
+      emitLine(Array(p2x, p2y, vx, vy, p1x, p1y)) // on the two segments' end edges
+      endPiece()
     }
 
-    /** Cap piece and its linework at open end v with outward unit
+    /** Cap piece and its outline at open end v with outward unit
       * direction u (pointing away from the line).
       */
     def cap(vx: Double, vy: Double, ux: Double, uy: Double): Unit = st.cap match {
       case CapRound => discPiece(vx, vy, math.atan2(-ux, uy))
       case CapSquare =>
+        // the half-square's chain, closed by the segment's end edge
         val nx = -uy * d; val ny = ux * d
-        val c1x = vx + nx + ux * d; val c1y = vy + ny + uy * d
-        val c2x = vx - nx + ux * d; val c2y = vy - ny + uy * d
-        emitLine(Array(vx + nx, vy + ny, c1x, c1y, c2x, c2y, vx - nx, vy - ny))
-        piece(PSquare, vx, vy, ux, uy, 0, 0, 0, 0, Env(
-          math.min(math.min(vx + nx, vx - nx), math.min(c1x, c2x)),
-          math.min(math.min(vy + ny, vy - ny), math.min(c1y, c2y)),
-          math.max(math.max(vx + nx, vx - nx), math.max(c1x, c2x)),
-          math.max(math.max(vy + ny, vy - ny), math.max(c1y, c2y))))
+        emitLine(Array(vx + nx, vy + ny, vx + nx + ux * d, vy + ny + uy * d,
+          vx - nx + ux * d, vy - ny + uy * d, vx - nx, vy - ny, vx + nx, vy + ny))
+        endPiece()
       case _ => ()
     }
 
@@ -498,8 +465,6 @@ object BufferOp {
         val len = math.hypot(x2 - x1, y2 - y1)
         val ux = (x2 - x1) / len; val uy = (y2 - y1) / len
         u(2 * i) = ux; u(2 * i + 1) = uy
-        piece(PRect, x1, y1, ux, uy, len, lo, hi, 0, Env(math.min(x1, x2) - d,
-          math.min(y1, y2) - d, math.max(x1, x2) + d, math.max(y1, y2) + d))
         // offsets of the left side; the right side is their negation
         val nx = -uy * d; val ny = ux * d
         if (hi > 0) emitLine(Array(x1 + nx, y1 + ny, x2 + nx, y2 + ny))
@@ -507,6 +472,7 @@ object BufferOp {
         if (sd != 0) emitLine(Array(x1, y1, x2, y2))
         emitLine(Array(x1 + lo * nx, y1 + lo * ny, x1 + hi * nx, y1 + hi * ny))
         emitLine(Array(x2 + lo * nx, y2 + lo * ny, x2 + hi * nx, y2 + hi * ny))
+        endPiece()
         i += 1
       }
       i = if (closed) 0 else 1
@@ -522,10 +488,10 @@ object BufferOp {
     }
 
     def line(s: Seqn): Unit =
-      if (pieceWalk || side != 0) pieceOutlines(s, closed = false, side)
+      if (outlined) pieceOutlines(s, closed = false, side)
       else { distPieces(s); roundOffsets(s, closed = false, side = 0) }
     def offsetRings(rs: Array[Seqn]): Unit = {
-      if (pieceWalk) { rs.foreach(pieceOutlines(_, closed = true, 0)); return }
+      if (outlined) { rs.foreach(pieceOutlines(_, closed = true, 0)); return }
       rs.foreach(distPieces)
       var ri = 0
       while (ri < rs.length) {
@@ -555,6 +521,17 @@ object BufferOp {
       case _ => ()
     }
     walk(g)
+    if (outlined) {
+      if (groupEnd.isEmpty) return GPoly(Array.empty, CT.XY)
+      val pieces = groupEnd.length
+      SetOps.addRingsOf(noder, g, srcA = true, groupEnd)
+      noder.node()
+      val arr = new Arrangement(noder.edges)
+      arr.build()
+      // bit 1: inside some piece; bit 2: inside g
+      val label = arr.labelFaces(noder, groupEnd.toArray, pieces, new Array[Double](groupEnd.length))
+      return arr.dissolve(label.map(l => if (grow) l != 0 else l == 2))
+    }
     if (penvs.isEmpty) return GPoly(Array.empty, CT.XY)
 
     val ptree = RTree.bulkLoad(penvs.toArray)
@@ -570,21 +547,15 @@ object BufferOp {
      * convex along a segment, so a segment whose two endpoints lie within
      * reach of one input segment lies wholly within reach of it. The
      * margin of four sagittas also leaves room for the leak test's
-     * two-sagitta probes. Only a segment's piece (PDist) covers: the
-     * other kinds come from single-sided lines, whose own linework
-     * bounds the buffer. */
-    val noder = new Noder
+     * two-sagitta probes. */
     val sag = d * (1 - math.cos(math.Pi / (4 * math.max(1, qs))))
     val reach = d - 4 * sag
-    val dropping = grow && !pieceWalk && reach > 0
+    val dropping = grow && reach > 0
     var dropped = new Array[Double](16) // midpoints of dropped segments
     var nDropped = 0
     var hint = -1 // the piece that covered the last dropped segment
-    def coveredBy(i: Int, x1: Double, y1: Double, x2: Double, y2: Double): Boolean = {
-      val b = 8 * i
-      pk(i) == PDist && Alg.distPointSeg(x1, y1, pv(b), pv(b + 1), pv(b + 2), pv(b + 3)) <= reach &&
-        Alg.distPointSeg(x2, y2, pv(b), pv(b + 1), pv(b + 2), pv(b + 3)) <= reach
-    }
+    def coveredBy(i: Int, x1: Double, y1: Double, x2: Double, y2: Double): Boolean =
+      inPiece(i, x1, y1, reach) && inPiece(i, x2, y2, reach)
     def covered(x1: Double, y1: Double, x2: Double, y2: Double): Boolean =
       (hint >= 0 && coveredBy(hint, x1, y1, x2, y2)) ||
         !ptree.pointSearch(x1, y1) { i =>
@@ -596,9 +567,9 @@ object BufferOp {
      * part of it. */
     def lonelyTurn(vx: Double, vy: Double): Boolean =
       ptree.rangeSearch(Env(vx - d, vy - d, vx + d, vy + d)) { i =>
-        val b = 8 * i
-        pk(i) != PDist || (pv(b) == vx && pv(b + 1) == vy) || (pv(b + 2) == vx && pv(b + 3) == vy) ||
-          Alg.distPointSeg(vx, vy, pv(b), pv(b + 1), pv(b + 2), pv(b + 3)) > 2 * d
+        val b = 4 * i
+        (pv(b) == vx && pv(b + 1) == vy) || (pv(b + 2) == vx && pv(b + 3) == vy) ||
+          !inPiece(i, vx, vy, 2 * d)
       }
     def nodeUncovered(li: Int): Unit = {
       val pts = lines(li)
@@ -643,7 +614,6 @@ object BufferOp {
       f += 1
     }
     val r = arr.dissolve(kept)
-    if (pieceWalk) return r
 
     /* Round walk leak test. An open linework end lets faces on both
      * sides of the buffer boundary merge into one face. The walk around

@@ -474,7 +474,7 @@ object SetOps {
     * `lastResort` answers; when it gives null or throws, the latest
     * exception is rethrown, or else a failure naming `what`.
     */
-  private def snapLadder[R <: AnyRef](what: String)(rung: Double => R)(
+  private[core] def snapLadder[R <: AnyRef](what: String)(rung: Double => R)(
       accept: (R, Double, Boolean) => Boolean)(lastResort: => R): R = {
     var lastEx: Throwable = null
     var i = 0
@@ -714,8 +714,8 @@ object SetOps {
     * as given), and after each polygon appends the noder's segment
     * count to `ends`: the end of that polygon's parity group.
     */
-  private def addRingsOf(noder: Noder, g: Geom, srcA: Boolean,
-                         ends: mutable.ArrayBuffer[Int] = null): Unit =
+  private[core] def addRingsOf(noder: Noder, g: Geom, srcA: Boolean,
+                               ends: mutable.ArrayBuffer[Int] = null): Unit =
     polygonsOf(g).foreach { p =>
       p.rings.foreach { r =>
         noder.addLine(r, srcA)
@@ -1644,7 +1644,10 @@ final class Arrangement(val edges: IndexedSeq[NodedEdge]) {
 
   /** Inside/outside of every face, from the input edges crossed (the
     * reference's OverlayNG labels faces this way, JTS OverlayLabeller;
-    * no point is located). `noder` is the one these edges came from.
+    * no point is located). Areal overlay, n-ary union and makeValid
+    * label their rings' faces here, and the buffer's piece walk its
+    * piece outlines' and input rings' faces ([[BufferOp]]).
+    * `noder` is the one these edges came from.
     * Each of its source segments belongs to one parity group: group g
     * holds the segment ids `groupEnd(g - 1)` (0 for g = 0) until
     * `groupEnd(g)`, and groups below `groupsA` belong to input A, the
